@@ -37,6 +37,14 @@ def _collection(args):
     return Collection(spark, args.base_path, args.collection)
 
 
+def _at_least_one(text: str) -> int:
+    """argparse type for counts that must be >= 1."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def _create_kwargs(args) -> dict:
     """Chunking + index-layout options shared by every create command."""
     return {
@@ -1517,7 +1525,7 @@ def build_parser() -> argparse.ArgumentParser:
             sp.add_argument("--ivf-nprobe", type=int, default=2)
             sp.add_argument("--pq-m", type=int, default=None)
             sp.add_argument("--sq8", action="store_true")
-            sp.add_argument("--update-buckets", type=int, default=8)
+            sp.add_argument("--update-buckets", type=_at_least_one, default=8)
             # positional postings: enables `search --indexes phrase`
             sp.add_argument("--positional-postings", action="store_true")
             # materialized term dictionary + SymSpell deletion index:

@@ -29,10 +29,13 @@ TABLES = (
 def rollback_partial_swap(root: Path, table: str) -> None:
     """Undo an interrupted PARTITION-scoped update swap (see
     updater._swap_partitions): ``<table>__old/_PARTIAL.json`` lists the
-    affected ``_pb`` buckets; any live directory for those buckets may
-    be half-swapped, so remove them and restore the parked originals.
-    Pre-update state is fully recovered; re-running the (idempotent)
-    update batch then converges. No-op without the marker."""
+    affected ``_pb`` buckets. Once parking finished, any live directory
+    for those buckets may be half-swapped, so remove them and restore
+    the parked originals; while the marker still says ``parking``, the
+    live directories are untouched originals and only the parked ones
+    move back. Pre-update state is fully recovered; re-running the
+    (idempotent) update batch then converges. No-op without the
+    marker."""
     from documents_vector_search_spark.collection.partitioning import (
         UPDATE_PB_COL,
         pb_dirs,
@@ -48,7 +51,7 @@ def rollback_partial_swap(root: Path, table: str) -> None:
     # the column the swap parked on: _pb for the document tables,
     # term_bucket/variant_bucket for the fuzzy artifacts
     col = state.get("col", UPDATE_PB_COL)
-    if final.exists():
+    if final.exists() and not state.get("parking"):
         for d in pb_dirs(final, pbs, col):
             shutil.rmtree(d)
     for d in sorted(
@@ -104,10 +107,11 @@ class Collection:
         crash-atomic. Two crash shapes are healed here so readers always
         see a complete committed state: a partition-scoped swap left
         half-done (``__old/_PARTIAL.json`` marker → roll the affected
-        partitions back, updater._swap_partitions) and a legacy
-        whole-table swap that failed between ``final -> __old`` and
-        ``__tmp -> final`` (restore the parked dir). Single-writer,
-        no-concurrent-reader-during-update assumption (see updater).
+        partitions back, updater._swap_partitions) and a whole-table
+        refit swap that failed between ``final -> __old`` and
+        ``__tmp -> final`` (restore the parked dir, updater._swap_all).
+        Single-writer, no-concurrent-reader-during-update assumption
+        (see updater).
         """
         rollback_partial_swap(self.root, table)
         final = self.root / table

@@ -67,6 +67,16 @@ def _zorder_config(collection: Collection, table: str) -> dict | None:
     return None
 
 
+def _clear_degraded(collection: Collection, zcfg: dict | None) -> None:
+    """Drop the manifest's Z-order ``degraded_pbs`` record once no
+    listed bucket still needs re-clustering, and persist."""
+    if not zcfg or not zcfg.get("degraded_pbs"):
+        return
+    manifest = collection.manifest()
+    manifest.converter["zorder"].pop("degraded_pbs", None)
+    collection.save_manifest(manifest)
+
+
 def compact_collection(
     collection: Collection,
     tables: list[str] | None = None,
@@ -118,6 +128,8 @@ def compact_collection(
             | set(degraded)
         )
         if not frag:
+            # any degraded entry left names a bucket gone from disk
+            _clear_degraded(collection, zcfg)
             continue
         df = collection.read(table).filter(F.col(UPDATE_PB_COL).isin(frag))
         pcols = [c for c in _LAYOUT_COLS if c in df.columns] + [UPDATE_PB_COL]
@@ -168,23 +180,9 @@ def compact_collection(
             # destroy it
             no_cluster=frozenset({table}),
         )
-        if zcfg and zcfg.get("degraded_pbs"):
-            # clustering restored for every compacted bucket: clear
-            # them from the degraded record (buckets no longer on disk
-            # drop too) and persist
-            manifest = collection.manifest()
-            mz = manifest.converter.get("zorder") or {}
-            remaining = sorted(
-                pb
-                for pb in mz.get("degraded_pbs", [])
-                if pb in counts and pb not in frag
-            )
-            if remaining:
-                mz["degraded_pbs"] = remaining
-            else:
-                mz.pop("degraded_pbs", None)
-            manifest.converter["zorder"] = mz
-            collection.save_manifest(manifest)
+        # clustering restored for every degraded bucket still on disk
+        # (frag covers them all); the rest are gone
+        _clear_degraded(collection, zcfg)
         after = bucket_file_counts(Path(collection.table_path(table)))
         report[table] = {
             "buckets": frag,

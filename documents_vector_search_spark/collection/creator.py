@@ -234,8 +234,8 @@ def create_collection(
     postings per query; updates maintain both incrementally from the
     changed postings rows only.
 
-    ``update_buckets``: every table is additionally partitioned by a
-    stable ``_pb`` bucket of its delete key so incremental updates
+    ``update_buckets`` (>= 1): every table is additionally partitioned
+    by a stable ``_pb`` bucket of its delete key so incremental updates
     rewrite only affected partitions — see collection/partitioning.py
     for sizing (default 8 suits test corpora; 100 TB wants 1024+).
 
@@ -255,6 +255,8 @@ def create_collection(
         raise ValueError("sq8 and pq_m are mutually exclusive quantizers")
     if zorder_by is not None and len(zorder_by) != 2:
         raise ValueError("zorder_by takes exactly two column names")
+    if update_buckets < 1:
+        raise ValueError(f"update_buckets must be >= 1, got {update_buckets}")
     collection.destroy()
     embed = embedder or default_embedder(embedding_dim)
 

@@ -33,6 +33,12 @@ class Manifest:
     # falls back to computing it).
     fieldStats: dict | None = None
     lastIndexItemId: int = -1
+    # set (``{"op": "update"|"delete"}``) by the updater's save just
+    # before its first table swap and cleared by its final save: a
+    # writer that finds it knows a batch died in between and recounts
+    # the table-derived stats above from the tables (collection/
+    # updater.py)
+    inFlight: dict | None = None
     reader: dict = field(default_factory=dict)
     converter: dict = field(
         default_factory=lambda: {"splitter": {"chunkSize": 1000, "chunkOverlap": 100}}

@@ -46,7 +46,6 @@ class CollectionSearcher:
         ivf_nprobe: int | None = None,
         pq_shortlist_factor: int = 16,
         sq8_shortlist_factor: int = 8,
-        df_via_aggregate: bool | None = None,
     ):
         """``cache_tables`` persists the index tables in executor memory
         on first access — the serving-process pattern (the reference's
@@ -87,16 +86,6 @@ class CollectionSearcher:
         self._embedding_dim: int | None = None
         self.field_types = field_types or {}
         self._cache_tables = cache_tables
-        # per-term document frequency via aggregate+broadcast instead of
-        # a window sort over the matched postings rows (operators/bm25.
-        # _attach_term_df documents the scale analysis). Default OFF
-        # even with cache_tables: the A/B on cached sf0.1 serving
-        # (dev/ab_serving_r13.py) measured the aggregate form's extra
-        # broadcast job at +0.1-0.3s per search with a tiny matched
-        # set; flip it for materialized-index serving at scale, where
-        # a common term matches millions of postings rows and the
-        # window's per-term sort-shuffle is the bottleneck.
-        self._df_via_aggregate = bool(df_via_aggregate)
         self._cached: dict[str, DataFrame] = {}
         self.ann_probe_bits = ann_probe_bits
         self.ivf_nprobe = ivf_nprobe
@@ -458,11 +447,6 @@ class CollectionSearcher:
             doc_stats=doc_stats,
             candidates=allowed,
             corpus_stats=self._bm25_corpus_stats(),
-            # cached serving tables: per-term df via aggregate+broadcast
-            # (the matched slice re-reads from executor memory) instead
-            # of sort-shuffling every matched postings row by term —
-            # _attach_term_df documents the scale analysis
-            df_via_aggregate=self._df_via_aggregate,
         )
         return hits.select("chunk_id", "score")
 
@@ -1246,7 +1230,6 @@ class CollectionSearcher:
             candidates=allowed,
             corpus_stats=self._bm25_corpus_stats(),
             doc_stats=self._read("doc_stats"),
-            df_via_aggregate=self._df_via_aggregate,
         ).select("chunk_id", "score")
 
     # -- public ----------------------------------------------------------
@@ -1686,7 +1669,6 @@ class CollectionSearcher:
                     doc_stats=self._read("doc_stats"),
                     corpus_stats=self._bm25_corpus_stats(),
                     candidates=allowed,
-                    df_via_aggregate=self._df_via_aggregate,
                 )
             scored.append(bm.withColumn("_src", F.lit("b")))
         if "phrase" in indexes:

@@ -1,4 +1,4 @@
-"""Incremental update: delete-then-reinsert MERGE over Parquet tables.
+"""Incremental update and delete: one staged MERGE over Parquet tables.
 
 Spark-first re-expression of the reference's update path
 (main/core/documents_collection_creator.py:73-98,125-136,204-221):
@@ -6,48 +6,68 @@ for each re-read document, delete its old chunks from every index,
 then re-add with fresh ids continuing the global counter
 (lastIndexItemId, line 129). Delete-then-reinsert also makes the
 watermark's 5-minute overlap window idempotent (SURVEY §7.4): a doc
-re-sent unchanged is simply replaced by identical content.
+re-sent unchanged is simply replaced by identical content. A delete is
+the same merge with an empty fresh leg: :func:`update_collection` and
+:func:`delete_documents` are thin wrappers over :func:`_merge`.
 
-Two write strategies, chosen by the collection's manifest:
+Every table is partitioned by a stable ``_pb`` bucket of its OWNING
+DOCUMENT's id (collection/partitioning.py) — one shared affected set,
+at most batch-doc-count buckets. The merge reads ONLY those partitions
+(Parquet partition pruning), drops the batch documents' rows, unions
+the fresh rows, writes the result to a ``__tmp`` staging dir, and
+swaps just those partition directories. Cost: O(batch + batch_docs ×
+corpus/update_buckets), not O(corpus). Manifest stats update
+incrementally from one fused statistics job. The manifest must record
+``converter.updateBuckets`` (every create does); one without it is
+refused — its tables carry no ``_pb`` level to prune and swap on, so
+the collection has to be re-created.
 
-* **Partition-scoped** (collections created with ``update_buckets``,
-  the default since round 4): every table is partitioned by a stable
-  ``_pb`` bucket of its OWNING DOCUMENT's id
-  (collection/partitioning.py) — one shared affected set, at most
-  batch-doc-count buckets. The update reads ONLY those partitions
-  (Parquet partition pruning), merges them with the fresh rows, writes
-  them to a ``__tmp`` staging dir, and swaps just those partition
-  directories. Cost: O(batch + batch_docs × corpus/update_buckets),
-  not O(corpus). Manifest stats update incrementally from the batch.
+The swap is not crash-ATOMIC (single-writer; a Delta/Iceberg MERGE is
+the transactional upgrade on a real deployment), but it is crash
+RECOVERABLE and a re-run CONVERGES:
 
-* **Legacy full rewrite** (manifests without ``updateBuckets``):
-  anti-join each whole table, rewrite everything, swap directories.
+* the swap parks displaced directories in ``<table>__old`` under a
+  ``_PARTIAL.json`` marker listing the affected buckets, and recovery
+  (writer start or Collection.read) rolls a half-swapped table back;
+* tables commit derived-first (embeddings, postings, doc_stats,
+  field_postings), then chunks, documents last, and the merge drops
+  the fresh chunk ids as well as the stored ones, so re-running an
+  interrupted batch from any committed prefix yields the tables of an
+  uninterrupted run;
+* before the first swap the manifest is saved with an ``inFlight``
+  record, cleared by the final save. A writer that finds the record
+  recounts the manifest from the tables (:func:`_exact_recount`)
+  before its own batch, so the incremental arithmetic never applies
+  to counts a crashed batch left half-updated.
 
-Neither swap is crash-ATOMIC (single-writer; a Delta/Iceberg MERGE is
-the transactional upgrade on a real deployment), but both are crash
-RECOVERABLE: the partition-scoped swap parks displaced directories in
-``<table>__old`` under a ``_PARTIAL.json`` marker listing the affected
-buckets, and recovery (updater start or Collection.read) rolls the
-table back to its pre-update state. Since delete-then-reinsert is
-idempotent, re-running the interrupted batch converges.
+Each swap also invalidates Spark's cached data for the swapped table:
+``Collection.read`` re-reads the same Parquet path, so a serving
+searcher's ``persist()``ed frame would otherwise feed the NEXT merge
+its pre-swap rows and silently undo the previous batch.
 """
 
 from __future__ import annotations
 
 import json
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
+from functools import reduce
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import (
+    TABLES,
     Collection,
     rollback_partial_swap,
 )
 from documents_vector_search_spark.collection.creator import (
     Embedder,
+    _hash_chunk_ids,
+    _StageTimer,
     build_chunks,
     default_embedder,
 )
@@ -57,20 +77,40 @@ from documents_vector_search_spark.collection.partitioning import (
     pb_col,
     pb_dirs,
 )
+from documents_vector_search_spark.functions.text import tokenize
 from documents_vector_search_spark.operators.bm25 import (
     build_doc_stats,
     build_field_postings,
     build_postings,
-    field_text_exprs,
+    term_bucket,
 )
 from documents_vector_search_spark.operators.chunking import assign_chunk_ids
 
+# fuzzy artifacts recover through the same orphan sweep as the tables:
+# an interrupted vocab/deletion_index staged swap rolls back to the
+# parked ``__old`` (see _apply_fuzzy_delta)
+_FUZZY_TABLES = (
+    "vocab",
+    "deletion_index",
+    "vocab_deltas",
+    "deletion_index_deltas",
+)
+
+# directory-level query-pruning columns a table may carry beside _pb;
+# the merge keeps whichever the stored table has
+_LAYOUT_COLS = {
+    "embeddings": ("bucket", "cluster_id"),
+    "postings": ("term_bucket",),
+    "field_postings": ("term_bucket",),
+}
+
 
 def _recover_orphans(collection: Collection, tables: list[str]) -> None:
-    """Clean up leftovers of an interrupted previous update: roll back a
+    """Clean up leftovers of an interrupted previous write: roll back a
     partial partition swap (``_PARTIAL.json`` marker), restore a parked
-    whole-table ``__old`` when the final directory is missing (legacy
-    swap crash), then drop orphaned ``__tmp``/``__old`` dirs."""
+    whole-table ``__old`` when the final directory is missing (refit
+    swap crash, :func:`_swap_all`), then drop orphaned ``__tmp``/
+    ``__old`` dirs."""
     for table in tables:
         rollback_partial_swap(collection.root, table)
         final = Path(collection.table_path(table))
@@ -83,21 +123,12 @@ def _recover_orphans(collection: Collection, tables: list[str]) -> None:
                 shutil.rmtree(orphan)
 
 
-def _zorder_tables(manifest: Manifest) -> frozenset[str]:
-    """Tables whose manifest records a Z-order layout."""
-    zcfg = manifest.converter.get("zorder") or {}
-    table = zcfg.get("table")
-    return frozenset({table}) if table else frozenset()
-
-
-def _record_zorder_degraded(
-    collection: Collection, manifest: Manifest, pbs: list[int]
-) -> None:
+def _record_zorder_degraded(manifest: Manifest, pbs: list[int]) -> None:
     """Record the update/delete-rewritten ``_pb`` buckets of the
-    manifest's Z-order table as CLUSTERING-DEGRADED, and persist the
-    manifest immediately (before the swap: over-recording after a
-    crash costs one redundant re-cluster; under-recording would leave
-    a degraded bucket invisible to OPTIMIZE forever).
+    manifest's Z-order table as CLUSTERING-DEGRADED. The merge persists
+    the manifest with this record BEFORE the swap: over-recording after
+    a crash costs one redundant re-cluster; under-recording would leave
+    a degraded bucket invisible to OPTIMIZE forever.
 
     The staged merge write pre-clusters by partition values like every
     other table — ONE file per rewritten directory, the optimal
@@ -108,31 +139,34 @@ def _record_zorder_degraded(
     this list, re-clusters the buckets from the manifest's zorder
     record, and clears them."""
     zcfg = manifest.converter.get("zorder") or {}
-    if not zcfg.get("table") or not pbs:
+    if not zcfg.get("table"):
         return
-    prev = set(zcfg.get("degraded_pbs") or [])
-    new = prev | {int(pb) for pb in pbs}
-    if new != prev:
-        zcfg["degraded_pbs"] = sorted(new)
-        manifest.converter["zorder"] = zcfg
-        collection.save_manifest(manifest)
+    zcfg["degraded_pbs"] = sorted(
+        set(zcfg.get("degraded_pbs") or []) | {int(pb) for pb in pbs}
+    )
+    manifest.converter["zorder"] = zcfg
+
+
+def _refresh_cached(collection: Collection, table: str) -> None:
+    """Invalidate Spark's cached data for a just-swapped table: any
+    ``persist()``ed frame over its path (a serving searcher's) holds
+    pre-swap rows, and the CacheManager would substitute it into every
+    later read of the same path — including the next merge's."""
+    collection.spark.catalog.refreshByPath(collection.table_path(table))
 
 
 def _swap_all(
     collection: Collection,
     merged: dict[str, DataFrame],
     partition_cols: dict[str, list[str]] | None = None,
-    no_cluster: frozenset[str] = frozenset(),
 ) -> None:
-    """Legacy two-phase FULL table rewrite: FIRST materialize every
-    merged table to a __tmp dir (all plans still read the intact
-    originals — swapping any table earlier would make later lazy plans
-    read post-swap data and corrupt the merge), THEN swap all
-    directories. Used only for collections whose manifest predates
-    ``updateBuckets``."""
+    """Two-phase WHOLE-table rewrite for the refits (refit.py): FIRST
+    materialize every table to a __tmp dir (all plans still read the
+    intact originals — swapping any table earlier would make later
+    lazy plans read post-swap data), THEN swap all directories."""
     for table, df in merged.items():
         cols = (partition_cols or {}).get(table, [])
-        if cols and table not in no_cluster:
+        if cols:
             # cluster rows by partition values before the partitioned
             # write — same file-spray rationale as _swap_partitions
             df = df.repartition(*[F.col(c) for c in cols])
@@ -152,6 +186,7 @@ def _swap_all(
         tmp.rename(final)
         if old.exists():
             shutil.rmtree(old)
+        _refresh_cached(collection, table)
 
 
 def _swap_partitions(
@@ -159,30 +194,24 @@ def _swap_partitions(
     merged: dict[str, DataFrame],
     partition_cols: dict[str, list[str]],
     affected_pbs: dict[str, list[int]],
-    swap_cols: dict[str, str] | None = None,
     no_cluster: frozenset[str] = frozenset(),
 ) -> None:
     """Two-phase PARTITION-scoped swap. Phase A stages every merged
     table (affected partitions only) under ``<table>__tmp`` while all
-    plans still read the intact originals. Phase B, per table: park the
-    live ``<col>=X`` directories in ``<table>__old`` (with a marker
-    listing X values and the column, for rollback), then move the
-    staged directories in. Phase C removes the parking dirs — the
-    commit point. ``swap_cols`` names the partition column the swap
-    keys on per table (default ``_pb``; the fuzzy artifacts swap on
-    ``term_bucket`` / ``variant_bucket``).
+    plans still read the intact originals. Phase B, per table in dict
+    order: park the live ``_pb=X`` directories in ``<table>__old``
+    (with a marker listing the X values, for rollback), then move the
+    staged directories in. Phase C removes the parking dirs —
+    the commit point — in the same order, and invalidates each table's
+    cached data.
 
     An affected bucket whose rows were ALL deleted has no staged dir;
     parking alone removes it, which is exactly the merge semantics.
     """
     # phase A: stage everything before touching any live directory.
-    # The five table writes are independent batch-sized jobs — run them
-    # as concurrent driver-thread actions (same fan-out pattern as the
+    # The table writes are independent batch-sized jobs — run them as
+    # concurrent driver-thread actions (same fan-out pattern as the
     # creator) so job-scheduling overhead overlaps instead of summing.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from documents_vector_search_spark.collection.creator import _StageTimer
-
     _timer = _StageTimer(f"swap:{collection.name}")
 
     def _stage(item) -> None:
@@ -216,19 +245,26 @@ def _swap_partitions(
         tmp = Path(collection.table_path(f"{table}__tmp"))
         old = live.with_name(f"{table}__old")
         old.mkdir(parents=True, exist_ok=True)
-        col = (swap_cols or {}).get(table, UPDATE_PB_COL)
+        marker = {"pbs": affected_pbs[table], "col": UPDATE_PB_COL}
+        # "parking" tells rollback that the live dirs are still
+        # originals (catalog.rollback_partial_swap)
         (old / "_PARTIAL.json").write_text(
-            json.dumps({"pbs": affected_pbs[table], "col": col})
+            json.dumps({**marker, "parking": True})
         )
         # one tree walk per root (not per bucket): at production bucket
         # counts a per-bucket rglob would rescan the whole layout tree
         # O(buckets) times
         wanted = set(affected_pbs[table])
-        for src_root, dst_root in ((live, old), (tmp, live)):
-            for d in pb_dirs(src_root, wanted, col):
+
+        def move_dirs(src_root: Path, dst_root: Path) -> None:
+            for d in pb_dirs(src_root, wanted):
                 dest = dst_root / d.relative_to(src_root)
                 dest.parent.mkdir(parents=True, exist_ok=True)
                 d.rename(dest)
+
+        move_dirs(live, old)
+        (old / "_PARTIAL.json").write_text(json.dumps(marker))
+        move_dirs(tmp, live)
 
     # phase C: commit — drop parked state and staging dirs
     for table in merged:
@@ -236,6 +272,7 @@ def _swap_partitions(
             p = Path(collection.table_path(f"{table}{suffix}"))
             if p.exists():
                 shutil.rmtree(p)
+        _refresh_cached(collection, table)
 
 
 def _materialize_fuzzy_delta(
@@ -269,8 +306,8 @@ def _stage_fuzzy_delta(
     collection: Collection, manifest: Manifest, delta_path: str | None
 ) -> dict | None:
     """Staging half of the fuzzy append (fuzzy_artifacts.
-    stage_vocab_delta): touches only ``__tmp`` dirs, so the updater
-    runs it CONCURRENTLY with the partition swap."""
+    stage_vocab_delta): touches only ``__tmp`` dirs, so the merge runs
+    it CONCURRENTLY with the partition swap."""
     if delta_path is None:
         return None
     from documents_vector_search_spark.collection.fuzzy_artifacts import (
@@ -287,20 +324,15 @@ def _stage_fuzzy_delta(
     )
 
 
-_NOT_STAGED = object()  # "stage at publish time" marker (≠ None = empty)
-
-
 def _apply_fuzzy_delta(
     collection: Collection,
     manifest: Manifest,
     delta_path: str | None,
-    staged: dict | None | object = _NOT_STAGED,
+    staged: dict | None,
 ) -> None:
     """Post-swap phase: publish the staged delta batch to the fuzzy
     delta logs (O(changed terms), base untouched), compacting when the
-    log is long; remove the delta staging dir. Callers that did not
-    pre-stage leave ``staged`` at the default and stage here (None is
-    a real pre-staged result meaning the delta was empty)."""
+    log is long; remove the delta staging dir."""
     if delta_path is None:
         return
     from documents_vector_search_spark.collection.fuzzy_artifacts import (
@@ -308,54 +340,24 @@ def _apply_fuzzy_delta(
         DEFAULT_MAX_EDITS,
         fuzzy_config,
         publish_vocab_delta,
-        stage_vocab_delta,
     )
 
     cfg = fuzzy_config(manifest) or {}
-    max_edits = int(cfg.get("maxEdits", DEFAULT_MAX_EDITS))
-    if staged is _NOT_STAGED:
-        staged = stage_vocab_delta(collection, delta_path, max_edits)
     publish_vocab_delta(
         collection,
         staged,
         delta_path,
-        max_edits=max_edits,
+        max_edits=int(cfg.get("maxEdits", DEFAULT_MAX_EDITS)),
         compact_after=int(cfg.get("compactAfter", DEFAULT_COMPACT_AFTER)),
     )
     shutil.rmtree(delta_path, ignore_errors=True)
 
 
-def _apply_chunk_delta(
-    manifest: Manifest,
-    n_stale: int,
-    stale_dl: float,
-    n_fresh: int = 0,
-    fresh_dl: float = 0.0,
-) -> None:
-    """Incremental manifest chunk stats, shared by update (−stale
-    +fresh) and delete (−stale): count and avgdl adjust from the total
-    document length rather than a corpus recount."""
-    old_n = manifest.numberOfChunks
-    old_total = (
-        (manifest.avgChunkLength or 0.0) * old_n
-        if manifest.avgChunkLength is not None
-        else None
-    )
-    new_n = old_n - n_stale + n_fresh
-    manifest.numberOfChunks = max(0, new_n)
-    if old_total is not None and new_n > 0:
-        manifest.avgChunkLength = (
-            max(old_total - float(stale_dl) + float(fresh_dl), 0.0) / new_n
-        )
-    elif new_n <= 0:
-        manifest.avgChunkLength = None
-
-
 def _field_stats_from_table(collection: Collection) -> dict:
     """Exact manifest fieldStats recomputed from the field_postings
     table (fl repeats per term row, so distinct per (doc, field)
-    first). Convergence backstop for the legacy rewrite path and
-    _exact_recount."""
+    first). Convergence backstop for _exact_recount, and the doctor's
+    reference."""
     rows = (
         collection.read("field_postings")
         .select("document_id", "field", "fl")
@@ -370,25 +372,344 @@ def _field_stats_from_table(collection: Collection) -> dict:
     return stats
 
 
-def _apply_field_delta(manifest: Manifest, field_delta: dict) -> None:
-    """Incremental manifest fieldStats (BM25F avgfl numerators and
-    denominators), shared by update (−stale +fresh) and delete
-    (−stale): ``field_delta`` maps side → Row with ``_fn_<field>`` /
-    ``_fs_<field>`` aggregates per field."""
-    if manifest.fieldStats is None:
-        return
-    stale = field_delta.get("stale")
-    fresh = field_delta.get("fresh")
-    for name, rec in manifest.fieldStats.items():
-        dn = ds = 0
-        if stale is not None:
-            dn -= int(stale[f"_fn_{name}"] or 0)
-            ds -= int(stale[f"_fs_{name}"] or 0)
-        if fresh is not None:
-            dn += int(fresh[f"_fn_{name}"] or 0)
-            ds += int(fresh[f"_fs_{name}"] or 0)
-        rec["docs"] = max(0, int(rec["docs"]) + dn)
-        rec["sumFl"] = max(0, int(rec["sumFl"]) + ds)
+def _stat_leg(
+    df: DataFrame,
+    side: str,
+    part,
+    chunk_id=None,
+    length=None,
+    wm=None,
+) -> DataFrame:
+    """One input of the fused statistics job: rows of ``df`` tagged
+    with their side (``stale`` = leaving the collection, ``fresh`` =
+    entering) and the part they count (``_chunks``, ``_documents``, or
+    a BM25F field name — ``part`` may be a Column), carrying the chunk
+    id, a token length and a watermark where the part has one."""
+    return df.select(
+        F.lit(side).alias("_side"),
+        (F.lit(part) if isinstance(part, str) else part).alias("part"),
+        F.lit(chunk_id).cast("bigint").alias("chunk_id"),
+        F.lit(length).cast("bigint").alias("len"),
+        F.lit(wm).cast("timestamp").alias("wm"),
+    )
+
+
+def _apply_stats(manifest: Manifest, stats: dict) -> None:
+    """Incremental manifest arithmetic from the fused statistics job
+    (``stats[(side, part)]`` → count ``n``, length ``total``, max chunk
+    id ``last``, max ``wm``): −stale +fresh for the document and chunk
+    counts, avgdl (from the total length, not a corpus recount) and
+    BM25F fieldStats; the counter strategy's lastIndexItemId and the
+    watermark advance from the fresh leg (a delete has none, so
+    neither moves)."""
+    empty = {"n": 0, "total": 0, "last": None, "wm": None}
+
+    def get(side: str, part: str) -> dict:
+        return stats.get((side, part), empty)
+
+    manifest.numberOfDocuments = max(
+        0,
+        manifest.numberOfDocuments
+        - get("stale", "_documents")["n"]
+        + get("fresh", "_documents")["n"],
+    )
+    old_n = manifest.numberOfChunks
+    new_n = old_n - get("stale", "_chunks")["n"] + get("fresh", "_chunks")["n"]
+    manifest.numberOfChunks = max(0, new_n)
+    if new_n <= 0:
+        manifest.avgChunkLength = None
+    elif manifest.avgChunkLength is not None:
+        total = (
+            manifest.avgChunkLength * old_n
+            - get("stale", "_chunks")["total"]
+            + get("fresh", "_chunks")["total"]
+        )
+        manifest.avgChunkLength = max(float(total), 0.0) / new_n
+    for name, rec in (manifest.fieldStats or {}).items():
+        rec["docs"] = max(
+            0,
+            int(rec["docs"])
+            - get("stale", name)["n"]
+            + get("fresh", name)["n"],
+        )
+        rec["sumFl"] = max(
+            0,
+            int(rec["sumFl"])
+            - get("stale", name)["total"]
+            + get("fresh", name)["total"],
+        )
+    last = get("fresh", "_chunks")["last"]
+    counter_ids = manifest.converter.get("idStrategy", "counter") == "counter"
+    if counter_ids and last is not None:
+        manifest.lastIndexItemId = max(manifest.lastIndexItemId, int(last))
+    wm = get("fresh", "_documents")["wm"]
+    if wm is not None:
+        new_wm = wm.isoformat() if isinstance(wm, datetime) else str(wm)
+        if (
+            manifest.lastModifiedDocumentTime is None
+            or new_wm > manifest.lastModifiedDocumentTime
+        ):
+            manifest.lastModifiedDocumentTime = new_wm
+
+
+def _exact_recount(collection: Collection, manifest: Manifest) -> Manifest:
+    """Recompute the manifest's table-derived stats from the stored
+    tables, clear the in-flight record, and persist.
+
+    Run by a writer that finds the ``inFlight`` record of a batch that
+    died between its first swap and its manifest save. Under the
+    counter id strategy lastIndexItemId also moves past every stored
+    chunk id, so the next batch's fresh ids cannot collide with chunks
+    the interrupted batch already committed."""
+    stats = collection.read("chunks").agg(
+        F.count("*").alias("n"),
+        F.avg(F.size(tokenize("indexed_data"))).alias("avgdl"),
+        F.max("chunk_id").alias("last"),
+    ).first()
+    manifest.numberOfDocuments = collection.read("documents").count()
+    manifest.numberOfChunks = stats["n"]
+    manifest.avgChunkLength = (
+        float(stats["avgdl"]) if stats["avgdl"] is not None else None
+    )
+    if (collection.root / "field_postings").exists():
+        manifest.fieldStats = _field_stats_from_table(collection)
+    if (
+        manifest.converter.get("idStrategy", "counter") == "counter"
+        and stats["last"] is not None
+    ):
+        manifest.lastIndexItemId = max(
+            manifest.lastIndexItemId, int(stats["last"])
+        )
+    manifest.inFlight = None
+    collection.save_manifest(manifest)
+    return manifest
+
+
+def _open_for_write(collection: Collection) -> Manifest:
+    """Recover an interrupted earlier write and load the manifest:
+    roll back half-swapped partitions and drop orphaned staging dirs,
+    refuse a manifest without ``updateBuckets``, and recount the
+    manifest when it carries an ``inFlight`` record."""
+    _recover_orphans(collection, [*TABLES, *_FUZZY_TABLES])
+    manifest = collection.manifest()
+    if not manifest.converter.get("updateBuckets"):
+        raise ValueError(
+            f"collection '{collection.name}' records no updateBuckets in "
+            "its manifest: its tables carry no _pb partition level for "
+            "an update or delete to merge on — re-create the collection"
+        )
+    if manifest.inFlight is not None:
+        manifest = _exact_recount(collection, manifest)
+    return manifest
+
+
+def _merge(
+    collection: Collection,
+    manifest: Manifest,
+    op: str,
+    ids: DataFrame,
+    fresh_rows: Callable[[dict[str, DataFrame]], dict[str, DataFrame]]
+    | None = None,
+) -> Manifest:
+    """The staged merge behind :func:`update_collection` and
+    :func:`delete_documents`.
+
+    ``ids`` (an ``id`` column) names every document the batch replaces
+    or removes. ``fresh_rows`` maps the pruned pre-merge tables to the
+    batch's fresh rows per table, each carrying ``_pb`` — an update's
+    re-chunked, re-indexed documents; a delete passes none (an empty
+    fresh leg). Every table drops the batch documents' rows by
+    anti-join (chunk-keyed tables on their chunk ids), unions the fresh
+    rows, and only the affected ``_pb`` directories swap."""
+    ub = int(manifest.converter["updateBuckets"])
+    timer = _StageTimer(f"{op}:{collection.name}")
+    # localCheckpoint: the id list feeds the bucket collect, the drop
+    # set, the document-keyed anti-joins and the statistics job —
+    # materialized once instead of re-running the caller's lineage
+    with timer.stage("batch_buckets"):
+        ids = ids.select(F.col("id").cast("string").alias("id")).distinct()
+        ids = ids.localCheckpoint()
+        doc_pbs = sorted(
+            ids.agg(
+                F.collect_set(pb_col(F.col("id"), ub)).alias("pbs")
+            ).first()["pbs"]
+        )
+    if not doc_pbs:
+        return manifest  # empty batch: nothing to do
+    doc_keys = ids.withColumnRenamed("id", "document_id")
+
+    # swap ORDER is the crash-convergence contract: derived tables
+    # first, then chunks, documents last (dict order drives the swap)
+    has_fp = (collection.root / "field_postings").exists()
+    tables = [
+        "embeddings",
+        "postings",
+        "doc_stats",
+        *(["field_postings"] if has_fp else []),
+        "chunks",
+        "documents",
+    ]
+    # Parquet partition pruning to the batch's buckets: every table
+    # buckets by owning-document id, so doc_pbs is the affected set for
+    # all of them — O(corpus/update_buckets) per table, not O(corpus)
+    old = {
+        t: collection.read(t).filter(F.col(UPDATE_PB_COL).isin(doc_pbs))
+        for t in tables
+    }
+    fresh: dict[str, DataFrame] = {}
+    if fresh_rows is not None:
+        with timer.stage("fresh_rows"):
+            fresh = fresh_rows(old)
+
+    # chunk ids to drop from every chunk-keyed table: the batch
+    # documents' stored chunks AND the fresh chunk ids — the latter let
+    # a re-run of an interrupted batch remove the rows its first run
+    # already swapped into the derived tables. Materialized once (tiny):
+    # every consumer broadcasts it instead of re-running the semi-join.
+    drop = old["chunks"].join(doc_keys, "document_id", "left_semi").select(
+        "chunk_id"
+    )
+    if fresh:
+        drop = drop.unionByName(fresh["chunks"].select("chunk_id"))
+    with timer.stage("drop_chunk_ids"):
+        drop = drop.localCheckpoint()
+
+    merged = {}
+    for t in tables:
+        if t == "documents":
+            kept = old[t].join(ids, "id", "left_anti")
+        elif t == "field_postings":
+            kept = old[t].join(doc_keys, "document_id", "left_anti")
+        else:
+            kept = old[t].join(drop, "chunk_id", "left_anti")
+        merged[t] = kept.unionByName(fresh[t]) if t in fresh else kept
+
+    # ONE statistics job for both sides (inputs are tiny checkpoints and
+    # batch-sized plans; the union costs nothing beyond their rows):
+    # stale/fresh chunk counts and lengths, document counts (from the
+    # documents table — the last to commit, so a crashed earlier run is
+    # counted the way _exact_recount counts it), the watermark, and the
+    # BM25F field stats from field_postings rows.
+    stale_chunks = old["chunks"].join(drop, "chunk_id", "left_semi")
+    legs = [
+        _stat_leg(
+            stale_chunks, "stale", "_chunks",
+            chunk_id=F.col("chunk_id"),
+            length=F.size(tokenize("indexed_data")),
+        ),
+        _stat_leg(
+            old["documents"].join(ids, "id", "left_semi"),
+            "stale", "_documents",
+        ),
+    ]
+    if fresh:
+        legs += [
+            _stat_leg(
+                fresh["chunks"], "fresh", "_chunks",
+                chunk_id=F.col("chunk_id"),
+                length=F.size(tokenize("indexed_data")),
+            ),
+            _stat_leg(
+                fresh["documents"], "fresh", "_documents",
+                wm=F.col("last_modified_at"),
+            ),
+        ]
+    if has_fp and manifest.fieldStats is not None:
+        fp_sides = {
+            "stale": old["field_postings"].join(
+                doc_keys, "document_id", "left_semi"
+            ),
+            **({"fresh": fresh["field_postings"]} if fresh else {}),
+        }
+        legs += [
+            _stat_leg(
+                fp.select("document_id", "field", "fl").distinct(),
+                side, F.col("field"),
+                length=F.col("fl"),
+            )
+            for side, fp in fp_sides.items()
+        ]
+    stats_df = (
+        reduce(DataFrame.unionByName, legs)
+        .groupBy("_side", "part")
+        .agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum("len"), F.lit(0)).alias("total"),
+            F.max("chunk_id").alias("last"),
+            F.max("wm").alias("wm"),
+        )
+    )
+
+    # fuzzy artifacts (collection/fuzzy_artifacts.py): aggregate the
+    # vocabulary DELTA from exactly the postings rows this batch
+    # touches and MATERIALIZE it before any swap (post-swap lazy reads
+    # of the postings path would see merged data and double-count).
+    # The statistics collect is an independent pre-swap read, so the
+    # two driver actions run as concurrent jobs instead of summing.
+    def _fuzzy() -> str | None:
+        return _materialize_fuzzy_delta(
+            collection,
+            manifest,
+            fresh.get("postings", old["postings"].limit(0)),
+            old["postings"].join(drop, "chunk_id", "left_semi"),
+        )
+
+    with ThreadPoolExecutor(max_workers=2) as pool, timer.stage(
+        "stats_and_fuzzy_delta"
+    ):
+        f_fuzzy = pool.submit(_fuzzy)
+        f_stats = pool.submit(stats_df.collect)
+        fuzzy_delta_path = f_fuzzy.result()
+        stats = {
+            (r["_side"], r["part"]): {
+                "n": int(r["n"]),
+                "total": int(r["total"]),
+                "last": r["last"],
+                "wm": r["wm"],
+            }
+            for r in f_stats.result()
+        }
+
+    if not fresh and not stats.get(("stale", "_documents")) and not stats.get(
+        ("stale", "_chunks")
+    ):
+        # unknown ids: nothing stored to remove
+        if fuzzy_delta_path is not None:
+            shutil.rmtree(fuzzy_delta_path, ignore_errors=True)
+        return manifest
+
+    manifest.inFlight = {"op": op}
+    _record_zorder_degraded(manifest, doc_pbs)
+    collection.save_manifest(manifest)
+    # the fuzzy delta's two batch-dir stagings touch only __tmp dirs
+    # (stage_vocab_delta contract), so they run CONCURRENTLY with the
+    # swap — only the publish renames wait for the commit
+    with ThreadPoolExecutor(max_workers=1) as pool, timer.stage(
+        "partition_swap"
+    ):
+        f_fuzzy_staged = pool.submit(
+            _stage_fuzzy_delta, collection, manifest, fuzzy_delta_path
+        )
+        _swap_partitions(
+            collection,
+            merged,
+            partition_cols={
+                t: [c for c in _LAYOUT_COLS.get(t, ()) if c in old[t].columns]
+                + [UPDATE_PB_COL]
+                for t in merged
+            },
+            affected_pbs={t: doc_pbs for t in merged},
+        )
+        fuzzy_staged = f_fuzzy_staged.result()
+
+    _apply_stats(manifest, stats)
+    with timer.stage("fuzzy_delta_publish"):
+        _apply_fuzzy_delta(
+            collection, manifest, fuzzy_delta_path, staged=fuzzy_staged
+        )
+    manifest.inFlight = None
+    collection.save_manifest(manifest)
+    return manifest
 
 
 def update_collection(
@@ -405,26 +726,7 @@ def update_collection(
     dim and embedder identity are validated against the manifest's
     ``converter.embedding`` record — a mismatch raises instead of
     silently mixing incompatible vectors into one index."""
-    from documents_vector_search_spark.collection.catalog import TABLES
-
-    # fuzzy artifacts recover through the same orphan sweep: an
-    # interrupted vocab/deletion_index staged swap rolls back to the
-    # parked ``__old`` (see _apply_fuzzy_delta)
-    from documents_vector_search_spark.collection.creator import _StageTimer
-
-    _timer = _StageTimer(f"update:{collection.name}")
-    with _timer.stage("recover_orphans"):
-        _recover_orphans(
-            collection,
-            list(TABLES)
-            + [
-                "vocab",
-                "deletion_index",
-                "vocab_deltas",
-                "deletion_index_deltas",
-            ],
-        )
-    manifest = collection.manifest()
+    manifest = _open_for_write(collection)
     splitter = manifest.converter.get("splitter", {})
     chunk_size = splitter.get("chunkSize", 1000)
     chunk_overlap = splitter.get("chunkOverlap", 100)
@@ -457,473 +759,144 @@ def update_collection(
             "embedders cannot share an index"
         )
     embed = embedder or default_embedder(embedding_dim)
+    ub = int(manifest.converter["updateBuckets"])
 
-    changed_ids = changed_docs.select(F.col("id")).distinct()
-    update_buckets = manifest.converter.get("updateBuckets")
+    def bucketed(df: DataFrame, key: str) -> DataFrame:
+        # the owning document's bucket (partitioning.py)
+        return df.withColumn(UPDATE_PB_COL, pb_col(F.col(key), ub))
 
-    # --- pruned vs full reads --------------------------------------------
-    # Partition-scoped path: documents and chunks are partitioned by
-    # pb(document id), so every read below prunes to the changed docs'
-    # buckets — O(corpus/update_buckets) per touched table, not
-    # O(corpus). The bucket list is tiny (≤ update_buckets ints).
-    # ONE batch-sized job yields the bucket set AND the manifest's
-    # batch stats (count, watermark) — driver-action count, not data,
-    # dominates a small update, so scalar probes are fused throughout.
-    doc_pbs: list[int] = []
-    n_batch = 0
-    batch_watermark = None
-    if update_buckets:
-        with _timer.stage("batch_stats"):
-            batch_row = changed_docs.agg(
-                F.collect_set(
-                    pb_col(F.col("id"), update_buckets)
-                ).alias("pbs"),
-                F.count("*").alias("n"),
-                F.max("last_modified_at").alias("wm"),
-            ).first()
-        doc_pbs = sorted(batch_row["pbs"])
-        n_batch = int(batch_row["n"])
-        batch_watermark = batch_row["wm"]
-
-    def _pruned(table: str, pbs: list[int]) -> DataFrame:
-        df = collection.read(table)
-        if update_buckets:
-            df = df.filter(F.col(UPDATE_PB_COL).isin(pbs))
-        elif UPDATE_PB_COL in df.columns:
-            # manifest predates updateBuckets but the table carries a
-            # _pb level (e.g. manifest hand-edited/restored): the legacy
-            # full rewrite drops the bucketing rather than guessing a
-            # bucket count that may not match the directories
-            df = df.drop(UPDATE_PB_COL)
-        return df
-
-    # --- documents: replace changed, append new ---------------------------
-    docs = _pruned("documents", doc_pbs)
-    fresh_docs = changed_docs
-    if update_buckets:
-        fresh_docs = fresh_docs.withColumn(
-            UPDATE_PB_COL, pb_col(F.col("id"), update_buckets)
+    def fresh_rows(old: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        # --- fresh chunks: ids per the collection's recorded strategy --
+        # hash (default): deterministic on (document_id, chunk_number) —
+        # a replaced document's chunks REUSE their ids, so updates stay
+        # idempotent. counter: reference parity — continue from
+        # lastIndexItemId (documents_collection_creator.py:129); bounded
+        # update batch, so the global window is fine here.
+        built = build_chunks(
+            changed_docs, chunk_size, chunk_overlap, title_col, title_from_text
         )
-    merged_docs = docs.join(changed_ids, "id", "left_anti").unionByName(fresh_docs)
-
-    # --- stale chunk ids (for index deletes, U3) ---------------------------
-    # localCheckpoint: this tiny id list feeds SIX downstream plans
-    # (four anti-joins, the bucket-set collect, the stale-stats
-    # semi-join) — materialized once, every consumer broadcasts rows
-    # instead of re-running the pruned read + semi-join.
-    chunks = _pruned("chunks", doc_pbs)
-    with _timer.stage("stale_chunk_ids"):
-        stale_chunks = (
-            chunks.join(
-                changed_ids,
-                chunks["document_id"] == changed_ids["id"],
-                "left_semi",
+        if manifest.converter.get("idStrategy", "counter") == "hash":
+            chunks = _hash_chunk_ids(built)
+        else:
+            chunks = assign_chunk_ids(
+                built,
+                offset=manifest.lastIndexItemId + 1,
+                id_col="document_id",
+                chunk_number_col="chunk_number",
             )
-            .select("chunk_id")
-            .localCheckpoint()
+        # Materialize the freshly built chunks ONCE: every index table,
+        # the drop set, and the statistics job all read this frame —
+        # without the checkpoint each of those driver actions re-runs
+        # the chunking lineage, and job-count overhead (not data)
+        # dominates the update. Batch-sized, so trivially small.
+        chunks = bucketed(chunks, "document_id").localCheckpoint()
+
+        embeddings = chunks.select(
+            "chunk_id",
+            embed(F.col("indexed_data")).cast("array<float>").alias("vector"),
+            UPDATE_PB_COL,
         )
-
-    # --- fresh chunks: ids per the collection's recorded strategy ---------
-    # hash (default): deterministic on (document_id, chunk_number) — a
-    # replaced document's chunks REUSE their ids, so the delete half of
-    # delete-then-reinsert covers them and updates stay idempotent.
-    # counter: reference parity — continue from lastIndexItemId
-    # (documents_collection_creator.py:129); bounded update batch, so the
-    # global window is fine here.
-    built = build_chunks(
-        changed_docs, chunk_size, chunk_overlap, title_col, title_from_text
-    )
-    if manifest.converter.get("idStrategy", "counter") == "hash":
-        from documents_vector_search_spark.collection.creator import (
-            _hash_chunk_ids,
-        )
-
-        fresh_chunks = _hash_chunk_ids(built)
-    else:
-        fresh_chunks = assign_chunk_ids(
-            built,
-            offset=manifest.lastIndexItemId + 1,
-            id_col="document_id",
-            chunk_number_col="chunk_number",
-        )
-    if update_buckets:
-        fresh_chunks = fresh_chunks.withColumn(
-            UPDATE_PB_COL, pb_col(F.col("document_id"), update_buckets)
-        )
-    # Materialize the freshly built chunks ONCE: every index table, the
-    # bucket-set collect, and the incremental stats all read this frame
-    # — without the checkpoint each of those ~8 driver actions re-runs
-    # the chunking lineage, and job-count overhead (not data) dominates
-    # the update. Batch-sized, so the materialization is trivially small.
-    with _timer.stage("fresh_chunks_build"):
-        fresh_chunks = fresh_chunks.localCheckpoint()
-
-    merged_chunks = (
-        chunks.join(stale_chunks, "chunk_id", "left_anti").unionByName(fresh_chunks)
-    )
-
-    # --- incremental manifest stats (O(batch)), fused into two jobs ---
-    # EVERY table buckets by the owning document's id (partitioning.py),
-    # so the batch's doc_pbs IS the affected set for all five tables —
-    # no per-table bucket collection needed.
-    stale_stats = fresh_stats = None
-    if update_buckets:
-        from documents_vector_search_spark.functions.text import tokenize
-
-        # ONE job for both sides: tag the stale and fresh chunk rows and
-        # aggregate per side (both inputs are materialized checkpoints,
-        # so the union costs nothing beyond the rows themselves).
-        # n_docs rides along: every document this engine writes has at
-        # least its title chunk (creator.build_chunks chunk 0), so the
-        # distinct owning docs of the stale chunks ARE the replaced docs.
-        cols = ["chunk_id", "document_id", "indexed_data"]
-        tagged = (
-            chunks.join(stale_chunks, "chunk_id", "left_semi")
-            .select(F.lit("stale").alias("_side"), *cols)
-            .unionByName(
-                fresh_chunks.select(F.lit("fresh").alias("_side"), *cols)
+        vec = F.col("vector").cast("array<double>")
+        # ANN layout (create_collection(ann_planes=...)): fresh vectors
+        # get their LSH bucket so the merge keeps the partitioned layout
+        ann_cfg = manifest.converter.get("ann")
+        if ann_cfg:
+            from documents_vector_search_spark.operators.dedup import (
+                hyperplane_bucket,
+                random_hyperplanes,
             )
-        )
-        with _timer.stage("chunk_side_stats"):
-            side_rows = {
-                r["_side"]: r
-                for r in tagged.groupBy("_side")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.max("chunk_id").alias("last"),
-                    F.sum(F.size(tokenize("indexed_data"))).alias("dl"),
-                    F.countDistinct("document_id").alias("n_docs"),
+
+            planes = random_hyperplanes(
+                embedding_dim, ann_cfg["nPlanes"], ann_cfg["seed"]
+            )
+            embeddings = embeddings.withColumn(
+                "bucket", hyperplane_bucket(vec, planes)
+            )
+        # IVF layout (create_collection(ivf_nlist=...)): assign fresh
+        # vectors to their nearest manifest centroid — same rounded
+        # centroids the create used, so assignment is bit-identical
+        # across updates
+        ivf_cfg = manifest.converter.get("ivf")
+        if ivf_cfg:
+            from documents_vector_search_spark.operators.ivf import (
+                assign_cluster_auto,
+            )
+
+            embeddings = embeddings.withColumn(
+                "cluster_id", assign_cluster_auto(vec, ivf_cfg["centroids"])
+            )
+            if ivf_cfg.get("pq"):
+                # IVFPQ layout: re-encode fresh vectors with the manifest
+                # codebooks so ADC search covers updates too
+                from documents_vector_search_spark.operators.pq import (
+                    pq_encode_auto,
                 )
-                .collect()
-            }
-        empty = {"n": 0, "last": None, "dl": 0, "n_docs": 0}
-        stale_stats = side_rows.get("stale", empty)
-        fresh_stats = side_rows.get("fresh", empty)
 
-    fresh_embeddings = fresh_chunks.select(
-        "chunk_id",
-        embed(F.col("indexed_data")).cast("array<float>").alias("vector"),
-        # owning doc's bucket, ridden from fresh_chunks (partitioning.py)
-        *([F.col(UPDATE_PB_COL)] if update_buckets else []),
-    )
-    # ANN layout (create_collection(ann_planes=...)): fresh vectors get
-    # their LSH bucket so the rewrite keeps the partitioned layout
-    ann_cfg = manifest.converter.get("ann")
-    if ann_cfg:
-        from documents_vector_search_spark.operators.dedup import (
-            hyperplane_bucket,
-            random_hyperplanes,
-        )
-
-        planes = random_hyperplanes(
-            embedding_dim, ann_cfg["nPlanes"], ann_cfg["seed"]
-        )
-        fresh_embeddings = fresh_embeddings.withColumn(
-            "bucket",
-            hyperplane_bucket(F.col("vector").cast("array<double>"), planes),
-        )
-    # IVF layout (create_collection(ivf_nlist=...)): assign fresh vectors
-    # to their nearest manifest centroid — same rounded centroids the
-    # create used, so assignment is bit-identical across updates
-    ivf_cfg = manifest.converter.get("ivf")
-    if ivf_cfg:
-        from documents_vector_search_spark.operators.ivf import (
-            assign_cluster_auto,
-        )
-
-        fresh_embeddings = fresh_embeddings.withColumn(
-            "cluster_id",
-            assign_cluster_auto(
-                F.col("vector").cast("array<double>"), ivf_cfg["centroids"]
-            ),
-        )
-        if ivf_cfg.get("pq"):
-            # IVFPQ layout: re-encode fresh vectors with the manifest
-            # codebooks so ADC search covers updates too
-            from documents_vector_search_spark.operators.pq import (
-                pq_encode_auto,
+                embeddings = embeddings.withColumn(
+                    "codes",
+                    pq_encode_auto(vec, ivf_cfg["pq"]["codebooks"]),
+                )
+        # SQ8 layout (create_collection(sq8=True)): re-encode fresh
+        # vectors with the manifest's FITTED bounds — never refit
+        # mid-update (codes across the corpus must share one scale;
+        # out-of-range values clamp)
+        sq_cfg = manifest.converter.get("sq8")
+        if sq_cfg:
+            from documents_vector_search_spark.operators.sq import (
+                sq_encode_auto,
             )
 
-            fresh_embeddings = fresh_embeddings.withColumn(
-                "codes",
-                pq_encode_auto(
-                    F.col("vector").cast("array<double>"),
-                    ivf_cfg["pq"]["codebooks"],
-                ),
+            embeddings = embeddings.withColumn(
+                "codes", sq_encode_auto(vec, sq_cfg["mins"], sq_cfg["maxs"])
             )
-    # SQ8 layout (create_collection(sq8=True)): re-encode fresh vectors
-    # with the manifest's FITTED bounds — never refit mid-update (codes
-    # across the corpus must share one scale; out-of-range values clamp)
-    sq_cfg = manifest.converter.get("sq8")
-    if sq_cfg:
-        from documents_vector_search_spark.operators.sq import (
-            sq_encode_auto,
+
+        # postings keep the stored table's optional columns (schema-
+        # sniffed: dl, positions) and its term_bucket layout level
+        old_postings = old["postings"].columns
+        postings = build_postings(
+            chunks,
+            id_col="chunk_id",
+            text_col="indexed_data",
+            with_dl="dl" in old_postings,
+            carry_cols=[UPDATE_PB_COL],
+            with_positions="positions" in old_postings,
         )
-
-        fresh_embeddings = fresh_embeddings.withColumn(
-            "codes",
-            sq_encode_auto(
-                F.col("vector").cast("array<double>"),
-                sq_cfg["mins"],
-                sq_cfg["maxs"],
-            ),
-        )
-    merged_embeddings = (
-        _pruned("embeddings", doc_pbs)
-        .join(stale_chunks, "chunk_id", "left_anti")
-        .unionByName(fresh_embeddings)
-    )
-
-    carry = [UPDATE_PB_COL] if update_buckets else []
-    old_postings = _pruned("postings", doc_pbs)
-    fresh_postings = build_postings(
-        fresh_chunks,
-        id_col="chunk_id",
-        text_col="indexed_data",
-        with_dl="dl" in old_postings.columns,
-        carry_cols=carry,
-        # schema-sniffed like dl: a positional collection stays
-        # positional through incremental merges
-        with_positions="positions" in old_postings.columns,
-    )
-    postings_bucketed = "term_bucket" in old_postings.columns
-    if postings_bucketed:
-        from documents_vector_search_spark.operators.bm25 import term_bucket
-
-        fresh_postings = fresh_postings.withColumn(
-            "term_bucket", term_bucket(F.col("term"))
-        )
-    merged_postings = (
-        old_postings
-        .join(stale_chunks, "chunk_id", "left_anti")
-        .unionByName(fresh_postings)
-    )
-
-    fresh_doc_stats = build_doc_stats(
-        fresh_chunks, id_col="chunk_id", text_col="indexed_data",
-        carry_cols=carry,
-    )
-    merged_doc_stats = (
-        _pruned("doc_stats", doc_pbs)
-        .join(stale_chunks, "chunk_id", "left_anti")
-        .unionByName(fresh_doc_stats)
-    )
-
-    # --- field_postings: document-level BM25F index (doc-keyed merge) --
-    # replaced docs drop by anti-join on document_id; fresh rows rebuild
-    # from the batch's TEXT with the collection's recorded field split
-    # (exact under any chunk_overlap — build_field_postings docstring).
-    # Collections created before the table existed skip it (BM25F then
-    # serves the chunk-derived approximation).
-    has_fp = (collection.root / "field_postings").exists()
-    merged_fp = None
-    fp_bucketed = False
-    field_delta = None
-    field_delta_df = None
-    if has_fp:
-        from documents_vector_search_spark.operators.bm25 import term_bucket
-
-        old_fp = _pruned("field_postings", doc_pbs)
-        fresh_fp = build_field_postings(
-            changed_docs, title_col, title_from_text
-        )
-        if update_buckets:
-            fresh_fp = fresh_fp.withColumn(
-                UPDATE_PB_COL, pb_col(F.col("document_id"), update_buckets)
-            )
-        fp_bucketed = "term_bucket" in old_fp.columns
-        if fp_bucketed:
-            fresh_fp = fresh_fp.withColumn(
+        if "term_bucket" in old_postings:
+            postings = postings.withColumn(
                 "term_bucket", term_bucket(F.col("term"))
             )
-        merged_fp = old_fp.join(
-            changed_ids, old_fp["document_id"] == changed_ids["id"],
-            "left_anti",
-        ).unionByName(fresh_fp)
-
-        # manifest fieldStats delta (BM25F avgfl): per-field non-empty
-        # doc counts and length sums for the replaced docs (pruned +
-        # semi-join, bounded) and the fresh batch — ONE fused job, the
-        # same stale/fresh tagging as the chunk stats above. Must run
-        # BEFORE the swap (it reads the pre-swap documents table).
-        if update_buckets and manifest.fieldStats is not None:
-            from documents_vector_search_spark.functions.text import tokenize
-
-            field_aggs = []
-            for name, col in field_text_exprs(
-                title_col, title_from_text
-            ).items():
-                fl = F.size(tokenize(col))
-                field_aggs.append(
-                    F.count(F.when(fl > 0, True)).alias(f"_fn_{name}")
-                )
-                field_aggs.append(
-                    F.coalesce(F.sum(F.when(fl > 0, fl)), F.lit(0)).alias(
-                        f"_fs_{name}"
-                    )
-                )
-            doc_cols = changed_docs.columns
-            tagged_docs = (
-                docs.join(changed_ids, "id", "left_semi")
-                .select(F.lit("stale").alias("_side"), *doc_cols)
-                .unionByName(
-                    changed_docs.select(
-                        F.lit("fresh").alias("_side"), *doc_cols
-                    )
-                )
+        fresh = {
+            "documents": bucketed(changed_docs, "id"),
+            "chunks": chunks,
+            "embeddings": embeddings,
+            "postings": postings,
+            "doc_stats": build_doc_stats(
+                chunks, id_col="chunk_id", text_col="indexed_data",
+                carry_cols=[UPDATE_PB_COL],
+            ),
+        }
+        # field_postings: document-level BM25F index, rebuilt from the
+        # batch's TEXT with the collection's recorded field split (exact
+        # under any chunk_overlap — build_field_postings docstring).
+        # Collections created before the table existed skip it (BM25F
+        # then serves the chunk-derived approximation).
+        if "field_postings" in old:
+            fp = bucketed(
+                build_field_postings(changed_docs, title_col, title_from_text),
+                "document_id",
             )
-            field_delta_df = tagged_docs.groupBy("_side").agg(*field_aggs)
+            if "term_bucket" in old["field_postings"].columns:
+                fp = fp.withColumn("term_bucket", term_bucket(F.col("term")))
+            fresh["field_postings"] = fp
+        return fresh
 
-    # fuzzy artifacts (collection/fuzzy_artifacts.py): aggregate the
-    # vocabulary DELTA from exactly the postings rows this batch
-    # touches and MATERIALIZE it before any swap (post-swap lazy reads
-    # of the postings path would see merged data and double-count).
-    # The fieldStats delta collect is an independent pre-swap read, so
-    # the two driver actions run as concurrent jobs instead of summing.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _fuzzy() -> str | None:
-        return _materialize_fuzzy_delta(
-            collection,
-            manifest,
-            fresh_postings,
-            old_postings.join(stale_chunks, "chunk_id", "left_semi"),
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        with _timer.stage("fuzzy_and_field_deltas"):
-            f_fuzzy = _pool.submit(_fuzzy)
-            f_field = (
-                _pool.submit(field_delta_df.collect)
-                if field_delta_df is not None
-                else None
-            )
-            fuzzy_delta_path = f_fuzzy.result()
-            if f_field is not None:
-                field_delta = {r["_side"]: r for r in f_field.result()}
-
-    merged = {
-        "documents": merged_docs,
-        "chunks": merged_chunks,
-        "embeddings": merged_embeddings,
-        "postings": merged_postings,
-        "doc_stats": merged_doc_stats,
-        **({"field_postings": merged_fp} if merged_fp is not None else {}),
-    }
-    layout_cols = {
-        "documents": [],
-        "chunks": [],
-        "embeddings": (
-            ["bucket"] if ann_cfg else (["cluster_id"] if ivf_cfg else [])
-        ),
-        "postings": ["term_bucket"] if postings_bucketed else [],
-        "doc_stats": [],
-        **(
-            {"field_postings": ["term_bucket"] if fp_bucketed else []}
-            if merged_fp is not None
-            else {}
-        ),
-    }
-
-    if update_buckets:
-        # replaced-doc count was fused into the stale-stats job above
-        n_replaced = int(stale_stats["n_docs"] or 0)
-
-        # every table buckets by owning-document id → ONE affected set.
-        # The fuzzy delta's two batch-dir stagings touch only __tmp
-        # dirs (stage_vocab_delta contract), so they run CONCURRENTLY
-        # with the swap — only the publish renames wait for the commit.
-        with _timer.stage("partition_swap"):
-            with ThreadPoolExecutor(max_workers=1) as _sp:
-                f_fuzzy_staged = _sp.submit(
-                    _stage_fuzzy_delta, collection, manifest, fuzzy_delta_path
-                )
-                _record_zorder_degraded(collection, manifest, doc_pbs)
-                _swap_partitions(
-                    collection,
-                    merged,
-                    partition_cols={
-                        t: cols + [UPDATE_PB_COL]
-                        for t, cols in layout_cols.items()
-                    },
-                    affected_pbs={t: doc_pbs for t in merged},
-                )
-                fuzzy_staged = f_fuzzy_staged.result()
-
-        manifest.numberOfDocuments = (
-            manifest.numberOfDocuments - n_replaced + n_batch
-        )
-        _apply_chunk_delta(
-            manifest,
-            n_stale=int(stale_stats["n"] or 0),
-            stale_dl=float(stale_stats["dl"] or 0),
-            n_fresh=int(fresh_stats["n"] or 0),
-            fresh_dl=float(fresh_stats["dl"] or 0),
-        )
-        if field_delta is not None:
-            _apply_field_delta(manifest, field_delta)
-        if manifest.converter.get("idStrategy", "counter") == "counter":
-            last = fresh_stats["last"]
-            if last is not None:
-                manifest.lastIndexItemId = max(
-                    manifest.lastIndexItemId, int(last)
-                )
-        if batch_watermark is not None:
-            new_wm = (
-                batch_watermark.isoformat()
-                if isinstance(batch_watermark, datetime)
-                else str(batch_watermark)
-            )
-            if (
-                manifest.lastModifiedDocumentTime is None
-                or new_wm > manifest.lastModifiedDocumentTime
-            ):
-                manifest.lastModifiedDocumentTime = new_wm
-        with _timer.stage("fuzzy_delta_publish"):
-            _apply_fuzzy_delta(
-                collection, manifest, fuzzy_delta_path, staged=fuzzy_staged
-            )
-        collection.save_manifest(manifest)
-        return manifest
-
-    # --- legacy full-rewrite path (manifests without updateBuckets) -------
-    _swap_all(
+    return _merge(
         collection,
-        merged,
-        partition_cols={t: cols for t, cols in layout_cols.items() if cols},
+        manifest,
+        "update",
+        changed_docs.select("id"),
+        fresh_rows,
     )
-    _apply_fuzzy_delta(collection, manifest, fuzzy_delta_path)
-
-    # --- manifest merge-update (documents_collection_creator.py:255-268) ---
-    from documents_vector_search_spark.functions.text import tokenize
-
-    new_docs = collection.read("documents")
-    new_chunks = collection.read("chunks")
-    stats = new_chunks.agg(
-        F.count("*").alias("n"),
-        F.max("chunk_id").alias("last"),
-        F.avg(F.size(tokenize("indexed_data"))).alias("avgdl"),
-    ).first()
-    watermark = new_docs.agg(F.max("last_modified_at")).first()[0]
-    manifest.numberOfDocuments = new_docs.count()
-    manifest.numberOfChunks = stats["n"]
-    manifest.avgChunkLength = (
-        float(stats["avgdl"]) if stats["avgdl"] is not None else None
-    )
-    if has_fp:
-        manifest.fieldStats = _field_stats_from_table(collection)
-    if manifest.converter.get("idStrategy", "counter") == "counter":
-        manifest.lastIndexItemId = (
-            int(stats["last"]) if stats["last"] is not None else -1
-        )
-    if watermark is not None:
-        manifest.lastModifiedDocumentTime = (
-            watermark.isoformat()
-            if isinstance(watermark, datetime)
-            else str(watermark)
-        )
-    collection.save_manifest(manifest)
-    return manifest
 
 
 def delete_documents(
@@ -937,267 +910,17 @@ def delete_documents(
     source linger in its indexes forever).
 
     ``doc_ids`` is a DataFrame with an ``id`` column, or any iterable
-    of id strings. Unknown ids are no-ops. Same machinery and same
-    cost model as :func:`update_collection`: reads prune to the ids'
-    ``_pb`` buckets, every table drops rows by anti-join, and only the
-    affected partition directories swap (crash-recoverable) —
+    of id strings. Unknown ids are no-ops. The same merge as
+    :func:`update_collection` with no fresh rows: reads prune to the
+    ids' ``_pb`` buckets, every table drops rows by anti-join, and only
+    the affected partition directories swap (crash-recoverable) —
     O(affected buckets), not O(corpus). The watermark is untouched
-    (deletion is not a document modification).
-
-    Crash convergence: unlike an update, a delete has no reinsert leg,
-    so a re-run must be able to FINISH a partially-committed delete.
-    Two invariants guarantee that: (a) tables swap derived-first
-    (embeddings/postings/doc_stats, then chunks, then documents), so
-    the evidence needed to re-derive the stale set survives until
-    everything downstream of it is committed; (b) the proceed/no-op
-    decision is based on the DOCUMENTS table — the last to commit —
-    so any interrupted run re-enters. If a re-run detects a partial
-    state (documents still present but their chunks already gone) the
-    manifest counts recompute exactly from the tables instead of
-    applying incremental arithmetic twice.
-    """
-    from documents_vector_search_spark.collection.catalog import TABLES
-
-    spark = collection.spark
-    # fuzzy artifacts recover through the same orphan sweep: an
-    # interrupted vocab/deletion_index staged swap rolls back to the
-    # parked ``__old`` (see _apply_fuzzy_delta)
-    _recover_orphans(
-        collection,
-        list(TABLES)
-        + ["vocab", "deletion_index", "vocab_deltas", "deletion_index_deltas"],
-    )
-    manifest = collection.manifest()
-
+    (deletion is not a document modification)."""
+    manifest = _open_for_write(collection)
     if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col("id").cast("string").alias("id"))
+        ids = doc_ids.select("id")
     else:
-        ids = spark.createDataFrame(
+        ids = collection.spark.createDataFrame(
             [(str(i),) for i in doc_ids], "id string"
         )
-    ids = ids.distinct().localCheckpoint()
-
-    update_buckets = manifest.converter.get("updateBuckets")
-    doc_pbs: list[int] = []
-    if update_buckets:
-        row = ids.agg(
-            F.collect_set(pb_col(F.col("id"), update_buckets)).alias("pbs")
-        ).first()
-        doc_pbs = sorted(row["pbs"])
-        if not doc_pbs:
-            return manifest  # empty id set: nothing to do
-
-    def _pruned(table: str) -> DataFrame:
-        df = collection.read(table)
-        if update_buckets:
-            df = df.filter(F.col(UPDATE_PB_COL).isin(doc_pbs))
-        elif UPDATE_PB_COL in df.columns:
-            df = df.drop(UPDATE_PB_COL)
-        return df
-
-    docs = _pruned("documents")
-    chunks = _pruned("chunks")
-    stale_chunks = (
-        chunks.join(ids, chunks["document_id"] == ids["id"], "left_semi")
-        .select("chunk_id")
-        .localCheckpoint()
-    )
-
-    from documents_vector_search_spark.functions.text import tokenize
-
-    # chunk-side stats feed the incremental manifest arithmetic
-    stale_row = (
-        chunks.join(stale_chunks, "chunk_id", "left_semi")
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.size(tokenize("indexed_data"))), F.lit(0)
-            ).alias("dl"),
-        )
-        .first()
-    )
-    n_stale = int(stale_row["n"])
-    # the proceed/no-op decision reads the DOCUMENTS table — it commits
-    # LAST, so a crashed earlier run always re-enters here (chunk-based
-    # evidence may already be gone in a partial state). fieldStats
-    # decrements (BM25F avgfl) fuse into the same job: the deleted
-    # docs' per-field non-empty counts and length sums.
-    has_fp = (collection.root / "field_postings").exists()
-    field_aggs = []
-    if has_fp and manifest.fieldStats is not None:
-        from documents_vector_search_spark.functions.text import tokenize
-
-        title_from_text = bool(manifest.converter.get("titleFromText"))
-        title_col = manifest.converter.get("titleCol")
-        for name, col in field_text_exprs(title_col, title_from_text).items():
-            fl = F.size(tokenize(col))
-            field_aggs.append(
-                F.count(F.when(fl > 0, True)).alias(f"_fn_{name}")
-            )
-            field_aggs.append(
-                F.coalesce(F.sum(F.when(fl > 0, fl)), F.lit(0)).alias(
-                    f"_fs_{name}"
-                )
-            )
-    del_row = (
-        docs.join(ids, "id", "left_semi")
-        .agg(F.count("*").alias("n"), *field_aggs)
-        .first()
-    )
-    n_docs_deleted = int(del_row["n"])
-    if n_docs_deleted == 0 and n_stale == 0:
-        # Unknown ids / fully-completed prior delete — but a prior run
-        # may have died AFTER the final documents swap committed and
-        # BEFORE save_manifest, in which case the stored counts are
-        # permanently stale (avgChunkLength feeds BM25 scoring). Before
-        # trusting the no-op, validate the manifest against a cheap
-        # column-pruned full count. numberOfDocuments alone suffices:
-        # documents commits LAST in the swap order, so every other
-        # partial state still shows n_docs_deleted > 0 and takes the
-        # partial-recovery recount above this check.
-        if (
-            collection.read("documents").count()
-            == manifest.numberOfDocuments
-        ):
-            return manifest
-        return _exact_recount(collection, manifest)
-    # documents present but their chunks already deleted = a prior run
-    # crashed between the chunks and documents swaps — finish the job,
-    # but recompute manifest counts exactly (the incremental arithmetic
-    # was never applied and the stale stats can no longer see the rows)
-    partial_recovery = n_docs_deleted > 0 and n_stale == 0
-
-    fuzzy_delta_path = _materialize_fuzzy_delta(
-        collection,
-        manifest,
-        _pruned("postings").limit(0),  # deletes have no fresh leg
-        _pruned("postings").join(stale_chunks, "chunk_id", "left_semi"),
-    )
-
-    # swap ORDER is the crash-convergence contract: derived tables
-    # first, then chunks, documents last (dict order drives the swap)
-    merged = {
-        "embeddings": _pruned("embeddings").join(
-            stale_chunks, "chunk_id", "left_anti"
-        ),
-        "postings": _pruned("postings").join(
-            stale_chunks, "chunk_id", "left_anti"
-        ),
-        "doc_stats": _pruned("doc_stats").join(
-            stale_chunks, "chunk_id", "left_anti"
-        ),
-        **(
-            {
-                "field_postings": _pruned("field_postings").join(
-                    ids,
-                    F.col("document_id") == ids["id"],
-                    "left_anti",
-                )
-            }
-            if has_fp
-            else {}
-        ),
-        "chunks": chunks.join(
-            ids, chunks["document_id"] == ids["id"], "left_anti"
-        ),
-        "documents": docs.join(ids, "id", "left_anti"),
-    }
-    # layout partition levels survive the anti-join as ordinary columns
-    emb_cols = merged["embeddings"].columns
-    layout_cols = {
-        "documents": [],
-        "chunks": [],
-        "embeddings": [
-            c for c in ("bucket", "cluster_id") if c in emb_cols
-        ],
-        "postings": (
-            ["term_bucket"] if "term_bucket" in merged["postings"].columns else []
-        ),
-        "doc_stats": [],
-        **(
-            {
-                "field_postings": (
-                    ["term_bucket"]
-                    if "term_bucket" in merged["field_postings"].columns
-                    else []
-                )
-            }
-            if has_fp
-            else {}
-        ),
-    }
-
-    if update_buckets:
-        # fuzzy staging overlaps the swap, same as update_collection
-        # (stage_vocab_delta touches only __tmp dirs)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as _sp:
-            f_fuzzy_staged = _sp.submit(
-                _stage_fuzzy_delta, collection, manifest, fuzzy_delta_path
-            )
-            _record_zorder_degraded(collection, manifest, doc_pbs)
-            _swap_partitions(
-                collection,
-                merged,
-                partition_cols={
-                    t: cols + [UPDATE_PB_COL]
-                    for t, cols in layout_cols.items()
-                },
-                affected_pbs={t: doc_pbs for t in merged},
-            )
-            fuzzy_staged = f_fuzzy_staged.result()
-        if not partial_recovery:
-            manifest.numberOfDocuments = max(
-                0, manifest.numberOfDocuments - n_docs_deleted
-            )
-            _apply_chunk_delta(
-                manifest, n_stale=n_stale, stale_dl=float(stale_row["dl"])
-            )
-            if field_aggs:
-                _apply_field_delta(manifest, {"stale": del_row})
-            _apply_fuzzy_delta(
-                collection, manifest, fuzzy_delta_path, staged=fuzzy_staged
-            )
-            collection.save_manifest(manifest)
-            return manifest
-        # partial-recovery re-run falls through to the exact recount
-        _apply_fuzzy_delta(
-            collection, manifest, fuzzy_delta_path, staged=fuzzy_staged
-        )
-        return _exact_recount(collection, manifest)
-
-    _swap_all(
-        collection,
-        merged,
-        partition_cols={
-            t: cols for t, cols in layout_cols.items() if cols
-        },
-    )
-    # legacy path: exact recount
-    _apply_fuzzy_delta(collection, manifest, fuzzy_delta_path)
-    return _exact_recount(collection, manifest)
-
-
-def _exact_recount(collection, manifest: Manifest) -> Manifest:
-    """Recompute manifest counts from the stored tables and persist.
-
-    Convergence backstop for delete_documents: used on partial-recovery
-    re-runs AND when the no-op path detects a manifest whose
-    numberOfDocuments disagrees with the documents table (a prior run
-    crashed between the final swap and save_manifest)."""
-    from documents_vector_search_spark.functions.text import tokenize
-
-    stats = collection.read("chunks").agg(
-        F.count("*").alias("n"),
-        F.avg(F.size(tokenize("indexed_data"))).alias("avgdl"),
-    ).first()
-    manifest.numberOfDocuments = collection.read("documents").count()
-    manifest.numberOfChunks = stats["n"]
-    manifest.avgChunkLength = (
-        float(stats["avgdl"]) if stats["avgdl"] is not None else None
-    )
-    if (collection.root / "field_postings").exists():
-        manifest.fieldStats = _field_stats_from_table(collection)
-    collection.save_manifest(manifest)
-    return manifest
+    return _merge(collection, manifest, "delete", ids)

@@ -302,33 +302,15 @@ def build_field_postings(
     return out.select(*out_cols)
 
 
-def _attach_term_df(matched: DataFrame, via_aggregate: bool) -> DataFrame:
+def _attach_term_df(matched: DataFrame) -> DataFrame:
     """Whole-index per-term document frequency as a ``_df`` column on
     the matched postings rows (postings are unique per (id, term), so
-    a per-term row count IS the df).
-
-    Two physically different, value-identical forms:
-
-    - ``via_aggregate=False`` (default): a window count partitioned by
-      term — ONE pass over ``matched``, but the full matched rows are
-      shuffled+sorted by term just to attach a per-term scalar. Right
-      when ``matched`` is an expensive inline plan (ad-hoc postings
-      built from the corpus) that must not run twice.
-    - ``via_aggregate=True``: ``groupBy(term).count`` (map-side partial
-      aggregation — the exchange carries O(terms × partitions) count
-      rows, not postings) broadcast-joined back. ``matched`` is read
-      twice, so this is for the SERVING path where postings are a
-      cached/materialized table and the probe is partition-pruned: at
-      index scale a common query term matches millions of postings
-      rows, and re-reading the pruned buckets is far cheaper than
-      sort-shuffling those rows (guide §2.3: shuffle metadata, not
-      payloads).
+    a per-term row count IS the df): a window count partitioned by
+    term — ONE pass over ``matched``, so an expensive inline plan
+    (ad-hoc postings built from the corpus) never runs twice. A
+    groupBy+broadcast-join-back form costs an extra job, measured at
+    +0.1-0.3 s per search on cached serving (OPTIMIZATION_r13.md).
     """
-    if via_aggregate:
-        df_tbl = matched.groupBy("term").agg(
-            F.count("*").cast("bigint").alias("_df")
-        )
-        return matched.join(F.broadcast(df_tbl), "term")
     from pyspark.sql import Window
 
     return matched.withColumn(
@@ -348,7 +330,6 @@ def bm25_topk(
     doc_stats: DataFrame | None = None,
     candidates: DataFrame | None = None,
     corpus_stats: tuple[int, float] | None = None,
-    df_via_aggregate: bool = False,
 ) -> DataFrame:
     """BM25 top-k: ``(id, score)`` descending, ties on id ascending.
 
@@ -396,9 +377,7 @@ def bm25_topk(
     matched = postings.filter(F.col("term").isin(q_terms))
 
     # whole-index df, computed BEFORE any candidate restriction
-    # (_attach_term_df: window for one-pass ad-hoc postings,
-    # aggregate+broadcast-join for cached serving tables)
-    matched = _attach_term_df(matched, df_via_aggregate)
+    matched = _attach_term_df(matched)
 
     if candidates is not None:
         matched = matched.join(F.broadcast(candidates), id_col, "left_semi")
@@ -457,7 +436,6 @@ def bm25_topk_batch(
     candidates: DataFrame | None = None,
     conjunctive: bool = True,
     round_to: int | None = 6,
-    df_via_aggregate: bool = False,
 ) -> DataFrame:
     """BM25 top-k for MANY keyword queries in ONE postings scan —
     ``(qid, id, score)``, per-query descending, ties on id.
@@ -491,8 +469,8 @@ def bm25_topk_batch(
         postings = postings.filter(F.col("term_bucket").isin(buckets))
     matched = postings.filter(F.col("term").isin(all_terms))
     # whole-index per-term df BEFORE the query fan-out (postings are
-    # unique per (id, term); see _attach_term_df for the two forms)
-    matched = _attach_term_df(matched, df_via_aggregate)
+    # unique per (id, term); see _attach_term_df)
+    matched = _attach_term_df(matched)
     if candidates is not None:
         # same semantics as bm25_topk: restricts SCORED rows only,
         # statistics stay whole-index (df computed above)
@@ -901,7 +879,6 @@ def bm25_weighted_topk(
     candidates: DataFrame | None = None,
     corpus_stats: tuple[int, float] | None = None,
     doc_stats: DataFrame | None = None,
-    df_via_aggregate: bool = False,
 ) -> DataFrame:
     """Index-path weighted disjunctive BM25 — the rescoring half of
     query expansion against a BUILT index. Same partition-pruned plan
@@ -923,7 +900,7 @@ def bm25_weighted_topk(
         buckets = sorted({term_bucket_py(t) for t in terms})
         postings = postings.filter(F.col("term_bucket").isin(buckets))
     matched = postings.filter(F.col("term").isin(terms))
-    matched = _attach_term_df(matched, df_via_aggregate)
+    matched = _attach_term_df(matched)
     if candidates is not None:
         matched = matched.join(F.broadcast(candidates), id_col, "left_semi")
     if corpus_stats is not None:

@@ -325,10 +325,10 @@ def minhash_lsh_pairs(
         # (bands × corpus, each carrying its shingle array) that the bare
         # hash-aggregate plan does not have — the spillable-sort cost is
         # the price of never holding an uncapped bucket in memory.
-        # Measured (dev/minhash_cap_experiment.py, sf0.1): the sort costs
-        # ~20% over uncapped; the alternative two-pass hot-key anti-join
-        # avoids the sort but recomputes the md5-heavy signatures and
-        # lands ~55% slower — the window stays.
+        # Measured (OPTIMIZATION_r13.md negative results, sf0.1): the
+        # sort costs ~20% over uncapped; the alternative two-pass hot-key
+        # anti-join avoids the sort but recomputes the md5-heavy
+        # signatures and lands ~55% slower — the window stays.
         w = Window.partitionBy("band_index", "band_value")
         banded = (
             banded.withColumn("_bsz", F.count(F.lit(1)).over(w))

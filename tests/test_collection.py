@@ -431,11 +431,12 @@ class TestUpdate:
         assert {r.document_id for r in got} <= {"doc-1", "doc-2"}
         assert len(got) > 0
 
-    def test_hash_strategy_update_reuses_ids(self, spark, canonical_docs, tmp_path):
+    def test_hash_strategy_update_reuses_ids(
+        self, spark, canonical_docs, collection, tmp_path
+    ):
         # hash strategy (default): a replaced document's chunks keep
         # their deterministic ids, and every index stays consistent
-        coll = Collection(spark, str(tmp_path), "updhash")
-        create_collection(coll, canonical_docs, chunk_size=200, chunk_overlap=40)
+        coll = _copy_collection(spark, collection, tmp_path, "updhash")
         old_ids = {
             r.chunk_id
             for r in coll.read("chunks")
@@ -497,9 +498,10 @@ class TestUpdate:
         got = s.search("novel quasar", indexes=("bm25",)).collect()
         assert got and all(r.document_id.startswith("brandnew-") for r in got)
 
-    def test_unchanged_resend_is_idempotent(self, spark, canonical_docs, tmp_path):
-        coll = Collection(spark, str(tmp_path), "idem")
-        create_collection(coll, canonical_docs, chunk_size=200, chunk_overlap=40)
+    def test_unchanged_resend_is_idempotent(
+        self, spark, canonical_docs, collection, tmp_path
+    ):
+        coll = _copy_collection(spark, collection, tmp_path, "idem")
         before_docs = coll.read("documents").count()
         before_chunks = coll.read("chunks").count()
         resend = canonical_docs.filter(F.col("id") == "doc-5")
@@ -910,10 +912,10 @@ class TestDeleteDocuments:
     table, at O(affected buckets) cost."""
 
     @pytest.fixture()
-    def coll(self, spark, canonical_docs, tmp_path):
-        c = Collection(spark, str(tmp_path), "del")
-        create_collection(c, canonical_docs, chunk_size=200, chunk_overlap=40)
-        return c
+    def coll(self, spark, collection, tmp_path):
+        # a copy of the module's 100-document collection: same create
+        # arguments, without paying a create per test
+        return _copy_collection(spark, collection, tmp_path, "del")
 
     def test_rows_vanish_from_every_table(self, spark, coll):
         from pathlib import Path
@@ -1045,6 +1047,10 @@ class TestDeleteDocuments:
         real_save = coll.save_manifest
 
         def dying_save(manifest):
+            # the save that records the in-flight batch (before the
+            # first swap) goes through; the final save dies
+            if getattr(manifest, "inFlight", None) is not None:
+                return real_save(manifest)
             raise RuntimeError("simulated crash before save_manifest")
 
         monkeypatch.setattr(coll, "save_manifest", dying_save)
@@ -1100,12 +1106,13 @@ class TestEmptyInputs:
             create_collection(coll, canonical_docs.filter(F.lit(False)))
         assert not coll.exists()
 
-    def test_empty_update_batch_is_noop(self, spark, canonical_docs, tmp_path):
+    def test_empty_update_batch_is_noop(
+        self, spark, canonical_docs, collection, tmp_path
+    ):
         """A daily pipeline hits zero-change batches routinely — the
         update must be a no-op that keeps every table and the manifest
         intact."""
-        coll = Collection(spark, str(tmp_path), "noopup")
-        create_collection(coll, canonical_docs, chunk_size=200, chunk_overlap=40)
+        coll = _copy_collection(spark, collection, tmp_path, "noopup")
         before = coll.counts()
         update_collection(coll, canonical_docs.filter(F.lit(False)))
         assert coll.counts() == before
@@ -1274,15 +1281,12 @@ class TestTopicRefit:
     drift and rebuilds the stored profile/terms via the staged swap."""
 
     def test_refit_after_update_rebuilds_profile_and_terms(
-        self, spark, canonical_docs, tmp_path
+        self, spark, canonical_docs, collection, tmp_path
     ):
         from documents_vector_search_spark import cli
         from documents_vector_search_spark.collection import refit_topics
 
-        coll = Collection(spark, str(tmp_path), "topicrefit")
-        create_collection(
-            coll, canonical_docs, chunk_size=200, chunk_overlap=40
-        )
+        coll = _copy_collection(spark, collection, tmp_path, "topicrefit")
         # before any topics run there is nothing to refit
         with pytest.raises(ValueError, match="no fitted topics"):
             refit_topics(coll)
@@ -1348,14 +1352,15 @@ class TestContentFlagsAndCounts:
 
 
 class TestManifestCorpusStats:
-    def test_old_manifest_without_avgdl_falls_back(self, spark, canonical_docs, tmp_path):
+    def test_old_manifest_without_avgdl_falls_back(
+        self, spark, collection, tmp_path
+    ):
         """Manifests written before avgChunkLength existed load as None
         and the searcher recomputes stats from doc_stats."""
         import json
         from pathlib import Path
 
-        coll = Collection(spark, str(tmp_path), "oldmanifest")
-        create_collection(coll, canonical_docs, chunk_size=200, chunk_overlap=40)
+        coll = _copy_collection(spark, collection, tmp_path, "oldmanifest")
         mpath = Path(str(tmp_path)) / "oldmanifest" / "manifest.json"
         data = json.loads(mpath.read_text())
         persisted_avgdl = data.pop("avgChunkLength")
@@ -1482,16 +1487,13 @@ class TestPartitionScopedUpdate:
         }
 
     def test_one_doc_update_touches_only_affected_buckets(
-        self, spark, canonical_docs, tmp_path
+        self, spark, canonical_docs, collection, tmp_path
     ):
         from documents_vector_search_spark.functions.hashing import (
             md5_hash64_py,
         )
 
-        coll = Collection(spark, str(tmp_path), "scoped")
-        create_collection(
-            coll, canonical_docs, chunk_size=200, chunk_overlap=40
-        )
+        coll = _copy_collection(spark, collection, tmp_path, "scoped")
         ub = coll.manifest().converter["updateBuckets"]
         assert ub == 8
 
@@ -1545,7 +1547,7 @@ class TestPartitionScopedUpdate:
         assert len(s.search("UPDATED", max_documents=3).collect()) >= 0
 
     def test_pruned_read_is_partition_pruning(
-        self, spark, canonical_docs, tmp_path
+        self, spark, collection, tmp_path
     ):
         """The updater's bucket-filtered reads must resolve to Parquet
         PARTITION pruning (directory skip), not a row filter over a
@@ -1555,10 +1557,7 @@ class TestPartitionScopedUpdate:
             UPDATE_PB_COL,
         )
 
-        coll = Collection(spark, str(tmp_path), "pruned")
-        create_collection(
-            coll, canonical_docs, chunk_size=200, chunk_overlap=40
-        )
+        coll = _copy_collection(spark, collection, tmp_path, "pruned")
         df = coll.read("documents").filter(
             F.col(UPDATE_PB_COL).isin([0, 3])
         )
@@ -1568,15 +1567,12 @@ class TestPartitionScopedUpdate:
         assert UPDATE_PB_COL in pf and "IN" in pf.upper()
 
     def test_partial_swap_rolls_back_on_read(
-        self, spark, canonical_docs, tmp_path
+        self, spark, small_fuzzy_coll, tmp_path
     ):
         import json
         import shutil
 
-        coll = Collection(spark, str(tmp_path), "crashy")
-        create_collection(
-            coll, canonical_docs.limit(30), chunk_size=200, chunk_overlap=40
-        )
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "crashy")
         n_before = coll.read("documents").count()
         live = coll.root / "documents"
         pb_dirs = sorted(p for p in live.glob("_pb=*") if p.is_dir())
@@ -1595,31 +1591,50 @@ class TestPartitionScopedUpdate:
         assert coll.read("documents").count() == n_before
         assert not (coll.root / "documents__old").exists()
 
-    def test_legacy_manifest_falls_back_to_full_rewrite(
-        self, spark, canonical_docs, tmp_path
+    def test_manifest_without_update_buckets_is_refused(
+        self, spark, canonical_docs, small_fuzzy_coll, tmp_path
     ):
+        """A manifest without updateBuckets (hand-edited here; the
+        tables still carry their _pb=0..7 directories) must be refused,
+        not merged: the bucket count cannot be guessed, and a wrong
+        guess prunes to the wrong directories and duplicates
+        documents."""
         import json
 
-        coll = Collection(spark, str(tmp_path), "legacy")
-        create_collection(
-            coll, canonical_docs.limit(30), chunk_size=200, chunk_overlap=40
+        from documents_vector_search_spark.collection import (
+            delete_documents,
         )
+
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "legacy")
         mpath = coll.manifest_path
         data = json.loads(mpath.read_text())
         del data["converter"]["updateBuckets"]
         mpath.write_text(json.dumps(data))
+        before = coll.counts()
 
         one = canonical_docs.limit(1).withColumn(
             "text", F.concat(F.lit("LEGACY-UPDATED "), F.col("text"))
         )
-        m = update_collection(coll, one)
-        assert m.numberOfDocuments == 30
-        chunks = coll.read("chunks")
-        assert (
-            chunks.groupBy("chunk_id").count().filter("count > 1").count() == 0
-        )
-        s = CollectionSearcher(coll)
-        assert len(s.search("LEGACY", max_documents=3).collect()) >= 0
+        with pytest.raises(ValueError, match="re-create the collection"):
+            update_collection(coll, one)
+        with pytest.raises(ValueError, match="re-create the collection"):
+            delete_documents(coll, ["doc-1"])
+        assert coll.counts() == before
+
+    def test_create_rejects_update_buckets_below_one(
+        self, spark, canonical_docs, tmp_path
+    ):
+        from documents_vector_search_spark.cli import main
+
+        coll = Collection(spark, str(tmp_path), "nobuckets")
+        with pytest.raises(ValueError, match="update_buckets"):
+            create_collection(coll, canonical_docs.limit(3), update_buckets=0)
+        assert not coll.exists()
+        with pytest.raises(SystemExit):
+            main([
+                "create-files", "nobuckets", "--base-path", str(tmp_path),
+                "--path", str(tmp_path), "--update-buckets", "0",
+            ])
 
 
 class TestSq8IvfComposedBatch:
@@ -1697,3 +1712,267 @@ class TestSq8IvfComposedBatch:
                 ).collect()
             ]
             assert by_qid.get(qid, []) == expected, f"mismatch for {qid}"
+
+
+@pytest.fixture(scope="module")
+def small_fuzzy_coll(spark, canonical_docs, tmp_path_factory):
+    """Pristine 24-document collection with fuzzy artifacts; tests copy
+    its directory instead of paying a create each."""
+    base = str(tmp_path_factory.mktemp("pristine"))
+    coll = Collection(spark, base, "pristine")
+    create_collection(
+        coll, canonical_docs.limit(24), chunk_size=200, chunk_overlap=40,
+        fuzzy_dictionary=True,
+    )
+    return coll
+
+
+@pytest.fixture(scope="module")
+def pristine_ids(small_fuzzy_coll) -> list[str]:
+    """Sorted document ids of the pristine collection: the test batches
+    key on them, so a re-run repeats exactly the same batch."""
+    docs = small_fuzzy_coll.read("documents").select("id").collect()
+    return sorted(r["id"] for r in docs)
+
+
+def _copy_collection(spark, src, dest_dir, name):
+    import shutil
+
+    shutil.copytree(src.root, dest_dir / name)
+    return Collection(spark, str(dest_dir), name)
+
+
+def _update_batch(canonical_docs, first: str):
+    """One changed document that grows (more chunks, so fresh chunk ids
+    the stored ones do not cover) and one new document."""
+    changed = canonical_docs.filter(F.col("id") == first).withColumn(
+        "text",
+        F.concat(
+            F.lit("revised edition. "),
+            F.col("text"),
+            F.lit(" appended section on partition pruning." * 12),
+        ),
+    )
+    new = canonical_docs.filter(F.col("id") == first).withColumn(
+        "id", F.lit("doc-brand-new")
+    )
+    return changed.unionByName(new).withColumn(
+        "last_modified_at", F.lit("2024-06-01 00:00:00").cast("timestamp")
+    )
+
+
+def _run(op, canonical_docs, coll, ids):
+    from documents_vector_search_spark.collection import delete_documents
+
+    if op == "update":
+        return update_collection(coll, _update_batch(canonical_docs, ids[0]))
+    return delete_documents(coll, ids[:2])
+
+
+def _snapshot(coll) -> list[tuple[str, str]]:
+    """Every row of every table as (table, JSON), sorted — one job."""
+    from functools import reduce
+
+    from documents_vector_search_spark.collection.catalog import TABLES
+
+    rows = [
+        coll.read(t).select(
+            F.lit(t).alias("t"),
+            F.to_json(F.struct(*sorted(coll.read(t).columns))).alias("j"),
+        )
+        for t in TABLES
+    ]
+    union = reduce(lambda a, b: a.unionByName(b), rows)
+    return sorted((r["t"], r["j"]) for r in union.collect())
+
+
+def _manifest_view(m) -> dict:
+    return {
+        "docs": m.numberOfDocuments,
+        "chunks": m.numberOfChunks,
+        "avgdl": pytest.approx(m.avgChunkLength),
+        "fieldStats": m.fieldStats,
+        "watermark": m.lastModifiedDocumentTime,
+        "lastIndexItemId": m.lastIndexItemId,
+        "inFlight": getattr(m, "inFlight", None),
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(
+    spark, canonical_docs, small_fuzzy_coll, pristine_ids, tmp_path_factory
+):
+    """Tables and manifest of each operation run without a crash."""
+    out = {}
+    for op in ("update", "delete"):
+        coll = _copy_collection(
+            spark, small_fuzzy_coll, tmp_path_factory.mktemp(op), "ref"
+        )
+        m = _run(op, canonical_docs, coll, pristine_ids)
+        counts = coll.counts()
+        assert m.numberOfDocuments == counts["documents"]
+        assert m.numberOfChunks == counts["chunks"]
+        out[op] = (_snapshot(coll), _manifest_view(m))
+    return out
+
+
+def _inject_crash(monkeypatch, coll, boundary):
+    """Make the next update/delete die at ``boundary``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from documents_vector_search_spark.collection import fuzzy_artifacts as fa
+    from documents_vector_search_spark.collection import updater as upd
+
+    def die(*_a, **_k):
+        raise RuntimeError(f"simulated crash at {boundary}")
+
+    if boundary == "staged_write":
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **k):
+            if str(path).endswith("chunks__tmp"):
+                die()
+            return real_parquet(self, path, *a, **k)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    elif boundary == "mid_swap":
+        # phase B dies parking the third table (two already swapped)
+        real_pb_dirs, calls = upd.pb_dirs, []
+
+        def pb_dirs(*a, **k):
+            calls.append(1)
+            if len(calls) == 5:
+                die()
+            return real_pb_dirs(*a, **k)
+
+        monkeypatch.setattr(upd, "pb_dirs", pb_dirs)
+    elif boundary == "before_documents_swap":
+        # every table but documents committed
+        real_swap = upd._swap_partitions
+
+        def swap(collection, merged, partition_cols, affected_pbs, **kw):
+            part = {t: df for t, df in merged.items() if t != "documents"}
+            real_swap(
+                collection, part,
+                {t: partition_cols[t] for t in part},
+                {t: affected_pbs[t] for t in part},
+                **kw,
+            )
+            die()
+
+        monkeypatch.setattr(upd, "_swap_partitions", swap)
+    elif boundary == "after_documents_swap":
+        monkeypatch.setattr(upd, "_apply_fuzzy_delta", die)
+    elif boundary == "fuzzy_publish":
+        # between the deletion-index and the vocab batch renames
+        real_publish = fa._publish_batch
+
+        def publish(collection, deltas_table, batch_id, tmp):
+            if deltas_table == fa.VOCAB_DELTAS_TABLE:
+                die()
+            return real_publish(collection, deltas_table, batch_id, tmp)
+
+        monkeypatch.setattr(fa, "_publish_batch", publish)
+    else:  # manifest_save: the final save, not the in-flight record's
+        real_save = coll.save_manifest
+
+        def save(manifest):
+            if getattr(manifest, "inFlight", None) is None:
+                die()
+            return real_save(manifest)
+
+        monkeypatch.setattr(coll, "save_manifest", save)
+
+
+class TestWriteCrashConvergence:
+    """An update or delete that dies at any stage boundary, then runs
+    again, ends with the tables of an uninterrupted run and a manifest
+    that matches both that run and the stored tables."""
+
+    @pytest.mark.parametrize(
+        "op, boundary",
+        [
+            (op, boundary)
+            for boundary in (
+                "staged_write",
+                "mid_swap",
+                "before_documents_swap",
+                "after_documents_swap",
+                "fuzzy_publish",
+                "manifest_save",
+            )
+            for op in ("update", "delete")
+            # delete at these two boundaries: TestDeleteDocuments::
+            # test_crashed_delete_converges_on_rerun and
+            # test_crash_after_final_swap_recounts_on_rerun
+            if (op, boundary) not in {
+                ("delete", "before_documents_swap"),
+                ("delete", "manifest_save"),
+            }
+        ],
+    )
+    def test_rerun_converges(
+        self, spark, canonical_docs, small_fuzzy_coll, pristine_ids,
+        uninterrupted, tmp_path, monkeypatch, op, boundary,
+    ):
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "crash")
+        with monkeypatch.context() as mp:
+            _inject_crash(mp, coll, boundary)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                _run(op, canonical_docs, coll, pristine_ids)
+
+        m = _run(op, canonical_docs, coll, pristine_ids)
+        tables, manifest = uninterrupted[op]
+        # equal tables + a manifest equal to the uninterrupted run's
+        # (whose counts match its tables) = manifest matches the tables
+        assert _snapshot(coll) == tables
+        assert _manifest_view(m) == manifest
+        assert _manifest_view(coll.manifest()) == manifest
+
+    def test_cached_searcher_does_not_resurrect_updated_rows(
+        self, spark, canonical_docs, small_fuzzy_coll, tmp_path
+    ):
+        """A serving searcher's persisted tables must not feed a later
+        merge: update one document, then delete another from the SAME
+        _pb bucket with no refresh in between — the update must
+        survive on disk."""
+        from documents_vector_search_spark.collection import (
+            delete_documents,
+        )
+        from documents_vector_search_spark.functions.hashing import (
+            md5_hash64_py,
+        )
+
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "cached")
+        ub = coll.manifest().converter["updateBuckets"]
+        by_bucket: dict[int, list[str]] = {}
+        for r in coll.read("documents").select("id").collect():
+            by_bucket.setdefault(md5_hash64_py(r["id"]) % ub, []).append(
+                r["id"]
+            )
+        kept, victim = sorted(
+            next(ids for ids in by_bucket.values() if len(ids) >= 2)
+        )[:2]
+
+        searcher = CollectionSearcher(coll, cache_tables=True)
+        assert searcher.search("join", max_documents=3).collect() is not None
+        update_collection(
+            coll,
+            canonical_docs.filter(F.col("id") == kept).withColumn(
+                "text", F.concat(F.lit("UPDATED-MARKER "), F.col("text"))
+            ),
+        )
+        delete_documents(coll, [victim])
+        spark.catalog.clearCache()
+
+        docs = coll.read("documents")
+        assert docs.filter(F.col("id") == victim).count() == 0
+        text = docs.filter(F.col("id") == kept).first()["text"]
+        assert text.startswith("UPDATED-MARKER ")
+        chunk0 = (
+            coll.read("chunks")
+            .filter(F.col("document_id") == kept)
+            .orderBy("chunk_number")
+            .collect()
+        )
+        assert any("updated-marker" in c["indexed_data"].lower() for c in chunk0)

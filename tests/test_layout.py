@@ -465,6 +465,31 @@ class TestBm25fServing:
 
 
 class TestZorderCollection:
+    @pytest.fixture(scope="class")
+    def zgrid(self, spark, tmp_path_factory):
+        """The 64x64 grid created once with the documents table
+        Z-ordered on (x, y); tests that mutate it work on a copy."""
+        from documents_vector_search_spark.collection import (
+            Collection,
+            create_collection,
+        )
+
+        coll = Collection(spark, str(tmp_path_factory.mktemp("zgrid")), "zc")
+        create_collection(
+            coll, self._grid_docs(spark), update_buckets=2,
+            zorder_by=("x", "y"), zorder_files=16,
+        )
+        return coll
+
+    @staticmethod
+    def _copy(spark, src, tmp_path, name):
+        import shutil
+
+        from documents_vector_search_spark.collection import Collection
+
+        shutil.copytree(src.root, tmp_path / name)
+        return Collection(spark, str(tmp_path), name)
+
     @staticmethod
     def _grid_docs(spark, n=4096, side=64):
         return spark.range(n).select(
@@ -481,7 +506,7 @@ class TestZorderCollection:
         )
 
     def test_create_zorder_by_skips_files_and_records_manifest(
-        self, spark, tmp_path
+        self, spark, tmp_path, zgrid
     ):
         """create_collection(zorder_by=(x, y)) must leave the DOCUMENTS
         table's parquet files with compact min/max boxes in BOTH
@@ -494,11 +519,7 @@ class TestZorderCollection:
         )
 
         docs = self._grid_docs(spark)
-        zc = Collection(spark, str(tmp_path), "zc")
-        create_collection(
-            zc, docs, update_buckets=2, zorder_by=("x", "y"),
-            zorder_files=16,
-        )
+        zc = zgrid
         # baseline: same corpus hash-scrambled (a spark.range source
         # arrives y-ordered, which would make the baseline accidentally
         # clustered) — every file then spans nearly the full grid
@@ -521,25 +542,20 @@ class TestZorderCollection:
         # layout is lossless and searchable
         assert zc.read("documents").count() == 4096
 
-    def test_compact_restores_clustering_after_update(self, spark, tmp_path):
+    def test_compact_restores_clustering_after_update(
+        self, spark, tmp_path, zgrid
+    ):
         """An update fragments the rewritten buckets (plain merge
         writes); compact_collection must re-cluster them from the
         manifest record so the skipping boxes come back."""
         from documents_vector_search_spark.collection import (
-            Collection,
-            create_collection,
             update_collection,
         )
         from documents_vector_search_spark.collection.compactor import (
             compact_collection,
         )
 
-        docs = self._grid_docs(spark)
-        coll = Collection(spark, str(tmp_path), "zu")
-        create_collection(
-            coll, docs, update_buckets=2, zorder_by=("x", "y"),
-            zorder_files=16,
-        )
+        coll = self._copy(spark, zgrid, tmp_path, "zu")
         batch = self._grid_docs(spark).filter(F.col("x") < 2).withColumn(
             "last_modified_at", F.to_timestamp(F.lit("2024-03-02 00:00:00"))
         )
@@ -557,7 +573,7 @@ class TestZorderCollection:
         assert coll.read("documents").count() == 4096
 
     def test_zorder_update_staging_is_bounded_and_compactable(
-        self, spark, tmp_path
+        self, spark, tmp_path, zgrid
     ):
         """The full z-order lifecycle: create → update/delete → compact.
         Updates pre-cluster the z-order table's rewritten buckets like
@@ -570,8 +586,6 @@ class TestZorderCollection:
         longer signal them), (c) restore the z-order clustering, and
         (d) clear the record."""
         from documents_vector_search_spark.collection import (
-            Collection,
-            create_collection,
             delete_documents,
             update_collection,
         )
@@ -580,12 +594,7 @@ class TestZorderCollection:
             compact_collection,
         )
 
-        docs = self._grid_docs(spark)
-        coll = Collection(spark, str(tmp_path), "zb")
-        create_collection(
-            coll, docs, update_buckets=2, zorder_by=("x", "y"),
-            zorder_files=16,
-        )
+        coll = self._copy(spark, zgrid, tmp_path, "zb")
         batch = self._grid_docs(spark).filter(F.col("x") < 4).withColumn(
             "text", F.concat(F.lit("v2 "), F.col("text"))
         ).withColumn(
@@ -637,6 +646,47 @@ class TestZorderCollection:
         )
         assert frac < 1.0, frac
         assert coll.read("documents").count() == 4096 - 5
+        assert "degraded_pbs" not in coll.manifest().converter["zorder"]
+
+    def test_compact_drops_degraded_record_of_vanished_bucket(
+        self, spark, tmp_path
+    ):
+        """A degraded bucket whose every document was deleted is gone
+        from disk: compaction has nothing to re-cluster there and must
+        still drop it from the record (a lingering entry would never
+        clear). max_files_per_dir is high so no other bucket counts as
+        fragmented."""
+        from documents_vector_search_spark.collection import (
+            Collection,
+            create_collection,
+            delete_documents,
+        )
+        from documents_vector_search_spark.collection.compactor import (
+            bucket_file_counts,
+            compact_collection,
+        )
+        from documents_vector_search_spark.functions.hashing import (
+            md5_hash64_py,
+        )
+
+        docs = self._grid_docs(spark, n=64, side=8)
+        coll = Collection(spark, str(tmp_path), "zgone")
+        create_collection(
+            coll, docs, update_buckets=2, zorder_by=("x", "y"),
+            zorder_files=4,
+        )
+        victims = [
+            r.id for r in docs.select("id").collect()
+            if md5_hash64_py(r.id) % 2 == 0
+        ]
+        delete_documents(coll, victims)
+        assert coll.manifest().converter["zorder"]["degraded_pbs"] == [0]
+        assert 0 not in bucket_file_counts(Path(coll.table_path("documents")))
+
+        report = compact_collection(
+            coll, tables=["documents"], max_files_per_dir=64
+        )
+        assert "documents" not in report
         assert "degraded_pbs" not in coll.manifest().converter["zorder"]
 
 

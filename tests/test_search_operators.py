@@ -65,45 +65,6 @@ class TestBM25:
         ).collect()
         assert a == b
 
-    def test_df_via_aggregate_parity(self, tiny_docs):
-        """The r12 df_via_aggregate form (groupBy+broadcast-join-back)
-        must rank and score identically to the default window form —
-        both single-query and batch (the production serving knob for
-        materialized indexes; see operators/bm25.py::_attach_term_df)."""
-        from documents_vector_search_spark.operators.bm25 import (
-            bm25_topk_batch,
-            bm25_weighted_topk,
-        )
-
-        postings = build_postings(tiny_docs, with_dl=True)
-        stats = build_doc_stats(tiny_docs)
-        a = bm25_topk(
-            tiny_docs, "quick fox", 5, postings=postings, doc_stats=stats
-        ).collect()
-        b = bm25_topk(
-            tiny_docs, "quick fox", 5, postings=postings, doc_stats=stats,
-            df_via_aggregate=True,
-        ).collect()
-        assert a == b and a  # non-empty, identical
-        queries = {"a": "quick fox", "b": "join"}
-        ba = bm25_topk_batch(
-            queries, 5, postings=postings, doc_stats=stats
-        ).collect()
-        bb = bm25_topk_batch(
-            queries, 5, postings=postings, doc_stats=stats,
-            df_via_aggregate=True,
-        ).collect()
-        assert sorted(map(tuple, ba)) == sorted(map(tuple, bb))
-        w = [("quick", 0.6), ("fox", 0.4)]
-        wa = bm25_weighted_topk(
-            w, 5, postings, id_col="doc_id", doc_stats=stats
-        ).collect()
-        wb = bm25_weighted_topk(
-            w, 5, postings, id_col="doc_id", doc_stats=stats,
-            df_via_aggregate=True,
-        ).collect()
-        assert wa == wb and wa
-
     def test_batch_matches_per_query(self, tiny_docs):
         from documents_vector_search_spark.operators.bm25 import (
             bm25_topk_batch,
