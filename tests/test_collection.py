@@ -1135,14 +1135,21 @@ class TestSq8Refit:
         zs = F.length(F.regexp_replace(col, "[^Z]", ""))
         return F.array(*[(zs * (i + 1)).cast("double") for i in range(4)])
 
-    @pytest.fixture()
-    def drifting_coll(self, spark, canonical_docs, tmp_path):
-        coll = Collection(spark, str(tmp_path), "sq8drift")
+    @pytest.fixture(scope="class")
+    def pristine_drift(self, spark, canonical_docs, tmp_path_factory):
+        coll = Collection(
+            spark, str(tmp_path_factory.mktemp("sq8drift")), "sq8drift"
+        )
         create_collection(
             coll, canonical_docs, chunk_size=200, chunk_overlap=40,
             sq8=True, embedder=self._len_embedder, embedding_dim=4,
         )
         return coll
+
+    @pytest.fixture()
+    def drifting_coll(self, spark, pristine_drift, tmp_path):
+        """A fresh copy per test: the refits rewrite the tables."""
+        return _copy_collection(spark, pristine_drift, tmp_path, "sq8drift")
 
     def test_refit_without_drift_is_noop(self, drifting_coll):
         from documents_vector_search_spark.collection import refit_sq8
@@ -1595,7 +1602,7 @@ class TestPartitionScopedUpdate:
         self, spark, canonical_docs, small_fuzzy_coll, tmp_path
     ):
         """A manifest without updateBuckets (hand-edited here; the
-        tables still carry their _pb=0..7 directories) must be refused,
+        tables still carry their _pb=X directories) must be refused,
         not merged: the bucket count cannot be guessed, and a wrong
         guess prunes to the wrong directories and duplicates
         documents."""
@@ -1716,12 +1723,15 @@ class TestSq8IvfComposedBatch:
 
 @pytest.fixture(scope="module")
 def small_fuzzy_coll(spark, canonical_docs, tmp_path_factory):
-    """Pristine 24-document collection with fuzzy artifacts; tests copy
-    its directory instead of paying a create each."""
+    """Pristine 8-document collection with fuzzy artifacts; tests copy
+    its directory instead of paying a create each. Small on purpose:
+    every update/delete rewrites the postings' term_bucket directories
+    of its buckets, and that count (not the row count) sets the cost of
+    each of the crash matrix's two dozen merges."""
     base = str(tmp_path_factory.mktemp("pristine"))
     coll = Collection(spark, base, "pristine")
     create_collection(
-        coll, canonical_docs.limit(24), chunk_size=200, chunk_overlap=40,
+        coll, canonical_docs.limit(8), chunk_size=200, chunk_overlap=40,
         fuzzy_dictionary=True,
     )
     return coll

@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark import cli
@@ -28,17 +29,29 @@ def _docs(spark):
     ).withColumn("last_modified_at", F.col("last_modified_at").cast("timestamp"))
 
 
+@pytest.fixture(scope="module")
+def pristine(spark, tmp_path_factory):
+    """One healthy collection; each test damages its own copy."""
+    coll = Collection(spark, str(tmp_path_factory.mktemp("doctor")), "dok")
+    create_collection(coll, _docs(spark), title_from_text=True)
+    return coll
+
+
+def _copy(spark, src, tmp_path, name):
+    shutil.copytree(src.root, tmp_path / name)
+    return Collection(spark, str(tmp_path), name)
+
+
 class TestDoctor:
-    def test_healthy_collection_passes_all_checks(self, spark, tmp_path):
-        coll = Collection(spark, str(tmp_path), "dok")
-        create_collection(coll, _docs(spark), title_from_text=True)
-        report = doctor_report(coll, deep=True)
+    def test_healthy_collection_passes_all_checks(self, spark, pristine):
+        report = doctor_report(pristine, deep=True)
         assert report["issues"] == [] and report["ok"]
         assert report["checks"] >= 10
 
-    def test_detects_count_drift_and_staging_leftover(self, spark, tmp_path):
-        coll = Collection(spark, str(tmp_path), "drift")
-        create_collection(coll, _docs(spark), title_from_text=True)
+    def test_detects_count_drift_and_staging_leftover(
+        self, spark, pristine, tmp_path
+    ):
+        coll = _copy(spark, pristine, tmp_path, "drift")
         m = coll.manifest()
         m.numberOfDocuments += 3  # simulate a convergence failure
         coll.save_manifest(m)
@@ -50,12 +63,11 @@ class TestDoctor:
         assert "doc_count_drift" in codes
         assert "staging_leftover" in codes
 
-    def test_deep_finds_orphan_derived_rows(self, spark, tmp_path):
+    def test_deep_finds_orphan_derived_rows(self, spark, pristine, tmp_path):
         """Dropping one chunks partition dir leaves its embeddings/
         doc_stats/postings rows pointing at no live chunk — the count
         invariant and the deep referential scan must both flag it."""
-        coll = Collection(spark, str(tmp_path), "orfan")
-        create_collection(coll, _docs(spark), title_from_text=True)
+        coll = _copy(spark, pristine, tmp_path, "orfan")
         pb_dirs = sorted((coll.root / "chunks").glob("_pb=*"))
         assert pb_dirs
         shutil.rmtree(pb_dirs[0])
@@ -66,9 +78,8 @@ class TestDoctor:
         assert "derived_count_mismatch" in codes
         assert "orphan_derived_rows" in codes
 
-    def test_cli_exit_codes(self, spark, tmp_path, capsys):
-        coll = Collection(spark, str(tmp_path), "dokcli")
-        create_collection(coll, _docs(spark), title_from_text=True)
+    def test_cli_exit_codes(self, spark, pristine, tmp_path, capsys):
+        coll = _copy(spark, pristine, tmp_path, "dokcli")
         rc = cli.main(
             ["doctor", "dokcli", "--base-path", str(tmp_path),
              "--format", "json"]

@@ -54,9 +54,16 @@ def _vocab_matches_recompute(coll):
     )
 
 
-@pytest.fixture()
-def fuzzy_coll(spark, tmp_path):
-    coll = Collection(spark, str(tmp_path), "fz")
+def _copy(spark, src, tmp_path, name):
+    import shutil
+
+    shutil.copytree(src.root, tmp_path / name)
+    return Collection(spark, str(tmp_path), name)
+
+
+@pytest.fixture(scope="module")
+def pristine_fz(spark, tmp_path_factory):
+    coll = Collection(spark, str(tmp_path_factory.mktemp("fz")), "fz")
     docs = _docs(
         spark,
         [
@@ -66,6 +73,27 @@ def fuzzy_coll(spark, tmp_path):
     )
     create_collection(
         coll, docs, chunk_size=200, chunk_overlap=0, fuzzy_dictionary=True
+    )
+    return coll
+
+
+@pytest.fixture()
+def fuzzy_coll(spark, pristine_fz, tmp_path):
+    """A fresh copy of the pristine collection per test."""
+    return _copy(spark, pristine_fz, tmp_path, "fz")
+
+
+@pytest.fixture(scope="module")
+def pristine_abgd(spark, tmp_path_factory):
+    """Two-document fuzzy collection the delta-log tests start from;
+    each test copies it instead of paying a create."""
+    coll = Collection(spark, str(tmp_path_factory.mktemp("abgd")), "abgd")
+    create_collection(
+        coll,
+        _docs(spark, [("d1", "alpha beta gamma"), ("d2", "beta delta")]),
+        chunk_size=200,
+        chunk_overlap=0,
+        fuzzy_dictionary=True,
     )
     return coll
 
@@ -254,21 +282,16 @@ class TestFuzzyArtifacts:
         }
         assert maintained == rebuilt
 
-    def test_compaction_folds_deltas_into_base(self, spark, tmp_path):
+    def test_compaction_folds_deltas_into_base(
+        self, spark, pristine_abgd, tmp_path
+    ):
         """After compactAfter batches the delta log folds into a fresh
         base: batch dirs retired, the sidecar records the high-water
         batch id, and the folded view still equals a full rebuild.
         Suggestions stay correct across the fold."""
         from pathlib import Path
 
-        coll = Collection(spark, str(tmp_path), "compactfz")
-        create_collection(
-            coll,
-            _docs(spark, [("d1", "alpha beta gamma"), ("d2", "beta delta")]),
-            chunk_size=200,
-            chunk_overlap=0,
-            fuzzy_dictionary=True,
-        )
+        coll = _copy(spark, pristine_abgd, tmp_path, "compactfz")
         manifest = coll.manifest()
         manifest.converter["fuzzy"]["compactAfter"] = 2
         coll.save_manifest(manifest)
@@ -308,7 +331,9 @@ class TestFuzzyArtifacts:
         )] == ["batch=3"]
         _vocab_matches_recompute(coll)
 
-    def test_crash_between_vocab_swap_phases_recovers(self, spark, tmp_path):
+    def test_crash_between_vocab_swap_phases_recovers(
+        self, spark, pristine_abgd, tmp_path
+    ):
         """Simulate a crash mid-staged-swap of the vocab table (final
         dir renamed away, __old parked, __tmp still present): the next
         update's orphan sweep must restore the parked table, and the
@@ -316,14 +341,7 @@ class TestFuzzyArtifacts:
         import shutil
         from pathlib import Path
 
-        coll = Collection(spark, str(tmp_path), "crashfz")
-        create_collection(
-            coll,
-            _docs(spark, [("d1", "alpha beta gamma"), ("d2", "beta delta")]),
-            chunk_size=200,
-            chunk_overlap=0,
-            fuzzy_dictionary=True,
-        )
+        coll = _copy(spark, pristine_abgd, tmp_path, "crashfz")
         vocab_dir = Path(coll.table_path("vocab"))
         old_dir = Path(coll.table_path("vocab__old"))
         tmp_dir = Path(coll.table_path("vocab__tmp"))
@@ -339,7 +357,7 @@ class TestFuzzyArtifacts:
         assert not old_dir.exists() and not tmp_dir.exists()
 
     def test_crash_between_publish_renames_keeps_probes_consistent(
-        self, spark, tmp_path, monkeypatch
+        self, spark, pristine_abgd, tmp_path, monkeypatch
     ):
         """Inject a crash BETWEEN the two adjacent batch-publish renames
         (deletion index published, vocab not): the vocab rename is the
@@ -351,14 +369,7 @@ class TestFuzzyArtifacts:
 
         from documents_vector_search_spark.collection import fuzzy_artifacts as fa
 
-        coll = Collection(spark, str(tmp_path), "crashpub")
-        create_collection(
-            coll,
-            _docs(spark, [("d1", "alpha beta gamma"), ("d2", "beta delta")]),
-            chunk_size=200,
-            chunk_overlap=0,
-            fuzzy_dictionary=True,
-        )
+        coll = _copy(spark, pristine_abgd, tmp_path, "crashpub")
         before_vocab = sorted(
             (r["term"], r["ctf"], r["df"])
             for r in fa.read_vocab(coll).collect()

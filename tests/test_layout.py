@@ -251,6 +251,43 @@ class TestBm25fServing:
             ).collect()
         ]
 
+    @pytest.fixture(scope="class")
+    def bm25f_coll(self, spark, tmp_path_factory):
+        """BM25F_ROWS built once per (chunk_size, chunk_overlap), read-
+        only: a test that writes copies it first (``_bm25f_copy``)."""
+        from documents_vector_search_spark.collection import (
+            Collection,
+            create_collection,
+        )
+
+        built = {}
+
+        def get(chunk_size, chunk_overlap):
+            key = (chunk_size, chunk_overlap)
+            if key not in built:
+                base = str(tmp_path_factory.mktemp("bm25f"))
+                coll = Collection(spark, base, "f")
+                create_collection(
+                    coll,
+                    self._bm25f_docs(spark, self.BM25F_ROWS),
+                    chunk_size=chunk_size,
+                    chunk_overlap=chunk_overlap,
+                    title_from_text=True,
+                )
+                built[key] = coll
+            return built[key]
+
+        return get
+
+    @staticmethod
+    def _bm25f_copy(spark, src, tmp_path, name):
+        import shutil
+
+        from documents_vector_search_spark.collection import Collection
+
+        shutil.copytree(src.root, tmp_path / name)
+        return Collection(spark, str(tmp_path), name)
+
     @pytest.mark.parametrize(
         "chunk_size,chunk_overlap",
         [
@@ -262,7 +299,7 @@ class TestBm25fServing:
         ],
     )
     def test_collection_bm25f_matches_adhoc_operator(
-        self, spark, tmp_path, chunk_size, chunk_overlap
+        self, spark, bm25f_coll, chunk_size, chunk_overlap
     ):
         """searcher.search_documents_bm25f over a chunk-0-is-title
         collection must equal bm25f_topk over the same corpus with the
@@ -271,20 +308,11 @@ class TestBm25fServing:
         serving index is the document-level field_postings table, built
         from the document text, not from overlapping chunks)."""
         from documents_vector_search_spark.collection import (
-            Collection,
             CollectionSearcher,
-            create_collection,
         )
 
         rows = self.BM25F_ROWS
-        coll = Collection(spark, str(tmp_path), "f")
-        create_collection(
-            coll,
-            self._bm25f_docs(spark, rows),
-            chunk_size=chunk_size,
-            chunk_overlap=chunk_overlap,
-            title_from_text=True,
-        )
+        coll = bm25f_coll(chunk_size, chunk_overlap)
         got = [
             (r.document_id, r.score)
             for r in CollectionSearcher(coll).search_documents_bm25f(
@@ -294,15 +322,15 @@ class TestBm25fServing:
         expected = self._bm25f_expected(spark, rows)
         assert got == expected and got  # non-empty, identical order+scores
 
-    def test_bm25f_exact_after_update_and_delete(self, spark, tmp_path):
+    def test_bm25f_exact_after_update_and_delete(
+        self, spark, bm25f_coll, tmp_path
+    ):
         """field_postings and the manifest's fieldStats stay exact
         through the incremental paths: after an update (one changed +
         one new doc) and a delete, serving still equals bm25f_topk over
         the corpus' CURRENT state, and fieldStats equals a recount."""
         from documents_vector_search_spark.collection import (
-            Collection,
             CollectionSearcher,
-            create_collection,
         )
         from documents_vector_search_spark.collection.updater import (
             delete_documents,
@@ -310,14 +338,7 @@ class TestBm25fServing:
         )
 
         rows = self.BM25F_ROWS
-        coll = Collection(spark, str(tmp_path), "fu")
-        create_collection(
-            coll,
-            self._bm25f_docs(spark, rows),
-            chunk_size=12,
-            chunk_overlap=5,
-            title_from_text=True,
-        )
+        coll = self._bm25f_copy(spark, bm25f_coll(12, 5), tmp_path, "fu")
 
         # replace d2 (body gains a spark), add d7
         changed = [
@@ -346,7 +367,7 @@ class TestBm25fServing:
         assert coll.manifest().fieldStats == _field_stats_from_table(coll)
 
     def test_bm25f_legacy_collection_without_field_postings(
-        self, spark, tmp_path
+        self, spark, bm25f_coll, tmp_path
     ):
         """Collections created before field_postings existed still
         serve BM25F off the chunk-derived path: with overlap 0 and
@@ -355,20 +376,11 @@ class TestBm25fServing:
         import shutil
 
         from documents_vector_search_spark.collection import (
-            Collection,
             CollectionSearcher,
-            create_collection,
         )
 
         rows = self.BM25F_ROWS
-        coll = Collection(spark, str(tmp_path), "fl")
-        create_collection(
-            coll,
-            self._bm25f_docs(spark, rows),
-            chunk_size=1000,
-            chunk_overlap=0,
-            title_from_text=True,
-        )
+        coll = self._bm25f_copy(spark, bm25f_coll(1000, 0), tmp_path, "fl")
         # simulate a pre-field_postings collection
         shutil.rmtree(coll.root / "field_postings")
         m = coll.manifest()

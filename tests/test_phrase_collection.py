@@ -52,6 +52,20 @@ def phrase_coll(spark, tmp_path_factory):
     return coll
 
 
+@pytest.fixture(scope="module")
+def plain_coll(spark, tmp_path_factory):
+    """A collection built WITHOUT positional postings (read-only)."""
+    base = str(tmp_path_factory.mktemp("plain_coll"))
+    coll = Collection(spark, base, "plain")
+    create_collection(
+        coll,
+        _docs(spark, [("d1", "hash join here")]),
+        chunk_size=100,
+        chunk_overlap=0,
+    )
+    return coll
+
+
 class TestPhraseCollection:
     def test_postings_carry_positions(self, phrase_coll):
         postings = phrase_coll.read("postings")
@@ -103,16 +117,8 @@ class TestPhraseCollection:
         ]
         assert "d5" in ids
 
-    def test_non_positional_collection_raises(self, spark, tmp_path_factory):
-        base = str(tmp_path_factory.mktemp("plain_coll"))
-        coll = Collection(spark, base, "plain")
-        create_collection(
-            coll,
-            _docs(spark, [("d1", "hash join here")]),
-            chunk_size=100,
-            chunk_overlap=0,
-        )
-        s = CollectionSearcher(coll)
+    def test_non_positional_collection_raises(self, plain_coll):
+        s = CollectionSearcher(plain_coll)
         with pytest.raises(ValueError, match="positional"):
             s.search("hash join", indexes=("phrase",)).collect()
 
@@ -152,15 +158,7 @@ class TestPhraseBatch:
             for r in single.orderBy("rank").collect()
         ]
 
-    def test_batch_phrase_requires_positional(self, spark, tmp_path_factory):
-        base = str(tmp_path_factory.mktemp("plain2"))
-        coll = Collection(spark, base, "plain2")
-        create_collection(
-            coll,
-            _docs(spark, [("d1", "hash join here")]),
-            chunk_size=100,
-            chunk_overlap=0,
-        )
-        s = CollectionSearcher(coll)
+    def test_batch_phrase_requires_positional(self, plain_coll):
+        s = CollectionSearcher(plain_coll)
         with pytest.raises(ValueError, match="positional"):
             s.search_chunks_many({"q0": "hash join"}, 5, indexes=("phrase",))
