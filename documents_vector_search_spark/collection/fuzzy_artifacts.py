@@ -344,8 +344,9 @@ def stage_vocab_delta(
     rewrite must wait for publish time because it rewrites the base)."""
     spark = collection.spark
     delta = spark.read.parquet(delta_path)
-    vocab = collection.read(VOCAB_TABLE)
-    if "term_bucket" not in vocab.columns:
+    # layout sniffed from the directory, not a Spark read: listing every
+    # term_bucket directory costs a file-listing job per update
+    if any(Path(collection.table_path(VOCAB_TABLE)).glob("*.parquet")):
         return {"legacy": True}
     if not delta.head(1):
         return None  # empty delta (idempotent re-send) — nothing changed
@@ -372,11 +373,11 @@ def stage_vocab_delta(
             _stage_batch,
             collection,
             DELETION_INDEX_DELTAS_TABLE,
-            # keyed repartition: one file per touched bucket, and a huge
-            # backfill delta still fans out across the bucket count
-            didx_delta.repartition(
-                N_VARIANT_BUCKETS, F.col("variant_bucket")
-            ),
+            # keyed repartition: one file per touched bucket. Without a
+            # fixed count AQE sizes it from the delta's bytes, so a
+            # batch-sized delta writes from one task instead of 64
+            # near-empty ones, and a huge backfill still fans out
+            didx_delta.repartition(F.col("variant_bucket")),
             ["variant_bucket"],
         )
         f_vocab = pool.submit(

@@ -61,6 +61,19 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # file:// paths through the raw local filesystem (FileSystem and
+        # FileContext APIs): Hadoop's default checksummed wrapper writes
+        # a hidden .crc twin beside every file, and without the native
+        # Hadoop library each file create forks a `chmod` process — the
+        # twin doubles that per-file cost. A partitioned Parquet write of
+        # 512 small files took 3.2 s instead of 4.4 s (median of 8
+        # interleaved pairs, 4-CPU local[4]). Cluster storage (hdfs://,
+        # s3a://) is unaffected.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        .config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl",
+            "org.apache.hadoop.fs.local.RawLocalFs",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
