@@ -30,10 +30,10 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import TABLES, Collection
-from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
-
-# directory-level query-pruning columns a table may carry beside _pb
-_LAYOUT_COLS = ("bucket", "cluster_id", "term_bucket")
+from documents_vector_search_spark.collection.partitioning import (
+    LAYOUT_COLS,
+    UPDATE_PB_COL,
+)
 
 
 def bucket_file_counts(table_root: Path) -> dict[int, dict[str, int]]:
@@ -96,9 +96,11 @@ def compact_collection(
     from documents_vector_search_spark.collection.updater import (
         _recover_orphans,
         _swap_partitions,
+        refuse_term_bucket_layout,
     )
 
     tables = list(tables or TABLES)
+    refuse_term_bucket_layout(collection)
     _recover_orphans(collection, tables)
     report: dict[str, dict] = {}
     for table in tables:
@@ -132,7 +134,7 @@ def compact_collection(
             _clear_degraded(collection, zcfg)
             continue
         df = collection.read(table).filter(F.col(UPDATE_PB_COL).isin(frag))
-        pcols = [c for c in _LAYOUT_COLS if c in df.columns] + [UPDATE_PB_COL]
+        pcols = [c for c in LAYOUT_COLS if c in df.columns] + [UPDATE_PB_COL]
         if zcfg:
             # the manifest records a Z-order layout for this table:
             # re-cluster the fragmented buckets instead of a plain

@@ -34,7 +34,6 @@ from documents_vector_search_spark.collection.catalog import Collection
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.functions.hashing import md5_hash64
 from documents_vector_search_spark.operators.bm25 import (
-    N_TERM_BUCKETS,
     build_doc_stats,
     build_field_postings,
     build_postings,
@@ -237,7 +236,9 @@ def create_collection(
     ``update_buckets`` (>= 1): every table is additionally partitioned
     by a stable ``_pb`` bucket of its delete key so incremental updates
     rewrite only affected partitions — see collection/partitioning.py
-    for sizing (default 8 suits test corpora; 100 TB wants 1024+).
+    for sizing (default 8 suits test corpora; 100 TB wants 1024+). The
+    postings and field_postings builds also shuffle by it: each bucket
+    is ONE file with rows sorted by ``term``.
 
     ``zorder_by=(colA, colB)``: Z-cluster the DOCUMENTS table on two
     integer-castable/timestamp columns (operators/layout.py) so range
@@ -439,23 +440,24 @@ def create_collection(
                 shutil.rmtree(raw_path, ignore_errors=True)
 
     def _write_postings() -> None:
-        # postings partitioned by term-hash bucket: a query's term
-        # lookup becomes Parquet partition pruning (operators/bm25.py).
-        # bucket_partitions pushes the term_bucket repartition INTO the
-        # build: one exchange serves both the (id, term) aggregation
-        # and the write layout (build_postings docstring), so each
-        # bucket still lands in few files without a second
-        # postings-sized exchange.
+        # one file per update bucket, rows sorted by term: a query's
+        # `term IN (...)` filter pushes into the scan and skips row
+        # groups on the sorted column's min/max stats (operators/bm25.py
+        # scale notes). carry_partitions pushes the _pb repartition INTO
+        # the build: one exchange serves both the (id, term)
+        # aggregation and the write layout (build_postings docstring).
+        # The sort leads with _pb, the partitioned write's required
+        # ordering, so each bucket file comes out sorted by term.
         postings_df = build_postings(
             chunks, id_col="chunk_id", text_col="indexed_data", with_dl=True,
             carry_cols=[UPDATE_PB_COL],  # owning doc's bucket, see emb_df
             with_positions=positional_postings,
-            bucket_partitions=N_TERM_BUCKETS,
+            carry_partitions=update_buckets,
         )
         collection.write(
             "postings",
-            postings_df,
-            partition_by=["term_bucket", UPDATE_PB_COL],
+            postings_df.sortWithinPartitions(UPDATE_PB_COL, "term"),
+            partition_by=[UPDATE_PB_COL],
         )
 
     def _write_doc_stats() -> None:
@@ -472,16 +474,16 @@ def create_collection(
         # document-level field postings built from the DOCUMENT text:
         # the BM25F serving index, exact under any chunk_overlap (see
         # build_field_postings — chunk-derived field tf/fl double-count
-        # overlap regions). Same pruning layout AND same single-exchange
-        # bucket fusion as postings.
+        # overlap regions). Same term-sorted one-file-per-bucket layout
+        # AND same single-exchange fusion as postings.
         fp = build_field_postings(
             docs, title_col, title_from_text, carry_cols=[UPDATE_PB_COL],
-            bucket_partitions=N_TERM_BUCKETS,
+            carry_partitions=update_buckets,
         )
         collection.write(
             "field_postings",
-            fp,
-            partition_by=["term_bucket", UPDATE_PB_COL],
+            fp.sortWithinPartitions(UPDATE_PB_COL, "term"),
+            partition_by=[UPDATE_PB_COL],
         )
 
     def _gather_doc_header():

@@ -6,8 +6,8 @@ them from postings per query is fine for ad-hoc use but pays a
 postings-wide aggregate every call; a collection created with
 ``fuzzy_dictionary=True`` materializes both as tables beside the
 postings, so a suggestion probe is a PARTITION-PRUNED scan of the
-deletion index (variant_bucket directories, same md5-bucket scheme as
-the BM25 term_bucket layout) — bytes read ≈ |query deletion variants|
+deletion index (variant_bucket directories, the md5 term_bucket
+scheme of operators/bm25.py) — bytes read ≈ |query deletion variants|
 / N_VARIANT_BUCKETS of a vocabulary-sized table.
 
 Incremental maintenance is a DELTA LOG (the LSM / Lucene-segment

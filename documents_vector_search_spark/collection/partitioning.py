@@ -13,11 +13,15 @@ updater reads only those partitions (Parquet partition pruning),
 merges, and swaps just those directories. Unaffected partitions —
 files, mtimes, everything — are never rewritten.
 
-Layout tables keep their query-pruning column as a SIBLING partition
-level (``cluster_id=*/_pb=N``, ``term_bucket=*/_pb=N``, ``bucket=*/
-_pb=N``): Spark prunes on ANY directory level, not just a prefix, so
-query-side pruning is unchanged while update-side pruning composes
-with it.
+The embeddings' ANN layouts keep their query-pruning column as a
+SIBLING partition level (``bucket=*/_pb=N``, ``cluster_id=*/_pb=N``):
+Spark prunes on ANY directory level, not just a prefix, so query-side
+pruning is unchanged while update-side pruning composes with it. The
+term-keyed tables (postings, field_postings) have no level beside
+``_pb``: each bucket is ONE file with rows sorted by ``term``, so a
+query's ``term IN (...)`` filter skips row groups on the sorted
+column's min/max stats instead of listing per-term-bucket directories
+— 64× fewer files to create, list and rewrite per bucket.
 
 Sizing: a single-doc update rewrites ~1/``update_buckets`` of each
 table, so size ``update_buckets`` to your rewrite budget — the default
@@ -40,6 +44,13 @@ from pyspark.sql import functions as F
 from documents_vector_search_spark.functions.hashing import md5_hash64
 
 UPDATE_PB_COL = "_pb"
+
+# directory-level query-pruning columns the embeddings may carry beside
+# _pb; writers keep whichever the stored table has
+LAYOUT_COLS = ("bucket", "cluster_id")
+
+# tables written as one term-sorted file per _pb bucket
+TERM_SORTED_TABLES = ("postings", "field_postings")
 
 
 def pb_col(key: Column, n_buckets: int) -> Column:

@@ -33,6 +33,9 @@ from documents_vector_search_spark.plans.filter_compiler import compile_filter
 
 DEFAULT_INDEXES = ("vector", "bm25")
 
+# tables the hybrid serving path reads, warmed at cached-searcher start
+_WARM_TABLES = ("documents", "chunks", "embeddings", "postings")
+
 
 class CollectionSearcher:
     def __init__(
@@ -100,23 +103,24 @@ class CollectionSearcher:
             self._warm_cache()
 
     def _warm_cache(self) -> None:
-        """Materialize every serving table's executor-memory cache NOW,
-        as concurrent driver-thread jobs — the serving-process startup
-        pattern (pay at construction, not on the first query). Without
-        this the first search's job materializes each persisted table
-        lazily and SERIALLY as its plan first touches it; the fan-out
-        overlaps the table scans exactly like the creator's build
-        fan-out. One cheap count() per table forces the InMemoryRelation
-        to cache all partitions (the cache stores the full table row
-        set; count on top of it is free)."""
+        """Materialize the executor-memory cache of the tables the
+        hybrid serving path reads (documents, chunks, embeddings,
+        postings) NOW, as concurrent jobs from a thread pool — the
+        serving-process startup pattern (pay at construction, not on
+        the first query). Without this the first search's job
+        materializes each persisted table lazily and SERIALLY as its
+        plan first touches it; the fan-out overlaps the table scans
+        exactly like the creator's build fan-out. One cheap count() per
+        table forces the InMemoryRelation to cache all partitions (the
+        cache stores the full table row set; count on top of it is
+        free). The other tables (doc_stats, field_postings) still
+        persist lazily on their first ``_read``."""
         from concurrent.futures import ThreadPoolExecutor
-
-        from documents_vector_search_spark.collection.catalog import TABLES
 
         root = self.collection.root
         present = [
             t
-            for t in TABLES
+            for t in _WARM_TABLES
             if (root / t).exists() or (root / f"{t}__old").exists()
         ]
         # plan construction (and the _cached dict fill) stays serial —
@@ -427,6 +431,13 @@ class CollectionSearcher:
             self._corpus_stats = (int(row["n"]), float(row["avgdl"] or 0.0))
         return self._corpus_stats
 
+    def _lengths_unless_dl(self, postings: DataFrame) -> DataFrame | None:
+        """doc_stats for BM25 scoring only when the postings carry no
+        per-row ``dl``: with it (and the manifest's corpus stats) the
+        scorers never read doc_stats, so the serving path does not open
+        the table at all."""
+        return None if "dl" in postings.columns else self._read("doc_stats")
+
     def _bm25_scored(
         self, text: str, k: int, allowed: DataFrame | None
     ) -> DataFrame:
@@ -435,7 +446,6 @@ class CollectionSearcher:
         # scored candidates — the reference's FTS5 bm25() semantics
         # (filter narrows rows, statistics come from the full index)
         postings = self._read("postings")
-        doc_stats = self._read("doc_stats")
         chunks = self._read("chunks")
         hits = bm25_topk(
             chunks,  # only used for sparkSession/tokenizer defaults
@@ -444,7 +454,7 @@ class CollectionSearcher:
             id_col="chunk_id",
             text_col="indexed_data",
             postings=postings,
-            doc_stats=doc_stats,
+            doc_stats=self._lengths_unless_dl(postings),
             candidates=allowed,
             corpus_stats=self._bm25_corpus_stats(),
         )
@@ -565,7 +575,7 @@ class CollectionSearcher:
         for the math) combines per-field length-normalized weighted tfs
         per (document, term) BEFORE one k1 saturation.
 
-        Plan shape: ONE term_bucket-pruned scan of the document-level
+        Plan shape: ONE term-filtered scan of the document-level
         field_postings table (tf, fl, and df all exact from the
         document text — see _bm25f_doc_pseudo, which also documents the
         chunk-derived legacy fallback for collections predating the
@@ -580,7 +590,6 @@ class CollectionSearcher:
             B,
             K1,
             _query_terms,
-            term_bucket_py,
         )
 
         weights = weights or {"title": 2.0, "body": 1.0}
@@ -639,20 +648,14 @@ class CollectionSearcher:
         (operators/bm25.py build_field_postings) — built from the
         document TEXT at create/update time, so tf, fl, and df are
         exact under any chunk_overlap, and the whole query is one
-        term_bucket-pruned scan with no chunk-meta join at all.
+        term-filtered scan with no chunk-meta join at all.
         Legacy path (collections predating the table): re-aggregate
         chunk postings by (document, field) — approximate when
         chunk_overlap > 0 (overlap tokens count once per chunk)."""
-        from documents_vector_search_spark.operators.bm25 import (
-            B,
-            term_bucket_py,
-        )
+        from documents_vector_search_spark.operators.bm25 import B
 
-        buckets = sorted({term_bucket_py(t) for t in all_terms})
         if self._has_field_postings():
             fp = self._read("field_postings")
-            if "term_bucket" in fp.columns:
-                fp = fp.filter(F.col("term_bucket").isin(buckets))
             matched = fp.filter(F.col("term").isin(all_terms)).select(
                 "document_id", "field", "term", "tf", "fl"
             )
@@ -660,8 +663,6 @@ class CollectionSearcher:
             doc_term = matched.select("document_id", "term")
         else:
             postings = self._read("postings")
-            if "term_bucket" in postings.columns:
-                postings = postings.filter(F.col("term_bucket").isin(buckets))
             chunk_matched = postings.filter(
                 F.col("term").isin(all_terms)
             ).select("chunk_id", "term", "tf")
@@ -851,12 +852,9 @@ class CollectionSearcher:
         positional postings layout
         (create_collection(positional_postings=True)); the query text
         IS the phrase, tokenized by the engine's one tokenizer. Same
-        pruning contract as BM25: term_bucket partition pruning + an
-        In(term, ...) pushed filter, then one groupBy(chunk_id) over
-        only the phrase's postings rows."""
-        from documents_vector_search_spark.operators.bm25 import (
-            term_bucket_py,
-        )
+        pruning contract as BM25: an In(term, ...) pushed filter on the
+        term-sorted postings, then one groupBy(chunk_id) over only the
+        phrase's postings rows."""
         from documents_vector_search_spark.operators.phrase import (
             phrase_match_counts,
             tokenize_phrase,
@@ -874,9 +872,6 @@ class CollectionSearcher:
             return postings.select(
                 F.col("chunk_id"), F.lit(0.0).alias("score")
             ).limit(0)
-        if "term_bucket" in postings.columns:
-            buckets = sorted({term_bucket_py(t) for t in terms})
-            postings = postings.filter(F.col("term_bucket").isin(buckets))
         counts = phrase_match_counts(
             postings.select("chunk_id", "term", "positions"),
             terms,
@@ -913,7 +908,7 @@ class CollectionSearcher:
           their best chunk's negated-L2 score.
         - ``method="bm25"``: select the source's ``max_terms`` most
           informative terms (tf driver-side from ONE fetched document;
-          df for just those candidate terms from the term_bucket-pruned
+          df for just those candidate terms from the term-filtered
           document-level index — the Lucene MoreLikeThis recipe), then
           run a DISJUNCTIVE BM25F query over field_postings.
         """
@@ -998,17 +993,10 @@ class CollectionSearcher:
             tf[t] = tf.get(t, 0) + 1
         candidates = sorted(tf)
 
-        from documents_vector_search_spark.operators.bm25 import (
-            term_bucket_py,
-        )
-
         if self._has_field_postings():
-            fp = self._read("field_postings")
-            if "term_bucket" in fp.columns:
-                buckets = sorted({term_bucket_py(t) for t in candidates})
-                fp = fp.filter(F.col("term_bucket").isin(buckets))
             df_rows = (
-                fp.filter(F.col("term").isin(candidates))
+                self._read("field_postings")
+                .filter(F.col("term").isin(candidates))
                 .select("document_id", "term")
                 .distinct()
                 .groupBy("term")
@@ -1016,12 +1004,9 @@ class CollectionSearcher:
                 .collect()
             )
         else:
-            postings = self._read("postings")
-            if "term_bucket" in postings.columns:
-                buckets = sorted({term_bucket_py(t) for t in candidates})
-                postings = postings.filter(F.col("term_bucket").isin(buckets))
             df_rows = (
-                postings.filter(F.col("term").isin(candidates))
+                self._read("postings")
+                .filter(F.col("term").isin(candidates))
                 .groupBy("term")
                 .agg(F.count("*").alias("df"))
                 .collect()
@@ -1163,12 +1148,11 @@ class CollectionSearcher:
         (operators/bm25.py::rm3_weights_from_feedback). Serving shape:
         the k_fb feedback chunks collect to the driver (bounded — each
         is one chunk), the relevance model is exact driver-side integer
-        arithmetic, and the only index work is one bucket-pruned
+        arithmetic, and the only index work is one term-filtered
         postings scan for the candidate terms' document frequencies."""
         from documents_vector_search_spark.operators.bm25 import (
             _query_terms,
             rm3_weights_from_feedback,
-            term_bucket_py,
         )
 
         q_terms = _query_terms(text)
@@ -1193,15 +1177,10 @@ class CollectionSearcher:
         )
         df_lookup: dict[str, int] = {}
         if cand_terms:
-            postings = self._read("postings")
-            if "term_bucket" in postings.columns:
-                buckets = sorted({term_bucket_py(t) for t in cand_terms})
-                postings = postings.filter(
-                    F.col("term_bucket").isin(buckets)
-                )
             df_lookup = {
                 r.term: int(r.df)
-                for r in postings.filter(F.col("term").isin(cand_terms))
+                for r in self._read("postings")
+                .filter(F.col("term").isin(cand_terms))
                 .groupBy("term")
                 .agg(F.count("*").alias("df"))
                 .collect()
@@ -1661,27 +1640,24 @@ class CollectionSearcher:
                     bm25_topk_batch,
                 )
 
+                postings = self._read("postings")
                 bm = bm25_topk_batch(
                     texts,
                     max_chunks,
-                    postings=self._read("postings"),
+                    postings=postings,
                     id_col="chunk_id",
-                    doc_stats=self._read("doc_stats"),
+                    doc_stats=self._lengths_unless_dl(postings),
                     corpus_stats=self._bm25_corpus_stats(),
                     candidates=allowed,
                 )
             scored.append(bm.withColumn("_src", F.lit("b")))
         if "phrase" in indexes:
             # batched exact-phrase branch: Q phrases share ONE
-            # positional-postings scan pruned to the union of their
-            # terms' buckets (operators/phrase.py::phrase_topk_batch) —
-            # same amortization shape as bm25_topk_batch
-            from documents_vector_search_spark.operators.bm25 import (
-                term_bucket_py,
-            )
+            # positional-postings scan filtered to the union of their
+            # terms (operators/phrase.py::phrase_topk_batch) — same
+            # amortization shape as bm25_topk_batch
             from documents_vector_search_spark.operators.phrase import (
                 phrase_topk_batch,
-                tokenize_phrase,
             )
 
             postings = self._read("postings")
@@ -1690,14 +1666,6 @@ class CollectionSearcher:
                     "collection has no positional postings — recreate "
                     "with create_collection(positional_postings=True) "
                     "to enable phrase search"
-                )
-            union_terms = {
-                t for p in texts.values() for t in tokenize_phrase(p)
-            }
-            if "term_bucket" in postings.columns and union_terms:
-                buckets = sorted({term_bucket_py(t) for t in union_terms})
-                postings = postings.filter(
-                    F.col("term_bucket").isin(buckets)
                 )
             positional = postings.select("chunk_id", "term", "positions")
             if allowed is not None:

@@ -73,6 +73,8 @@ from documents_vector_search_spark.collection.creator import (
 )
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.partitioning import (
+    LAYOUT_COLS,
+    TERM_SORTED_TABLES,
     UPDATE_PB_COL,
     pb_col,
     pb_dirs,
@@ -82,7 +84,6 @@ from documents_vector_search_spark.operators.bm25 import (
     build_doc_stats,
     build_field_postings,
     build_postings,
-    term_bucket,
 )
 from documents_vector_search_spark.operators.chunking import assign_chunk_ids
 
@@ -95,14 +96,6 @@ _FUZZY_TABLES = (
     "vocab_deltas",
     "deletion_index_deltas",
 )
-
-# directory-level query-pruning columns a table may carry beside _pb;
-# the merge keeps whichever the stored table has
-_LAYOUT_COLS = {
-    "embeddings": ("bucket", "cluster_id"),
-    "postings": ("term_bucket",),
-    "field_postings": ("term_bucket",),
-}
 
 
 def _recover_orphans(collection: Collection, tables: list[str]) -> None:
@@ -221,14 +214,17 @@ def _swap_partitions(
             if cols and table not in no_cluster:
                 # cluster the staged rows by their partition values
                 # first: without it every write task sprays one file
-                # into every (term_bucket, _pb) directory it holds rows
-                # for — the creator measured the same partitioned write
-                # at 2,047 files / 6.3s unclustered vs 64 files / 0.7s
+                # into every partition directory it holds rows for —
+                # the creator measured the same partitioned write at
+                # 2,047 files / 6.3s unclustered vs 64 files / 0.7s
                 # clustered (write_fuzzy_artifacts docstring); with the
                 # repartition each partition directory gets exactly the
                 # tasks that own its hash, so file count ≈ directory
                 # count and the commit protocol stays cheap
                 df = df.repartition(*[F.col(c) for c in cols])
+            if table in TERM_SORTED_TABLES:
+                # the creator's layout: each bucket file sorted by term
+                df = df.sortWithinPartitions(*cols, "term")
             writer = df.write.mode("overwrite")
             if cols:
                 writer = writer.partitionBy(*cols)
@@ -485,12 +481,32 @@ def _exact_recount(collection: Collection, manifest: Manifest) -> Manifest:
     return manifest
 
 
+def refuse_term_bucket_layout(collection: Collection) -> None:
+    """Refuse to write a collection whose postings or field_postings
+    still carry ``term_bucket=*`` directories (created before the
+    term-sorted one-file-per-bucket layout): a merge would stage
+    ``_pb``-only directories beside them, a layout Spark cannot read
+    back. Searches still read it correctly (``term IN`` alone is the
+    same predicate)."""
+    stale = [
+        t
+        for t in TERM_SORTED_TABLES
+        if next((collection.root / t).glob("term_bucket=*"), None)
+    ]
+    if stale:
+        raise ValueError(
+            f"collection '{collection.name}' stores {' and '.join(stale)} "
+            "partitioned by term_bucket, a layout updates, deletes and "
+            "compaction no longer write — re-create the collection"
+        )
+
+
 def _open_for_write(collection: Collection) -> Manifest:
-    """Recover an interrupted earlier write and load the manifest:
-    roll back half-swapped partitions and drop orphaned staging dirs,
-    refuse a manifest without ``updateBuckets``, and recount the
-    manifest when it carries an ``inFlight`` record."""
-    _recover_orphans(collection, [*TABLES, *_FUZZY_TABLES])
+    """Load the manifest and recover an interrupted earlier write:
+    refuse a manifest without ``updateBuckets`` and the term_bucket
+    postings layout (before touching any directory), roll back
+    half-swapped partitions and drop orphaned staging dirs, and
+    recount the manifest when it carries an ``inFlight`` record."""
     manifest = collection.manifest()
     if not manifest.converter.get("updateBuckets"):
         raise ValueError(
@@ -498,6 +514,8 @@ def _open_for_write(collection: Collection) -> Manifest:
             "its manifest: its tables carry no _pb partition level for "
             "an update or delete to merge on — re-create the collection"
         )
+    refuse_term_bucket_layout(collection)
+    _recover_orphans(collection, [*TABLES, *_FUZZY_TABLES])
     if manifest.inFlight is not None:
         manifest = _exact_recount(collection, manifest)
     return manifest
@@ -694,7 +712,7 @@ def _merge(
             collection,
             merged,
             partition_cols={
-                t: [c for c in _LAYOUT_COLS.get(t, ()) if c in old[t].columns]
+                t: [c for c in LAYOUT_COLS if c in old[t].columns]
                 + [UPDATE_PB_COL]
                 for t in merged
             },
@@ -851,7 +869,7 @@ def update_collection(
             )
 
         # postings keep the stored table's optional columns (schema-
-        # sniffed: dl, positions) and its term_bucket layout level
+        # sniffed: dl, positions)
         old_postings = old["postings"].columns
         postings = build_postings(
             chunks,
@@ -861,10 +879,6 @@ def update_collection(
             carry_cols=[UPDATE_PB_COL],
             with_positions="positions" in old_postings,
         )
-        if "term_bucket" in old_postings:
-            postings = postings.withColumn(
-                "term_bucket", term_bucket(F.col("term"))
-            )
         fresh = {
             "documents": bucketed(changed_docs, "id"),
             "chunks": chunks,
@@ -881,13 +895,10 @@ def update_collection(
         # Collections created before the table existed skip it (BM25F
         # then serves the chunk-derived approximation).
         if "field_postings" in old:
-            fp = bucketed(
+            fresh["field_postings"] = bucketed(
                 build_field_postings(changed_docs, title_col, title_from_text),
                 "document_id",
             )
-            if "term_bucket" in old["field_postings"].columns:
-                fp = fp.withColumn("term_bucket", term_bucket(F.col("term")))
-            fresh["field_postings"] = fp
         return fresh
 
     return _merge(

@@ -20,9 +20,12 @@ descending — a documented sign flip, with ties broken on id.
 Scale notes (100 TB):
 - The postings build is one explode + one groupBy — a single shuffle
   keyed by (term, id); term stats are a map-side-combinable second agg.
-- Partition/bucket ``postings`` BY term: a query then touches only the
-  buckets of its (few) query terms, and the semi-join on query terms is
-  a broadcast of a tiny literal list.
+- The collection layout (collection/creator.py) writes ``postings``
+  as ONE file per update bucket with rows sorted by ``term``: the
+  query's ``term IN (...)`` literal list pushes into the Parquet scan,
+  whose row-group min/max stats on the sorted column skip row groups
+  holding none of the query terms — no term-list DataFrame, no
+  broadcast, and no per-term-bucket directories to create and list.
 - The final top-k is TakeOrderedAndProject, not a global sort.
 """
 
@@ -37,14 +40,14 @@ from documents_vector_search_spark.functions.text import tokenize
 K1 = 1.2
 B = 0.75
 
-# postings layout: partitionBy("term_bucket") so a query's term lookup
-# is Parquet partition pruning — it reads |query terms|/N of the index
+# md5 term bucket: the fuzzy artifacts' partition column and an
+# optional postings directory level the scoring operators prune on
 N_TERM_BUCKETS = 64
 
 
 def term_bucket(col) -> "F.Column":
     """Partition bucket of a term — md5-derived (engine-portable), the
-    write-side half of the postings partition-pruning layout."""
+    write-side half of a term-bucketed partition-pruning layout."""
     return (md5_hash64(col) % N_TERM_BUCKETS).cast("int")
 
 
@@ -65,7 +68,7 @@ def build_postings(
     with_dl: bool = False,
     carry_cols: list[str] | None = None,
     with_positions: bool = False,
-    bucket_partitions: int | None = None,
+    carry_partitions: int | None = None,
 ) -> DataFrame:
     """``(id, term, tf)`` postings from a document/chunk table (E4).
 
@@ -101,18 +104,16 @@ def build_postings(
     re-tokenize every row twice; same family as the
     InferFiltersFromGenerate dodge below).
 
-    ``bucket_partitions`` (index-layout writers): additionally derive
-    ``term_bucket`` per token and hash-repartition the TOKEN stream by
-    it before the aggregation — term_bucket joins the groupBy keys, so
-    that single exchange satisfies the aggregation's clustering AND
-    leaves the output partitioned exactly as the partitioned index
-    write needs it (the caller's ``repartition(N, term_bucket)``
-    becomes redundant). Trade: map-side combining is forgone (raw
-    tokens cross, same bytes as the previous committed form's first
-    exchange) but the second full-postings exchange — which re-shipped
-    the positions payload — disappears. Parallelism and skew are
-    bounded by the bucket count and the hottest bucket, identical to
-    the write repartition this replaces."""
+    ``carry_partitions`` (index-layout writers): hash-repartition the
+    TOKEN stream by the ``carry_cols`` (the owning document's update
+    bucket) into that many partitions before the aggregation — the
+    carry columns are grouping keys, so that single exchange satisfies
+    the aggregation's clustering AND leaves every bucket's rows in one
+    task, exactly as the bucket-partitioned index write needs them (one
+    file per bucket, no second postings-sized exchange). Trade:
+    map-side combining is forgone (raw tokens cross), and parallelism
+    and skew are bounded by the bucket count and the largest bucket —
+    the same bound as the partitioned write itself."""
     carry = list(carry_cols or [])
     group_cols = list(carry)
     if with_dl:
@@ -148,12 +149,8 @@ def build_postings(
             F.col(id_col), *[F.col(c) for c in carry], gen
         ).filter(F.col("term").isNotNull())
     out_cols = [id_col, *carry, "term", "tf"]
-    if bucket_partitions:
-        tokens = tokens.withColumn(
-            "term_bucket", term_bucket(F.col("term"))
-        ).repartition(bucket_partitions, F.col("term_bucket"))
-        group_cols.append("term_bucket")
-        out_cols.append("term_bucket")
+    if carry_partitions:
+        tokens = tokens.repartition(carry_partitions, *carry)
     if with_positions:
         postings = (
             tokens.groupBy(id_col, *group_cols, "term")
@@ -224,7 +221,7 @@ def build_field_postings(
     id_col: str = "id",
     text_col: str = "text",
     carry_cols: list[str] | None = None,
-    bucket_partitions: int | None = None,
+    carry_partitions: int | None = None,
 ) -> DataFrame:
     """Document-LEVEL field postings ``(document_id, field, term, tf,
     fl)`` — the BM25F serving index (searcher.search_documents_bm25f).
@@ -245,9 +242,10 @@ def build_field_postings(
     Scale shape: ONE corpus scan and ONE (document, field, term)
     groupBy for ALL fields — each field's tokenize runs once per row
     inside a single generator (a per-field explode + union would scan
-    and tokenize the corpus once per field); callers partition the
-    write by (term_bucket, _pb) so query terms prune partitions and
-    incremental updates rewrite only affected buckets. Row count is
+    and tokenize the corpus once per field). ``carry_partitions`` is
+    :func:`build_postings`' single-exchange fusion; callers write one
+    term-sorted file per update bucket, so query terms skip row groups
+    and incremental updates rewrite only affected buckets. Row count is
     bounded by the plain postings table's (per-document aggregation, no
     chunk duplication)."""
     carry = list(carry_cols or [])
@@ -286,16 +284,8 @@ def build_field_postings(
     ).filter(F.col("term").isNotNull())
     group_cols = ["document_id", "field", "fl", *carry, "term"]
     out_cols = ["document_id", "field", "term", "tf", "fl", *carry]
-    if bucket_partitions:
-        # same single-exchange fusion as build_postings: the token
-        # stream repartitions by term_bucket once, satisfying both the
-        # aggregation's clustering (term_bucket joins the keys) and the
-        # partitioned index write's layout
-        tokens = tokens.withColumn(
-            "term_bucket", term_bucket(F.col("term"))
-        ).repartition(bucket_partitions, F.col("term_bucket"))
-        group_cols.append("term_bucket")
-        out_cols.append("term_bucket")
+    if carry_partitions:
+        tokens = tokens.repartition(carry_partitions, *carry)
     out = tokens.groupBy(*group_cols).agg(
         F.count("*").cast("bigint").alias("tf")
     )
@@ -368,9 +358,9 @@ def bm25_topk(
 
     from pyspark.sql import Window
 
-    # partition pruning (term_bucket directory column, collection
-    # layout) + an In(term, ...) literal filter that pushes into the
-    # parquet scan — no term-list DataFrame, no broadcast
+    # partition pruning (a term_bucket directory column, when the
+    # postings carry one) + an In(term, ...) literal filter that pushes
+    # into the parquet scan — no term-list DataFrame, no broadcast
     if "term_bucket" in postings.columns:
         buckets = sorted({term_bucket_py(t) for t in q_terms})
         postings = postings.filter(F.col("term_bucket").isin(buckets))

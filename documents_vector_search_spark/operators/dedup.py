@@ -271,6 +271,11 @@ def minhash_lsh_pairs(
     3. verify: exact Jaccard on the candidates' shingle sets; keep
        pairs with ``jaccard >= threshold``.
 
+    Precondition: ``id_col`` is unique per row. Pairs are keyed by id
+    alone, so two rows sharing an id never pair with each other and
+    can emit the same ``(id_a, id_b)`` twice with different scores;
+    deduplicate ids first.
+
     ``max_bucket_size`` caps pathological bands (site boilerplate can
     put 1% of a 100 TB corpus in ONE bucket → a quadratic self-join):
     oversized buckets are dropped before pairing, trading recall inside
@@ -531,6 +536,11 @@ def simhash_pairs(
     mega-bucket guard (boilerplate corpora collapse into few
     fingerprints): capped buckets trade recall inside degenerate
     clusters for a bounded plan. Requires ``max_hamming`` < 4.
+
+    Precondition: ``id_col`` is unique per row. The uncapped path emits
+    each pair from its first agreeing band with no ``distinct()``, so
+    two rows sharing an id yield duplicate ``(id_a, id_b, hamming)``
+    rows (and never pair with each other); deduplicate ids first.
 
     Returns ``(id_a, id_b, hamming)`` with id_a < id_b.
     """

@@ -12,8 +12,9 @@ Index representation:
   offsets of each term in each document. Same build shape as the BM25
   postings (one explode + one groupBy keyed on (id, term)), ~2x the
   bytes (the offsets array replaces the tf int; tf == size(positions)).
-- Partitioned by the SAME ``term_bucket`` as the BM25 layout, so a
-  phrase query's index scan prunes to the buckets of its few terms.
+- Stored in the BM25 postings table itself (collection layout: one
+  term-sorted file per update bucket), so a phrase query's index scan
+  skips row groups holding none of its few terms.
 
 Query evaluation (the standard positional-intersection algorithm):
 for phrase terms t_0..t_{n-1}, a phrase occurrence starts at offset p
@@ -23,9 +24,9 @@ position arrays of each candidate document into one row and fold
 keyed by document id over ONLY the rows of the phrase's terms.
 
 Scale notes (100 TB):
-- The index scan touches |phrase terms| / N_TERM_BUCKETS of the
-  postings partitions (same pruning contract as BM25; the IN-list
-  filter on ``term`` pushes into the parquet scan).
+- Same pruning contract as BM25: the IN-list filter on ``term`` pushes
+  into the parquet scan, whose row-group stats on the sorted ``term``
+  column skip the rest of the postings.
 - One shuffle, keyed by id, over only the matched postings rows —
   a few rows per candidate document, not the corpus.
 - The intersection fold is a pure Column expression (whole-stage
@@ -40,14 +41,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.functions.text import tokenize
-from documents_vector_search_spark.operators.bm25 import term_bucket
 
 
 def build_positional_postings(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    with_bucket: bool = False,
 ) -> DataFrame:
     """``(id, term, positions array<int>)`` — 0-based token offsets.
 
@@ -60,12 +59,9 @@ def build_positional_postings(
         F.col(id_col),
         F.posexplode_outer(tokenize(text_col)).alias("pos", "term"),
     ).filter(F.col("term").isNotNull())
-    out = tokens.groupBy(id_col, "term").agg(
+    return tokens.groupBy(id_col, "term").agg(
         F.sort_array(F.collect_list("pos")).alias("positions")
     )
-    if with_bucket:
-        out = out.withColumn("term_bucket", term_bucket(F.col("term")))
-    return out
 
 
 def tokenize_phrase(phrase: str) -> list[str]:

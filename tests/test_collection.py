@@ -191,11 +191,19 @@ class TestSearch:
         assert ranks == sorted(ranks)
         assert got[0].url.startswith("file:///corpus/")
 
-    def test_bm25_scan_is_partition_pruned(self, collection):
+    def test_bm25_scan_pushes_term_filter(self, collection):
+        """The postings are one term-sorted file per update bucket (no
+        term_bucket directory level): the BM25 scan finds the query
+        terms through the `term IN (...)` filter pushed into Parquet."""
+        for t in ("postings", "field_postings"):
+            dirs = {p.name.split("=")[0] for p in (collection.root / t).iterdir()
+                    if p.is_dir()}
+            assert dirs == {"_pb"}, (t, dirs)
         s = CollectionSearcher(collection)
         hits = s._bm25_hits("hash join", 10, None)
         plan = hits._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "term_bucket" in plan
+        pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert "In(term" in pushed, pushed
 
     def test_hybrid_fusion_matches_rrf_operator(self, collection):
         """The searcher's single-window fused ranking must equal
@@ -1643,6 +1651,91 @@ class TestPartitionScopedUpdate:
                 "--path", str(tmp_path), "--update-buckets", "0",
             ])
 
+    def test_term_keyed_buckets_stay_sorted_by_term(
+        self, spark, canonical_docs, small_fuzzy_coll, pristine_ids, tmp_path
+    ):
+        """postings and field_postings are one file per ``_pb`` bucket
+        with no other directory level, and every file's ``term`` column
+        is non-decreasing after create, after an update and after a
+        compaction."""
+        from documents_vector_search_spark.collection import (
+            compact_collection,
+        )
+
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "sorted")
+        _assert_term_sorted_buckets(coll)
+        _run("update", canonical_docs, coll, pristine_ids)
+        _assert_term_sorted_buckets(coll)
+        report = compact_collection(
+            coll, tables=["postings", "field_postings"], max_files_per_dir=0
+        )
+        assert set(report) == {"postings", "field_postings"}
+        _assert_term_sorted_buckets(coll)
+
+    def test_term_bucket_layout_reads_but_refuses_writes(
+        self, spark, canonical_docs, small_fuzzy_coll, pristine_ids, tmp_path
+    ):
+        """A collection whose postings and field_postings still carry
+        ``term_bucket=*`` directories (the layout before one term-sorted
+        file per bucket) returns the same search rows; update, delete
+        and compaction refuse it without touching disk."""
+        import shutil
+
+        from documents_vector_search_spark.collection import (
+            compact_collection,
+            delete_documents,
+        )
+        from documents_vector_search_spark.operators.bm25 import term_bucket
+
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "oldlayout")
+        top = (
+            coll.read("postings").groupBy("term").count()
+            .orderBy(F.desc("count"), "term").limit(12).collect()
+        )
+        terms = [r["term"] for r in top]
+        queries = [terms[3], f"{terms[5]} {terms[9]}", f"{terms[7]} {terms[11]}"]
+
+        def results() -> list:
+            s = CollectionSearcher(coll)
+            out = []
+            for q in queries:
+                for df in (
+                    s.search(q, max_documents=5),
+                    s.search_chunks(q, indexes=("bm25",)),
+                    s.search_chunks(q, ranker="ql"),
+                    s.search_documents_bm25f(q),
+                ):
+                    out.append([tuple(map(str, r)) for r in df.collect()])
+            return out
+
+        before = results()
+        assert any(before)
+        for t in ("postings", "field_postings"):
+            staged = coll.root / f"{t}__relayout"
+            coll.read(t).withColumn(
+                "term_bucket", term_bucket(F.col("term"))
+            ).write.partitionBy("term_bucket", "_pb").parquet(str(staged))
+            shutil.rmtree(coll.root / t)
+            staged.rename(coll.root / t)
+            spark.catalog.refreshByPath(coll.table_path(t))
+        assert next((coll.root / "postings").glob("term_bucket=*/_pb=*"))
+        assert results() == before
+
+        def inventory() -> dict:
+            return {
+                str(p.relative_to(coll.root)): (p.stat().st_size, p.stat().st_mtime)
+                for p in coll.root.rglob("*")
+            }
+
+        on_disk = inventory()
+        with pytest.raises(ValueError, match="re-create the collection"):
+            _run("update", canonical_docs, coll, pristine_ids)
+        with pytest.raises(ValueError, match="re-create the collection"):
+            delete_documents(coll, pristine_ids[:1])
+        with pytest.raises(ValueError, match="re-create the collection"):
+            compact_collection(coll)
+        assert inventory() == on_disk
+
 
 class TestSq8IvfComposedBatch:
     """SQ8 composed with IVF pruning: batch serving must run the
@@ -1725,9 +1818,10 @@ class TestSq8IvfComposedBatch:
 def small_fuzzy_coll(spark, canonical_docs, tmp_path_factory):
     """Pristine 8-document collection with fuzzy artifacts; tests copy
     its directory instead of paying a create each. Small on purpose:
-    every update/delete rewrites the postings' term_bucket directories
-    of its buckets, and that count (not the row count) sets the cost of
-    each of the crash matrix's two dozen merges."""
+    every update/delete rewrites its buckets' directories in every
+    table and the fuzzy artifacts, and those per-operation jobs (not
+    the row count) set the cost of each of the crash matrix's two dozen
+    merges."""
     base = str(tmp_path_factory.mktemp("pristine"))
     coll = Collection(spark, base, "pristine")
     create_collection(
@@ -1750,6 +1844,22 @@ def _copy_collection(spark, src, dest_dir, name):
 
     shutil.copytree(src.root, dest_dir / name)
     return Collection(spark, str(dest_dir), name)
+
+
+def _assert_term_sorted_buckets(coll) -> None:
+    """Only ``_pb=*`` directories under the term-keyed tables, and a
+    non-decreasing ``term`` column in every data file."""
+    import pyarrow.parquet as pq
+
+    for t in ("postings", "field_postings"):
+        root = coll.root / t
+        levels = {p.name.split("=")[0] for p in root.iterdir() if p.is_dir()}
+        assert levels == {"_pb"}, (t, levels)
+        files = sorted(root.glob("_pb=*/*.parquet"))
+        assert files, t
+        for f in files:
+            terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+            assert terms == sorted(terms), f
 
 
 def _update_batch(canonical_docs, first: str):

@@ -279,13 +279,12 @@ class TestRound7PlanContracts:
             plan.split("PushedFilters")[1].split("]")[0]
         )
 
-    def test_bm25f_serving_prunes_field_postings_partitions(
-        self, spark, tmp_path
-    ):
-        """search_documents_bm25f's plan must read ONLY the query
-        terms' term_bucket partitions of the document-level
-        field_postings table (the same pruning contract as BM25's
-        postings scan) and end in a TakeOrdered, not a global sort."""
+    def test_bm25f_serving_pushes_term_filter(self, spark, tmp_path):
+        """The document-level field_postings table is one term-sorted
+        file per update bucket (only ``_pb=*`` directories), and
+        search_documents_bm25f's plan pushes the query terms' `term IN`
+        filter into its scan (the same contract as BM25's postings
+        scan) and ends in a TakeOrdered, not a global sort."""
         from pyspark.sql import functions as F
 
         from documents_vector_search_spark.collection import (
@@ -308,9 +307,14 @@ class TestRound7PlanContracts:
         )
         coll = Collection(spark, str(tmp_path), "fpplan")
         create_collection(coll, docs, title_from_text=True)
+        fp_root = coll.root / "field_postings"
+        assert {p.name.split("=")[0] for p in fp_root.iterdir() if p.is_dir()} == {
+            "_pb"
+        }
         df = CollectionSearcher(coll).search_documents_bm25f("spark join")
         plan = _plan(df)
-        assert "PartitionFilters" in plan and "term_bucket" in plan
+        pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert "In(term" in pushed, pushed
         assert "TakeOrderedAndProject" in plan
 
     def test_tpch_q4_exists_is_semi_join_never_blowup(self, spark):

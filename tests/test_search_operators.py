@@ -94,13 +94,9 @@ class TestBM25:
         array size carried as a grouping column) must emit exactly the
         rows of the windowed form for both the tf-only and positional
         layouts — including the zero-length doc, which yields no
-        postings either way — and the bucket_partitions fusion must add
-        exactly the term_bucket column with unchanged values."""
+        postings either way — and the carry_partitions fusion must emit
+        the same rows with every carried bucket in one partition."""
         from pyspark.sql import Window
-
-        from documents_vector_search_spark.operators.bm25 import (
-            term_bucket,
-        )
 
         for with_positions in (False, True):
             with_dl = build_postings(
@@ -122,27 +118,33 @@ class TestBM25:
                 )
             )
             assert got == want and got
+            bucketed_docs = tiny_docs.withColumn(
+                "_pb", F.pmod(F.col("doc_id"), F.lit(3))
+            )
             bucketed = build_postings(
-                tiny_docs,
+                bucketed_docs,
                 with_dl=True,
                 with_positions=with_positions,
-                bucket_partitions=4,
+                carry_cols=["_pb"],
+                carry_partitions=4,
             )
-            assert bucketed.columns == with_dl.columns + ["term_bucket"]
-            got_b = sorted(map(tuple, bucketed.collect()))
-            want_b = sorted(
-                map(
-                    tuple,
-                    build_postings(
-                        tiny_docs,
-                        with_dl=True,
-                        with_positions=with_positions,
-                    )
-                    .withColumn("term_bucket", term_bucket(F.col("term")))
-                    .collect(),
-                )
+            unfused = build_postings(
+                bucketed_docs,
+                with_dl=True,
+                with_positions=with_positions,
+                carry_cols=["_pb"],
             )
-            assert got_b == want_b
+            assert bucketed.columns == unfused.columns
+            assert sorted(map(tuple, bucketed.collect())) == sorted(
+                map(tuple, unfused.collect())
+            )
+            tasks_per_bucket = (
+                bucketed.withColumn("_part", F.spark_partition_id())
+                .groupBy("_pb")
+                .agg(F.countDistinct("_part").alias("n"))
+                .collect()
+            )
+            assert tasks_per_bucket and all(r["n"] == 1 for r in tasks_per_bucket)
 
     def test_field_postings_single_scan_parity(self, spark):
         """The r12 one-scan build_field_postings (one generator over
