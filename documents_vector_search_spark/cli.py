@@ -541,22 +541,15 @@ def cmd_topics(args) -> int:
     beside the collection, prints a summary."""
     from pyspark.sql import functions as F
 
-    from documents_vector_search_spark.operators.ivf import (
-        fit_ivf,
-        round_centroids,
-    )
     from documents_vector_search_spark.operators.topics import (
+        fit_topic_centroids,
         topic_profile,
         topic_terms,
     )
 
     coll = _collection(args)
     emb = coll.read("embeddings").select("chunk_id", "vector")
-    cents = round_centroids(
-        fit_ivf(
-            emb, nlist=args.nlist, id_col="chunk_id", vector_col="vector"
-        ).centroids
-    )
+    cents = fit_topic_centroids(emb, args.nlist)
     prof = topic_profile(emb, cents, vec_col="vector")
     base = f"{args.base_path}/{args.collection}"
     prof_out = f"{base}/topic_profile"

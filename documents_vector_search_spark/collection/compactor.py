@@ -30,10 +30,8 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import TABLES, Collection
-from documents_vector_search_spark.collection.partitioning import (
-    LAYOUT_COLS,
-    UPDATE_PB_COL,
-)
+from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
+from documents_vector_search_spark.collection.vector_layout import VectorLayout
 
 
 def bucket_file_counts(table_root: Path) -> dict[int, dict[str, int]]:
@@ -134,7 +132,13 @@ def compact_collection(
             _clear_degraded(collection, zcfg)
             continue
         df = collection.read(table).filter(F.col(UPDATE_PB_COL).isin(frag))
-        pcols = [c for c in LAYOUT_COLS if c in df.columns] + [UPDATE_PB_COL]
+        pcols = (
+            VectorLayout.from_converter(
+                collection.manifest().converter
+            ).partition_cols
+            if table == "embeddings"
+            else [UPDATE_PB_COL]
+        )
         if zcfg:
             # the manifest records a Z-order layout for this table:
             # re-cluster the fragmented buckets instead of a plain

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import Collection
 from documents_vector_search_spark.collection.manifest import Manifest
+from documents_vector_search_spark.collection.vector_layout import VectorLayout
 from documents_vector_search_spark.functions.hashing import md5_hash64
 from documents_vector_search_spark.operators.bm25 import (
     build_doc_stats,
@@ -105,44 +106,6 @@ def build_chunks(
     return title_chunks.unionByName(body_chunks)
 
 
-class _StageTimer:
-    """Opt-in stage timing (``DVSS_TIMING=1``): prints one
-    ``[dvss-timing] stage=<name> sec=<t>`` line per stage so build
-    regressions attribute to a stage instead of a 6-second blob.
-    Thread-safe (the index fan-out runs stages concurrently); no-op —
-    a single env read — when the flag is unset."""
-
-    def __init__(self, scope: str):
-        import os
-
-        self.enabled = bool(os.environ.get("DVSS_TIMING"))
-        self.scope = scope
-
-    class _Span:
-        def __init__(self, timer, name):
-            self.timer, self.name = timer, name
-
-        def __enter__(self):
-            import time
-
-            self.t0 = time.time()
-            return self
-
-        def __exit__(self, *exc):
-            import time
-
-            if self.timer.enabled:
-                print(
-                    f"[dvss-timing] scope={self.timer.scope} "
-                    f"stage={self.name} sec={time.time() - self.t0:.3f}",
-                    flush=True,
-                )
-            return False
-
-    def stage(self, name: str) -> "_StageTimer._Span":
-        return self._Span(self, name)
-
-
 def _hash_chunk_ids(chunks: DataFrame) -> DataFrame:
     """Order-free 60-bit chunk ids from (document_id, chunk_number) —
     the scale path (no global sort; collision odds ~n²/2⁶¹)."""
@@ -186,38 +149,33 @@ def create_collection(
     — the scale path; ``True`` restores the reference's contiguous
     counter (single-partition window, bounded corpora only).
 
-    ``ann_planes`` writes the embeddings table PARTITIONED by SRP-LSH
-    bucket (operators/ann.py): vector search then prunes to the query's
-    probe buckets at the Parquet partition level — the engine's HNSW
-    analog (reference chroma_indexer.py:147-157). The config is recorded
-    in the manifest so CollectionSearcher and updates honor the layout.
+    Vector layout (collection/vector_layout.py owns these options'
+    rules, the fits, the encoding and the manifest record):
+
+    ``ann_planes`` partitions the embeddings by SRP-LSH ``bucket``
+    (operators/ann.py): vector search prunes to the query's probe
+    buckets at the Parquet partition level — the engine's HNSW analog
+    (reference chroma_indexer.py:147-157).
 
     ``ivf_nlist`` is the data-aware alternative: KMeans centroids
-    (IVF-Flat, operators/ivf.py) instead of random hyperplanes. The fit
-    runs once at create; the ROUNDED centroids go into the manifest, so
-    searches and updates re-derive probe/assignment deterministically
-    without serializing any model. Embeddings are written
-    ``partitionBy(cluster_id)`` → the probe is partition pruning that
-    scans ~nprobe/nlist of the corpus. Mutually exclusive with
-    ``ann_planes``.
+    (IVF-Flat, operators/ivf.py) fitted once at create, embeddings
+    partitioned by ``cluster_id``; a query scans ~nprobe/nlist of the
+    corpus. Mutually exclusive with ``ann_planes``.
 
-    ``pq_m`` (requires ``ivf_nlist``) adds product-quantization codes
-    to the IVF layout — the IndexIVFPQ composition (operators/pq.py):
-    the coarse quantizer prunes partitions, ADC over the tiny ``codes``
-    column ranks the survivors, and the searcher re-ranks an ADC
-    shortlist against true vectors. Rounded codebooks live in the
-    manifest beside the centroids.
+    ``pq_m`` (requires ``ivf_nlist``) adds product-quantization
+    ``codes`` (the IndexIVFPQ composition, operators/pq.py): ADC over
+    the codes ranks the pruned partitions and the searcher re-ranks an
+    ADC shortlist against true vectors.
 
     ``sq8`` adds per-dimension 8-bit scalar-quantized ``codes``
-    (operators/sq.py, FAISS SQ8 analog) beside the full vectors: the
-    searcher ranks a shortlist over the tiny codes column and exact-
-    re-ranks it — an 8× scan-byte cut on the ranking pass. The fitted
-    [min, max] bounds (exact doubles) live in the manifest; updates
-    re-encode fresh vectors with the SAME bounds (out-of-range values
-    clamp — re-create to refit bounds after large distribution drift).
-    Composes with ``ann_planes`` or ``ivf_nlist`` (prune first, then
-    code-ranked shortlist); mutually exclusive with ``pq_m`` (one fine
-    quantizer owns the ``codes`` column).
+    (operators/sq.py, FAISS SQ8 analog): a shortlist ranked over the
+    codes, then an exact re-rank. Composes with ``ann_planes`` or
+    ``ivf_nlist``; mutually exclusive with ``pq_m`` (one quantizer owns
+    ``codes``).
+
+    The fitted state (rounded centroids and codebooks, exact SQ8 bounds)
+    lives in the manifest: updates re-encode fresh vectors with it, and
+    only refit_ivf / refit_sq8 (collection/refit.py) move it.
 
     ``positional_postings`` stores sorted token offsets per (chunk,
     term) beside tf in the postings table — the layout exact-phrase
@@ -248,12 +206,12 @@ def create_collection(
     in the rewritten buckets only, and compact_collection re-clusters
     them from the record (the standard ingest-then-OPTIMIZE lifecycle).
     """
-    if ann_planes and ivf_nlist:
-        raise ValueError("ann_planes and ivf_nlist are mutually exclusive")
-    if pq_m and not ivf_nlist:
-        raise ValueError("pq_m requires ivf_nlist (IVFPQ layout)")
-    if sq8 and pq_m:
-        raise ValueError("sq8 and pq_m are mutually exclusive quantizers")
+    layout = VectorLayout.for_create(
+        embedding_dim,
+        ann_planes=ann_planes, ann_seed=ann_seed,
+        ivf_nlist=ivf_nlist, ivf_nprobe=ivf_nprobe, ivf_seed=ivf_seed,
+        pq_m=pq_m, pq_ksub=pq_ksub, sq8=sq8,
+    )
     if zorder_by is not None and len(zorder_by) != 2:
         raise ValueError("zorder_by takes exactly two column names")
     if update_buckets < 1:
@@ -269,7 +227,6 @@ def create_collection(
     def doc_pb(col_name: str) -> Column:
         return pb_col(F.col(col_name), update_buckets)
 
-    _timer = _StageTimer(f"create:{collection.name}")
     docs_out = docs.withColumn(UPDATE_PB_COL, doc_pb("id"))
     if zorder_by:
         from documents_vector_search_spark.operators.layout import (
@@ -284,12 +241,7 @@ def create_collection(
             num_files=zorder_files,
             bits=zorder_bits,
         )
-    with _timer.stage("documents_write"):
-        collection.write(
-            "documents",
-            docs_out,
-            partition_by=[UPDATE_PB_COL],
-        )
+    collection.write("documents", docs_out, partition_by=[UPDATE_PB_COL])
     # an empty source writes zero parquet files under the partitioned
     # layout, and every later stage (and any future read) would die on
     # schema inference — fail HERE with a clear message instead. File
@@ -322,12 +274,11 @@ def create_collection(
         )
     else:
         chunks = _hash_chunk_ids(chunks)
-    with _timer.stage("chunks_write"):
-        collection.write(
-            "chunks",
-            chunks.withColumn(UPDATE_PB_COL, doc_pb("document_id")),
-            partition_by=[UPDATE_PB_COL],
-        )
+    collection.write(
+        "chunks",
+        chunks.withColumn(UPDATE_PB_COL, doc_pb("document_id")),
+        partition_by=[UPDATE_PB_COL],
+    )
     chunks = collection.read("chunks")  # one materialized pass feeds 3 indexes
 
     emb_df = chunks.select(
@@ -340,10 +291,15 @@ def create_collection(
         F.col(UPDATE_PB_COL),
     )
 
-    def _write_embeddings() -> dict:
+    def _write_embeddings() -> VectorLayout:
+        if not layout.needs_fit:
+            collection.write(
+                "embeddings", layout.encode(emb_df),
+                partition_by=layout.partition_cols,
+            )
+            return layout
         import shutil
 
-        result: dict = {}
         # MATERIALIZE the embeddings once before any fit (KMeans/PQ
         # iterations or the SQ8 bounds aggregation): emb_df is a lazy
         # projection over chunks, so feeding it to a fit and then the
@@ -351,93 +307,18 @@ def create_collection(
         # model that's multiple full corpus encodes. One parquet write
         # = one encode; every fit and the final partitioned write read
         # the materialized table.
-        raw_path: str | None = None
-        src = emb_df
-        if ivf_nlist or sq8:
-            raw_path = collection.table_path("embeddings__raw")
-            emb_df.write.mode("overwrite").parquet(raw_path)
-            src = collection.spark.read.parquet(raw_path)
+        raw_path = collection.table_path("embeddings__raw")
+        emb_df.write.mode("overwrite").parquet(raw_path)
         try:
-            if sq8:
-                from documents_vector_search_spark.operators.sq import (
-                    fit_sq_bounds,
-                    sq_encode_auto,
-                )
-
-                mins, maxs = fit_sq_bounds(
-                    src, embedding_dim, vector_col="vector"
-                )
-                result["sq8"] = {"mins": mins, "maxs": maxs}
-                src = src.withColumn(
-                    "codes",
-                    sq_encode_auto(
-                        F.col("vector").cast("array<double>"), mins, maxs
-                    ),
-                )
-            if ann_planes:
-                from documents_vector_search_spark.operators.ann import (
-                    write_bucket_partitioned,
-                )
-
-                write_bucket_partitioned(
-                    src,
-                    collection.table_path("embeddings"),
-                    n_planes=ann_planes,
-                    seed=ann_seed,
-                    vector_col="vector",
-                    dim=embedding_dim,
-                    extra_partition_cols=[UPDATE_PB_COL],
-                )
-                return result
-            if ivf_nlist:
-                from documents_vector_search_spark.operators.ivf import (
-                    assign_cluster_auto,
-                    fit_ivf,
-                    round_centroids,
-                )
-
-                index = fit_ivf(
-                    src, nlist=ivf_nlist, id_col="chunk_id",
-                    vector_col="vector", seed=ivf_seed,
-                )
-                centroids = round_centroids(index.centroids)
-                result["centroids"] = centroids
-                # re-assign from the ROUNDED centroids (not the fitted
-                # model): the manifest-persisted centroids must reproduce
-                # the exact same partition for every future update batch
-                out = src.withColumn(
-                    "cluster_id",
-                    assign_cluster_auto(
-                        F.col("vector").cast("array<double>"), centroids
-                    ),
-                )
-                if pq_m:
-                    from documents_vector_search_spark.operators.pq import (
-                        fit_pq,
-                        pq_encode_auto,
-                    )
-
-                    result["codebooks"] = fit_pq(
-                        src, dim=embedding_dim, m=pq_m, ksub=pq_ksub,
-                        vector_col="vector", seed=ivf_seed,
-                    )
-                    out = out.withColumn(
-                        "codes",
-                        pq_encode_auto(
-                            F.col("vector").cast("array<double>"),
-                            result["codebooks"],
-                        ),
-                    )
-                collection.write(
-                    "embeddings", out,
-                    partition_by=["cluster_id", UPDATE_PB_COL],
-                )
-                return result
-            collection.write("embeddings", src, partition_by=[UPDATE_PB_COL])
-            return result
+            src = collection.spark.read.parquet(raw_path)
+            fitted = layout.fit(src)
+            collection.write(
+                "embeddings", fitted.encode(src),
+                partition_by=fitted.partition_cols,
+            )
+            return fitted
         finally:
-            if raw_path:
-                shutil.rmtree(raw_path, ignore_errors=True)
+            shutil.rmtree(raw_path, ignore_errors=True)
 
     def _write_postings() -> None:
         # one file per update bucket, rows sorted by term: a query's
@@ -547,10 +428,6 @@ def create_collection(
     # documents_collection_creator.py:180-181 without its serial loop.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _timed_call(name, fn):
-        with _timer.stage(name):
-            return fn()
-
     def _fuzzy_chain(post_future) -> None:
         # chains onto the postings write (its only input) so the
         # vocabulary aggregate + deletion-index explode overlap the
@@ -561,30 +438,24 @@ def create_collection(
         )
 
         post_future.result()
-        with _timer.stage("fuzzy_artifacts"):
-            write_fuzzy_artifacts(collection)
+        write_fuzzy_artifacts(collection)
 
     with ThreadPoolExecutor(max_workers=8) as pool:
-        f_emb = pool.submit(_timed_call, "embeddings", _write_embeddings)
-        f_post = pool.submit(_timed_call, "postings", _write_postings)
-        f_ds = pool.submit(_timed_call, "doc_stats", _write_doc_stats)
-        f_fp = pool.submit(
-            _timed_call, "field_postings", _write_field_postings
-        )
-        f_hdr = pool.submit(_timed_call, "manifest_stats", _gather_doc_header)
+        f_emb = pool.submit(_write_embeddings)
+        f_post = pool.submit(_write_postings)
+        f_ds = pool.submit(_write_doc_stats)
+        f_fp = pool.submit(_write_field_postings)
+        f_hdr = pool.submit(_gather_doc_header)
         f_fuzzy = (
             pool.submit(_fuzzy_chain, f_post) if fuzzy_dictionary else None
         )
         # the read-back aggregates chain onto their table writes so they
         # overlap the long postings build instead of serializing after it
         f_ds.result()
-        f_cs = pool.submit(_timed_call, "chunk_stats", _chunk_stats)
+        f_cs = pool.submit(_chunk_stats)
         f_fp.result()
-        f_fs = pool.submit(_timed_call, "field_stats", _field_stats)
-        emb_result = f_emb.result()
-        ivf_centroids = emb_result.get("centroids")
-        pq_codebooks = emb_result.get("codebooks")
-        sq8_bounds = emb_result.get("sq8")
+        f_fs = pool.submit(_field_stats)
+        fitted = f_emb.result()
         f_post.result()
         doc_row = f_hdr.result()
         n_docs, watermark = int(doc_row["n"]), doc_row["wm"]
@@ -642,15 +513,10 @@ def create_collection(
                 "embedder": embedder_tag
                 or ("hash" if embedder is None else "custom"),
             },
-            **(
-                {"ann": {"nPlanes": ann_planes, "seed": ann_seed}}
-                if ann_planes
-                else {}
-            ),
-            # SQ8 bounds as EXACT doubles (JSON round-trips them
-            # losslessly): updates re-encode fresh vectors with these,
-            # never refit — see operators/sq.py
-            **({"sq8": sq8_bounds} if sq8_bounds else {}),
+            # fitted vector layout (ann / ivf[+pq] / sq8): updates
+            # re-encode fresh vectors from this record, never refit —
+            # collection/vector_layout.py
+            **fitted.record(),
             # positional postings layout: exact-phrase search available
             # (searcher validates before accepting a phrase query)
             **({"phrase": {"positional": True}} if positional_postings else {}),
@@ -666,24 +532,6 @@ def create_collection(
                     }
                 }
                 if fuzzy_dictionary
-                else {}
-            ),
-            **(
-                {
-                    "ivf": {
-                        "nList": ivf_nlist,
-                        "nProbe": ivf_nprobe,
-                        "seed": ivf_seed,
-                        "centroids": ivf_centroids,
-                        **(
-                            {"pq": {"m": pq_m, "kSub": pq_ksub,
-                                    "codebooks": pq_codebooks}}
-                            if pq_m
-                            else {}
-                        ),
-                    }
-                }
-                if ivf_nlist
                 else {}
             ),
         },

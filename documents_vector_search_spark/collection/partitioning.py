@@ -14,7 +14,8 @@ merges, and swaps just those directories. Unaffected partitions —
 files, mtimes, everything — are never rewritten.
 
 The embeddings' ANN layouts keep their query-pruning column as a
-SIBLING partition level (``bucket=*/_pb=N``, ``cluster_id=*/_pb=N``):
+SIBLING partition level (``bucket=*/_pb=N``, ``cluster_id=*/_pb=N``;
+collection/vector_layout.py):
 Spark prunes on ANY directory level, not just a prefix, so query-side
 pruning is unchanged while update-side pruning composes with it. The
 term-keyed tables (postings, field_postings) have no level beside
@@ -44,10 +45,6 @@ from pyspark.sql import functions as F
 from documents_vector_search_spark.functions.hashing import md5_hash64
 
 UPDATE_PB_COL = "_pb"
-
-# directory-level query-pruning columns the embeddings may carry beside
-# _pb; writers keep whichever the stored table has
-LAYOUT_COLS = ("bucket", "cluster_id")
 
 # tables written as one term-sorted file per _pb bucket
 TERM_SORTED_TABLES = ("postings", "field_postings")

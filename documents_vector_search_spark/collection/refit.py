@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import Collection
 from documents_vector_search_spark.collection.manifest import Manifest
-from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
+from documents_vector_search_spark.collection.vector_layout import VectorLayout
 
 
 def refit_ivf(collection: Collection, sample_rows: int | None = None) -> dict:
@@ -59,64 +59,31 @@ def refit_ivf(collection: Collection, sample_rows: int | None = None) -> dict:
         _recover_orphans,
         _swap_all,
     )
-    from documents_vector_search_spark.operators.ivf import (
-        assign_cluster_auto,
-        fit_ivf,
-        round_centroids,
-    )
 
     manifest: Manifest = collection.manifest()
-    ivf_cfg = manifest.converter.get("ivf")
-    if not ivf_cfg:
+    layout = VectorLayout.from_converter(manifest.converter)
+    if not layout.ivf:
         raise ValueError(
             f"collection '{collection.name}' has no IVF layout to refit"
         )
     _recover_orphans(collection, ["embeddings"])
 
     emb = collection.read("embeddings")
-    seed = int(ivf_cfg.get("seed", 42))
-    index = fit_ivf(
-        emb, nlist=int(ivf_cfg["nList"]), vector_col="vector", seed=seed,
-        sample_rows=sample_rows,
-    )
-    new_cents = round_centroids(index.centroids)
-    pq_cfg = ivf_cfg.get("pq")
-    new_codebooks = None
-    if pq_cfg:
-        from documents_vector_search_spark.operators.pq import fit_pq
-
-        dim = len(new_cents[0])
-        new_codebooks = fit_pq(
-            emb, dim=dim, m=int(pq_cfg["m"]), ksub=int(pq_cfg["kSub"]),
-            vector_col="vector", seed=seed, sample_rows=sample_rows,
-        )
-    pq_changed = (
-        new_codebooks is not None and new_codebooks != pq_cfg["codebooks"]
-    )
-    if new_cents == ivf_cfg["centroids"] and not pq_changed:
+    new = layout.fit(emb, parts=("ivf",), sample_rows=sample_rows)
+    if new.ivf == layout.ivf:
         return {"refit": False, "pq_refit": False}
-
-    vec = F.col("vector").cast("array<double>")
-    recoded = emb.drop("cluster_id").withColumn(
-        "cluster_id", assign_cluster_auto(vec, new_cents)
+    # re-encode the codes ONLY when the codebooks actually moved —
+    # centroids can drift while the subspace codebooks come back
+    # identical, and an unchanged codebook must not cost a corpus
+    # re-encode
+    pq_changed = bool(new.ivf.get("pq")) and new.ivf["pq"] != layout.ivf["pq"]
+    stale = ["cluster_id"] + (["codes"] if pq_changed else [])
+    _swap_all(
+        collection,
+        {"embeddings": new.encode(emb.drop(*stale))},
+        {"embeddings": new.partition_cols},
     )
-    if pq_changed:
-        # re-encode ONLY when the codebooks actually moved — centroids
-        # can drift while the subspace codebooks come back identical,
-        # and an unchanged codebook must not cost a corpus re-encode
-        from documents_vector_search_spark.operators.pq import pq_encode_auto
-
-        recoded = recoded.drop("codes").withColumn(
-            "codes", pq_encode_auto(vec, new_codebooks)
-        )
-    part_cols = ["cluster_id"] + (
-        [UPDATE_PB_COL] if UPDATE_PB_COL in emb.columns else []
-    )
-    _swap_all(collection, {"embeddings": recoded}, {"embeddings": part_cols})
-    ivf_cfg["centroids"] = new_cents
-    if pq_changed:
-        ivf_cfg["pq"]["codebooks"] = new_codebooks
-    manifest.converter["ivf"] = ivf_cfg
+    manifest.converter.update(new.record())
     manifest.touch()
     collection.save_manifest(manifest)
     return {"refit": True, "pq_refit": pq_changed}
@@ -133,48 +100,34 @@ def refit_sq8(collection: Collection) -> dict:
         _recover_orphans,
         _swap_all,
     )
-    from documents_vector_search_spark.operators.sq import (
-        fit_sq_bounds,
-        sq_encode_auto,
-    )
 
     manifest: Manifest = collection.manifest()
-    sq_cfg = manifest.converter.get("sq8")
-    if not sq_cfg:
+    layout = VectorLayout.from_converter(manifest.converter)
+    if not layout.sq8:
         raise ValueError(
             f"collection '{collection.name}' has no SQ8 layout to refit"
         )
     _recover_orphans(collection, ["embeddings"])
 
     emb = collection.read("embeddings")
-    dim = len(sq_cfg["mins"])
-    mins, maxs = fit_sq_bounds(emb, dim, vector_col="vector")
-    old_mins, old_maxs = sq_cfg["mins"], sq_cfg["maxs"]
+    new = layout.fit(emb, parts=("sq8",))
+    mins, maxs = new.sq8["mins"], new.sq8["maxs"]
+    old_mins, old_maxs = layout.sq8["mins"], layout.sq8["maxs"]
     drifted = sum(
         1
-        for i in range(dim)
+        for i in range(len(mins))
         if mins[i] != old_mins[i] or maxs[i] != old_maxs[i]
     )
     if drifted == 0:
         return {"refit": False, "dims_drifted": 0}
 
-    recoded = emb.drop("codes").withColumn(
-        "codes",
-        sq_encode_auto(F.col("vector").cast("array<double>"), mins, maxs),
-    )
-    # preserve whatever partition scheme the layout uses (plain _pb, or
-    # LSH bucket + _pb when sq8 composes with ann_planes) — partition
-    # columns come back as real columns on read, so probe them there
-    part_cols = [
-        c for c in ("bucket", "cluster_id", UPDATE_PB_COL)
-        if c in emb.columns
-    ]
+    # the pruning column (SRP bucket or IVF cluster) and _pb stay
     _swap_all(
         collection,
-        {"embeddings": recoded},
-        {"embeddings": part_cols},
+        {"embeddings": new.encode(emb.drop("codes"))},
+        {"embeddings": new.partition_cols},
     )
-    manifest.converter["sq8"] = {"mins": mins, "maxs": maxs}
+    manifest.converter.update(new.record())
     manifest.touch()
     collection.save_manifest(manifest)
     return {"refit": True, "dims_drifted": drifted}
@@ -204,11 +157,8 @@ def refit_topics(collection: Collection, sample_rows: int | None = None) -> dict
         _recover_orphans,
         _swap_all,
     )
-    from documents_vector_search_spark.operators.ivf import (
-        fit_ivf,
-        round_centroids,
-    )
     from documents_vector_search_spark.operators.topics import (
+        fit_topic_centroids,
         topic_profile,
         topic_terms,
     )
@@ -225,14 +175,8 @@ def refit_topics(collection: Collection, sample_rows: int | None = None) -> dict
     _recover_orphans(collection, tables)
 
     emb = collection.read("embeddings").select("chunk_id", "vector")
-    new_cents = round_centroids(
-        fit_ivf(
-            emb,
-            nlist=int(cfg["nList"]),
-            id_col="chunk_id",
-            vector_col="vector",
-            sample_rows=sample_rows,
-        ).centroids
+    new_cents = fit_topic_centroids(
+        emb, int(cfg["nList"]), sample_rows=sample_rows
     )
     if new_cents == cfg["centroids"]:
         return {"refit": False, "terms_refit": False}

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import Collection
 from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
+from documents_vector_search_spark.collection.vector_layout import VectorLayout
 from documents_vector_search_spark.operators.bm25 import bm25_topk
 from documents_vector_search_spark.operators.embedding import hash_embedding_py
 from documents_vector_search_spark.operators.group_hits import group_hits_by_document
@@ -94,9 +95,7 @@ class CollectionSearcher:
         self.ivf_nprobe = ivf_nprobe
         self.pq_shortlist_factor = pq_shortlist_factor
         self.sq8_shortlist_factor = sq8_shortlist_factor
-        self._ann_cfg: dict | None | str = "_unset"
-        self._ivf_cfg: dict | None | str = "_unset"
-        self._sq_cfg: dict | None | str = "_unset"
+        self._vector_layout: VectorLayout | None = None
         self._corpus_stats: tuple[int, float] | None = None
         self._bm25f_stats: dict[str, float] | None = None
         if cache_tables:
@@ -186,9 +185,7 @@ class CollectionSearcher:
             except Exception:  # noqa: BLE001 — refresh must not fail
                 pass
         self._cached = {}
-        self._ann_cfg = "_unset"
-        self._ivf_cfg = "_unset"
-        self._sq_cfg = "_unset"
+        self._vector_layout = None
         self._corpus_stats = None
         self._bm25f_stats = None
         self._embedding_dim = None
@@ -213,58 +210,32 @@ class CollectionSearcher:
             "left_semi",
         ).select("chunk_id")
 
-    def _ann_config(self) -> dict | None:
-        if self._ann_cfg == "_unset":
+    def _layout(self) -> VectorLayout:
+        """The collection's vector layout (collection/vector_layout.py),
+        read from the manifest once per :meth:`refresh`; flat when the
+        collection has no manifest."""
+        if self._vector_layout is None:
             try:
-                self._ann_cfg = self.collection.manifest().converter.get("ann")
+                converter = self.collection.manifest().converter
             except FileNotFoundError:
-                self._ann_cfg = None
-        return self._ann_cfg  # type: ignore[return-value]
-
-    def _ivf_config(self) -> dict | None:
-        if self._ivf_cfg == "_unset":
-            try:
-                self._ivf_cfg = self.collection.manifest().converter.get("ivf")
-            except FileNotFoundError:
-                self._ivf_cfg = None
-        return self._ivf_cfg  # type: ignore[return-value]
-
-    def _sq_config(self) -> dict | None:
-        if self._sq_cfg == "_unset":
-            try:
-                self._sq_cfg = self.collection.manifest().converter.get("sq8")
-            except FileNotFoundError:
-                self._sq_cfg = None
-        return self._sq_cfg  # type: ignore[return-value]
-
-    def _probe_values(self, qv) -> list:
-        """Partition values a query may probe on a singly-pruned layout
-        (SRP ``bucket`` or IVF ``cluster_id``) — the same pruning
-        :meth:`_vector_scored` applies inline, exposed for the batched
-        path so both sides prune identically (drift is pinned by the
-        batch==per-query parity tests)."""
-        cfg = self._ann_config()
-        if cfg:
-            from documents_vector_search_spark.operators.ann import (
-                multiprobe_buckets,
+                converter = {}
+            self._vector_layout = VectorLayout.from_converter(
+                converter, self.embedding_dim
             )
-            from documents_vector_search_spark.operators.dedup import (
-                random_hyperplanes,
-            )
+        return self._vector_layout
 
-            planes = random_hyperplanes(
-                self.embedding_dim, cfg["nPlanes"], cfg["seed"]
-            )
-            return multiprobe_buckets(qv, planes, self.ann_probe_bits)
-        ivf = self._ivf_config()
-        if not ivf:
-            raise ValueError("no pruned layout configured")
-        from documents_vector_search_spark.operators.ivf import (
-            probe_clusters_fixed,
+    def _probes(self, layout: VectorLayout, qv) -> list:
+        return layout.probes(qv, self.ann_probe_bits, self.ivf_nprobe)
+
+    def _shortlist_size(self, layout: VectorLayout, k: int) -> int:
+        """Codes shortlist length before the exact re-rank: PQ needs a
+        wider one than SQ8 (see the constructor's factors)."""
+        factor = (
+            self.pq_shortlist_factor
+            if layout.coder == "pq"
+            else self.sq8_shortlist_factor
         )
-
-        nprobe = self.ivf_nprobe or ivf["nProbe"]
-        return probe_clusters_fixed(ivf["centroids"], qv, nprobe)
+        return max(k * factor, k)
 
     def _vector_scored(
         self, text: str, k: int, allowed: DataFrame | None,
@@ -277,81 +248,28 @@ class CollectionSearcher:
         order and the hybrid path can rank all branches in one window
         pass (see search_chunks). ``qv`` overrides the embedded query
         vector (the Rocchio-expanded path passes its updated vector);
-        probing/pruning derives from whichever vector is used."""
+        probing/pruning derives from whichever vector is used.
+
+        On a pruned layout the probe filter is partition pruning on the
+        ``bucket`` / ``cluster_id`` directory column (scans ~probes/
+        partitions of the corpus); on a coded layout a shortlist ranked
+        over the tiny ``codes`` column (PQ ADC or SQ8 decode) is what
+        the exact kNN below re-ranks."""
         emb = self._read("embeddings")
         if qv is None:
             qv = hash_embedding_py(text, self.embedding_dim)
-        cfg = self._ann_config()
-        if cfg:
-            # bucket-partitioned layout: the probe filter is partition
-            # pruning on the `bucket` directory column — the HNSW-analog
-            # sub-linear path (operators/ann.py)
-            from documents_vector_search_spark.operators.ann import (
-                multiprobe_buckets,
+        layout = self._layout()
+        if layout.part_col:
+            emb = emb.filter(
+                F.col(layout.part_col).isin(self._probes(layout, qv))
             )
-            from documents_vector_search_spark.operators.dedup import (
-                random_hyperplanes,
-            )
-
-            planes = random_hyperplanes(
-                self.embedding_dim, cfg["nPlanes"], cfg["seed"]
-            )
-            probes = multiprobe_buckets(qv, planes, self.ann_probe_bits)
-            emb = emb.filter(F.col("bucket").isin(probes))
-        ivf = self._ivf_config()
-        if ivf:
-            # IVF layout: nearest-centroid probe, pruned on the
-            # `cluster_id` partition column — scans ~nprobe/nlist
-            # of the corpus (operators/ivf.py)
-            from documents_vector_search_spark.operators.ivf import (
-                probe_clusters_fixed,
-            )
-
-            nprobe = self.ivf_nprobe or ivf["nProbe"]
-            probes = probe_clusters_fixed(ivf["centroids"], qv, nprobe)
-            emb = emb.filter(F.col("cluster_id").isin(probes))
         if allowed is not None:
             emb = emb.join(F.broadcast(allowed), "chunk_id", "left_semi")
-        sq = self._sq_config()
-        if sq:
-            # SQ8 layout: rank candidates by decoded distance over the
-            # tiny `codes` column (8× fewer scan bytes than vectors),
-            # keep a shortlist, let the exact kNN below re-rank it
-            from documents_vector_search_spark.operators.sq import (
-                sq_adc_distance_expr,
+        if layout.coder:
+            # broadcast join: the shortlist is ≤ factor × k ids
+            shortlist = layout.shortlist(
+                emb, qv, self._shortlist_size(layout, k)
             )
-
-            shortlist = (
-                emb.select(
-                    "chunk_id",
-                    sq_adc_distance_expr(
-                        F.col("codes"), qv, sq["mins"], sq["maxs"]
-                    ).alias("adc_distance"),
-                )
-                .orderBy(F.col("adc_distance").asc(), F.col("chunk_id").asc())
-                .limit(max(k * self.sq8_shortlist_factor, k))
-                .select("chunk_id")
-            )
-            emb = emb.join(F.broadcast(shortlist), "chunk_id", "left_semi")
-        if ivf and ivf.get("pq"):
-            # IVFPQ: rank the pruned partitions by ADC over the tiny
-            # `codes` column (lookup tables, no full-vector math), keep
-            # a shortlist, and let the exact kNN below re-rank it — the
-            # standard PQ shortlist-then-rerank (operators/pq.py). The
-            # shortlist join is broadcast (≤ pq_shortlist_factor * k
-            # ids).
-            from documents_vector_search_spark.operators.pq import (
-                pq_adc_topk,
-            )
-
-            shortlist = pq_adc_topk(
-                emb,
-                ivf["pq"]["codebooks"],
-                qv,
-                max(k * self.pq_shortlist_factor, k),
-                id_col="chunk_id",
-                codes_col="codes",
-            ).select("chunk_id")
             emb = emb.join(F.broadcast(shortlist), "chunk_id", "left_semi")
         # dim-dispatched scorer: expression form at narrow dims (codegen,
         # oracle parity), vectorized numpy at ≥NUMPY_KNN_MIN_DIM — the
@@ -1432,23 +1350,18 @@ class CollectionSearcher:
         tests); on SQ8 layouts the batch path ranks exactly instead of
         via the codes shortlist, so recall can only improve.
 
-        On ANN/IVF-pruned layouts the vector side batches through
-        knn_l2_batch_pruned: ONE scan of the union of the queries'
-        probe partitions (directory pruning on the bucket/cluster_id
-        column), each query scored only against its own probe set — so
-        overlapping probes are read once instead of once per query, and
-        per-query results still match :meth:`search_chunks`'s
-        deterministic ANN contract exactly (pinned by tests).
-        Quantized pruned layouts batch in the COMPRESSED domain: one
-        codes-only scan of the union of probe partitions builds every
-        query's shortlist — ADC lookup tables for IVFPQ, per-dimension
-        decode for SQ8-composed — from the same rounded math as the
-        per-query plan (identical shortlist sets), then one exact
-        re-rank pass over the shortlisted vectors. So quantization's
-        codes-only scan is preserved AND batch == per-query stays exact
-        on every constructible layout (create_collection rejects
-        ann+ivf, the one composition that would have no single probe
-        map)."""
+        The vector side is ONE pipeline for every layout
+        (collection/vector_layout.py): embed the queries; on a pruned
+        layout scan the union of their probe partitions once (directory
+        pruning on bucket/cluster_id), so overlapping probes are read
+        once instead of once per query; join the allowed chunks; on a
+        pruned CODED layout build every query's shortlist from one
+        codes-only scan (PQ ADC tables or SQ8 decode, the same rounded
+        math as the per-query plan, so identical shortlist sets); then
+        one exact batched re-rank, each query masked to its own probes.
+        Per-query results match :meth:`search_chunks`'s deterministic
+        ANN contract exactly on every constructible layout (pinned by
+        tests)."""
         unknown = set(indexes) - {"vector", "bm25", "phrase"}
         if unknown:
             raise ValueError(f"unknown indexes: {sorted(unknown)}")
@@ -1457,165 +1370,51 @@ class CollectionSearcher:
         allowed = self._allowed_chunks(metadata_filter)
         scored = []
         if "vector" in indexes:
-            cfg, ivf = self._ann_config(), self._ivf_config()
-            pq_composed = bool(ivf and ivf.get("pq"))
-            sq_composed = self._sq_config() is not None
-            if cfg and ivf:
-                # create_collection rejects ann_planes+ivf_nlist
-                # (creator.py raises "mutually exclusive"), so no
-                # constructible collection reaches here; fail loudly on
-                # a hand-built manifest instead of silently serving an
-                # untested composition (r5 VERDICT "Next round" #5
-                # removed the dead per-query fallback loop this guarded)
-                raise ValueError(
-                    "collection manifest declares both ann and ivf "
-                    "layouts; this composition is not constructible "
-                    "via create_collection and has no serving path"
-                )
-            if (cfg or ivf) and sq_composed:
-                # batched SQ8-composed pruned serving: one codes-only
-                # union scan builds every query's decoded-distance
-                # shortlist (same decode + fold order as the per-query
-                # expression → identical shortlist sets), then one
-                # exact re-rank pass
-                from documents_vector_search_spark.operators.knn import (
-                    knn_l2_batch_grouped,
-                )
-                from documents_vector_search_spark.operators.sq import (
-                    sq_adc_batch_shortlist,
-                )
+            from documents_vector_search_spark.operators.knn import (
+                knn_l2_batch,
+                knn_l2_batch_grouped,
+            )
 
-                sq = self._sq_config()
-                part_col = "bucket" if cfg else "cluster_id"
-                qvecs, probes = {}, {}
-                for qid, text in texts.items():
-                    qv = hash_embedding_py(text, self.embedding_dim)
-                    qvecs[qid] = qv
-                    probes[qid] = self._probe_values(qv)
-                union_parts = sorted(
-                    {p for ps in probes.values() for p in ps}
-                )
-                emb = self._read("embeddings").filter(
-                    F.col(part_col).isin(union_parts)
-                )
-                if allowed is not None:
-                    emb = emb.join(
-                        F.broadcast(allowed), "chunk_id", "left_semi"
-                    )
-                shortlist = sq_adc_batch_shortlist(
-                    emb,
-                    sq["mins"],
-                    sq["maxs"],
-                    qvecs,
-                    probes,
-                    max(max_chunks * self.sq8_shortlist_factor, max_chunks),
-                    id_col="chunk_id",
-                    codes_col="codes",
-                    part_col=part_col,
-                )
-                scoped = emb.select("chunk_id", "vector").join(
-                    F.broadcast(shortlist), "chunk_id"
+            layout = self._layout()
+            qvecs = {
+                qid: hash_embedding_py(text, self.embedding_dim)
+                for qid, text in texts.items()
+            }
+            emb = self._read("embeddings")
+            probes = None
+            if layout.part_col:
+                # ONE scan of the union of the queries' probe partitions
+                probes = {
+                    qid: self._probes(layout, qv) for qid, qv in qvecs.items()
+                }
+                union = sorted({p for ps in probes.values() for p in ps})
+                emb = emb.filter(F.col(layout.part_col).isin(union))
+            if allowed is not None:
+                emb = emb.join(F.broadcast(allowed), "chunk_id", "left_semi")
+            if probes is not None and layout.coder:
+                # codes-only scan → every query's shortlist over its own
+                # probes, then one exact re-rank of the shortlisted rows
+                shortlist = layout.batch_shortlist(
+                    emb, qvecs, probes,
+                    self._shortlist_size(layout, max_chunks),
                 )
                 vec = knn_l2_batch_grouped(
-                    scoped, qvecs, max_chunks,
-                    id_col="chunk_id", vector_col="vector",
-                ).select(
-                    "qid", "chunk_id", (-F.col("distance")).alias("score")
-                )
-            elif pq_composed:
-                # batched IVFPQ: one codes scan of the union of probe
-                # clusters builds every query's ADC shortlist (same
-                # rounded LUTs as the per-query plan → identical
-                # shortlist sets), then one exact re-rank pass over the
-                # shortlisted vectors — full batch amortization with
-                # per-query parity (test-pinned)
-                from documents_vector_search_spark.operators.knn import (
-                    knn_l2_batch_grouped,
-                )
-                from documents_vector_search_spark.operators.pq import (
-                    pq_adc_batch_shortlist,
-                )
-
-                qvecs, probes = {}, {}
-                for qid, text in texts.items():
-                    qv = hash_embedding_py(text, self.embedding_dim)
-                    qvecs[qid] = qv
-                    probes[qid] = self._probe_values(qv)
-                union_parts = sorted(
-                    {p for ps in probes.values() for p in ps}
-                )
-                emb = self._read("embeddings").filter(
-                    F.col("cluster_id").isin(union_parts)
-                )
-                if allowed is not None:
-                    emb = emb.join(
-                        F.broadcast(allowed), "chunk_id", "left_semi"
-                    )
-                shortlist = pq_adc_batch_shortlist(
-                    emb,
-                    ivf["pq"]["codebooks"],
-                    qvecs,
-                    probes,
-                    max(max_chunks * self.pq_shortlist_factor, max_chunks),
-                    id_col="chunk_id",
-                    codes_col="codes",
-                    part_col="cluster_id",
-                )
-                scoped = emb.select("chunk_id", "vector").join(
-                    F.broadcast(shortlist), "chunk_id"
-                )
-                vec = knn_l2_batch_grouped(
-                    scoped, qvecs, max_chunks,
-                    id_col="chunk_id", vector_col="vector",
-                ).select(
-                    "qid", "chunk_id", (-F.col("distance")).alias("score")
-                )
-            elif cfg or ivf:
-                from documents_vector_search_spark.operators.knn import (
-                    knn_l2_batch_pruned,
-                )
-
-                part_col = "bucket" if cfg else "cluster_id"
-                qvecs, probes = {}, {}
-                for qid, text in texts.items():
-                    qv = hash_embedding_py(text, self.embedding_dim)
-                    qvecs[qid] = qv
-                    probes[qid] = self._probe_values(qv)
-                union_parts = sorted(
-                    {p for ps in probes.values() for p in ps}
-                )
-                emb = self._read("embeddings").filter(
-                    F.col(part_col).isin(union_parts)
-                )
-                if allowed is not None:
-                    emb = emb.join(
-                        F.broadcast(allowed), "chunk_id", "left_semi"
-                    )
-                vec = knn_l2_batch_pruned(
-                    emb, qvecs, probes, max_chunks,
-                    id_col="chunk_id", vector_col="vector",
-                    part_col=part_col,
-                ).select(
-                    "qid", "chunk_id", (-F.col("distance")).alias("score")
+                    emb.select("chunk_id", "vector").join(
+                        F.broadcast(shortlist), "chunk_id"
+                    ),
+                    qvecs, max_chunks, id_col="chunk_id", vector_col="vector",
                 )
             else:
-                from documents_vector_search_spark.operators.knn import (
-                    knn_l2_batch,
-                )
-
-                emb = self._read("embeddings")
-                if allowed is not None:
-                    emb = emb.join(F.broadcast(allowed), "chunk_id", "left_semi")
-                qvecs = {
-                    qid: hash_embedding_py(text, self.embedding_dim)
-                    for qid, text in texts.items()
-                }
+                # flat (SQ8 too: ranked exactly) or pruned: the probe
+                # masks keep each query to its own partitions
                 vec = knn_l2_batch(
-                    emb, qvecs, max_chunks,
-                    id_col="chunk_id", vector_col="vector",
-                ).select(
-                    "qid", "chunk_id", (-F.col("distance")).alias("score")
+                    emb, qvecs, max_chunks, id_col="chunk_id",
+                    vector_col="vector", probes=probes,
+                    part_col=layout.part_col,
                 )
+            vec = vec.select(
+                "qid", "chunk_id", (-F.col("distance")).alias("score")
+            )
             scored.append(vec.withColumn("_src", F.lit("v")))
         if "bm25" in indexes:
             if ranker == "ql":

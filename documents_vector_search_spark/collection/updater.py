@@ -67,18 +67,17 @@ from documents_vector_search_spark.collection.catalog import (
 from documents_vector_search_spark.collection.creator import (
     Embedder,
     _hash_chunk_ids,
-    _StageTimer,
     build_chunks,
     default_embedder,
 )
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.partitioning import (
-    LAYOUT_COLS,
     TERM_SORTED_TABLES,
     UPDATE_PB_COL,
     pb_col,
     pb_dirs,
 )
+from documents_vector_search_spark.collection.vector_layout import VectorLayout
 from documents_vector_search_spark.functions.text import tokenize
 from documents_vector_search_spark.operators.bm25 import (
     build_doc_stats,
@@ -205,32 +204,27 @@ def _swap_partitions(
     # The table writes are independent batch-sized jobs — run them as
     # concurrent driver-thread actions (same fan-out pattern as the
     # creator) so job-scheduling overhead overlaps instead of summing.
-    _timer = _StageTimer(f"swap:{collection.name}")
-
     def _stage(item) -> None:
         table, df = item
-        with _timer.stage(f"stage_write:{table}"):
-            cols = partition_cols[table]
-            if cols and table not in no_cluster:
-                # cluster the staged rows by their partition values
-                # first: without it every write task sprays one file
-                # into every partition directory it holds rows for —
-                # the creator measured the same partitioned write at
-                # 2,047 files / 6.3s unclustered vs 64 files / 0.7s
-                # clustered (write_fuzzy_artifacts docstring); with the
-                # repartition each partition directory gets exactly the
-                # tasks that own its hash, so file count ≈ directory
-                # count and the commit protocol stays cheap
-                df = df.repartition(*[F.col(c) for c in cols])
-            if table in TERM_SORTED_TABLES:
-                # the creator's layout: each bucket file sorted by term
-                df = df.sortWithinPartitions(*cols, "term")
-            writer = df.write.mode("overwrite")
-            if cols:
-                writer = writer.partitionBy(*cols)
-            writer.parquet(
-                str(Path(collection.table_path(f"{table}__tmp")))
-            )
+        cols = partition_cols[table]
+        if cols and table not in no_cluster:
+            # cluster the staged rows by their partition values first:
+            # without it every write task sprays one file into every
+            # partition directory it holds rows for — the creator
+            # measured the same partitioned write at 2,047 files / 6.3s
+            # unclustered vs 64 files / 0.7s clustered
+            # (write_fuzzy_artifacts docstring); with the repartition
+            # each partition directory gets exactly the tasks that own
+            # its hash, so file count ≈ directory count and the commit
+            # protocol stays cheap
+            df = df.repartition(*[F.col(c) for c in cols])
+        if table in TERM_SORTED_TABLES:
+            # the creator's layout: each bucket file sorted by term
+            df = df.sortWithinPartitions(*cols, "term")
+        writer = df.write.mode("overwrite")
+        if cols:
+            writer = writer.partitionBy(*cols)
+        writer.parquet(str(Path(collection.table_path(f"{table}__tmp"))))
 
     with ThreadPoolExecutor(max_workers=len(merged)) as pool:
         list(pool.map(_stage, merged.items()))
@@ -540,18 +534,19 @@ def _merge(
     anti-join (chunk-keyed tables on their chunk ids), unions the fresh
     rows, and only the affected ``_pb`` directories swap."""
     ub = int(manifest.converter["updateBuckets"])
-    timer = _StageTimer(f"{op}:{collection.name}")
+    # the embeddings' directory levels (refuses an ann+ivf manifest
+    # before anything is written)
+    emb_cols = VectorLayout.from_converter(manifest.converter).partition_cols
     # localCheckpoint: the id list feeds the bucket collect, the drop
     # set, the document-keyed anti-joins and the statistics job —
     # materialized once instead of re-running the caller's lineage
-    with timer.stage("batch_buckets"):
-        ids = ids.select(F.col("id").cast("string").alias("id")).distinct()
-        ids = ids.localCheckpoint()
-        doc_pbs = sorted(
-            ids.agg(
-                F.collect_set(pb_col(F.col("id"), ub)).alias("pbs")
-            ).first()["pbs"]
-        )
+    ids = ids.select(F.col("id").cast("string").alias("id")).distinct()
+    ids = ids.localCheckpoint()
+    doc_pbs = sorted(
+        ids.agg(
+            F.collect_set(pb_col(F.col("id"), ub)).alias("pbs")
+        ).first()["pbs"]
+    )
     if not doc_pbs:
         return manifest  # empty batch: nothing to do
     doc_keys = ids.withColumnRenamed("id", "document_id")
@@ -576,8 +571,7 @@ def _merge(
     }
     fresh: dict[str, DataFrame] = {}
     if fresh_rows is not None:
-        with timer.stage("fresh_rows"):
-            fresh = fresh_rows(old)
+        fresh = fresh_rows(old)
 
     # chunk ids to drop from every chunk-keyed table: the batch
     # documents' stored chunks AND the fresh chunk ids — the latter let
@@ -589,8 +583,7 @@ def _merge(
     )
     if fresh:
         drop = drop.unionByName(fresh["chunks"].select("chunk_id"))
-    with timer.stage("drop_chunk_ids"):
-        drop = drop.localCheckpoint()
+    drop = drop.localCheckpoint()
 
     merged = {}
     for t in tables:
@@ -672,9 +665,7 @@ def _merge(
             old["postings"].join(drop, "chunk_id", "left_semi"),
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool, timer.stage(
-        "stats_and_fuzzy_delta"
-    ):
+    with ThreadPoolExecutor(max_workers=2) as pool:
         f_fuzzy = pool.submit(_fuzzy)
         f_stats = pool.submit(stats_df.collect)
         fuzzy_delta_path = f_fuzzy.result()
@@ -702,9 +693,7 @@ def _merge(
     # the fuzzy delta's two batch-dir stagings touch only __tmp dirs
     # (stage_vocab_delta contract), so they run CONCURRENTLY with the
     # swap — only the publish renames wait for the commit
-    with ThreadPoolExecutor(max_workers=1) as pool, timer.stage(
-        "partition_swap"
-    ):
+    with ThreadPoolExecutor(max_workers=1) as pool:
         f_fuzzy_staged = pool.submit(
             _stage_fuzzy_delta, collection, manifest, fuzzy_delta_path
         )
@@ -712,8 +701,7 @@ def _merge(
             collection,
             merged,
             partition_cols={
-                t: [c for c in LAYOUT_COLS if c in old[t].columns]
-                + [UPDATE_PB_COL]
+                t: emb_cols if t == "embeddings" else [UPDATE_PB_COL]
                 for t in merged
             },
             affected_pbs={t: doc_pbs for t in merged},
@@ -721,10 +709,9 @@ def _merge(
         fuzzy_staged = f_fuzzy_staged.result()
 
     _apply_stats(manifest, stats)
-    with timer.stage("fuzzy_delta_publish"):
-        _apply_fuzzy_delta(
-            collection, manifest, fuzzy_delta_path, staged=fuzzy_staged
-        )
+    _apply_fuzzy_delta(
+        collection, manifest, fuzzy_delta_path, staged=fuzzy_staged
+    )
     manifest.inFlight = None
     collection.save_manifest(manifest)
     return manifest
@@ -777,6 +764,7 @@ def update_collection(
             "embedders cannot share an index"
         )
     embed = embedder or default_embedder(embedding_dim)
+    layout = VectorLayout.from_converter(manifest.converter, embedding_dim)
     ub = int(manifest.converter["updateBuckets"])
 
     def bucketed(df: DataFrame, key: str) -> DataFrame:
@@ -809,64 +797,15 @@ def update_collection(
         # dominates the update. Batch-sized, so trivially small.
         chunks = bucketed(chunks, "document_id").localCheckpoint()
 
-        embeddings = chunks.select(
-            "chunk_id",
-            embed(F.col("indexed_data")).cast("array<float>").alias("vector"),
-            UPDATE_PB_COL,
+        # the create's layout columns, from the manifest's fitted
+        # state: same bucket / cluster / codes as a create would write
+        embeddings = layout.encode(
+            chunks.select(
+                "chunk_id",
+                embed(F.col("indexed_data")).cast("array<float>").alias("vector"),
+                UPDATE_PB_COL,
+            )
         )
-        vec = F.col("vector").cast("array<double>")
-        # ANN layout (create_collection(ann_planes=...)): fresh vectors
-        # get their LSH bucket so the merge keeps the partitioned layout
-        ann_cfg = manifest.converter.get("ann")
-        if ann_cfg:
-            from documents_vector_search_spark.operators.dedup import (
-                hyperplane_bucket,
-                random_hyperplanes,
-            )
-
-            planes = random_hyperplanes(
-                embedding_dim, ann_cfg["nPlanes"], ann_cfg["seed"]
-            )
-            embeddings = embeddings.withColumn(
-                "bucket", hyperplane_bucket(vec, planes)
-            )
-        # IVF layout (create_collection(ivf_nlist=...)): assign fresh
-        # vectors to their nearest manifest centroid — same rounded
-        # centroids the create used, so assignment is bit-identical
-        # across updates
-        ivf_cfg = manifest.converter.get("ivf")
-        if ivf_cfg:
-            from documents_vector_search_spark.operators.ivf import (
-                assign_cluster_auto,
-            )
-
-            embeddings = embeddings.withColumn(
-                "cluster_id", assign_cluster_auto(vec, ivf_cfg["centroids"])
-            )
-            if ivf_cfg.get("pq"):
-                # IVFPQ layout: re-encode fresh vectors with the manifest
-                # codebooks so ADC search covers updates too
-                from documents_vector_search_spark.operators.pq import (
-                    pq_encode_auto,
-                )
-
-                embeddings = embeddings.withColumn(
-                    "codes",
-                    pq_encode_auto(vec, ivf_cfg["pq"]["codebooks"]),
-                )
-        # SQ8 layout (create_collection(sq8=True)): re-encode fresh
-        # vectors with the manifest's FITTED bounds — never refit
-        # mid-update (codes across the corpus must share one scale;
-        # out-of-range values clamp)
-        sq_cfg = manifest.converter.get("sq8")
-        if sq_cfg:
-            from documents_vector_search_spark.operators.sq import (
-                sq_encode_auto,
-            )
-
-            embeddings = embeddings.withColumn(
-                "codes", sq_encode_auto(vec, sq_cfg["mins"], sq_cfg["maxs"])
-            )
 
         # postings keep the stored table's optional columns (schema-
         # sniffed: dl, positions)

@@ -154,6 +154,49 @@ def knn_l2_auto(
     )
 
 
+def _topk_schema(df: DataFrame, id_col: str):
+    """``(qid, id, distance)`` — every batch kernel's candidate rows."""
+    from pyspark.sql.types import (
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    return StructType(
+        [
+            StructField("qid", StringType()),
+            StructField(id_col, df.schema[id_col].dataType),
+            StructField("distance", DoubleType()),
+        ]
+    )
+
+
+def _local_topk(qid: str, ids, d, k: int, id_col: str):
+    """One query's batch-local top-k rows, (distance, id) ascending."""
+    import numpy as np
+    import pandas as pd
+
+    order = np.lexsort((ids, d))[:k]
+    return pd.DataFrame({"qid": qid, id_col: ids[order], "distance": d[order]})
+
+
+def _finish_topk(candidates: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Global top-k per qid over the batch-local candidates: the global
+    top-k is a subset of the union of batch top-ks, so one per-qid
+    window over ≤ tasks × Q × k rows finishes the answer."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(
+        F.col("distance").asc(), F.col(id_col).asc()
+    )
+    return (
+        candidates.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
 def knn_l2_batch(
     embeddings: DataFrame,
     queries: dict[str, Sequence[float]],
@@ -161,6 +204,8 @@ def knn_l2_batch(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
     round_to: int = 6,
+    probes: dict[str, Sequence] | None = None,
+    part_col: str | None = "cluster_id",
 ) -> DataFrame:
     """Exact L2 top-k for MANY queries in ONE corpus scan —
     ``(qid, id, distance)``, per-query ascending, ties on id.
@@ -170,10 +215,18 @@ def knn_l2_batch(
     (tiny) query matrix ships to every task inside a mapInPandas
     closure; each Arrow batch computes all Q distance columns with one
     vectorized numpy op and emits only its BATCH-LOCAL top-k rows per
-    query (global top-k is a subset of the union of batch top-ks), so
-    the shuffle carries ≤ tasks × Q × k candidate rows — never the
-    corpus. A final per-qid window over the candidates yields the
+    query, so the shuffle carries ≤ tasks × Q × k candidate rows — never
+    the corpus. A final per-qid window over the candidates yields the
     answer.
+
+    ``probes`` (qid → ``part_col`` values: IVF cluster ids or LSH
+    buckets) serves a PARTITION-PRUNED layout: the caller filters
+    ``embeddings`` to the union of the probe sets (a partition-column
+    isin → directory pruning, overlapping probes read once), and a
+    per-batch mask scores each query only against its own probes. Per
+    query the result is IDENTICAL to pruning for that query alone and
+    running exact kNN over the survivors. Without ``probes`` every row
+    is scored for every query.
 
     Determinism: distances are rounded to ``round_to`` BEFORE both the
     batch-local and the global (distance, id) ordering, so the
@@ -184,24 +237,16 @@ def knn_l2_batch(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     qids = sorted(queries)
     qmat = np.asarray([[float(x) for x in queries[q]] for q in qids])
-    id_type = embeddings.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("qid", StringType()),
-            StructField(id_col, id_type),
-            StructField("distance", DoubleType()),
-        ]
-    )
+    cols = [id_col, vector_col]
+    masks = None
+    if probes is not None:
+        missing = [q for q in qids if q not in probes]
+        if missing:
+            raise ValueError(f"queries without probe sets: {missing}")
+        masks = [np.asarray(sorted(probes[q])) for q in qids]
+        cols.append(part_col)
 
     def local_topk(batches):
         for pdf in batches:
@@ -213,130 +258,24 @@ def knn_l2_batch(
             # order as the expression form (parity with the SQL oracle)
             d = np.sqrt(_seq_fold_sum((m[:, None, :] - qmat[None, :, :]) ** 2))
             d = round_half_up(d, round_to)
-            parts = []
-            for j, qid in enumerate(qids):
-                order = np.lexsort((ids, d[:, j]))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qid,
-                            id_col: ids[order],
-                            "distance": d[order, j],
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    candidates = embeddings.select(id_col, vector_col).mapInPandas(
-        local_topk, out_schema
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def knn_l2_batch_pruned(
-    embeddings: DataFrame,
-    queries: dict[str, Sequence[float]],
-    probes: dict[str, Sequence],
-    k: int,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    part_col: str = "cluster_id",
-    round_to: int = 6,
-) -> DataFrame:
-    """:func:`knn_l2_batch` for a PARTITION-PRUNED ANN/IVF layout: many
-    queries, one scan of the UNION of their probe partitions, each
-    query scored only against its own probe set.
-
-    ``probes`` maps qid → the ``part_col`` values (IVF cluster ids or
-    LSH buckets) that query is allowed to see; the caller filters
-    ``embeddings`` to the union (a partition-column isin → directory
-    pruning). Per query the result is IDENTICAL to pruning for that
-    query alone and running exact kNN over the survivors — the
-    per-batch numpy mask enforces the probe semantics, so batch serving
-    preserves each query's deterministic ANN contract instead of
-    leaking neighbors from other queries' partitions.
-
-    Scale shape: the union scan reads min(Q × nprobe, nlist) partition
-    directories ONCE (overlapping probe sets are the shared work Q
-    separate jobs would re-read); batch-local top-k bounds the shuffle
-    to tasks × Q × k candidate rows, exactly like knn_l2_batch.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    qids = sorted(queries)
-    missing = [q for q in qids if q not in probes]
-    if missing:
-        raise ValueError(f"queries without probe sets: {missing}")
-    qmat = np.asarray([[float(x) for x in queries[q]] for q in qids])
-    probe_arrays = [
-        np.asarray(sorted(probes[q])) for q in qids
-    ]
-    id_type = embeddings.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("qid", StringType()),
-            StructField(id_col, id_type),
-            StructField("distance", DoubleType()),
-        ]
-    )
-
-    def local_topk(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(pdf[vector_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            parts_v = pdf[part_col].to_numpy()
-            # rows × Q × dim diff, sequential dim fold: same op order
-            # as the expression form
-            d = np.sqrt(_seq_fold_sum((m[:, None, :] - qmat[None, :, :]) ** 2))
-            d = round_half_up(d, round_to)
+            parts = None if masks is None else pdf[part_col].to_numpy()
             out = []
             for j, qid in enumerate(qids):
-                mask = np.isin(parts_v, probe_arrays[j])
-                if not mask.any():
+                if masks is None:
+                    out.append(_local_topk(qid, ids, d[:, j], k, id_col))
                     continue
-                dj, idj = d[mask, j], ids[mask]
-                order = np.lexsort((idj, dj))[:k]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qid,
-                            id_col: idj[order],
-                            "distance": dj[order],
-                        }
+                mask = np.isin(parts, masks[j])
+                if mask.any():
+                    out.append(
+                        _local_topk(qid, ids[mask], d[mask, j], k, id_col)
                     )
-                )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    candidates = embeddings.select(id_col, vector_col, part_col).mapInPandas(
-        local_topk, out_schema
+    candidates = embeddings.select(*cols).mapInPandas(
+        local_topk, _topk_schema(embeddings, id_col)
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _finish_topk(candidates, k, id_col)
 
 
 def knn_l2_batch_grouped(
@@ -351,32 +290,16 @@ def knn_l2_batch_grouped(
     (input carries a ``qid`` column — e.g. the output of a per-query
     ADC shortlist join). One Arrow pass computes each row's distance to
     ITS query's vector, batch-local top-k bounds the shuffle, and the
-    per-qid window finishes — the re-rank half of batched IVFPQ
+    per-qid window finishes — the re-rank half of batched quantized
     serving. Distances round to ``round_to`` before the (distance, id)
     ordering, matching the single-query scorers exactly."""
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     qmap = {
         q: np.asarray([float(x) for x in v], dtype=np.float64)
         for q, v in queries.items()
     }
-    id_type = scoped.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("qid", StringType()),
-            StructField(id_col, id_type),
-            StructField("distance", DoubleType()),
-        ]
-    )
 
     def local_topk(batches):
         for pdf in batches:
@@ -388,30 +311,19 @@ def knn_l2_batch_grouped(
                 if q is None:
                     continue
                 m = np.array(grp[vector_col].tolist(), dtype=np.float64)
-                ids = grp[id_col].to_numpy()
                 d = round_half_up(
                     np.sqrt(_seq_fold_sum((m - q) ** 2)), round_to
                 )
-                order = np.lexsort((ids, d))[:k]
                 out.append(
-                    pd.DataFrame(
-                        {"qid": qid, id_col: ids[order], "distance": d[order]}
-                    )
+                    _local_topk(qid, grp[id_col].to_numpy(), d, k, id_col)
                 )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
     candidates = scoped.select("qid", id_col, vector_col).mapInPandas(
-        local_topk, out_schema
+        local_topk, _topk_schema(scoped, id_col)
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _finish_topk(candidates, k, id_col)
 
 
 def knn_cosine(

@@ -32,6 +32,27 @@ from documents_vector_search_spark.functions.vectors import l2_distance
 from documents_vector_search_spark.operators.ivf import assign_cluster_auto
 
 
+def fit_topic_centroids(
+    emb: DataFrame,
+    nlist: int,
+    vec_col: str = "vector",
+    sample_rows: int | None = None,
+) -> list[list[float]]:
+    """Rounded KMeans(nlist) topic centroids from a bounded
+    deterministic sample (the IVF fit, operators/ivf.py::fit_ivf) —
+    what the ``topics`` command records and ``refit-topics`` compares."""
+    from documents_vector_search_spark.operators.ivf import (
+        fit_ivf,
+        round_centroids,
+    )
+
+    return round_centroids(
+        fit_ivf(
+            emb, nlist=nlist, vector_col=vec_col, sample_rows=sample_rows
+        ).centroids
+    )
+
+
 def assigned_topics(
     emb: DataFrame,
     centroids: Sequence[Sequence[float]],

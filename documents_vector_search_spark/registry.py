@@ -678,7 +678,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched ANN over the bucket-partitioned layout
-    (operators/knn.py::knn_l2_batch_pruned): four queries share ONE
+    (operators/knn.py::knn_l2_batch with probes): four queries share ONE
     scan of the UNION of their probe buckets (directory pruning), each
     scored only against its own probe set — the serving shape
     CollectionSearcher.search_chunks_many uses on pruned layouts."""
@@ -688,9 +688,7 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_bucket_layout,
         multiprobe_buckets,
     )
-    from documents_vector_search_spark.operators.knn import (
-        knn_l2_batch_pruned,
-    )
+    from documents_vector_search_spark.operators.knn import knn_l2_batch
 
     layout = ensure_bucket_layout(
         spark,
@@ -705,13 +703,13 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, qv in BATCH_QUERIES.items()
     }
     union = sorted({p for ps in probes.values() for p in ps})
-    return knn_l2_batch_pruned(
+    return knn_l2_batch(
         layout.filter(F.col("bucket").isin(union)),
         BATCH_QUERIES,
-        probes,
         10,
         id_col="vec_id",
         vector_col="embedding",
+        probes=probes,
         part_col="bucket",
     )
 

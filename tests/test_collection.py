@@ -554,7 +554,7 @@ class TestAnnLayout:
         self, ann_coll
     ):
         """On an ANN layout the batch vector path runs ONE scan of the
-        union of the queries' probe buckets (knn_l2_batch_pruned), each
+        union of the queries' probe buckets (knn_l2_batch with probes), each
         query masked to its own probe set — results match search_chunks
         exactly and the plan is a single Arrow-batched scan, not a
         per-query union."""
@@ -595,20 +595,36 @@ class TestAnnLayout:
         got = s.search("hash join vector", max_documents=5).collect()
         assert 0 < len(got) <= 5
 
-    def test_ann_plus_ivf_manifest_refused_in_batch_serving(self, ann_coll):
-        """create_collection rejects ann_planes+ivf_nlist, so the only
-        way to reach an ann+ivf searcher is a hand-built manifest; the
-        batch path refuses it loudly instead of silently serving an
-        untested composition (the former defensive per-query fallback
-        loop was unreachable dead code and is gone)."""
-        import pytest
+    def test_ann_plus_ivf_manifest_refused_in_batch_serving(
+        self, spark, canonical_docs, ann_coll, tmp_path
+    ):
+        """create_collection rejects ann_planes+ivf_nlist, so only a
+        hand-edited manifest declares both layouts. Single search, batch
+        search and update all refuse it instead of serving or writing
+        an untested composition, and the refused update leaves every
+        table as it was."""
+        import json
 
-        s = CollectionSearcher(ann_coll)
-        s._ivf_cfg = {"nlist": 8, "nprobe": 2}  # simulate hand-built manifest
+        coll = _copy_collection(spark, ann_coll, tmp_path, "annivf")
+        data = json.loads(coll.manifest_path.read_text())
+        data["converter"]["ivf"] = {
+            "nList": 2, "nProbe": 1, "seed": 42,
+            "centroids": [[0.0] * 16, [1.0] * 16],
+        }
+        coll.manifest_path.write_text(json.dumps(data))
+        before = coll.counts()
+        s = CollectionSearcher(coll)
+        with pytest.raises(ValueError, match="both ann and ivf"):
+            s.search_chunks("hash join", max_chunks=5)
         with pytest.raises(ValueError, match="both ann and ivf"):
             s.search_chunks_many(
                 {"a": "hash join"}, max_chunks=5, indexes=("vector",)
             )
+        with pytest.raises(ValueError, match="both ann and ivf"):
+            update_collection(
+                coll, canonical_docs.filter(F.col("id") == "doc-2")
+            )
+        assert coll.counts() == before
 
     def test_update_preserves_layout(self, spark, canonical_docs, ann_coll):
         updates = canonical_docs.filter(F.col("id") == "doc-2").select(
@@ -617,7 +633,9 @@ class TestAnnLayout:
             F.lit("2024-07-01 00:00:00").cast("timestamp").alias("last_modified_at"),
             "source_type",
         )
-        update_collection(ann_coll, updates)
+        created = _embedding_rows(ann_coll, UNCHANGED_DOC)
+        update_collection(ann_coll, _with_unchanged(updates, canonical_docs))
+        assert _embedding_rows(ann_coll, UNCHANGED_DOC) == created
         emb = ann_coll.read("embeddings")
         assert "bucket" in emb.columns
         assert emb.count() == ann_coll.read("chunks").count()
@@ -733,7 +751,9 @@ class TestIvfLayout:
             F.lit("2024-08-01 00:00:00").cast("timestamp").alias("last_modified_at"),
             "source_type",
         )
-        update_collection(ivf_coll, updates)
+        created = _embedding_rows(ivf_coll, UNCHANGED_DOC)
+        update_collection(ivf_coll, _with_unchanged(updates, canonical_docs))
+        assert _embedding_rows(ivf_coll, UNCHANGED_DOC) == created
         emb = ivf_coll.read("embeddings")
         assert "cluster_id" in emb.columns
         assert emb.count() == ivf_coll.read("chunks").count()
@@ -835,7 +855,9 @@ class TestIvfPqLayout:
             F.lit("2024-09-01 00:00:00").cast("timestamp").alias("last_modified_at"),
             "source_type",
         )
-        update_collection(ivfpq_coll, updates)
+        created = _embedding_rows(ivfpq_coll, UNCHANGED_DOC)
+        update_collection(ivfpq_coll, _with_unchanged(updates, canonical_docs))
+        assert _embedding_rows(ivfpq_coll, UNCHANGED_DOC) == created
         emb = ivfpq_coll.read("embeddings")
         assert "codes" in emb.columns
         assert emb.count() == ivfpq_coll.read("chunks").count()
@@ -899,7 +921,9 @@ class TestSq8Layout:
             "last_modified_at",
             "source_type",
         )
-        update_collection(sq8_coll, updates)
+        created = _embedding_rows(sq8_coll, UNCHANGED_DOC)
+        update_collection(sq8_coll, _with_unchanged(updates, canonical_docs))
+        assert _embedding_rows(sq8_coll, UNCHANGED_DOC) == created
         emb = sq8_coll.read("embeddings")
         assert emb.count() == sq8_coll.read("chunks").count()
         assert emb.filter(F.col("codes").isNull()).count() == 0
@@ -1784,6 +1808,21 @@ class TestSq8IvfComposedBatch:
             ]
             assert by_qid.get(qid, []) == expected, f"mismatch for {qid}"
 
+    def test_update_encodes_like_create(self, canonical_docs, sq8_ivf_coll):
+        """An update re-encodes through the create's fitted layout: an
+        unchanged document re-sent in the batch keeps its exact rows
+        (cluster, codes, vector), and the changed one is searchable."""
+        updates = canonical_docs.filter(F.col("id") == "doc-7").withColumn(
+            "text", F.concat(F.lit("fresh sq8 ivf text. "), "text")
+        )
+        created = _embedding_rows(sq8_ivf_coll, UNCHANGED_DOC)
+        update_collection(sq8_ivf_coll, _with_unchanged(updates, canonical_docs))
+        assert _embedding_rows(sq8_ivf_coll, UNCHANGED_DOC) == created
+        emb = sq8_ivf_coll.read("embeddings")
+        assert emb.count() == sq8_ivf_coll.read("chunks").count()
+        s = CollectionSearcher(sq8_ivf_coll)
+        assert len(s.search("hash join", max_documents=5).collect()) > 0
+
     def test_sq8_ann_bucket_composition_batches_too(
         self, spark, canonical_docs, tmp_path_factory
     ):
@@ -1837,6 +1876,27 @@ def pristine_ids(small_fuzzy_coll) -> list[str]:
     key on them, so a re-run repeats exactly the same batch."""
     docs = small_fuzzy_coll.read("documents").select("id").collect()
     return sorted(r["id"] for r in docs)
+
+
+# a document every layout update test re-sends unchanged beside its
+# changed one: its embeddings rows must come back exactly as created
+UNCHANGED_DOC = "doc-5"
+
+
+def _with_unchanged(updates, canonical_docs):
+    return updates.unionByName(
+        canonical_docs.filter(F.col("id") == UNCHANGED_DOC)
+    )
+
+
+def _embedding_rows(coll, doc_id) -> list[dict]:
+    """Every embeddings column (vector, layout columns, ``_pb``) of one
+    document's chunks, ordered by chunk id."""
+    chunks = coll.read("chunks").filter(F.col("document_id") == doc_id)
+    chunk_ids = [r.chunk_id for r in chunks.select("chunk_id").collect()]
+    assert chunk_ids, doc_id
+    rows = coll.read("embeddings").filter(F.col("chunk_id").isin(chunk_ids))
+    return sorted((r.asDict() for r in rows.collect()), key=lambda d: d["chunk_id"])
 
 
 def _copy_collection(spark, src, dest_dir, name):

@@ -476,8 +476,8 @@ class TestKnnBatch:
 
 
 class TestKnnBatchPruned:
-    """operators/knn.py::knn_l2_batch_pruned — per-query probe masks
-    over one union-pruned scan."""
+    """operators/knn.py::knn_l2_batch with ``probes`` — per-query
+    probe masks over one union-pruned scan."""
 
     @staticmethod
     def _df(spark):
@@ -492,14 +492,14 @@ class TestKnnBatchPruned:
     def test_matches_per_query_pruned_exact(self, spark):
         from documents_vector_search_spark.operators.knn import (
             knn_l2,
-            knn_l2_batch_pruned,
+            knn_l2_batch,
         )
 
         df = self._df(spark)
         queries = {"a": [5.0, 0.0], "b": [205.0, 0.0]}
         probes = {"a": [0, 1], "b": [2]}
-        got = knn_l2_batch_pruned(
-            df, queries, probes, k=4, part_col="cluster_id"
+        got = knn_l2_batch(
+            df, queries, k=4, probes=probes, part_col="cluster_id"
         ).collect()
         by_qid: dict = {}
         for r in got:
@@ -518,16 +518,14 @@ class TestKnnBatchPruned:
         assert all(v >= 200 for v, _ in by_qid["b"])
 
     def test_empty_probe_query_absent_not_error(self, spark):
-        from documents_vector_search_spark.operators.knn import (
-            knn_l2_batch_pruned,
-        )
+        from documents_vector_search_spark.operators.knn import knn_l2_batch
 
         df = self._df(spark).filter(F.col("cluster_id") < 2)
-        got = knn_l2_batch_pruned(
+        got = knn_l2_batch(
             df,
             {"a": [5.0, 0.0], "ghost": [5.0, 0.0]},
-            {"a": [0], "ghost": [7]},  # bucket 7 has no rows
             k=3,
+            probes={"a": [0], "ghost": [7]},  # bucket 7 has no rows
             part_col="cluster_id",
         ).collect()
         qids = {r.qid for r in got}
@@ -536,14 +534,10 @@ class TestKnnBatchPruned:
     def test_missing_probe_set_rejected(self, spark):
         import pytest as _pytest
 
-        from documents_vector_search_spark.operators.knn import (
-            knn_l2_batch_pruned,
-        )
+        from documents_vector_search_spark.operators.knn import knn_l2_batch
 
         with _pytest.raises(ValueError, match="without probe sets"):
-            knn_l2_batch_pruned(
-                self._df(spark), {"a": [1.0, 0.0]}, {}, k=3
-            )
+            knn_l2_batch(self._df(spark), {"a": [1.0, 0.0]}, k=3, probes={})
 
 
 class TestMaxSimLateInteraction:
