@@ -5,7 +5,7 @@ deterministic query vectors through exact L2 top-k and each
 approximate path (SRP-LSH bucketed, KMeans-IVF probe-pruned, PQ-ADC
 with and without exact re-rank), and prints mean recall@k plus the
 scan fraction each path reads — the recall/cost trade the engine's
-ANN claims rest on. Results are recorded in STATUS.md per round.
+ANN claims rest on. Results are recorded in CHANGES.md.
 
     python dev/recall.py [sf_dir] [k] [n_queries]
 """

@@ -15,6 +15,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from documents_vector_search_spark.collection.manifest import Manifest
+from documents_vector_search_spark.collection.partitioning import (
+    TERM_SORTED_TABLES,
+)
 
 TABLES = (
     "documents",
@@ -93,6 +96,13 @@ class Collection:
     def exists(self) -> bool:
         return self.manifest_path.exists()
 
+    def has_table(self, table: str) -> bool:
+        """The table is on disk, possibly parked under ``<table>__old``
+        by an interrupted swap (:meth:`read` heals that)."""
+        return (self.root / table).exists() or (
+            self.root / f"{table}__old"
+        ).exists()
+
     def destroy(self) -> None:
         """Wipe the collection dir (reference recreates on create,
         documents_collection_creator.py:49-50)."""
@@ -134,17 +144,50 @@ class Collection:
 
     def counts(self) -> dict[str, int]:
         """Live row counts per table (reference E8: faiss.ntotal /
-        Chroma count() / SELECT COUNT(*) — SURVEY §2.4). Tables a given
-        collection doesn't materialize (e.g. field_postings on
-        pre-existing collections) are skipped."""
-        return {
-            t: self.read(t).count()
-            for t in TABLES
-            if (self.root / t).exists() or (self.root / f"{t}__old").exists()
-        }
+        Chroma count() / SELECT COUNT(*) — SURVEY §2.4). A missing
+        table is skipped, so a damaged collection still reports what it
+        has."""
+        return {t: self.read(t).count() for t in TABLES if self.has_table(t)}
 
     def manifest(self) -> Manifest:
         return Manifest.load(self.manifest_path)
+
+    def checked_manifest(self) -> Manifest:
+        """The manifest of a collection in the current on-disk format.
+
+        The one format check: the searcher (at start and on refresh),
+        update, delete, compaction and the refits call it before they
+        read or write a table. A collection an older version wrote
+        raises ``ValueError`` naming the outdated piece; it has to be
+        re-created. Reads only the manifest and directory names."""
+
+        def refuse(piece: str) -> None:
+            raise ValueError(
+                f"collection '{self.name}' is in an outdated format "
+                f"({piece}) — re-create the collection"
+            )
+
+        if not self.exists():
+            refuse("no manifest.json")
+        m = self.manifest()
+        if not m.converter.get("updateBuckets"):
+            refuse("the manifest records no converter.updateBuckets")
+        if (m.converter.get("embedding") or {}).get("dim") is None:
+            refuse("the manifest records no converter.embedding.dim")
+        if m.avgChunkLength is None and m.numberOfChunks > 0:
+            refuse("the manifest records no avgChunkLength")
+        if m.fieldStats is None:
+            refuse("the manifest records no fieldStats")
+        if not self.has_table("field_postings"):
+            refuse("no field_postings table")
+        for t in TERM_SORTED_TABLES:
+            if next((self.root / t).glob("term_bucket=*"), None):
+                refuse(f"{t} partitioned by term_bucket")
+        if m.converter.get("fuzzy") and next(
+            (self.root / "vocab").glob("*.parquet"), None
+        ):
+            refuse("an unpartitioned fuzzy vocab")
+        return m
 
     def save_manifest(self, manifest: Manifest) -> None:
         self.root.mkdir(parents=True, exist_ok=True)

@@ -30,6 +30,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import TABLES, Collection
+from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
 from documents_vector_search_spark.collection.vector_layout import VectorLayout
 
@@ -53,13 +54,10 @@ def bucket_file_counts(table_root: Path) -> dict[int, dict[str, int]]:
     return out
 
 
-def _zorder_config(collection: Collection, table: str) -> dict | None:
+def _zorder_config(manifest: Manifest, table: str) -> dict | None:
     """The manifest's recorded Z-order layout for ``table`` (create's
     ``zorder_by``), or None."""
-    try:
-        cfg = collection.manifest().converter.get("zorder")
-    except FileNotFoundError:
-        return None
+    cfg = manifest.converter.get("zorder")
     if cfg and cfg.get("table") == table and len(cfg.get("cols", [])) == 2:
         return cfg
     return None
@@ -94,11 +92,11 @@ def compact_collection(
     from documents_vector_search_spark.collection.updater import (
         _recover_orphans,
         _swap_partitions,
-        refuse_term_bucket_layout,
     )
 
     tables = list(tables or TABLES)
-    refuse_term_bucket_layout(collection)
+    manifest = collection.checked_manifest()
+    emb_cols = VectorLayout.from_converter(manifest.converter).partition_cols
     _recover_orphans(collection, tables)
     report: dict[str, dict] = {}
     for table in tables:
@@ -106,7 +104,7 @@ def compact_collection(
         if not root.exists():
             continue
         counts = bucket_file_counts(root)
-        zcfg = _zorder_config(collection, table)
+        zcfg = _zorder_config(manifest, table)
         # Z-order tables: updates pre-cluster their rewritten buckets
         # like every other table (one file per directory — optimal
         # between compactions), so file counts cannot signal their
@@ -132,13 +130,7 @@ def compact_collection(
             _clear_degraded(collection, zcfg)
             continue
         df = collection.read(table).filter(F.col(UPDATE_PB_COL).isin(frag))
-        pcols = (
-            VectorLayout.from_converter(
-                collection.manifest().converter
-            ).partition_cols
-            if table == "embeddings"
-            else [UPDATE_PB_COL]
-        )
+        pcols = emb_cols if table == "embeddings" else [UPDATE_PB_COL]
         if zcfg:
             # the manifest records a Z-order layout for this table:
             # re-cluster the fragmented buckets instead of a plain

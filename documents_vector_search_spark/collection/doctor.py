@@ -34,12 +34,18 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
     issues: list[dict] = []
     checks = 0
 
-    # -- manifest loads ----------------------------------------------------
+    # -- manifest loads, in the current format -----------------------------
     checks += 1
     try:
         manifest = collection.manifest()
     except Exception as exc:  # noqa: BLE001 — report, don't crash
         _issue(issues, "manifest_unreadable", f"{type(exc).__name__}: {exc}")
+        return {"ok": False, "checks": checks, "issues": issues}
+    checks += 1
+    try:
+        collection.checked_manifest()
+    except ValueError as exc:
+        _issue(issues, "outdated_format", str(exc))
         return {"ok": False, "checks": checks, "issues": issues}
 
     # -- staging leftovers -------------------------------------------------
@@ -59,10 +65,6 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
     for table in TABLES:
         checks += 1
         if not (collection.root / table).exists():
-            if table == "field_postings":
-                # collections created before the table existed serve
-                # BM25F off the documented chunk-derived fallback
-                continue
             _issue(issues, "table_missing", table)
             continue
         try:
@@ -103,7 +105,7 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
                 )
 
     # -- avgChunkLength recompute -------------------------------------------
-    if manifest.avgChunkLength is not None and "chunks" in counts:
+    if "chunks" in counts:
         checks += 1
         try:
             from documents_vector_search_spark.functions.text import tokenize
@@ -113,7 +115,7 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
             ).first()
             stored = float(row["avgdl"]) if row["avgdl"] is not None else None
             if stored is not None and abs(
-                stored - float(manifest.avgChunkLength)
+                stored - float(manifest.avgChunkLength or 0.0)
             ) > 1e-6:
                 _issue(
                     issues, "avgdl_drift",
@@ -125,7 +127,7 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
             _issue(issues, "avgdl_uncheckable", f"{type(exc).__name__}: {exc}")
 
     # -- fieldStats vs field_postings ----------------------------------------
-    if (collection.root / "field_postings").exists():
+    if "field_postings" in counts:
         checks += 1
         try:
             from documents_vector_search_spark.collection.updater import (
@@ -133,7 +135,7 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
             )
 
             exact = _field_stats_from_table(collection)
-            if manifest.fieldStats is not None and manifest.fieldStats != exact:
+            if manifest.fieldStats != exact:
                 _issue(
                     issues, "field_stats_drift",
                     f"manifest fieldStats={manifest.fieldStats} vs "
@@ -146,8 +148,8 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
             )
 
     # -- embedding dim vs manifest record -------------------------------------
-    emb_cfg = (manifest.converter or {}).get("embedding") or {}
-    if emb_cfg.get("dim") is not None and counts.get("embeddings"):
+    emb_cfg = manifest.converter["embedding"]
+    if counts.get("embeddings"):
         checks += 1
         try:
             row = collection.read("embeddings").select(
@@ -218,7 +220,7 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
                     issues, "deep_uncheckable",
                     f"{derived}: {type(exc).__name__}: {exc}",
                 )
-        if (collection.root / "field_postings").exists():
+        if "field_postings" in counts:
             checks += 1
             try:
                 doc_ids = collection.read("documents").select(

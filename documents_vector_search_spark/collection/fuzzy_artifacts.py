@@ -43,13 +43,14 @@ per batch. Instead:
   self-consistent (base, live-deltas) pair. Retired batch dirs are
   garbage-collected lazily by the next update.
 
-Crash contract (same as the document tables' one-batch-stale
-guarantee): batch appends stage under ``<table>__tmp`` and publish by
-directory rename; a crash between the two tables' appends leaves the
-dictionary at most one batch stale for one of the two probes, and
-``refit-fuzzy`` (= a forced compaction) rebuilds from postings.
-Collections whose vocab predates the partitioned layout fall back to
-the legacy vocabulary-sized full regeneration.
+Crash contract: batch appends stage under ``<table>__tmp`` and
+publish by directory rename, the vocab rename last, so readers never
+see half a batch. An update or delete that dies after its table swap
+leaves the manifest's ``inFlight`` record, and the next writer rebuilds
+both artifacts from postings with :func:`compact_fuzzy_artifacts` (the
+``refit-fuzzy`` path) before its own batch (collection/updater.py
+``_exact_recount``). A collection whose vocab is not partitioned by
+term_bucket is refused by ``Collection.checked_manifest``.
 """
 
 from __future__ import annotations
@@ -75,13 +76,6 @@ N_VARIANT_BUCKETS = 64
 DEFAULT_MAX_EDITS = 1
 DEFAULT_COMPACT_AFTER = 8
 _STATE_FILE = "_delta_state.json"
-
-
-def fuzzy_config(manifest) -> dict | None:
-    try:
-        return manifest.converter.get("fuzzy")
-    except Exception:  # noqa: BLE001 — manifests predating the field
-        return None
 
 
 def deletion_index_df(vocab: DataFrame, max_edits: int = DEFAULT_MAX_EDITS) -> DataFrame:
@@ -297,7 +291,7 @@ def _publish_batch(
 
 
 def _committed_batches(collection) -> set[int]:
-    """Batch ids the append COMMITTED: apply_vocab_delta renames the
+    """Batch ids the append COMMITTED: publish_vocab_delta renames the
     vocab batch LAST, so presence in the vocab log is the commit
     marker — a deletion-index batch without its vocab twin is the
     orphan of a crash between the two renames and must stay invisible
@@ -339,15 +333,8 @@ def stage_vocab_delta(
     base, the live logs, or any swapped table — so the updater runs it
     CONCURRENTLY with its partition swap; a crash here leaves orphan
     ``__tmp`` dirs that ``_gc_retired_batches`` sweeps. Returns the
-    handle :func:`publish_vocab_delta` consumes (None = empty delta,
-    ``{"legacy": True}`` = unpartitioned-vocab collection, whose full
-    rewrite must wait for publish time because it rewrites the base)."""
-    spark = collection.spark
-    delta = spark.read.parquet(delta_path)
-    # layout sniffed from the directory, not a Spark read: listing every
-    # term_bucket directory costs a file-listing job per update
-    if any(Path(collection.table_path(VOCAB_TABLE)).glob("*.parquet")):
-        return {"legacy": True}
+    handle :func:`publish_vocab_delta` consumes (None = empty delta)."""
+    delta = collection.spark.read.parquet(delta_path)
     if not delta.head(1):
         return None  # empty delta (idempotent re-send) — nothing changed
 
@@ -389,7 +376,6 @@ def stage_vocab_delta(
 def publish_vocab_delta(
     collection,
     staged: dict | None,
-    delta_path: str,
     max_edits: int = DEFAULT_MAX_EDITS,
     compact_after: int = DEFAULT_COMPACT_AFTER,
 ) -> None:
@@ -403,23 +389,6 @@ def publish_vocab_delta(
     leave fuzzy one batch AHEAD of postings on a crash)."""
     if staged is None:
         return
-    if staged.get("legacy"):
-        spark = collection.spark
-        # re-read at publish time (after the document swap) so the full
-        # rewrite sees the post-swap state; short-circuit an empty
-        # delta — the bucketed path no-ops in stage_vocab_delta, and
-        # without this mirror an idempotent empty re-send would pay the
-        # whole O(vocab) legacy rewrite for nothing
-        delta = spark.read.parquet(delta_path)
-        if not delta.head(1):
-            return
-        _apply_vocab_delta_full(
-            collection,
-            delta,
-            collection.read(VOCAB_TABLE),
-            max_edits,
-        )
-        return
     batch_id = _next_batch_id(collection)
     _publish_batch(
         collection, DELETION_INDEX_DELTAS_TABLE, batch_id, staged["tmp_didx"]
@@ -430,23 +399,6 @@ def publish_vocab_delta(
     live = _batch_dirs(collection, VOCAB_DELTAS_TABLE)
     if len(live) >= compact_after:
         compact_fuzzy_artifacts(collection, max_edits)
-
-
-def apply_vocab_delta(
-    collection,
-    delta_path: str,
-    max_edits: int = DEFAULT_MAX_EDITS,
-    compact_after: int = DEFAULT_COMPACT_AFTER,
-) -> None:
-    """Stage + publish in one call (the non-overlapped form; the
-    updater overlaps staging with its partition swap instead)."""
-    publish_vocab_delta(
-        collection,
-        stage_vocab_delta(collection, delta_path, max_edits),
-        delta_path,
-        max_edits,
-        compact_after,
-    )
 
 
 # -- folded readers ---------------------------------------------------------
@@ -529,46 +481,3 @@ def read_deletion_index(collection, base: DataFrame | None = None) -> DataFrame:
         .filter(F.col("ctf") > 0)
         .select("term", "ctf", "df", "variant", "variant_bucket")
     )
-
-
-# -- legacy (pre-partitioned-vocab collections) -----------------------------
-
-
-def _apply_vocab_delta_full(
-    collection,
-    delta: DataFrame,
-    vocab: DataFrame,
-    max_edits: int = DEFAULT_MAX_EDITS,
-) -> None:
-    """Legacy path for collections whose vocab predates the
-    term_bucket layout: full-table merge + vocabulary-sized deletion
-    index regeneration through staged whole-table swaps. ``refit-fuzzy``
-    rebuilds into the partitioned layout."""
-    spark = collection.spark
-    merged = (
-        vocab.join(delta, "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce("ctf", F.lit(0)) + F.coalesce("d_ctf", F.lit(0))).alias("ctf"),
-            (F.coalesce("df", F.lit(0)) + F.coalesce("d_df", F.lit(0))).alias("df"),
-        )
-        .filter(F.col("ctf") > 0)
-    )
-
-    # staged: materialize BOTH to __tmp while readers see intact tables
-    tmp_vocab = Path(collection.table_path(f"{VOCAB_TABLE}__tmp"))
-    merged.write.mode("overwrite").parquet(str(tmp_vocab))
-    new_vocab = spark.read.parquet(str(tmp_vocab))
-    tmp_didx = Path(collection.table_path(f"{DELETION_INDEX_TABLE}__tmp"))
-    deletion_index_df(new_vocab, max_edits).repartition(
-        N_VARIANT_BUCKETS, F.col("variant_bucket")
-    ).write.mode("overwrite").partitionBy("variant_bucket").parquet(str(tmp_didx))
-
-    for table, tmp in ((VOCAB_TABLE, tmp_vocab), (DELETION_INDEX_TABLE, tmp_didx)):
-        final = Path(collection.table_path(table))
-        old = final.with_name(f"{table}__old")
-        if final.exists():
-            final.rename(old)
-        tmp.rename(final)
-        if old.exists():
-            shutil.rmtree(old)

@@ -22,15 +22,15 @@ class Manifest:
     numberOfChunks: int = 0
     # mean token count per chunk (BM25 avgdl): persisted at build time
     # so a serving process never pays a corpus-stats job per searcher.
-    # None in manifests written before this field existed — the
-    # searcher falls back to computing it.
+    # None only at zero chunks; Collection.checked_manifest refuses a
+    # manifest without it that has chunks.
     avgChunkLength: float | None = None
     # per-field document-length stats for BM25F serving:
     # {field: {"docs": n docs where the field is non-empty,
     #          "sumFl": their total field token length}} — avgfl =
-    # sumFl/docs with zero corpus-stats jobs per searcher. None in
-    # manifests written before field_postings existed (the searcher
-    # falls back to computing it).
+    # sumFl/docs with zero corpus-stats jobs per searcher. Every create
+    # writes it; Collection.checked_manifest refuses a manifest
+    # without it.
     fieldStats: dict | None = None
     lastIndexItemId: int = -1
     # set (``{"op": "update"|"delete"}``) by the updater's save just

@@ -60,7 +60,7 @@ def refit_ivf(collection: Collection, sample_rows: int | None = None) -> dict:
         _swap_all,
     )
 
-    manifest: Manifest = collection.manifest()
+    manifest: Manifest = collection.checked_manifest()
     layout = VectorLayout.from_converter(manifest.converter)
     if not layout.ivf:
         raise ValueError(
@@ -101,7 +101,7 @@ def refit_sq8(collection: Collection) -> dict:
         _swap_all,
     )
 
-    manifest: Manifest = collection.manifest()
+    manifest: Manifest = collection.checked_manifest()
     layout = VectorLayout.from_converter(manifest.converter)
     if not layout.sq8:
         raise ValueError(
@@ -163,7 +163,7 @@ def refit_topics(collection: Collection, sample_rows: int | None = None) -> dict
         topic_terms,
     )
 
-    manifest: Manifest = collection.manifest()
+    manifest: Manifest = collection.checked_manifest()
     cfg = manifest.converter.get("topics")
     if not cfg:
         raise ValueError(

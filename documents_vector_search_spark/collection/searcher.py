@@ -81,13 +81,13 @@ class CollectionSearcher:
         if rrf_k < 1:
             raise ValueError("rrf_k must be >= 1")
         self.collection = collection
+        self._manifest = collection.checked_manifest()
         self.rrf_k = rrf_k
-        # embedding dim resolves lazily against the manifest's recorded
-        # embedder identity (see the embedding_dim property): an explicit
-        # mismatching arg RAISES instead of silently reconstructing
-        # different LSH hyperplanes / probing wrong IVF centroids
+        # checked against the manifest's recorded dim on use (see the
+        # embedding_dim property): a mismatching arg RAISES instead of
+        # silently reconstructing different LSH hyperplanes / probing
+        # wrong IVF centroids
         self._embedding_dim_arg = embedding_dim
-        self._embedding_dim: int | None = None
         self.field_types = field_types or {}
         self._cache_tables = cache_tables
         self._cached: dict[str, DataFrame] = {}
@@ -96,8 +96,6 @@ class CollectionSearcher:
         self.pq_shortlist_factor = pq_shortlist_factor
         self.sq8_shortlist_factor = sq8_shortlist_factor
         self._vector_layout: VectorLayout | None = None
-        self._corpus_stats: tuple[int, float] | None = None
-        self._bm25f_stats: dict[str, float] | None = None
         if cache_tables:
             self._warm_cache()
 
@@ -116,51 +114,33 @@ class CollectionSearcher:
         persist lazily on their first ``_read``."""
         from concurrent.futures import ThreadPoolExecutor
 
-        root = self.collection.root
-        present = [
-            t
-            for t in _WARM_TABLES
-            if (root / t).exists() or (root / f"{t}__old").exists()
-        ]
         # plan construction (and the _cached dict fill) stays serial —
         # _read is not thread-safe; only the materialization fans out
-        frames = [self._read(t) for t in present]
+        frames = [
+            self._read(t) for t in _WARM_TABLES if self.collection.has_table(t)
+        ]
         with ThreadPoolExecutor(max_workers=max(1, len(frames))) as pool:
             list(pool.map(lambda df: df.count(), frames))
 
     @property
     def embedding_dim(self) -> int:
-        """Vector dimension, resolved once: the manifest's recorded
-        ``converter.embedding.dim`` wins (a collection knows how it was
-        embedded); an explicit constructor arg is validated against it.
-        Manifests written before the field existed fall back to the arg
-        (or the historical default 16)."""
-        if self._embedding_dim is None:
-            recorded: int | None = None
-            try:
-                cfg = self.collection.manifest().converter.get("embedding")
-                if cfg and cfg.get("dim") is not None:
-                    recorded = int(cfg["dim"])
-            except FileNotFoundError:
-                pass
-            if (
-                recorded is not None
-                and self._embedding_dim_arg is not None
-                and recorded != self._embedding_dim_arg
-            ):
-                raise ValueError(
-                    f"embedding_dim={self._embedding_dim_arg} does not match "
-                    f"the collection's recorded dim={recorded}; searching "
-                    "with a different dim would derive different "
-                    "hyperplanes/probe buckets and silently return wrong "
-                    "results"
-                )
-            self._embedding_dim = (
-                recorded
-                if recorded is not None
-                else (self._embedding_dim_arg or 16)
+        """Vector dimension: the manifest's recorded
+        ``converter.embedding.dim`` (a collection knows how it was
+        embedded); an explicit constructor arg is validated against
+        it."""
+        recorded = int(self._manifest.converter["embedding"]["dim"])
+        if (
+            self._embedding_dim_arg is not None
+            and recorded != self._embedding_dim_arg
+        ):
+            raise ValueError(
+                f"embedding_dim={self._embedding_dim_arg} does not match "
+                f"the collection's recorded dim={recorded}; searching "
+                "with a different dim would derive different "
+                "hyperplanes/probe buckets and silently return wrong "
+                "results"
             )
-        return self._embedding_dim
+        return recorded
 
     def _read(self, table: str) -> DataFrame:
         if not self._cache_tables:
@@ -170,25 +150,24 @@ class CollectionSearcher:
         return self._cached[table]
 
     def refresh(self) -> None:
-        """Drop every cached table, config, and corpus statistic so the
-        next search reads the collection's CURRENT state — a long-lived
-        serving process must call this after an update / delete / refit
-        / compact. Without it, cached frames keep serving the
-        pre-mutation rows from executor memory, and worse: their pinned
-        file list points at swapped-away parquet, so an evicted
-        partition recompute FAILS on missing files. (The reference's
-        MCP adapter side-steps this by recreating its searcher per
-        collection load; refresh() is the in-place equivalent.)"""
+        """Re-read (and re-check) the manifest and drop every cached
+        table and config so the next search reads the collection's
+        CURRENT state — a long-lived serving process must call this
+        after an update / delete / refit / compact. Without it, cached
+        frames keep serving the pre-mutation rows from executor memory,
+        and worse: their pinned file list points at swapped-away
+        parquet, so an evicted partition recompute FAILS on missing
+        files. (The reference's MCP adapter side-steps this by
+        recreating its searcher per collection load; refresh() is the
+        in-place equivalent.)"""
         for df in self._cached.values():
             try:
                 df.unpersist()
             except Exception:  # noqa: BLE001 — refresh must not fail
                 pass
         self._cached = {}
+        self._manifest = self.collection.checked_manifest()
         self._vector_layout = None
-        self._corpus_stats = None
-        self._bm25f_stats = None
-        self._embedding_dim = None
 
     # -- internals ---------------------------------------------------------
     def _allowed_chunks(self, metadata_filter: str | None) -> DataFrame | None:
@@ -212,15 +191,10 @@ class CollectionSearcher:
 
     def _layout(self) -> VectorLayout:
         """The collection's vector layout (collection/vector_layout.py),
-        read from the manifest once per :meth:`refresh`; flat when the
-        collection has no manifest."""
+        read from the manifest once per :meth:`refresh`."""
         if self._vector_layout is None:
-            try:
-                converter = self.collection.manifest().converter
-            except FileNotFoundError:
-                converter = {}
             self._vector_layout = VectorLayout.from_converter(
-                converter, self.embedding_dim
+                self._manifest.converter
             )
         return self._vector_layout
 
@@ -329,25 +303,9 @@ class CollectionSearcher:
     def _bm25_corpus_stats(self) -> tuple[int, float]:
         """(n_chunks, avgdl) — corpus constants, embedded as literals in
         every query plan. Read from the manifest (persisted at
-        build/update time) so a fresh searcher pays ZERO jobs for them;
-        the aggregate over doc_stats remains as the fallback for
-        manifests written before avgChunkLength existed."""
-        if self._corpus_stats is None:
-            try:
-                m = self.collection.manifest()
-                if m.avgChunkLength is not None and m.numberOfChunks:
-                    self._corpus_stats = (
-                        int(m.numberOfChunks),
-                        float(m.avgChunkLength),
-                    )
-                    return self._corpus_stats
-            except FileNotFoundError:
-                pass
-            row = self._read("doc_stats").agg(
-                F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-            ).first()
-            self._corpus_stats = (int(row["n"]), float(row["avgdl"] or 0.0))
-        return self._corpus_stats
+        build/update time) so a searcher pays ZERO jobs for them."""
+        m = self._manifest
+        return int(m.numberOfChunks), float(m.avgChunkLength or 0.0)
 
     def _lengths_unless_dl(self, postings: DataFrame) -> DataFrame | None:
         """doc_stats for BM25 scoring only when the postings carry no
@@ -409,71 +367,18 @@ class CollectionSearcher:
         )
         return hits.select("chunk_id", "score")
 
-    def _has_field_postings(self) -> bool:
-        """True when the collection materialized the document-level
-        field_postings table (collections created before it existed
-        serve BM25F off the chunk-derived approximation instead)."""
-        root = self.collection.root
-        return (root / "field_postings").exists() or (
-            root / "field_postings__old"
-        ).exists()
-
     def _bm25f_field_stats(self) -> dict[str, float]:
         """Per-field average DOCUMENT field length {field: avgfl},
         averaged over documents where the field is non-empty
         (bm25f_topk's convention) — corpus constants embedded as
-        literals in every BM25F plan.
-
-        Resolution order: the manifest's create/update-maintained
-        ``fieldStats`` (zero jobs, the avgChunkLength discipline), else
-        one aggregate over field_postings, else — collections predating
-        field_postings — per-document sums of chunk dl (approximate
-        when chunk_overlap > 0: overlap tokens count once per chunk)."""
-        if self._bm25f_stats is None:
-            stats: dict[str, float] | None = None
-            try:
-                fs = self.collection.manifest().fieldStats
-            except FileNotFoundError:
-                fs = None
-            if fs:
-                stats = {
-                    name: float(rec["sumFl"]) / float(rec["docs"])
-                    for name, rec in fs.items()
-                    if rec.get("docs")
-                }
-            if stats is None:
-                if self._has_field_postings():
-                    rows = (
-                        self._read("field_postings")
-                        .select("document_id", "field", "fl")
-                        .distinct()
-                        .groupBy("field")
-                        .agg(F.avg("fl").alias("avgfl"))
-                        .collect()
-                    )
-                else:
-                    meta = self._read("chunks").select(
-                        "chunk_id", "document_id", "chunk_number"
-                    )
-                    ds = self._read("doc_stats").select("chunk_id", "dl")
-                    rows = (
-                        ds.join(meta, "chunk_id")
-                        .withColumn(
-                            "field",
-                            F.when(
-                                F.col("chunk_number") == 0, "title"
-                            ).otherwise("body"),
-                        )
-                        .groupBy("document_id", "field")
-                        .agg(F.sum("dl").alias("fl"))
-                        .filter(F.col("fl") > 0)
-                        .groupBy("field")
-                        .agg(F.avg("fl").alias("avgfl"))
-                        .collect()
-                    )
-                stats = {r["field"]: float(r["avgfl"]) for r in rows}
-            self._bm25f_stats = stats
-        return self._bm25f_stats
+        literals in every BM25F plan, read from the manifest's
+        create/update-maintained ``fieldStats`` (zero jobs, the
+        avgChunkLength discipline)."""
+        return {
+            name: float(rec["sumFl"]) / float(rec["docs"])
+            for name, rec in self._manifest.fieldStats.items()
+            if rec.get("docs")
+        }
 
     def search_documents_bm25f(
         self,
@@ -495,10 +400,8 @@ class CollectionSearcher:
 
         Plan shape: ONE term-filtered scan of the document-level
         field_postings table (tf, fl, and df all exact from the
-        document text — see _bm25f_doc_pseudo, which also documents the
-        chunk-derived legacy fallback for collections predating the
-        table), per-field averages embedded as manifest-backed
-        searcher-cached literals, one TakeOrdered.
+        document text — see _bm25f_doc_pseudo), per-field averages
+        embedded as manifest-backed literals, one TakeOrdered.
 
         ``metadata_filter`` restricts candidate documents (compiled
         predicate on the documents table, same mini-language as
@@ -562,44 +465,19 @@ class CollectionSearcher:
         out from these — the expensive work (ONE pruned scan) happens
         ONCE however many queries share it.
 
-        Primary path: the document-level ``field_postings`` table
+        The source is the document-level ``field_postings`` table
         (operators/bm25.py build_field_postings) — built from the
         document TEXT at create/update time, so tf, fl, and df are
         exact under any chunk_overlap, and the whole query is one
-        term-filtered scan with no chunk-meta join at all.
-        Legacy path (collections predating the table): re-aggregate
-        chunk postings by (document, field) — approximate when
-        chunk_overlap > 0 (overlap tokens count once per chunk)."""
+        term-filtered scan with no chunk-meta join at all."""
         from documents_vector_search_spark.operators.bm25 import B
 
-        if self._has_field_postings():
-            fp = self._read("field_postings")
-            matched = fp.filter(F.col("term").isin(all_terms)).select(
-                "document_id", "field", "term", "tf", "fl"
-            )
-            tf = matched
-            doc_term = matched.select("document_id", "term")
-        else:
-            postings = self._read("postings")
-            chunk_matched = postings.filter(
-                F.col("term").isin(all_terms)
-            ).select("chunk_id", "term", "tf")
-
-            meta = self._read("chunks").select(
-                "chunk_id", "document_id", "chunk_number"
-            )
-            field = F.when(F.col("chunk_number") == 0, "title").otherwise(
-                "body"
-            )
-            tf = (
-                chunk_matched.join(meta, "chunk_id")
-                .withColumn("field", field)
-                .groupBy("document_id", "field", "term")
-                .agg(F.sum("tf").cast("bigint").alias("tf"))
-            )
-            doc_term = chunk_matched.join(
-                meta.select("chunk_id", "document_id"), "chunk_id"
-            ).select("document_id", "term")
+        tf = (
+            self._read("field_postings")
+            .filter(F.col("term").isin(all_terms))
+            .select("document_id", "field", "term", "tf", "fl")
+        )
+        doc_term = tf.select("document_id", "term")
 
         if metadata_filter:
             docs = self._read("documents")
@@ -615,21 +493,6 @@ class CollectionSearcher:
                 F.col("id").alias("document_id")
             )
             tf = tf.join(F.broadcast(allowed_docs), "document_id", "left_semi")
-
-        if "fl" not in tf.columns:
-            # legacy path: field lengths reconstructed from chunk token
-            # counts, for CANDIDATE documents only
-            cand = tf.select("document_id").distinct()
-            fl = (
-                self._read("doc_stats")
-                .select("chunk_id", "dl")
-                .join(meta, "chunk_id")
-                .join(cand, "document_id", "left_semi")
-                .withColumn("field", field)
-                .groupBy("document_id", "field")
-                .agg(F.sum("dl").cast("bigint").alias("fl"))
-            )
-            tf = tf.join(fl, ["document_id", "field"])
 
         avgfl = self._bm25f_field_stats()
         w_expr = F.coalesce(
@@ -671,11 +534,7 @@ class CollectionSearcher:
             .groupBy("term")
             .agg(F.count("*").cast("bigint").alias("_df"))
         )
-        try:
-            n_docs = int(self.collection.manifest().numberOfDocuments)
-        except FileNotFoundError:
-            n_docs = self._read("documents").select("id").distinct().count()
-        return pseudo, df_per_term, n_docs
+        return pseudo, df_per_term, int(self._manifest.numberOfDocuments)
 
     def search_documents_bm25f_many(
         self,
@@ -838,18 +697,13 @@ class CollectionSearcher:
             md5_hash64_py,
         )
 
-        try:
-            ub = self.collection.manifest().converter.get("updateBuckets")
-        except FileNotFoundError:
-            ub = None
+        pb = md5_hash64_py(document_id) % int(
+            self._manifest.converter["updateBuckets"]
+        )
 
         def _pruned_to_doc(df: DataFrame) -> DataFrame:
             # partition-prune the point lookup to the owning bucket
-            if ub and UPDATE_PB_COL in df.columns:
-                return df.filter(
-                    F.col(UPDATE_PB_COL) == md5_hash64_py(document_id) % ub
-                )
-            return df
+            return df.filter(F.col(UPDATE_PB_COL) == pb)
 
         if method == "vector":
             own_chunks = _pruned_to_doc(self._read("chunks")).filter(
@@ -911,29 +765,17 @@ class CollectionSearcher:
             tf[t] = tf.get(t, 0) + 1
         candidates = sorted(tf)
 
-        if self._has_field_postings():
-            df_rows = (
-                self._read("field_postings")
-                .filter(F.col("term").isin(candidates))
-                .select("document_id", "term")
-                .distinct()
-                .groupBy("term")
-                .agg(F.count("*").alias("df"))
-                .collect()
-            )
-        else:
-            df_rows = (
-                self._read("postings")
-                .filter(F.col("term").isin(candidates))
-                .groupBy("term")
-                .agg(F.count("*").alias("df"))
-                .collect()
-            )
+        df_rows = (
+            self._read("field_postings")
+            .filter(F.col("term").isin(candidates))
+            .select("document_id", "term")
+            .distinct()
+            .groupBy("term")
+            .agg(F.count("*").alias("df"))
+            .collect()
+        )
         df_map = {r["term"]: int(r["df"]) for r in df_rows}
-        try:
-            n_docs = max(int(self.collection.manifest().numberOfDocuments), 1)
-        except FileNotFoundError:
-            n_docs = max(len(df_map), 1)
+        n_docs = max(int(self._manifest.numberOfDocuments), 1)
         import math
 
         scored_terms = sorted(
@@ -982,11 +824,7 @@ class CollectionSearcher:
         )
 
         terms = _query_terms(text)
-        fuzzy_cfg = None
-        try:
-            fuzzy_cfg = self.collection.manifest().converter.get("fuzzy")
-        except FileNotFoundError:
-            pass
+        fuzzy_cfg = self._manifest.converter.get("fuzzy")
         if fuzzy_cfg:
             from documents_vector_search_spark.collection.fuzzy_artifacts import (
                 DELETION_INDEX_TABLE,

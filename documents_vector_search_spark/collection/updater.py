@@ -17,10 +17,9 @@ at most batch-doc-count buckets. The merge reads ONLY those partitions
 the fresh rows, writes the result to a ``__tmp`` staging dir, and
 swaps just those partition directories. Cost: O(batch + batch_docs ×
 corpus/update_buckets), not O(corpus). Manifest stats update
-incrementally from one fused statistics job. The manifest must record
-``converter.updateBuckets`` (every create does); one without it is
-refused — its tables carry no ``_pb`` level to prune and swap on, so
-the collection has to be re-created.
+incrementally from one fused statistics job. A collection in an older
+on-disk format is refused before any directory changes
+(``Collection.checked_manifest``).
 
 The swap is not crash-ATOMIC (single-writer; a Delta/Iceberg MERGE is
 the transactional upgrade on a real deployment), but it is crash
@@ -36,9 +35,10 @@ RECOVERABLE and a re-run CONVERGES:
   uninterrupted run;
 * before the first swap the manifest is saved with an ``inFlight``
   record, cleared by the final save. A writer that finds the record
-  recounts the manifest from the tables (:func:`_exact_recount`)
-  before its own batch, so the incremental arithmetic never applies
-  to counts a crashed batch left half-updated.
+  recounts the manifest from the tables (:func:`_exact_recount`) and
+  rebuilds the fuzzy artifacts from postings before its own batch, so
+  the incremental arithmetic never applies to counts or a vocabulary
+  a crashed batch left half-updated.
 
 Each swap also invalidates Spark's cached data for the swapped table:
 ``Collection.read`` re-reads the same Parquet path, so a serving
@@ -181,6 +181,27 @@ def _swap_all(
         _refresh_cached(collection, table)
 
 
+def _stage_schema_file(
+    rows: DataFrame, live: Path, tmp: Path, wanted: set[int]
+) -> None:
+    """Stage one empty file (``rows`` without its partition columns)
+    in the first affected directory when the merge leaves the table no
+    rows in any bucket: with no data file Spark cannot infer the
+    table's schema, and the next update or search of the emptied
+    collection would fail."""
+    prefix = f"{UPDATE_PB_COL}="
+    first = None
+    for f in live.rglob("*.parquet"):
+        d = next(p for p in f.parents if p.name.startswith(prefix))
+        if int(d.name[len(prefix):]) not in wanted:
+            return  # another bucket keeps rows, and the schema
+        first = first or d
+    if first is not None:
+        rows.limit(0).write.mode("overwrite").parquet(
+            str(tmp / first.relative_to(live))
+        )
+
+
 def _swap_partitions(
     collection: Collection,
     merged: dict[str, DataFrame],
@@ -224,7 +245,13 @@ def _swap_partitions(
         writer = df.write.mode("overwrite")
         if cols:
             writer = writer.partitionBy(*cols)
-        writer.parquet(str(Path(collection.table_path(f"{table}__tmp"))))
+        tmp = Path(collection.table_path(f"{table}__tmp"))
+        writer.parquet(str(tmp))
+        if not any(tmp.rglob("*.parquet")):
+            _stage_schema_file(
+                df.drop(*cols), Path(collection.table_path(table)), tmp,
+                set(affected_pbs[table]),
+            )
 
     with ThreadPoolExecutor(max_workers=len(merged)) as pool:
         list(pool.map(_stage, merged.items()))
@@ -275,15 +302,14 @@ def _materialize_fuzzy_delta(
     vocabulary delta from the changed postings rows only and WRITE it
     (post-swap lazy reads of the postings path would see merged data).
     Returns the delta path, or None when the collection carries no
-    fuzzy artifacts. Crash between the main swap and the apply leaves
-    the dictionary one batch stale — suggestions degrade gracefully,
-    and `refit-fuzzy` rebuilds from postings."""
+    fuzzy artifacts. A crash between the main swap and the publish
+    leaves the ``inFlight`` record, and the next writer rebuilds the
+    artifacts from postings (:func:`_exact_recount`)."""
     from documents_vector_search_spark.collection.fuzzy_artifacts import (
-        fuzzy_config,
         vocab_delta,
     )
 
-    if not fuzzy_config(manifest):
+    if not manifest.converter.get("fuzzy"):
         return None
     path = str(Path(collection.table_path("vocab_delta__tmp")))
     vocab_delta(fresh_postings, stale_postings).write.mode(
@@ -302,11 +328,10 @@ def _stage_fuzzy_delta(
         return None
     from documents_vector_search_spark.collection.fuzzy_artifacts import (
         DEFAULT_MAX_EDITS,
-        fuzzy_config,
         stage_vocab_delta,
     )
 
-    cfg = fuzzy_config(manifest) or {}
+    cfg = manifest.converter["fuzzy"]
     return stage_vocab_delta(
         collection,
         delta_path,
@@ -328,15 +353,13 @@ def _apply_fuzzy_delta(
     from documents_vector_search_spark.collection.fuzzy_artifacts import (
         DEFAULT_COMPACT_AFTER,
         DEFAULT_MAX_EDITS,
-        fuzzy_config,
         publish_vocab_delta,
     )
 
-    cfg = fuzzy_config(manifest) or {}
+    cfg = manifest.converter["fuzzy"]
     publish_vocab_delta(
         collection,
         staged,
-        delta_path,
         max_edits=int(cfg.get("maxEdits", DEFAULT_MAX_EDITS)),
         compact_after=int(cfg.get("compactAfter", DEFAULT_COMPACT_AFTER)),
     )
@@ -408,14 +431,15 @@ def _apply_stats(manifest: Manifest, stats: dict) -> None:
     manifest.numberOfChunks = max(0, new_n)
     if new_n <= 0:
         manifest.avgChunkLength = None
-    elif manifest.avgChunkLength is not None:
+    else:
+        # None at zero chunks: a refilled collection starts from 0
         total = (
-            manifest.avgChunkLength * old_n
+            (manifest.avgChunkLength or 0.0) * old_n
             - get("stale", "_chunks")["total"]
             + get("fresh", "_chunks")["total"]
         )
         manifest.avgChunkLength = max(float(total), 0.0) / new_n
-    for name, rec in (manifest.fieldStats or {}).items():
+    for name, rec in manifest.fieldStats.items():
         rec["docs"] = max(
             0,
             int(rec["docs"])
@@ -444,13 +468,17 @@ def _apply_stats(manifest: Manifest, stats: dict) -> None:
 
 def _exact_recount(collection: Collection, manifest: Manifest) -> Manifest:
     """Recompute the manifest's table-derived stats from the stored
-    tables, clear the in-flight record, and persist.
+    tables, rebuild the fuzzy artifacts from postings, clear the
+    in-flight record, and persist.
 
     Run by a writer that finds the ``inFlight`` record of a batch that
     died between its first swap and its manifest save. Under the
     counter id strategy lastIndexItemId also moves past every stored
     chunk id, so the next batch's fresh ids cannot collide with chunks
-    the interrupted batch already committed."""
+    the interrupted batch already committed. The interrupted batch may
+    have merged postings without publishing its vocabulary delta, and
+    a re-run's delta is computed against the merged postings, so the
+    fuzzy artifacts are rebuilt (the ``refit-fuzzy`` compaction)."""
     stats = collection.read("chunks").agg(
         F.count("*").alias("n"),
         F.avg(F.size(tokenize("indexed_data"))).alias("avgdl"),
@@ -461,8 +489,7 @@ def _exact_recount(collection: Collection, manifest: Manifest) -> Manifest:
     manifest.avgChunkLength = (
         float(stats["avgdl"]) if stats["avgdl"] is not None else None
     )
-    if (collection.root / "field_postings").exists():
-        manifest.fieldStats = _field_stats_from_table(collection)
+    manifest.fieldStats = _field_stats_from_table(collection)
     if (
         manifest.converter.get("idStrategy", "counter") == "counter"
         and stats["last"] is not None
@@ -470,45 +497,27 @@ def _exact_recount(collection: Collection, manifest: Manifest) -> Manifest:
         manifest.lastIndexItemId = max(
             manifest.lastIndexItemId, int(stats["last"])
         )
+    fuzzy = manifest.converter.get("fuzzy")
+    if fuzzy:
+        from documents_vector_search_spark.collection.fuzzy_artifacts import (
+            DEFAULT_MAX_EDITS,
+            compact_fuzzy_artifacts,
+        )
+
+        compact_fuzzy_artifacts(
+            collection, int(fuzzy.get("maxEdits", DEFAULT_MAX_EDITS))
+        )
     manifest.inFlight = None
     collection.save_manifest(manifest)
     return manifest
 
 
-def refuse_term_bucket_layout(collection: Collection) -> None:
-    """Refuse to write a collection whose postings or field_postings
-    still carry ``term_bucket=*`` directories (created before the
-    term-sorted one-file-per-bucket layout): a merge would stage
-    ``_pb``-only directories beside them, a layout Spark cannot read
-    back. Searches still read it correctly (``term IN`` alone is the
-    same predicate)."""
-    stale = [
-        t
-        for t in TERM_SORTED_TABLES
-        if next((collection.root / t).glob("term_bucket=*"), None)
-    ]
-    if stale:
-        raise ValueError(
-            f"collection '{collection.name}' stores {' and '.join(stale)} "
-            "partitioned by term_bucket, a layout updates, deletes and "
-            "compaction no longer write — re-create the collection"
-        )
-
-
 def _open_for_write(collection: Collection) -> Manifest:
     """Load the manifest and recover an interrupted earlier write:
-    refuse a manifest without ``updateBuckets`` and the term_bucket
-    postings layout (before touching any directory), roll back
-    half-swapped partitions and drop orphaned staging dirs, and
+    refuse an outdated format (before touching any directory), roll
+    back half-swapped partitions and drop orphaned staging dirs, and
     recount the manifest when it carries an ``inFlight`` record."""
-    manifest = collection.manifest()
-    if not manifest.converter.get("updateBuckets"):
-        raise ValueError(
-            f"collection '{collection.name}' records no updateBuckets in "
-            "its manifest: its tables carry no _pb partition level for "
-            "an update or delete to merge on — re-create the collection"
-        )
-    refuse_term_bucket_layout(collection)
+    manifest = collection.checked_manifest()
     _recover_orphans(collection, [*TABLES, *_FUZZY_TABLES])
     if manifest.inFlight is not None:
         manifest = _exact_recount(collection, manifest)
@@ -553,12 +562,11 @@ def _merge(
 
     # swap ORDER is the crash-convergence contract: derived tables
     # first, then chunks, documents last (dict order drives the swap)
-    has_fp = (collection.root / "field_postings").exists()
     tables = [
         "embeddings",
         "postings",
         "doc_stats",
-        *(["field_postings"] if has_fp else []),
+        "field_postings",
         "chunks",
         "documents",
     ]
@@ -625,21 +633,20 @@ def _merge(
                 wm=F.col("last_modified_at"),
             ),
         ]
-    if has_fp and manifest.fieldStats is not None:
-        fp_sides = {
-            "stale": old["field_postings"].join(
-                doc_keys, "document_id", "left_semi"
-            ),
-            **({"fresh": fresh["field_postings"]} if fresh else {}),
-        }
-        legs += [
-            _stat_leg(
-                fp.select("document_id", "field", "fl").distinct(),
-                side, F.col("field"),
-                length=F.col("fl"),
-            )
-            for side, fp in fp_sides.items()
-        ]
+    fp_sides = {
+        "stale": old["field_postings"].join(
+            doc_keys, "document_id", "left_semi"
+        ),
+        **({"fresh": fresh["field_postings"]} if fresh else {}),
+    }
+    legs += [
+        _stat_leg(
+            fp.select("document_id", "field", "fl").distinct(),
+            side, F.col("field"),
+            length=F.col("fl"),
+        )
+        for side, fp in fp_sides.items()
+    ]
     stats_df = (
         reduce(DataFrame.unionByName, legs)
         .groupBy("_side", "part")
@@ -741,20 +748,13 @@ def update_collection(
     title_from_text = bool(manifest.converter.get("titleFromText"))
     title_col = title_col or manifest.converter.get("titleCol")
 
-    emb_cfg = manifest.converter.get("embedding") or {}
-    recorded_dim = emb_cfg.get("dim")
-    if (
-        recorded_dim is not None
-        and embedding_dim is not None
-        and int(recorded_dim) != embedding_dim
-    ):
+    emb_cfg = manifest.converter["embedding"]
+    recorded_dim = int(emb_cfg["dim"])
+    if embedding_dim is not None and recorded_dim != embedding_dim:
         raise ValueError(
             f"embedding_dim={embedding_dim} does not match the "
             f"collection's recorded dim={recorded_dim}"
         )
-    embedding_dim = (
-        int(recorded_dim) if recorded_dim is not None else (embedding_dim or 16)
-    )
     recorded_tag = emb_cfg.get("embedder")
     batch_tag = embedder_tag or ("hash" if embedder is None else "custom")
     if recorded_tag is not None and recorded_tag != batch_tag:
@@ -763,8 +763,8 @@ def update_collection(
             f"recorded embedder '{recorded_tag}'; vectors from different "
             "embedders cannot share an index"
         )
-    embed = embedder or default_embedder(embedding_dim)
-    layout = VectorLayout.from_converter(manifest.converter, embedding_dim)
+    embed = embedder or default_embedder(recorded_dim)
+    layout = VectorLayout.from_converter(manifest.converter)
     ub = int(manifest.converter["updateBuckets"])
 
     def bucketed(df: DataFrame, key: str) -> DataFrame:
@@ -818,7 +818,7 @@ def update_collection(
             carry_cols=[UPDATE_PB_COL],
             with_positions="positions" in old_postings,
         )
-        fresh = {
+        return {
             "documents": bucketed(changed_docs, "id"),
             "chunks": chunks,
             "embeddings": embeddings,
@@ -827,18 +827,14 @@ def update_collection(
                 chunks, id_col="chunk_id", text_col="indexed_data",
                 carry_cols=[UPDATE_PB_COL],
             ),
-        }
-        # field_postings: document-level BM25F index, rebuilt from the
-        # batch's TEXT with the collection's recorded field split (exact
-        # under any chunk_overlap — build_field_postings docstring).
-        # Collections created before the table existed skip it (BM25F
-        # then serves the chunk-derived approximation).
-        if "field_postings" in old:
-            fresh["field_postings"] = bucketed(
+            # document-level BM25F index, rebuilt from the batch's TEXT
+            # with the collection's recorded field split (exact under
+            # any chunk_overlap — build_field_postings docstring)
+            "field_postings": bucketed(
                 build_field_postings(changed_docs, title_col, title_from_text),
                 "document_id",
-            )
-        return fresh
+            ),
+        }
 
     return _merge(
         collection,

@@ -102,14 +102,11 @@ class VectorLayout:
         )
 
     @classmethod
-    def from_converter(cls, converter: dict, dim: int | None = None) -> VectorLayout:
-        """The layout a manifest's ``converter`` records. ``dim``
-        defaults to the recorded embedding dim (16 on manifests written
-        before it was recorded)."""
-        if dim is None:
-            dim = int((converter.get("embedding") or {}).get("dim") or 16)
+    def from_converter(cls, converter: dict) -> VectorLayout:
+        """The layout a manifest's ``converter`` records, at its
+        recorded embedding dim."""
         return cls(
-            dim,
+            int(converter["embedding"]["dim"]),
             ann=converter.get("ann"),
             ivf=converter.get("ivf"),
             sq8=converter.get("sq8"),

@@ -8,6 +8,9 @@ re-sends idempotent)."""
 
 from __future__ import annotations
 
+import json
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -949,7 +952,7 @@ class TestDeleteDocuments:
         # arguments, without paying a create per test
         return _copy_collection(spark, collection, tmp_path, "del")
 
-    def test_rows_vanish_from_every_table(self, spark, coll):
+    def test_rows_vanish_from_every_table(self, spark, canonical_docs, coll):
         from pathlib import Path
 
         from documents_vector_search_spark.collection import (
@@ -1006,6 +1009,24 @@ class TestDeleteDocuments:
         s = CollectionSearcher(coll)
         hits = s.search("hash join", max_documents=10).collect()
         assert all(r.document_id not in {"doc-3", "doc-7"} for r in hits)
+
+        # emptied, then refilled by an update: the average chunk length
+        # restarts from the refill, not from the emptied state
+        from documents_vector_search_spark.functions.text import tokenize
+
+        ids = [r.id for r in coll.read("documents").select("id").collect()]
+        m = delete_documents(coll, ids)
+        assert (m.numberOfDocuments, m.numberOfChunks) == (0, 0)
+        assert m.avgChunkLength is None
+        m = update_collection(
+            coll, canonical_docs.filter(F.col("id").isin("doc-3", "doc-7"))
+        )
+        recount = coll.read("chunks").agg(
+            F.avg(F.size(tokenize("indexed_data")))
+        ).first()[0]
+        assert m.numberOfChunks > 0
+        assert m.avgChunkLength == pytest.approx(recount)
+        assert coll.manifest().avgChunkLength == pytest.approx(recount)
 
     def test_unknown_ids_are_noop(self, spark, coll):
         from documents_vector_search_spark.collection import (
@@ -1390,30 +1411,6 @@ class TestContentFlagsAndCounts:
         assert counts["postings"] > counts["chunks"]
 
 
-class TestManifestCorpusStats:
-    def test_old_manifest_without_avgdl_falls_back(
-        self, spark, collection, tmp_path
-    ):
-        """Manifests written before avgChunkLength existed load as None
-        and the searcher recomputes stats from doc_stats."""
-        import json
-        from pathlib import Path
-
-        coll = _copy_collection(spark, collection, tmp_path, "oldmanifest")
-        mpath = Path(str(tmp_path)) / "oldmanifest" / "manifest.json"
-        data = json.loads(mpath.read_text())
-        persisted_avgdl = data.pop("avgChunkLength")
-        assert persisted_avgdl is not None and persisted_avgdl > 0
-        mpath.write_text(json.dumps(data))
-
-        s = CollectionSearcher(coll)
-        n, avgdl = s._bm25_corpus_stats()
-        assert n == data["numberOfChunks"]
-        # fallback recomputes the SAME value the manifest would carry
-        assert abs(avgdl - persisted_avgdl) < 1e-9
-        assert len(s.search("hash join", max_documents=5).collect()) > 0
-
-
 class TestEmbeddingIdentity:
     """converter.embedding: dim + embedder tag persisted at create,
     validated by searcher and updater (a mismatch silently reconstructs
@@ -1630,36 +1627,6 @@ class TestPartitionScopedUpdate:
         assert coll.read("documents").count() == n_before
         assert not (coll.root / "documents__old").exists()
 
-    def test_manifest_without_update_buckets_is_refused(
-        self, spark, canonical_docs, small_fuzzy_coll, tmp_path
-    ):
-        """A manifest without updateBuckets (hand-edited here; the
-        tables still carry their _pb=X directories) must be refused,
-        not merged: the bucket count cannot be guessed, and a wrong
-        guess prunes to the wrong directories and duplicates
-        documents."""
-        import json
-
-        from documents_vector_search_spark.collection import (
-            delete_documents,
-        )
-
-        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "legacy")
-        mpath = coll.manifest_path
-        data = json.loads(mpath.read_text())
-        del data["converter"]["updateBuckets"]
-        mpath.write_text(json.dumps(data))
-        before = coll.counts()
-
-        one = canonical_docs.limit(1).withColumn(
-            "text", F.concat(F.lit("LEGACY-UPDATED "), F.col("text"))
-        )
-        with pytest.raises(ValueError, match="re-create the collection"):
-            update_collection(coll, one)
-        with pytest.raises(ValueError, match="re-create the collection"):
-            delete_documents(coll, ["doc-1"])
-        assert coll.counts() == before
-
     def test_create_rejects_update_buckets_below_one(
         self, spark, canonical_docs, tmp_path
     ):
@@ -1696,54 +1663,75 @@ class TestPartitionScopedUpdate:
         assert set(report) == {"postings", "field_postings"}
         _assert_term_sorted_buckets(coll)
 
-    def test_term_bucket_layout_reads_but_refuses_writes(
-        self, spark, canonical_docs, small_fuzzy_coll, pristine_ids, tmp_path
-    ):
-        """A collection whose postings and field_postings still carry
-        ``term_bucket=*`` directories (the layout before one term-sorted
-        file per bucket) returns the same search rows; update, delete
-        and compaction refuse it without touching disk."""
-        import shutil
 
+def _move_under_term_bucket(root) -> None:
+    """``<table>/_pb=X`` → ``<table>/term_bucket=0/_pb=X``: the layout
+    before one term-sorted file per bucket."""
+    for d in sorted(root.glob("_pb=*")):
+        (root / "term_bucket=0").mkdir(exist_ok=True)
+        d.rename(root / "term_bucket=0" / d.name)
+
+
+def _flatten_vocab(root) -> None:
+    """Data files straight under ``vocab/``: the layout before the
+    vocabulary was partitioned by term_bucket."""
+    for i, f in enumerate(sorted(root.glob("term_bucket=*/*.parquet"))):
+        f.rename(root / f"part-{i:05d}.parquet")
+    for d in root.glob("term_bucket=*"):
+        shutil.rmtree(d)
+
+
+def _edit_manifest(edit):
+    def apply(coll) -> None:
+        data = json.loads(coll.manifest_path.read_text())
+        edit(data)
+        coll.manifest_path.write_text(json.dumps(data))
+
+    return apply
+
+
+# each outdated on-disk form, made from a copy of a current collection
+OUTDATED_FORMS = {
+    "no_manifest": lambda coll: coll.manifest_path.unlink(),
+    "no_update_buckets": _edit_manifest(
+        lambda d: d["converter"].pop("updateBuckets")
+    ),
+    "no_embedding_dim": _edit_manifest(
+        lambda d: d["converter"]["embedding"].pop("dim")
+    ),
+    "no_avg_chunk_length": _edit_manifest(
+        lambda d: d.update(avgChunkLength=None)
+    ),
+    "no_field_stats": _edit_manifest(lambda d: d.update(fieldStats=None)),
+    "no_field_postings": lambda coll: shutil.rmtree(
+        coll.root / "field_postings"
+    ),
+    "term_bucket_postings": lambda coll: _move_under_term_bucket(
+        coll.root / "postings"
+    ),
+    "term_bucket_field_postings": lambda coll: _move_under_term_bucket(
+        coll.root / "field_postings"
+    ),
+    "unpartitioned_vocab": lambda coll: _flatten_vocab(coll.root / "vocab"),
+}
+
+
+class TestOutdatedFormat:
+    @pytest.mark.parametrize("form", sorted(OUTDATED_FORMS))
+    def test_refused_before_any_change(
+        self, spark, canonical_docs, small_fuzzy_coll, pristine_ids,
+        tmp_path, form,
+    ):
+        """A collection in an outdated on-disk form is refused by the
+        searcher, update, delete and compaction with one "re-create"
+        error, and no file changes."""
         from documents_vector_search_spark.collection import (
             compact_collection,
             delete_documents,
         )
-        from documents_vector_search_spark.operators.bm25 import term_bucket
 
-        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "oldlayout")
-        top = (
-            coll.read("postings").groupBy("term").count()
-            .orderBy(F.desc("count"), "term").limit(12).collect()
-        )
-        terms = [r["term"] for r in top]
-        queries = [terms[3], f"{terms[5]} {terms[9]}", f"{terms[7]} {terms[11]}"]
-
-        def results() -> list:
-            s = CollectionSearcher(coll)
-            out = []
-            for q in queries:
-                for df in (
-                    s.search(q, max_documents=5),
-                    s.search_chunks(q, indexes=("bm25",)),
-                    s.search_chunks(q, ranker="ql"),
-                    s.search_documents_bm25f(q),
-                ):
-                    out.append([tuple(map(str, r)) for r in df.collect()])
-            return out
-
-        before = results()
-        assert any(before)
-        for t in ("postings", "field_postings"):
-            staged = coll.root / f"{t}__relayout"
-            coll.read(t).withColumn(
-                "term_bucket", term_bucket(F.col("term"))
-            ).write.partitionBy("term_bucket", "_pb").parquet(str(staged))
-            shutil.rmtree(coll.root / t)
-            staged.rename(coll.root / t)
-            spark.catalog.refreshByPath(coll.table_path(t))
-        assert next((coll.root / "postings").glob("term_bucket=*/_pb=*"))
-        assert results() == before
+        coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, "outdated")
+        OUTDATED_FORMS[form](coll)
 
         def inventory() -> dict:
             return {
@@ -1752,12 +1740,14 @@ class TestPartitionScopedUpdate:
             }
 
         on_disk = inventory()
-        with pytest.raises(ValueError, match="re-create the collection"):
-            _run("update", canonical_docs, coll, pristine_ids)
-        with pytest.raises(ValueError, match="re-create the collection"):
-            delete_documents(coll, pristine_ids[:1])
-        with pytest.raises(ValueError, match="re-create the collection"):
-            compact_collection(coll)
+        for op in (
+            lambda: CollectionSearcher(coll),
+            lambda: _run("update", canonical_docs, coll, pristine_ids),
+            lambda: delete_documents(coll, pristine_ids[:1]),
+            lambda: compact_collection(coll),
+        ):
+            with pytest.raises(ValueError, match="re-create the collection"):
+                op()
         assert inventory() == on_disk
 
 
@@ -1966,6 +1956,31 @@ def _snapshot(coll) -> list[tuple[str, str]]:
     return sorted((r["t"], r["j"]) for r in union.collect())
 
 
+def _assert_fuzzy_matches_postings(coll) -> None:
+    """The served vocabulary and deletion index (base + delta log)
+    equal a rebuild from the postings table."""
+    from documents_vector_search_spark.collection.fuzzy_artifacts import (
+        deletion_index_df,
+        read_deletion_index,
+        read_vocab,
+    )
+    from documents_vector_search_spark.operators.fuzzy import (
+        build_term_dictionary,
+    )
+
+    def rows(df) -> set:
+        return {tuple(r) for r in df.collect()}
+
+    rebuilt = build_term_dictionary(
+        coll.read("postings").select("chunk_id", "term", "tf")
+    ).select("term", "ctf", "df")
+    assert rows(read_vocab(coll)) == rows(rebuilt)
+    cols = ["term", "ctf", "df", "variant", "variant_bucket"]
+    assert rows(read_deletion_index(coll).select(*cols)) == rows(
+        deletion_index_df(rebuilt).select(*cols)
+    )
+
+
 def _manifest_view(m) -> dict:
     return {
         "docs": m.numberOfDocuments,
@@ -2108,6 +2123,7 @@ class TestWriteCrashConvergence:
         assert _snapshot(coll) == tables
         assert _manifest_view(m) == manifest
         assert _manifest_view(coll.manifest()) == manifest
+        _assert_fuzzy_matches_postings(coll)
 
     def test_cached_searcher_does_not_resurrect_updated_rows(
         self, spark, canonical_docs, small_fuzzy_coll, tmp_path

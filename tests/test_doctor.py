@@ -63,6 +63,17 @@ class TestDoctor:
         assert "doc_count_drift" in codes
         assert "staging_leftover" in codes
 
+        # an outdated format is reported as the one gate refusal
+        old = _copy(spark, pristine, tmp_path, "nofieldstats")
+        m = old.manifest()
+        m.fieldStats = None
+        old.save_manifest(m)
+        report = doctor_report(old)
+        assert not report["ok"]
+        assert [i["code"] for i in report["issues"]] == ["outdated_format"]
+        assert "fieldStats" in report["issues"][0]["detail"]
+        assert "re-create the collection" in report["issues"][0]["detail"]
+
     def test_deep_finds_orphan_derived_rows(self, spark, pristine, tmp_path):
         """Dropping one chunks partition dir leaves its embeddings/
         doc_stats/postings rows pointing at no live chunk — the count

@@ -366,36 +366,6 @@ class TestBm25fServing:
 
         assert coll.manifest().fieldStats == _field_stats_from_table(coll)
 
-    def test_bm25f_legacy_collection_without_field_postings(
-        self, spark, bm25f_coll, tmp_path
-    ):
-        """Collections created before field_postings existed still
-        serve BM25F off the chunk-derived path: with overlap 0 and
-        whole-field chunks the approximation is exact, so it must match
-        the operator; the searcher must not touch the absent table."""
-        import shutil
-
-        from documents_vector_search_spark.collection import (
-            CollectionSearcher,
-        )
-
-        rows = self.BM25F_ROWS
-        coll = self._bm25f_copy(spark, bm25f_coll(1000, 0), tmp_path, "fl")
-        # simulate a pre-field_postings collection
-        shutil.rmtree(coll.root / "field_postings")
-        m = coll.manifest()
-        m.fieldStats = None
-        coll.save_manifest(m)
-
-        got = [
-            (r.document_id, r.score)
-            for r in CollectionSearcher(coll).search_documents_bm25f(
-                "spark join", k=10
-            ).collect()
-        ]
-        expected = self._bm25f_expected(spark, rows)
-        assert got == expected and got
-
     def test_metadata_filter_restricts_candidates(self, spark, tmp_path):
         from documents_vector_search_spark.collection import (
             Collection,

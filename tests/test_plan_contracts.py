@@ -1,5 +1,5 @@
 """Plan-shape regression tests: pin the physical-plan properties the
-engine's 100 TB scale claims rest on (STATUS.md / ARCHITECTURE.md).
+engine's 100 TB scale claims rest on (ARCHITECTURE.md).
 These catch silent optimizer regressions that correctness hashes
 cannot see — a full scan still returns the right top-10."""
 
