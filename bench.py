@@ -10,10 +10,12 @@ driver-side row transfer skewing the measurement). Every headline query
 runs once UNTIMED first (JVM JIT + whole-stage-codegen compilation +
 parquet footer caches + one-time index-layout builds), then THREE timed
 runs; the reported number is the MEDIAN and the max-min spread lands in
-"spread" — cross-round comparisons were dominated by ±30% background
-machine drift with single-shot timing (r4 STATUS), and the median of
-three interleaved runs bounds that noise per query. The numbers are
-steady-state throughput, which is what matters for a long-lived engine.
+"spread" — cross-round comparisons were dominated by background
+machine drift with single-shot timing (OPTIMIZATION_r12.md
+"Measurement conditions": untouched keys moved 2-7x with no code
+change), and the median of three interleaved runs bounds that noise
+per query. The numbers are steady-state throughput, which is what
+matters for a long-lived engine.
 The collection build is timed cold, once (a build happens once per
 corpus), and the update/delete steps mutate state so they also run
 once.
@@ -292,8 +294,9 @@ def _bench_collection(
     Serving queries are timed warm + median-of-3, the same discipline
     as the registry queries: the r7 round read 1.3-1.4x "regressions"
     on indexed_search_bm25/filtered out of single-shot cold timings
-    whose run-to-run spread (measured in r8 STATUS: ±30-40% on this
-    machine) exceeded the reported deltas. indexed_search_hybrid keeps
+    whose run-to-run spread exceeded the reported deltas
+    (OPTIMIZATION_r12.md "Final bench": single-shot keys spread up to
+    24 s across three runs on one host). indexed_search_hybrid keeps
     its deliberate cold single-shot role (first-touch cost incl. cache
     materialization); everything after it reports steady state."""
     from pyspark.sql import functions as F
@@ -318,7 +321,7 @@ def _bench_collection(
     # +fuzzy (the full build, which then serves the searches below).
     # Raw times, each a fresh collection — the flag cost is the delta
     # between adjacent keys (single-shot; read them against machine
-    # noise, the committed STATUS records the measured spread).
+    # noise; OPTIMIZATION_r12.md "Final bench" records the spread).
     t0 = time.time()
     create_collection(
         Collection(spark, base, "bench_core"), docs,

@@ -2,16 +2,22 @@
 
 A collection (reference README.md:72-84; created by
 main/core/documents_collection_creator.py) becomes one directory of
-Parquet tables + a manifest:
+Parquet tables (catalog.TABLES) + a manifest:
 
-    {base}/{name}/documents/    id, url, metadata MAP, text,
-                               last_modified_at, source_type
-    {base}/{name}/chunks/       chunk_id, document_id, chunk_number,
-                               indexed_data, page_number
-    {base}/{name}/embeddings/   chunk_id, vector ARRAY<FLOAT>
-    {base}/{name}/postings/     chunk_id, term, tf
-    {base}/{name}/doc_stats/    chunk_id, dl
+    {base}/{name}/documents/       id, url, metadata MAP, text,
+                                   last_modified_at, source_type
+    {base}/{name}/chunks/          chunk_id, document_id, chunk_number,
+                                   indexed_data
+    {base}/{name}/embeddings/      chunk_id, vector ARRAY<FLOAT>
+                                   (+ the vector layout's columns)
+    {base}/{name}/postings/        chunk_id, term, tf, [positions], dl
+    {base}/{name}/field_postings/  document_id, field, term, tf, fl
     {base}/{name}/manifest.json
+
+Every table is partitioned by the owning document's ``_pb`` update
+bucket (partitioning.py). ``dl`` on each postings row is its chunk's
+token length, so BM25 and QL scoring need no separate length table; a
+``doc_stats/`` directory that older versions wrote is ignored.
 
 The reference's index-mapping JSON files (index_document_mapping.json,
 reverse_index_document_mapping.json — documents_collection_creator.py:

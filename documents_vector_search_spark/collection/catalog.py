@@ -24,7 +24,6 @@ TABLES = (
     "chunks",
     "embeddings",
     "postings",
-    "doc_stats",
     "field_postings",
 )
 

@@ -9,8 +9,8 @@ documents_collection_creator.py:180-181 with Parquet instead of
 FAISS/Chroma/SQLite.
 
 Scale notes (100 TB):
-- One pass over the corpus: chunks are cached once and fanned out to
-  embeddings + postings + doc_stats (three writes, one computation).
+- One pass over the corpus: chunks are written once and fanned out to
+  embeddings + postings (two writes, one computation).
 - The reference's 500k-doc batching (documents_collection_creator.py:28)
   is subsumed by partitioned execution.
 - Chunk ids DEFAULT to order-free hashes of (document_id, chunk_number)
@@ -27,15 +27,15 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import Collection
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.vector_layout import VectorLayout
 from documents_vector_search_spark.functions.hashing import md5_hash64
+from documents_vector_search_spark.functions.text import tokenize
 from documents_vector_search_spark.operators.bm25 import (
-    build_doc_stats,
     build_field_postings,
     build_postings,
     field_text_exprs,
@@ -117,6 +117,20 @@ def _hash_chunk_ids(chunks: DataFrame) -> DataFrame:
     )
 
 
+def chunk_stats(chunks: DataFrame) -> Row:
+    """Chunk count ``n``, largest ``chunk_id`` ``last`` and BM25
+    ``avgdl`` (mean token length) of a chunks table: the manifest's
+    chunk statistics, defined once for the create, the updater's
+    recount and the doctor's check. The mean of an integer column is an
+    exact sum over an exact count, so it is the same double in any row
+    order."""
+    return chunks.agg(
+        F.count("*").alias("n"),
+        F.max("chunk_id").alias("last"),
+        F.avg(F.size(tokenize("indexed_data"))).alias("avgdl"),
+    ).first()
+
+
 def create_collection(
     collection: Collection,
     docs: DataFrame,
@@ -181,8 +195,9 @@ def create_collection(
     term) beside tf in the postings table — the layout exact-phrase
     search needs (searcher ``indexes=("phrase",)``). BM25 reads are
     unaffected (columnar scans never touch the positions bytes);
-    postings bytes roughly double. Recorded in the manifest; updates
-    sniff the schema and keep the layout.
+    postings bytes roughly double. Recorded in the manifest
+    (``converter.phrase``); updates read that record and keep the
+    layout.
 
     ``fuzzy_dictionary`` materializes the term dictionary and its
     SymSpell deletion index as collection tables
@@ -279,7 +294,7 @@ def create_collection(
         chunks.withColumn(UPDATE_PB_COL, doc_pb("document_id")),
         partition_by=[UPDATE_PB_COL],
     )
-    chunks = collection.read("chunks")  # one materialized pass feeds 3 indexes
+    chunks = collection.read("chunks")  # one materialized pass feeds 2 indexes
 
     emb_df = chunks.select(
         "chunk_id",
@@ -341,16 +356,6 @@ def create_collection(
             partition_by=[UPDATE_PB_COL],
         )
 
-    def _write_doc_stats() -> None:
-        collection.write(
-            "doc_stats",
-            build_doc_stats(
-                chunks, id_col="chunk_id", text_col="indexed_data",
-                carry_cols=[UPDATE_PB_COL],  # owning doc's bucket
-            ),
-            partition_by=[UPDATE_PB_COL],
-        )
-
     def _write_field_postings() -> None:
         # document-level field postings built from the DOCUMENT text:
         # the BM25F serving index, exact under any chunk_overlap (see
@@ -368,34 +373,14 @@ def create_collection(
         )
 
     def _gather_doc_header():
-        # doc count + watermark only — a two-column scan. The manifest's
-        # tokenize-derived stats (avgdl, per-field BM25F stats) are NOT
-        # recomputed from the corpus: the doc_stats and field_postings
-        # builds already tokenized it, so those stats are read back from
-        # the written index tables (_chunk_stats / _field_stats below),
-        # value-identically and without 3 extra corpus tokenize passes.
+        # doc count + watermark only — a two-column scan. The per-field
+        # BM25F stats are NOT recomputed from the corpus: the
+        # field_postings build already tokenized it, so they are read
+        # back from the written table (_field_stats below).
         return docs.agg(
             F.count("*").alias("n"),
             F.max("last_modified_at").alias("wm"),
         ).first()
-
-    def _chunk_stats():
-        # chunk count / max id / BM25 avgdl from the doc_stats TABLE
-        # (one row per chunk, dl = size(tokenize(indexed_data)) written
-        # by _write_doc_stats): avg over the same int column in any
-        # order is the same double (exact int64 sum / exact count), so
-        # the manifest value is bit-identical to re-tokenizing chunks —
-        # persisted so serving never runs a corpus-stats job
-        # (searcher._bm25_corpus_stats).
-        return (
-            collection.read("doc_stats")
-            .agg(
-                F.count("*").alias("n"),
-                F.max("chunk_id").alias("last"),
-                F.avg("dl").alias("avgdl"),
-            )
-            .first()
-        )
 
     def _field_stats():
         # per-field BM25F stats (avgfl numerator/denominator) from the
@@ -420,10 +405,10 @@ def create_collection(
             stats[r["field"]] = {"docs": int(r["_fn"]), "sumFl": int(r["_fs"])}
         return stats
 
-    # the three index builds + the manifest stats all read the SAME
-    # materialized chunk table and are independent — run them as
-    # concurrent jobs (Spark schedules actions from separate driver
-    # threads side by side; on a shared cluster, pair with FAIR
+    # the three index builds + the manifest stats read the SAME
+    # materialized chunk and document tables and are independent — run
+    # them as concurrent jobs (Spark schedules actions from separate
+    # driver threads side by side; on a shared cluster, pair with FAIR
     # scheduler pools). This is the multi-indexer fan-out of reference
     # documents_collection_creator.py:180-181 without its serial loop.
     from concurrent.futures import ThreadPoolExecutor
@@ -443,16 +428,17 @@ def create_collection(
     with ThreadPoolExecutor(max_workers=8) as pool:
         f_emb = pool.submit(_write_embeddings)
         f_post = pool.submit(_write_postings)
-        f_ds = pool.submit(_write_doc_stats)
         f_fp = pool.submit(_write_field_postings)
         f_hdr = pool.submit(_gather_doc_header)
+        # chunk count / max id / avgdl over the written chunks table,
+        # persisted so serving never runs a corpus-stats job
+        # (searcher._bm25_corpus_stats)
+        f_cs = pool.submit(chunk_stats, chunks)
         f_fuzzy = (
             pool.submit(_fuzzy_chain, f_post) if fuzzy_dictionary else None
         )
-        # the read-back aggregates chain onto their table writes so they
-        # overlap the long postings build instead of serializing after it
-        f_ds.result()
-        f_cs = pool.submit(_chunk_stats)
+        # the field-stats read-back chains onto its table write so it
+        # overlaps the long postings build instead of serializing after it
         f_fp.result()
         f_fs = pool.submit(_field_stats)
         fitted = f_emb.result()

@@ -3,9 +3,11 @@
 A long-lived deployment accumulates risk the reference never had to
 manage (it rebuilds its indexes from scratch): crash-recovered swaps,
 incrementally-maintained manifest statistics, a delta log, derived
-tables that must stay 1:1 with chunks. This module validates all of it
-against the stored truth and reports every divergence — run it after
-an incident, before trusting a restored backup, or on a schedule.
+tables that must stay in step with chunks and documents (embeddings 1:1
+with chunks; postings rows join a live chunk, field_postings rows a
+live document). This module validates all of it against the stored
+truth and reports every divergence — run it after an incident, before
+trusting a restored backup, or on a schedule.
 
 Fast checks (default) read footers, directory names, and run count
 aggregations. ``deep=True`` adds the referential scans (derived-table
@@ -93,26 +95,25 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
                 f"vs stored {counts['chunks']}",
             )
 
-    # -- derived tables must be 1:1 with chunks ------------------------------
-    for derived in ("embeddings", "doc_stats"):
-        if derived in counts and "chunks" in counts:
-            checks += 1
-            if counts[derived] != counts["chunks"]:
-                _issue(
-                    issues, "derived_count_mismatch",
-                    f"{derived} has {counts[derived]} rows vs "
-                    f"{counts['chunks']} chunks (must be 1 per chunk)",
-                )
+    # -- embeddings must be 1:1 with chunks ----------------------------------
+    if "embeddings" in counts and "chunks" in counts:
+        checks += 1
+        if counts["embeddings"] != counts["chunks"]:
+            _issue(
+                issues, "derived_count_mismatch",
+                f"embeddings has {counts['embeddings']} rows vs "
+                f"{counts['chunks']} chunks (must be 1 per chunk)",
+            )
 
     # -- avgChunkLength recompute -------------------------------------------
     if "chunks" in counts:
         checks += 1
         try:
-            from documents_vector_search_spark.functions.text import tokenize
+            from documents_vector_search_spark.collection.creator import (
+                chunk_stats,
+            )
 
-            row = collection.read("chunks").agg(
-                F.avg(F.size(tokenize("indexed_data"))).alias("avgdl")
-            ).first()
+            row = chunk_stats(collection.read("chunks"))
             stored = float(row["avgdl"]) if row["avgdl"] is not None else None
             if stored is not None and abs(
                 stored - float(manifest.avgChunkLength or 0.0)
@@ -199,7 +200,7 @@ def doctor_report(collection: Collection, deep: bool = False) -> dict:
     # -- deep referential checks ----------------------------------------------
     if deep and "chunks" in counts:
         chunk_ids = collection.read("chunks").select("chunk_id")
-        for derived in ("embeddings", "postings", "doc_stats"):
+        for derived in ("embeddings", "postings"):
             if derived not in counts:
                 continue
             checks += 1

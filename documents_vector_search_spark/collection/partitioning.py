@@ -1,17 +1,19 @@
 """Update-bucket partitioning: the layout that makes incremental
 updates O(changed), not O(corpus).
 
-Every collection table carries a ``_pb`` (partition bucket) directory
-column — a stable md5-derived bucket of the OWNING DOCUMENT's id, for
-all five tables. Chunk-keyed rows (chunks, embeddings, postings,
-doc_stats) inherit the bucket from their parent document rather than
-hashing their own chunk id: every row an update deletes belongs to a
-changed document, so bucketing by owner keeps delete locality AND
-bounds the affected set at ≤ batch-doc-count buckets across ALL tables
-— a batch's chunk ids would otherwise spray over every bucket. The
-updater reads only those partitions (Parquet partition pruning),
-merges, and swaps just those directories. Unaffected partitions —
-files, mtimes, everything — are never rewritten.
+Every collection table (catalog.TABLES: documents, chunks, embeddings,
+postings, field_postings) carries a ``_pb`` (partition bucket)
+directory column — a stable md5-derived bucket of the OWNING
+DOCUMENT's id. Chunk-keyed rows (chunks, embeddings, postings) inherit
+the bucket from their parent document rather than hashing their own
+chunk id: every row an update deletes belongs to a changed document,
+so bucketing by owner keeps delete locality AND bounds the affected
+set at ≤ batch-doc-count buckets across ALL tables — a batch's chunk
+ids would otherwise spray over every bucket. The updater reads only
+those partitions (Parquet partition pruning), merges, and swaps just
+those directories, derived tables first: embeddings, postings,
+field_postings, chunks, documents. Unaffected partitions — files,
+mtimes, everything — are never rewritten.
 
 The embeddings' ANN layouts keep their query-pruning column as a
 SIBLING partition level (``bucket=*/_pb=N``, ``cluster_id=*/_pb=N``;

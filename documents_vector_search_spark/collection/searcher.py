@@ -110,8 +110,8 @@ class CollectionSearcher:
         exactly like the creator's build fan-out. One cheap count() per
         table forces the InMemoryRelation to cache all partitions (the
         cache stores the full table row set; count on top of it is
-        free). The other tables (doc_stats, field_postings) still
-        persist lazily on their first ``_read``."""
+        free). field_postings still persists lazily on its first
+        ``_read``."""
         from concurrent.futures import ThreadPoolExecutor
 
         # plan construction (and the _cached dict fill) stays serial —
@@ -307,13 +307,6 @@ class CollectionSearcher:
         m = self._manifest
         return int(m.numberOfChunks), float(m.avgChunkLength or 0.0)
 
-    def _lengths_unless_dl(self, postings: DataFrame) -> DataFrame | None:
-        """doc_stats for BM25 scoring only when the postings carry no
-        per-row ``dl``: with it (and the manifest's corpus stats) the
-        scorers never read doc_stats, so the serving path does not open
-        the table at all."""
-        return None if "dl" in postings.columns else self._read("doc_stats")
-
     def _bm25_scored(
         self, text: str, k: int, allowed: DataFrame | None
     ) -> DataFrame:
@@ -321,16 +314,15 @@ class CollectionSearcher:
         # corpus stats stay WHOLE-INDEX; `allowed` restricts only the
         # scored candidates — the reference's FTS5 bm25() semantics
         # (filter narrows rows, statistics come from the full index)
-        postings = self._read("postings")
-        chunks = self._read("chunks")
+        # every postings row carries its chunk's dl, and the corpus
+        # stats are manifest literals: scoring needs no length table
         hits = bm25_topk(
-            chunks,  # only used for sparkSession/tokenizer defaults
+            self._read("chunks"),  # sparkSession/tokenizer defaults only
             text,
             k,
             id_col="chunk_id",
             text_col="indexed_data",
-            postings=postings,
-            doc_stats=self._lengths_unless_dl(postings),
+            postings=self._read("postings"),
             candidates=allowed,
             corpus_stats=self._bm25_corpus_stats(),
         )
@@ -361,7 +353,6 @@ class CollectionSearcher:
             id_col="chunk_id",
             text_col="indexed_data",
             postings=self._read("postings"),
-            doc_stats=self._read("doc_stats"),
             candidates=allowed,
             coll_len=float(n_chunks) * float(avgdl),
         )
@@ -621,6 +612,18 @@ class CollectionSearcher:
             .drop("_rn")
         )
 
+    def _positional_postings(self) -> DataFrame:
+        """``(chunk_id, term, positions)`` of a collection whose manifest
+        records the positional postings layout (``converter.phrase``);
+        any other collection refuses phrase search."""
+        if not self._manifest.converter.get("phrase"):
+            raise ValueError(
+                "collection has no positional postings — recreate with "
+                "create_collection(positional_postings=True) to enable "
+                "phrase search"
+            )
+        return self._read("postings").select("chunk_id", "term", "positions")
+
     def _phrase_scored(
         self, text: str, k: int, allowed: DataFrame | None
     ) -> DataFrame:
@@ -637,23 +640,13 @@ class CollectionSearcher:
             tokenize_phrase,
         )
 
-        postings = self._read("postings")
-        if "positions" not in postings.columns:
-            raise ValueError(
-                "collection has no positional postings — recreate or "
-                "update with create_collection(positional_postings=True) "
-                "to enable phrase search"
-            )
+        positional = self._positional_postings()
         terms = tokenize_phrase(text)
         if not terms:
-            return postings.select(
+            return positional.select(
                 F.col("chunk_id"), F.lit(0.0).alias("score")
             ).limit(0)
-        counts = phrase_match_counts(
-            postings.select("chunk_id", "term", "positions"),
-            terms,
-            id_col="chunk_id",
-        )
+        counts = phrase_match_counts(positional, terms, id_col="chunk_id")
         if allowed is not None:
             counts = counts.join(F.broadcast(allowed), "chunk_id", "left_semi")
         return (
@@ -964,7 +957,6 @@ class CollectionSearcher:
             id_col="chunk_id",
             candidates=allowed,
             corpus_stats=self._bm25_corpus_stats(),
-            doc_stats=self._read("doc_stats"),
         ).select("chunk_id", "score")
 
     # -- public ----------------------------------------------------------
@@ -1268,7 +1260,6 @@ class CollectionSearcher:
                     max_chunks,
                     postings=self._read("postings"),
                     id_col="chunk_id",
-                    doc_stats=self._read("doc_stats"),
                     coll_len=float(n_chunks) * float(avgdl),
                     candidates=allowed,
                 )
@@ -1277,13 +1268,11 @@ class CollectionSearcher:
                     bm25_topk_batch,
                 )
 
-                postings = self._read("postings")
                 bm = bm25_topk_batch(
                     texts,
                     max_chunks,
-                    postings=postings,
+                    postings=self._read("postings"),
                     id_col="chunk_id",
-                    doc_stats=self._lengths_unless_dl(postings),
                     corpus_stats=self._bm25_corpus_stats(),
                     candidates=allowed,
                 )
@@ -1297,14 +1286,7 @@ class CollectionSearcher:
                 phrase_topk_batch,
             )
 
-            postings = self._read("postings")
-            if "positions" not in postings.columns:
-                raise ValueError(
-                    "collection has no positional postings — recreate "
-                    "with create_collection(positional_postings=True) "
-                    "to enable phrase search"
-                )
-            positional = postings.select("chunk_id", "term", "positions")
+            positional = self._positional_postings()
             if allowed is not None:
                 positional = positional.join(
                     F.broadcast(allowed), "chunk_id", "left_semi"

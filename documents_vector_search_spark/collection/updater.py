@@ -28,11 +28,10 @@ RECOVERABLE and a re-run CONVERGES:
 * the swap parks displaced directories in ``<table>__old`` under a
   ``_PARTIAL.json`` marker listing the affected buckets, and recovery
   (writer start or Collection.read) rolls a half-swapped table back;
-* tables commit derived-first (embeddings, postings, doc_stats,
-  field_postings), then chunks, documents last, and the merge drops
-  the fresh chunk ids as well as the stored ones, so re-running an
-  interrupted batch from any committed prefix yields the tables of an
-  uninterrupted run;
+* tables commit derived-first (embeddings, postings, field_postings),
+  then chunks, documents last, and the merge drops the fresh chunk ids
+  as well as the stored ones, so re-running an interrupted batch from
+  any committed prefix yields the tables of an uninterrupted run;
 * before the first swap the manifest is saved with an ``inFlight``
   record, cleared by the final save. A writer that finds the record
   recounts the manifest from the tables (:func:`_exact_recount`) and
@@ -68,6 +67,7 @@ from documents_vector_search_spark.collection.creator import (
     Embedder,
     _hash_chunk_ids,
     build_chunks,
+    chunk_stats,
     default_embedder,
 )
 from documents_vector_search_spark.collection.manifest import Manifest
@@ -80,7 +80,6 @@ from documents_vector_search_spark.collection.partitioning import (
 from documents_vector_search_spark.collection.vector_layout import VectorLayout
 from documents_vector_search_spark.functions.text import tokenize
 from documents_vector_search_spark.operators.bm25 import (
-    build_doc_stats,
     build_field_postings,
     build_postings,
 )
@@ -479,11 +478,7 @@ def _exact_recount(collection: Collection, manifest: Manifest) -> Manifest:
     have merged postings without publishing its vocabulary delta, and
     a re-run's delta is computed against the merged postings, so the
     fuzzy artifacts are rebuilt (the ``refit-fuzzy`` compaction)."""
-    stats = collection.read("chunks").agg(
-        F.count("*").alias("n"),
-        F.avg(F.size(tokenize("indexed_data"))).alias("avgdl"),
-        F.max("chunk_id").alias("last"),
-    ).first()
+    stats = chunk_stats(collection.read("chunks"))
     manifest.numberOfDocuments = collection.read("documents").count()
     manifest.numberOfChunks = stats["n"]
     manifest.avgChunkLength = (
@@ -529,19 +524,18 @@ def _merge(
     manifest: Manifest,
     op: str,
     ids: DataFrame,
-    fresh_rows: Callable[[dict[str, DataFrame]], dict[str, DataFrame]]
-    | None = None,
+    fresh_rows: Callable[[], dict[str, DataFrame]] | None = None,
 ) -> Manifest:
     """The staged merge behind :func:`update_collection` and
     :func:`delete_documents`.
 
     ``ids`` (an ``id`` column) names every document the batch replaces
-    or removes. ``fresh_rows`` maps the pruned pre-merge tables to the
-    batch's fresh rows per table, each carrying ``_pb`` — an update's
-    re-chunked, re-indexed documents; a delete passes none (an empty
-    fresh leg). Every table drops the batch documents' rows by
-    anti-join (chunk-keyed tables on their chunk ids), unions the fresh
-    rows, and only the affected ``_pb`` directories swap."""
+    or removes. ``fresh_rows`` builds the batch's fresh rows per table,
+    each carrying ``_pb`` — an update's re-chunked, re-indexed
+    documents; a delete passes none (an empty fresh leg). Every table
+    drops the batch documents' rows by anti-join (chunk-keyed tables on
+    their chunk ids), unions the fresh rows, and only the affected
+    ``_pb`` directories swap."""
     ub = int(manifest.converter["updateBuckets"])
     # the embeddings' directory levels (refuses an ann+ivf manifest
     # before anything is written)
@@ -562,14 +556,7 @@ def _merge(
 
     # swap ORDER is the crash-convergence contract: derived tables
     # first, then chunks, documents last (dict order drives the swap)
-    tables = [
-        "embeddings",
-        "postings",
-        "doc_stats",
-        "field_postings",
-        "chunks",
-        "documents",
-    ]
+    tables = ["embeddings", "postings", "field_postings", "chunks", "documents"]
     # Parquet partition pruning to the batch's buckets: every table
     # buckets by owning-document id, so doc_pbs is the affected set for
     # all of them — O(corpus/update_buckets) per table, not O(corpus)
@@ -579,7 +566,7 @@ def _merge(
     }
     fresh: dict[str, DataFrame] = {}
     if fresh_rows is not None:
-        fresh = fresh_rows(old)
+        fresh = fresh_rows()
 
     # chunk ids to drop from every chunk-keyed table: the batch
     # documents' stored chunks AND the fresh chunk ids — the latter let
@@ -771,7 +758,7 @@ def update_collection(
         # the owning document's bucket (partitioning.py)
         return df.withColumn(UPDATE_PB_COL, pb_col(F.col(key), ub))
 
-    def fresh_rows(old: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    def fresh_rows() -> dict[str, DataFrame]:
         # --- fresh chunks: ids per the collection's recorded strategy --
         # hash (default): deterministic on (document_id, chunk_number) —
         # a replaced document's chunks REUSE their ids, so updates stay
@@ -807,26 +794,21 @@ def update_collection(
             )
         )
 
-        # postings keep the stored table's optional columns (schema-
-        # sniffed: dl, positions)
-        old_postings = old["postings"].columns
+        # the create's postings layout: dl on every row, positions
+        # when the manifest records the phrase layout
         postings = build_postings(
             chunks,
             id_col="chunk_id",
             text_col="indexed_data",
-            with_dl="dl" in old_postings,
+            with_dl=True,
             carry_cols=[UPDATE_PB_COL],
-            with_positions="positions" in old_postings,
+            with_positions=bool(manifest.converter.get("phrase")),
         )
         return {
             "documents": bucketed(changed_docs, "id"),
             "chunks": chunks,
             "embeddings": embeddings,
             "postings": postings,
-            "doc_stats": build_doc_stats(
-                chunks, id_col="chunk_id", text_col="indexed_data",
-                carry_cols=[UPDATE_PB_COL],
-            ),
             # document-level BM25F index, rebuilt from the batch's TEXT
             # with the collection's recorded field split (exact under
             # any chunk_overlap — build_field_postings docstring)
@@ -849,8 +831,8 @@ def delete_documents(
     collection: Collection,
     doc_ids,
 ) -> Manifest:
-    """Remove documents — and every derived chunk/embedding/posting/
-    stat row — from the collection: the right-to-be-forgotten
+    """Remove documents — and every derived chunk/embedding/posting
+    row — from the collection: the right-to-be-forgotten
     operation a training-data deployment must be able to run on
     demand (the reference can only upsert; documents deleted at the
     source linger in its indexes forever).

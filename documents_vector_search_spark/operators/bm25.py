@@ -7,7 +7,8 @@ sqllite_indexer.py:60-93,145-150).
 
 Index representation (SURVEY §1.1 "Keyword index"):
 - ``postings(term, id, tf)``        — term frequency per document/chunk
-- ``doc_stats(id, dl)``             — document length in tokens
+- ``doc_stats(id, dl)``             — document length in tokens (ad hoc
+  indexes; the collection's postings carry ``dl`` on every row instead)
 - corpus stats (N, avgdl) + ``df`` per term — computed by aggregation
 
 Query semantics match FTS5's defaults: ALL query terms must be present
@@ -1055,7 +1056,9 @@ def ql_dirichlet_topk(
 
     if postings is None:
         postings = build_postings(docs, id_col=id_col, text_col=text_col)
-    if doc_stats is None:
+    if doc_stats is None and (coll_len is None or "dl" not in postings.columns):
+        # lengths only where the plan reads them: the collection length
+        # aggregate, or the dl join of postings built without dl
         doc_stats = build_doc_stats(docs, id_col=id_col, text_col=text_col)
 
     if "term_bucket" in postings.columns:

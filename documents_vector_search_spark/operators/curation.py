@@ -834,7 +834,7 @@ def vocab_stats(
     aggregation; the top-k is TakeOrderedAndProject (per-partition
     heaps + driver merge), never a global sort.
     """
-    # two staging rules (measured; see STATUS expression-blowup lesson):
+    # two staging rules (measured; OPTIMIZATION_r12.md §1 and §7):
     # (1) tokenize is projected ONCE — the shingle lambda references it
     #     2n+2 times and Spark does not CSE repeated subtrees;
     # (2) explode_outer, not explode: InferFiltersFromGenerate adds a

@@ -8814,7 +8814,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     cycle is ceil(176/50) = FOUR rounds. No keys were added this round
     (optimization only). The compensating control is unchanged and
     mandatory: EVERY round runs the full local `dev/compare.py` sf0.01
-    sweep over ALL keys (recorded in STATUS/OPTIMIZATION), so
+    sweep over ALL keys (OPTIMIZATION_r13.md "Inherited state"), so
     out-of-window keys are never unverified — only unverified BY THE
     DRIVER. Do not grow the registry without re-stating this
     arithmetic.

@@ -67,3 +67,42 @@ def tiny_docs(spark):
         (5, ""),
     ]
     return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+@pytest.fixture(scope="module")
+def canonical_docs(spark):
+    """100 smoke-corpus documents in the canonical document envelope."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    return docs.limit(100).select(
+        F.concat(F.lit("doc-"), F.col("doc_id")).alias("id"),
+        F.concat(F.lit("file:///corpus/"), F.col("doc_id")).alias("url"),
+        F.create_map(
+            F.lit("lang"), F.col("lang"), F.lit("source"), F.col("source")
+        ).alias("metadata"),
+        F.col("text"),
+        F.lit("2024-03-01 00:00:00").cast("timestamp").alias("last_modified_at"),
+        F.lit("localFiles").alias("source_type"),
+    )
+
+
+@pytest.fixture(scope="module")
+def small_fuzzy_coll(spark, canonical_docs, tmp_path_factory):
+    """Pristine 8-document collection with fuzzy artifacts; tests copy
+    its directory instead of paying a create each. Small on purpose:
+    every update/delete rewrites its buckets' directories in every
+    table and the fuzzy artifacts, and those per-operation jobs (not
+    the row count) set the cost of each merge."""
+    from documents_vector_search_spark.collection import (
+        Collection,
+        create_collection,
+    )
+
+    base = str(tmp_path_factory.mktemp("pristine"))
+    coll = Collection(spark, base, "pristine")
+    create_collection(
+        coll, canonical_docs.limit(8), chunk_size=200, chunk_overlap=40,
+        fuzzy_dictionary=True,
+    )
+    return coll

@@ -21,22 +21,8 @@ from documents_vector_search_spark.collection import (
     fetch_document_lines,
     update_collection,
 )
+from documents_vector_search_spark.collection.catalog import TABLES
 from documents_vector_search_spark.collection.fetcher import DocumentNotFoundError
-
-
-@pytest.fixture(scope="module")
-def canonical_docs(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    return docs.limit(100).select(
-        F.concat(F.lit("doc-"), F.col("doc_id")).alias("id"),
-        F.concat(F.lit("file:///corpus/"), F.col("doc_id")).alias("url"),
-        F.create_map(
-            F.lit("lang"), F.col("lang"), F.lit("source"), F.col("source")
-        ).alias("metadata"),
-        F.col("text"),
-        F.lit("2024-03-01 00:00:00").cast("timestamp").alias("last_modified_at"),
-        F.lit("localFiles").alias("source_type"),
-    )
 
 
 @pytest.fixture(scope="module")
@@ -51,14 +37,15 @@ class TestCreate:
     def test_manifest_stats_match_corpus_recompute(
         self, spark, tmp_path_factory
     ):
-        """The r12 optimization derives the manifest's tokenize-based
-        stats from the written index tables (avgdl from doc_stats,
-        BM25F fieldStats from field_postings) instead of re-tokenizing
-        the corpus. Pin that derivation against the definition those
-        stats always had — aggregates over tokenize() of the documents
-        — on a corpus that includes an EMPTY body (title_from_text doc
-        with no blank-line separator), the edge the fl>0 docs-count
-        convention exists for."""
+        """The creator derives the manifest's tokenize-based stats from
+        the written tables (avgdl from the chunks table through
+        ``creator.chunk_stats``, BM25F fieldStats from field_postings)
+        instead of re-tokenizing the corpus. Pin that derivation
+        against the definition those stats always had — aggregates
+        over tokenize() of the documents — on a corpus that includes
+        an EMPTY body (title_from_text doc with no blank-line
+        separator), the edge the fl>0 docs-count convention exists
+        for."""
         from documents_vector_search_spark.functions.text import tokenize
         from documents_vector_search_spark.operators.bm25 import (
             field_text_exprs,
@@ -125,8 +112,12 @@ class TestCreate:
         assert m.converter["idStrategy"] == "hash"
         assert m.lastIndexItemId == -1
         assert m.lastModifiedDocumentTime.startswith("2024-03-01")
-        for t in ("documents", "chunks", "embeddings", "postings", "doc_stats"):
+        for t in ("documents", "chunks", "embeddings", "postings"):
             assert collection.read(t).count() > 0
+        # the five tables and the manifest, nothing else
+        assert sorted(p.name for p in collection.root.iterdir()) == sorted(
+            [*TABLES, "manifest.json"]
+        )
 
     def test_hash_ids_unique_and_stable(self, collection):
         chunks = collection.read("chunks")
@@ -429,7 +420,7 @@ class TestUpdate:
         assert min(new_ids) == old_last + 1
         assert m1.lastIndexItemId == max(new_ids)
         # stale chunk ids absent from every index table
-        for t in ("chunks", "embeddings", "postings", "doc_stats"):
+        for t in ("chunks", "embeddings", "postings"):
             remaining = (
                 coll.read(t)
                 .filter(F.col("chunk_id").isin(list(old_chunk_ids)))
@@ -990,13 +981,13 @@ class TestDeleteDocuments:
         assert after["documents"] == before["documents"] - 2
         assert m.numberOfDocuments == after["documents"]
         assert m.numberOfChunks == after["chunks"]
-        for t in ("chunks", "embeddings", "postings", "doc_stats"):
+        for t in ("chunks", "embeddings", "postings"):
             assert after[t] < before[t]
         # no orphaned derived rows anywhere
         assert coll.read("documents").filter(
             F.col("id").isin("doc-3", "doc-7")
         ).count() == 0
-        for t in ("embeddings", "postings", "doc_stats"):
+        for t in ("embeddings", "postings"):
             present = {r.chunk_id for r in coll.read(t).select("chunk_id").collect()}
             assert not (present & victim_chunks)
         # untouched bucket bit-identical (partition-scoped rewrite)
@@ -1081,7 +1072,7 @@ class TestDeleteDocuments:
         after = coll.counts()
         assert m.numberOfDocuments == after["documents"]
         assert m.numberOfChunks == after["chunks"]
-        assert after["chunks"] == after["embeddings"] == after["doc_stats"]
+        assert after["chunks"] == after["embeddings"]
 
     def test_crash_after_final_swap_recounts_on_rerun(
         self, spark, coll, monkeypatch
@@ -1407,7 +1398,7 @@ class TestContentFlagsAndCounts:
     def test_counts(self, collection):
         counts = collection.counts()
         assert counts["documents"] == 100
-        assert counts["chunks"] == counts["embeddings"] == counts["doc_stats"]
+        assert counts["chunks"] == counts["embeddings"]
         assert counts["postings"] > counts["chunks"]
 
 
@@ -1570,15 +1561,14 @@ class TestPartitionScopedUpdate:
         assert (
             chunks.groupBy("chunk_id").count().filter("count > 1").count() == 0
         )
-        # index tables stay chunk-complete: a fresh chunk whose bucket
+        # the embeddings stay chunk-complete: a fresh chunk whose bucket
         # was missing from the swap's affected set would silently
-        # disappear from embeddings/doc_stats (the data-loss mode)
+        # disappear from them (the data-loss mode)
         chunk_ids = {r[0] for r in chunks.select("chunk_id").collect()}
-        for table in ("embeddings", "doc_stats"):
-            got = {
-                r[0] for r in coll.read(table).select("chunk_id").collect()
-            }
-            assert got == chunk_ids, f"{table} out of sync with chunks"
+        got = {
+            r[0] for r in coll.read("embeddings").select("chunk_id").collect()
+        }
+        assert got == chunk_ids, "embeddings out of sync with chunks"
         s = CollectionSearcher(coll)
         assert len(s.search("UPDATED", max_documents=3).collect()) >= 0
 
@@ -1844,23 +1834,6 @@ class TestSq8IvfComposedBatch:
 
 
 @pytest.fixture(scope="module")
-def small_fuzzy_coll(spark, canonical_docs, tmp_path_factory):
-    """Pristine 8-document collection with fuzzy artifacts; tests copy
-    its directory instead of paying a create each. Small on purpose:
-    every update/delete rewrites its buckets' directories in every
-    table and the fuzzy artifacts, and those per-operation jobs (not
-    the row count) set the cost of each of the crash matrix's two dozen
-    merges."""
-    base = str(tmp_path_factory.mktemp("pristine"))
-    coll = Collection(spark, base, "pristine")
-    create_collection(
-        coll, canonical_docs.limit(8), chunk_size=200, chunk_overlap=40,
-        fuzzy_dictionary=True,
-    )
-    return coll
-
-
-@pytest.fixture(scope="module")
 def pristine_ids(small_fuzzy_coll) -> list[str]:
     """Sorted document ids of the pristine collection: the test batches
     key on them, so a re-run repeats exactly the same batch."""
@@ -1942,8 +1915,6 @@ def _run(op, canonical_docs, coll, ids):
 def _snapshot(coll) -> list[tuple[str, str]]:
     """Every row of every table as (table, JSON), sorted — one job."""
     from functools import reduce
-
-    from documents_vector_search_spark.collection.catalog import TABLES
 
     rows = [
         coll.read(t).select(
@@ -2172,3 +2143,74 @@ class TestWriteCrashConvergence:
             .collect()
         )
         assert any("updated-marker" in c["indexed_data"].lower() for c in chunk0)
+
+
+def _plant_doc_stats(coll) -> dict[str, tuple[int, int]]:
+    """Write a ``doc_stats/`` directory in the form older versions'
+    creator did (one ``(chunk_id, dl)`` row per chunk, partitioned by
+    the owning document's ``_pb``) and return its file inventory."""
+    from documents_vector_search_spark.operators.bm25 import build_doc_stats
+
+    build_doc_stats(
+        coll.read("chunks"), id_col="chunk_id", text_col="indexed_data",
+        carry_cols=["_pb"],
+    ).write.partitionBy("_pb").parquet(coll.table_path("doc_stats"))
+    return TestPartitionScopedUpdate._inventory(coll.root / "doc_stats")
+
+
+class TestOlderCollectionWithDocStats:
+    """A collection created before the five-table layout still carries
+    a ``doc_stats/`` directory. Search, update, delete, compaction and
+    the doctor ignore it: results equal those of a copy without it, and
+    the directory is left exactly as it was."""
+
+    def test_doc_stats_directory_is_ignored(
+        self, spark, canonical_docs, small_fuzzy_coll, pristine_ids,
+        uninterrupted, tmp_path, capsys,
+    ):
+        from documents_vector_search_spark import cli
+        from documents_vector_search_spark.collection import (
+            compact_collection,
+        )
+
+        def rows(coll, ranker):
+            hits = CollectionSearcher(coll).search(
+                "hash join", max_documents=5, indexes=("bm25",),
+                ranker=ranker,
+            )
+            return [r.asDict(recursive=True) for r in hits.collect()]
+
+        planted = {}
+        for op in ("update", "delete"):
+            coll = _copy_collection(spark, small_fuzzy_coll, tmp_path, op)
+            planted[op] = (coll, _plant_doc_stats(coll))
+
+        old = planted["update"][0]
+        for ranker in ("bm25", "ql"):
+            got = rows(old, ranker)
+            assert got == rows(small_fuzzy_coll, ranker)
+        assert got  # QL ranks any document matching one query term
+
+        for op, (coll, _) in planted.items():
+            m = _run(op, canonical_docs, coll, pristine_ids)
+            tables, manifest = uninterrupted[op]
+            assert _snapshot(coll) == tables
+            assert _manifest_view(m) == manifest
+
+        coll = planted["delete"][0]
+        before = _snapshot(coll)
+        report = compact_collection(coll)
+        assert "doc_stats" not in report
+        assert _snapshot(coll) == before
+        rc = cli.main(
+            ["doctor", "delete", "--base-path", str(tmp_path), "--deep",
+             "--format", "json"]
+        )
+        assert rc == 0, capsys.readouterr().out
+        assert json.loads(capsys.readouterr().out)["ok"] is True
+
+        for coll, inventory in planted.values():
+            assert (
+                TestPartitionScopedUpdate._inventory(coll.root / "doc_stats")
+                == inventory
+            )

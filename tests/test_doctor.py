@@ -75,9 +75,10 @@ class TestDoctor:
         assert "re-create the collection" in report["issues"][0]["detail"]
 
     def test_deep_finds_orphan_derived_rows(self, spark, pristine, tmp_path):
-        """Dropping one chunks partition dir leaves its embeddings/
-        doc_stats/postings rows pointing at no live chunk — the count
-        invariant and the deep referential scan must both flag it."""
+        """Dropping one chunks partition dir leaves its embeddings and
+        postings rows pointing at no live chunk — the embeddings count
+        invariant and the deep referential scan must both flag it, the
+        latter for both tables."""
         coll = _copy(spark, pristine, tmp_path, "orfan")
         pb_dirs = sorted((coll.root / "chunks").glob("_pb=*"))
         assert pb_dirs
@@ -87,7 +88,12 @@ class TestDoctor:
         codes = {i["code"] for i in report["issues"]}
         assert not report["ok"]
         assert "derived_count_mismatch" in codes
-        assert "orphan_derived_rows" in codes
+        orphaned = {
+            i["detail"].split(":")[0]
+            for i in report["issues"]
+            if i["code"] == "orphan_derived_rows"
+        }
+        assert orphaned == {"embeddings", "postings"}
 
     def test_cli_exit_codes(self, spark, pristine, tmp_path, capsys):
         coll = _copy(spark, pristine, tmp_path, "dokcli")

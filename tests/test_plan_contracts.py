@@ -104,7 +104,7 @@ class TestPlanContracts:
     def test_no_inferred_generate_filters_on_tokenize(self, spark):
         """The InferFiltersFromGenerate blowup must stay fixed: no
         size(...tokenize-tree...) pre-filter above the postings
-        explode (STATUS lesson #30)."""
+        explode (OPTIMIZATION_r12.md §7)."""
         from documents_vector_search_spark import registry
 
         plan = _plan(registry.q_postings_build(spark, SF))
@@ -384,3 +384,67 @@ class TestRound7PlanContracts:
         plan = _plan(registry.q_tpch_q22(spark, SF))
         assert "LeftAnti" in plan
         assert "CartesianProduct" not in plan
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs submitted while ``fn()`` runs: the job-id range
+    between two marker jobs. A job-group filter would miss the jobs the
+    merge submits from its thread pools, which inherit no job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def marker() -> int:
+        tag = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        (job_id,) = sc.statusTracker().getJobIdsForGroup(tag)
+        return job_id
+
+    first = marker()
+    fn()
+    return marker() - first - 1
+
+
+# measured Spark jobs of this update and delete on the 8-document
+# collection with fuzzy artifacts; a change that adds jobs to the write
+# path has to raise these on purpose, and one that removes jobs lowers
+# them
+UPDATE_JOB_BUDGET = 51
+DELETE_JOB_BUDGET = 50
+
+
+class TestWriteJobBudget:
+    def test_update_and_delete_stay_within_job_budget(
+        self, spark, canonical_docs, small_fuzzy_coll, tmp_path
+    ):
+        """One update (a grown document and a new one) and one delete
+        (two documents) each submit at most their budgeted jobs."""
+        import shutil
+
+        from documents_vector_search_spark.collection import (
+            Collection,
+            delete_documents,
+            update_collection,
+        )
+
+        shutil.copytree(small_fuzzy_coll.root, tmp_path / "budget")
+        coll = Collection(spark, str(tmp_path), "budget")
+        ids = sorted(
+            r["id"] for r in coll.read("documents").select("id").collect()
+        )
+        changed = canonical_docs.filter(F.col("id") == ids[0]).withColumn(
+            "text", F.concat(F.col("text"), F.lit(" revised section." * 12))
+        )
+        batch = changed.unionByName(
+            changed.withColumn("id", F.lit("doc-brand-new"))
+        )
+
+        jobs = _jobs_during(spark, lambda: update_collection(coll, batch))
+        assert jobs <= UPDATE_JOB_BUDGET, f"update ran {jobs} jobs"
+        jobs = _jobs_during(spark, lambda: delete_documents(coll, ids[1:3]))
+        assert jobs <= DELETE_JOB_BUDGET, f"delete ran {jobs} jobs"
