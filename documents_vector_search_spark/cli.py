@@ -599,9 +599,9 @@ def cmd_topics(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Compact fragmented update buckets (collection/compactor.py) —
-    the OPTIMIZE step a long-lived, frequently-updated collection runs
-    periodically."""
+    """Compact update buckets (collection/compactor.py) — the OPTIMIZE
+    step: re-cluster the Z-order buckets updates degraded, and rewrite
+    directories an older version left with several files."""
     from documents_vector_search_spark.collection import compact_collection
 
     coll = _collection(args)

@@ -4,6 +4,11 @@ Spark-first equivalent of the reference's DiskPersister + collection
 directory layout (main/indexes/persisters/disk_persister.py;
 main/factories/create_collection_factory.py:22). No pickle: every
 index representation is a Parquet table readable by any engine.
+
+:meth:`Collection.write` is the one persister: the create, the merge's
+staging, the refits and the fuzzy base builds all write through it, and
+:func:`write_layout` is the one place that knows a table's directory
+columns. No caller repartitions, sorts or names partition columns.
 """
 
 from __future__ import annotations
@@ -14,10 +19,17 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from documents_vector_search_spark.collection.fuzzy_artifacts import (
+    DELETION_INDEX_TABLE,
+    N_VARIANT_BUCKETS,
+    VOCAB_TABLE,
+)
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.partitioning import (
     TERM_SORTED_TABLES,
+    UPDATE_PB_COL,
 )
+from documents_vector_search_spark.collection.vector_layout import VectorLayout
 
 TABLES = (
     "documents",
@@ -26,6 +38,32 @@ TABLES = (
     "postings",
     "field_postings",
 )
+
+# the fuzzy base tables' query-pruning columns (collection/fuzzy_artifacts.py)
+_FUZZY_PARTITION_COLS = {
+    VOCAB_TABLE: "term_bucket",
+    DELETION_INDEX_TABLE: "variant_bucket",
+}
+
+
+def write_layout(table: str, converter: dict | None) -> tuple[list[str], int]:
+    """The directory columns of ``table`` and its writer partition
+    count, from the manifest's ``converter`` record: ``_pb`` for the
+    document tables, ``VectorLayout.partition_cols`` for embeddings,
+    and the term / variant bucket for the fuzzy base tables (which need
+    no record). The count is the number of values the last column takes
+    (``updateBuckets`` or ``N_VARIANT_BUCKETS``): it equals the
+    ``carry_partitions`` of the postings builds (operators/bm25.py), so
+    Spark elides the write's repartition behind theirs and the build
+    stays one exchange."""
+    if table in _FUZZY_PARTITION_COLS:
+        return [_FUZZY_PARTITION_COLS[table]], N_VARIANT_BUCKETS
+    if table not in TABLES:
+        raise ValueError(f"'{table}' is not a collection table")
+    n = int(converter["updateBuckets"])
+    if table == "embeddings":
+        return VectorLayout.from_converter(converter).partition_cols, n
+    return [UPDATE_PB_COL], n
 
 
 def rollback_partial_swap(root: Path, table: str) -> None:
@@ -133,13 +171,26 @@ class Collection:
         self,
         table: str,
         df: DataFrame,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
+        converter: dict | None = None,
+        to: str | Path | None = None,
+        no_cluster: bool = False,
     ) -> None:
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.table_path(table))
+        """Write ``df`` as ``table`` (overwrite), or stage it at ``to``,
+        under the one write rule: hash-repartition by the table's
+        directory columns (:func:`write_layout`) so every directory
+        gets exactly one writer task and one file, and sort the
+        term-keyed tables by ``(cols…, term)`` so a query's ``term IN``
+        filter skips row groups. ``no_cluster`` keeps a layout the
+        frame already carries: the Z-order file assignment of
+        operators/layout.py, several range-clustered files per bucket."""
+        cols, n = write_layout(table, converter)
+        if not no_cluster:
+            df = df.repartition(n, *cols)
+        if table in TERM_SORTED_TABLES:
+            df = df.sortWithinPartitions(*cols, "term")
+        df.write.mode("overwrite").partitionBy(*cols).parquet(
+            str(to or self.table_path(table))
+        )
 
     def counts(self) -> dict[str, int]:
         """Live row counts per table (reference E8: faiss.ntotal /

@@ -1,26 +1,28 @@
-"""Bucket-scoped compaction: heal small-file fragmentation from updates.
+"""Bucket-scoped compaction: restore the write rule's layout where a
+bucket lost it.
 
-Every incremental update rewrites its affected ``_pb`` bucket
-directories with batch-sized jobs, so a long-lived collection
-accumulates one-file-per-update fragments in its hot buckets. Small
-files tax every subsequent scan (footer reads, task scheduling) — the
-classic long-running-table problem that Delta/Iceberg solve with
-OPTIMIZE. This is the same operation for this engine's plain-Parquet
-layout, scoped by the update-bucket design (collection/partitioning.py):
+Every writer of this version lands ONE file per partition directory
+(catalog.Collection.write), so a collection it created and updated has
+nothing to compact. Compaction is for the two layouts that still
+differ from the rule:
 
-- DETECT: one tree walk per table counts data files per ``_pb=X``
-  directory; a bucket is fragmented when any of its directories holds
-  more than ``max_files_per_dir`` files.
-- REWRITE: read ONLY the fragmented buckets (Parquet partition
-  pruning), repartition by the table's partition columns so each live
-  directory gets exactly one writer task, and stage + swap those
-  directories with the updater's two-phase ``_PARTIAL.json``-marked
-  machinery — crash-recoverable, untouched buckets never rewritten.
+- a collection an older version wrote, whose create or merges left
+  several files in a directory: a bucket is fragmented when any of its
+  directories holds more than ``max_files_per_dir`` files (one tree
+  walk per table);
+- a Z-ordered table (create's ``zorder_by``), whose buckets hold
+  several range-clustered files by design: an update or delete
+  rewrites a bucket as one unclustered file and records it in the
+  manifest's ``degraded_pbs`` (updater._record_zorder_degraded).
+  Exactly those buckets are re-clustered, at the record's files per
+  bucket; file counts say nothing about a range layout.
 
-Cost: O(fragmented buckets), not O(corpus) — at production bucket
-counts a nightly compact touches only the buckets that day's updates
-touched. The reference has no analog (its indexes are single files
-rebuilt wholesale).
+The rewrite reads ONLY the chosen buckets (Parquet partition pruning)
+and stages + swaps those directories with the updater's two-phase
+``_PARTIAL.json``-marked machinery — crash-recoverable, untouched
+buckets never rewritten. Cost: O(chosen buckets), not O(corpus). The
+reference has no analog (its indexes are single files rebuilt
+wholesale).
 """
 
 from __future__ import annotations
@@ -32,7 +34,6 @@ from pyspark.sql import functions as F
 from documents_vector_search_spark.collection.catalog import TABLES, Collection
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
-from documents_vector_search_spark.collection.vector_layout import VectorLayout
 
 
 def bucket_file_counts(table_root: Path) -> dict[int, dict[str, int]]:
@@ -77,18 +78,12 @@ def compact_collection(
     collection: Collection,
     tables: list[str] | None = None,
     max_files_per_dir: int = 1,
-    output_files_per_dir: int = 1,
 ) -> dict[str, dict]:
-    """Compact fragmented update buckets down to ``output_files_per_dir``
-    files per partition directory. Returns a per-table report
-    ``{table: {"buckets": [...], "files_before": n, "files_after": m}}``
-    (tables with nothing to do are omitted).
-
-    ``output_files_per_dir`` > 1 spreads each rewritten directory over
-    that many writer tasks (a salt of the row id joins the repartition
-    key) — at production bucket sizes (~100 GB) a single-writer rewrite
-    per directory would serialize; pick size/⟨file target⟩. The
-    fragmentation threshold ``max_files_per_dir`` should exceed it."""
+    """Rewrite fragmented buckets to the write rule's one file per
+    partition directory, and re-cluster a Z-ordered table's degraded
+    buckets. Returns a per-table report ``{table: {"buckets": [...],
+    "files_before": n, "files_after": m}}`` (tables with nothing to do
+    are omitted)."""
     from documents_vector_search_spark.collection.updater import (
         _recover_orphans,
         _swap_partitions,
@@ -96,7 +91,6 @@ def compact_collection(
 
     tables = list(tables or TABLES)
     manifest = collection.checked_manifest()
-    emb_cols = VectorLayout.from_converter(manifest.converter).partition_cols
     _recover_orphans(collection, tables)
     report: dict[str, dict] = {}
     for table in tables:
@@ -105,78 +99,47 @@ def compact_collection(
             continue
         counts = bucket_file_counts(root)
         zcfg = _zorder_config(manifest, table)
-        # Z-order tables: updates pre-cluster their rewritten buckets
-        # like every other table (one file per directory — optimal
-        # between compactions), so file counts cannot signal their
-        # DEGRADED CLUSTERING; the updater records the rewritten
-        # buckets in the manifest instead (updater.
-        # _record_zorder_degraded) and compaction re-clusters exactly
-        # those, clearing the record below.
-        degraded = (
-            [pb for pb in zcfg.get("degraded_pbs", []) if pb in counts]
-            if zcfg
-            else []
-        )
-        frag = sorted(
-            {
+        if zcfg:
+            # a range layout holds several files per bucket by design:
+            # only the buckets the merge recorded need re-clustering
+            frag = sorted(
+                pb for pb in zcfg.get("degraded_pbs", []) if pb in counts
+            )
+        else:
+            frag = sorted(
                 pb
                 for pb, c in counts.items()
                 if c["max_per_dir"] > max_files_per_dir
-            }
-            | set(degraded)
-        )
+            )
         if not frag:
             # any degraded entry left names a bucket gone from disk
             _clear_degraded(collection, zcfg)
             continue
         df = collection.read(table).filter(F.col(UPDATE_PB_COL).isin(frag))
-        pcols = emb_cols if table == "embeddings" else [UPDATE_PB_COL]
         if zcfg:
-            # the manifest records a Z-order layout for this table:
-            # re-cluster the fragmented buckets instead of a plain
-            # coalesce, restoring the create-time file-skipping boxes
-            # updates degraded (the ingest-then-OPTIMIZE lifecycle)
+            # the create's Z-order file assignment, bucket by bucket
             from documents_vector_search_spark.operators.layout import (
                 zorder_within_partitions,
             )
 
-            rewritten = zorder_within_partitions(
+            per_bucket = max(
+                1,
+                int(zcfg["files"]) // int(manifest.converter["updateBuckets"]),
+            )
+            df = zorder_within_partitions(
                 df,
                 UPDATE_PB_COL,
                 zcfg["cols"][0],
                 zcfg["cols"][1],
-                num_files=max(
-                    len(frag) * output_files_per_dir, output_files_per_dir
-                ),
+                num_files=len(frag) * per_bucket,
                 bits=int(zcfg.get("bits", 16)),
             )
-        else:
-            # repartition BY the partition columns (+ an id salt when
-            # more writers per dir are requested): all rows of one
-            # (dir, salt) land in one task -> exactly
-            # output_files_per_dir files per dir
-            keys = [F.col(c) for c in pcols]
-            if output_files_per_dir > 1:
-                first_data = next(
-                    c for c in df.columns if c not in pcols
-                )
-                keys.append(
-                    F.pmod(
-                        F.crc32(F.col(first_data).cast("string")),
-                        F.lit(output_files_per_dir),
-                    )
-                )
-            rewritten = df.repartition(*keys)
         _swap_partitions(
             collection,
-            {table: rewritten},
-            partition_cols={table: pcols},
-            affected_pbs={table: frag},
-            # `rewritten` already carries its deliberate layout (the
-            # Z-order file assignment or the salted per-dir split) —
-            # the swap's default pre-clustering repartition would
-            # destroy it
-            no_cluster=frozenset({table}),
+            {table: df},
+            {table: frag},
+            manifest.converter,
+            no_cluster=frozenset({table} if zcfg else ()),
         )
         # clustering restored for every degraded bucket still on disk
         # (frag covers them all); the rest are gone

@@ -209,9 +209,9 @@ def create_collection(
     ``update_buckets`` (>= 1): every table is additionally partitioned
     by a stable ``_pb`` bucket of its delete key so incremental updates
     rewrite only affected partitions — see collection/partitioning.py
-    for sizing (default 8 suits test corpora; 100 TB wants 1024+). The
-    postings and field_postings builds also shuffle by it: each bucket
-    is ONE file with rows sorted by ``term``.
+    for sizing (default 8 suits test corpora; 100 TB wants 1024+). Every
+    table directory holds ONE file (catalog.Collection.write); the
+    postings and field_postings files are sorted by ``term``.
 
     ``zorder_by=(colA, colB)``: Z-cluster the DOCUMENTS table on two
     integer-castable/timestamp columns (operators/layout.py) so range
@@ -242,6 +242,69 @@ def create_collection(
     def doc_pb(col_name: str) -> Column:
         return pb_col(F.col(col_name), update_buckets)
 
+    # the manifest's converter record, known before any write: every
+    # table write takes its directory layout from it (catalog.
+    # write_layout); the embeddings fit fills in the fitted state below
+    converter = {
+        "splitter": {"chunkSize": chunk_size, "chunkOverlap": chunk_overlap},
+        "idStrategy": "counter" if contiguous_ids else "hash",
+        # chunk-0-from-text topology (reference converter parity);
+        # updates must rebuild changed docs' chunks the same way
+        **({"titleFromText": True} if title_from_text else {}),
+        # generic-topology title column (field_text_exprs): updates
+        # and deletes re-derive the same field split from this
+        **({"titleCol": title_col} if title_col else {}),
+        # documents-table Z-order layout: compact_collection reads
+        # this to re-cluster buckets an update degraded
+        **(
+            {
+                "zorder": {
+                    "table": "documents",
+                    "cols": list(zorder_by),
+                    "bits": zorder_bits,
+                    "files": zorder_files,
+                }
+            }
+            if zorder_by
+            else {}
+        ),
+        # update-bucket count: incremental updates prune and rewrite
+        # only the _pb partitions their changed keys hash into
+        "updateBuckets": update_buckets,
+        # embedder identity: searches and updates against this
+        # collection must reproduce the SAME vector space — a
+        # searcher probing LSH/IVF buckets derived with a different
+        # dim silently returns wrong results, so both validate
+        # against this record (reference persists its model name the
+        # same way, documents_collection_creator.py:255-279)
+        "embedding": {
+            "dim": embedding_dim,
+            "embedder": embedder_tag
+            or ("hash" if embedder is None else "custom"),
+        },
+        # vector layout (ann / ivf[+pq] / sq8): updates re-encode fresh
+        # vectors from this record, never refit —
+        # collection/vector_layout.py
+        **layout.record(),
+        # positional postings layout: exact-phrase search available
+        # (searcher validates before accepting a phrase query)
+        **({"phrase": {"positional": True}} if positional_postings else {}),
+        # fuzzy artifacts: suggest/--fuzzy probe the materialized
+        # deletion index (variant-bucket pruned); updates append to
+        # a delta log compacted every compactAfter batches
+        **(
+            {
+                "fuzzy": {
+                    "maxEdits": 1,
+                    "variantBuckets": 64,
+                    "compactAfter": 8,
+                }
+            }
+            if fuzzy_dictionary
+            else {}
+        ),
+    }
+
     docs_out = docs.withColumn(UPDATE_PB_COL, doc_pb("id"))
     if zorder_by:
         from documents_vector_search_spark.operators.layout import (
@@ -256,7 +319,10 @@ def create_collection(
             num_files=zorder_files,
             bits=zorder_bits,
         )
-    collection.write("documents", docs_out, partition_by=[UPDATE_PB_COL])
+    # the Z-order range assignment is the documents layout: keep it
+    collection.write(
+        "documents", docs_out, converter, no_cluster=bool(zorder_by)
+    )
     # an empty source writes zero parquet files under the partitioned
     # layout, and every later stage (and any future read) would die on
     # schema inference — fail HERE with a clear message instead. File
@@ -276,23 +342,17 @@ def create_collection(
         docs, chunk_size, chunk_overlap, title_col, title_from_text
     )
     if contiguous_ids:
+        # the global row_number window runs in ONE partition (the
+        # documented bounded-batch tool); the write's bucket
+        # repartition spreads its rows back out
         chunks = assign_chunk_ids(
             chunks, offset=0, id_col="document_id", chunk_number_col="chunk_number"
-        )
-        # the global row_number window collapses to ONE partition —
-        # spread rows back out so the write and every downstream index
-        # build run parallel (the window itself is the documented
-        # bounded-batch tool; contiguous_ids=False avoids it entirely)
-        chunks = chunks.repartition(
-            max(2, collection.spark.sparkContext.defaultParallelism // 4),
-            "document_id",
         )
     else:
         chunks = _hash_chunk_ids(chunks)
     collection.write(
-        "chunks",
-        chunks.withColumn(UPDATE_PB_COL, doc_pb("document_id")),
-        partition_by=[UPDATE_PB_COL],
+        "chunks", chunks.withColumn(UPDATE_PB_COL, doc_pb("document_id")),
+        converter,
     )
     chunks = collection.read("chunks")  # one materialized pass feeds 2 indexes
 
@@ -308,10 +368,7 @@ def create_collection(
 
     def _write_embeddings() -> VectorLayout:
         if not layout.needs_fit:
-            collection.write(
-                "embeddings", layout.encode(emb_df),
-                partition_by=layout.partition_cols,
-            )
+            collection.write("embeddings", layout.encode(emb_df), converter)
             return layout
         import shutil
 
@@ -327,50 +384,34 @@ def create_collection(
         try:
             src = collection.spark.read.parquet(raw_path)
             fitted = layout.fit(src)
-            collection.write(
-                "embeddings", fitted.encode(src),
-                partition_by=fitted.partition_cols,
-            )
+            collection.write("embeddings", fitted.encode(src), converter)
             return fitted
         finally:
             shutil.rmtree(raw_path, ignore_errors=True)
 
     def _write_postings() -> None:
-        # one file per update bucket, rows sorted by term: a query's
-        # `term IN (...)` filter pushes into the scan and skips row
-        # groups on the sorted column's min/max stats (operators/bm25.py
-        # scale notes). carry_partitions pushes the _pb repartition INTO
-        # the build: one exchange serves both the (id, term)
-        # aggregation and the write layout (build_postings docstring).
-        # The sort leads with _pb, the partitioned write's required
-        # ordering, so each bucket file comes out sorted by term.
+        # carry_partitions pushes the write's _pb repartition INTO the
+        # build: one exchange serves both the (id, term) aggregation
+        # and the one-term-sorted-file-per-bucket layout
+        # (build_postings docstring, catalog.write_layout)
         postings_df = build_postings(
             chunks, id_col="chunk_id", text_col="indexed_data", with_dl=True,
             carry_cols=[UPDATE_PB_COL],  # owning doc's bucket, see emb_df
             with_positions=positional_postings,
             carry_partitions=update_buckets,
         )
-        collection.write(
-            "postings",
-            postings_df.sortWithinPartitions(UPDATE_PB_COL, "term"),
-            partition_by=[UPDATE_PB_COL],
-        )
+        collection.write("postings", postings_df, converter)
 
     def _write_field_postings() -> None:
         # document-level field postings built from the DOCUMENT text:
         # the BM25F serving index, exact under any chunk_overlap (see
         # build_field_postings — chunk-derived field tf/fl double-count
-        # overlap regions). Same term-sorted one-file-per-bucket layout
-        # AND same single-exchange fusion as postings.
+        # overlap regions). Same single-exchange fusion as postings.
         fp = build_field_postings(
             docs, title_col, title_from_text, carry_cols=[UPDATE_PB_COL],
             carry_partitions=update_buckets,
         )
-        collection.write(
-            "field_postings",
-            fp.sortWithinPartitions(UPDATE_PB_COL, "term"),
-            partition_by=[UPDATE_PB_COL],
-        )
+        collection.write("field_postings", fp, converter)
 
     def _gather_doc_header():
         # doc count + watermark only — a two-column scan. The per-field
@@ -450,6 +491,7 @@ def create_collection(
         if f_fuzzy is not None:
             f_fuzzy.result()
     n_chunks, last_id = stats["n"], stats["last"]
+    converter.update(fitted.record())  # the fitted layout state
     # lastIndexItemId is only meaningful under the counter strategy
     # (updates continue from it); hash ids record -1
     manifest = Manifest(
@@ -462,65 +504,7 @@ def create_collection(
         lastIndexItemId=(
             int(last_id) if contiguous_ids and last_id is not None else -1
         ),
-        converter={
-            "splitter": {"chunkSize": chunk_size, "chunkOverlap": chunk_overlap},
-            "idStrategy": "counter" if contiguous_ids else "hash",
-            # chunk-0-from-text topology (reference converter parity);
-            # updates must rebuild changed docs' chunks the same way
-            **({"titleFromText": True} if title_from_text else {}),
-            # generic-topology title column (field_text_exprs): updates
-            # and deletes re-derive the same field split from this
-            **({"titleCol": title_col} if title_col else {}),
-            # documents-table Z-order layout: compact_collection reads
-            # this to re-cluster buckets an update fragmented
-            **(
-                {
-                    "zorder": {
-                        "table": "documents",
-                        "cols": list(zorder_by),
-                        "bits": zorder_bits,
-                        "files": zorder_files,
-                    }
-                }
-                if zorder_by
-                else {}
-            ),
-            # update-bucket count: incremental updates prune and rewrite
-            # only the _pb partitions their changed keys hash into
-            "updateBuckets": update_buckets,
-            # embedder identity: searches and updates against this
-            # collection must reproduce the SAME vector space — a
-            # searcher probing LSH/IVF buckets derived with a different
-            # dim silently returns wrong results, so both validate
-            # against this record (reference persists its model name the
-            # same way, documents_collection_creator.py:255-279)
-            "embedding": {
-                "dim": embedding_dim,
-                "embedder": embedder_tag
-                or ("hash" if embedder is None else "custom"),
-            },
-            # fitted vector layout (ann / ivf[+pq] / sq8): updates
-            # re-encode fresh vectors from this record, never refit —
-            # collection/vector_layout.py
-            **fitted.record(),
-            # positional postings layout: exact-phrase search available
-            # (searcher validates before accepting a phrase query)
-            **({"phrase": {"positional": True}} if positional_postings else {}),
-            # fuzzy artifacts: suggest/--fuzzy probe the materialized
-            # deletion index (variant-bucket pruned); updates append to
-            # a delta log compacted every compactAfter batches
-            **(
-                {
-                    "fuzzy": {
-                        "maxEdits": 1,
-                        "variantBuckets": 64,
-                        "compactAfter": 8,
-                    }
-                }
-                if fuzzy_dictionary
-                else {}
-            ),
-        },
+        converter=converter,
     )
     collection.save_manifest(manifest)
     return manifest

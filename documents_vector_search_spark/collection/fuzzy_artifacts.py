@@ -103,52 +103,47 @@ def _compacted_through(collection, base_table: str) -> int:
         return 0  # pre-sidecar base: every batch dir is live
 
 
-def write_fuzzy_artifacts(
-    collection,
-    postings: DataFrame | None = None,
-    max_edits: int = DEFAULT_MAX_EDITS,
+def _build_base(
+    collection, max_edits: int, to: dict[str, Path] | None = None
 ) -> None:
-    """Fresh (create-time) build: vocabulary from the postings table,
-    deletion index from that vocabulary, both repartitioned by their
-    partition column BEFORE the partitioned write — without it each of
-    the shuffle's tasks sprays a file into every bucket directory
-    (measured at sf0.1: 2,047 files / 6.3s vs 64 files / 0.7s for the
-    same 23k rows). Any existing delta log is cleared (a fresh base
-    absorbs everything)."""
-    if postings is None:
-        postings = collection.read("postings")
-    # materialize the vocabulary aggregate ONCE (localCheckpoint — the
-    # same decoupling the old write-then-read-back parquet round trip
-    # bought, without the round trip), then write the two artifact
-    # tables as CONCURRENT driver-thread jobs: the deletion-index
-    # explode no longer waits for the vocab parquet commit (the
-    # creator's fan-out pattern; a cluster run pairs it with FAIR pools)
+    """Vocabulary from the postings table and deletion index from that
+    vocabulary, each written through ``Collection.write`` (one file per
+    bucket directory: unclustered, every shuffle task sprayed a file
+    into every bucket, measured at sf0.1 as 2,047 files / 6.3s vs 64
+    files / 0.7s for the same 23k rows) — to the live tables, or staged
+    at ``to[table]``. The vocabulary aggregate is materialized ONCE
+    (localCheckpoint), then the two tables write as CONCURRENT
+    driver-thread jobs: the deletion-index explode does not wait for
+    the vocab commit (the creator's fan-out pattern; a cluster run
+    pairs it with FAIR pools)."""
     from concurrent.futures import ThreadPoolExecutor
 
     vocab = (
-        build_term_dictionary(postings)
+        build_term_dictionary(collection.read("postings"))
         .withColumn("term_bucket", term_bucket(F.col("term")))
         .localCheckpoint()
     )
-
-    def _write_vocab() -> None:
-        collection.write(
-            VOCAB_TABLE,
-            vocab.repartition(N_VARIANT_BUCKETS, F.col("term_bucket")),
-            partition_by=["term_bucket"],
-        )
-
-    def _write_didx() -> None:
-        didx = deletion_index_df(vocab.drop("term_bucket"), max_edits)
-        collection.write(
-            DELETION_INDEX_TABLE,
-            didx.repartition(N_VARIANT_BUCKETS, F.col("variant_bucket")),
-            partition_by=["variant_bucket"],
-        )
-
+    frames = {
+        VOCAB_TABLE: vocab,
+        DELETION_INDEX_TABLE: deletion_index_df(
+            vocab.drop("term_bucket"), max_edits
+        ),
+    }
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fv, fd = pool.submit(_write_vocab), pool.submit(_write_didx)
-        fv.result(), fd.result()
+        futures = [
+            pool.submit(collection.write, t, df, to=(to or {}).get(t))
+            for t, df in frames.items()
+        ]
+        for f in futures:
+            f.result()
+
+
+def write_fuzzy_artifacts(
+    collection, max_edits: int = DEFAULT_MAX_EDITS
+) -> None:
+    """Fresh (create-time) build of both base tables; any existing
+    delta log is cleared (a fresh base absorbs everything)."""
+    _build_base(collection, max_edits)
     for table in (VOCAB_TABLE, DELETION_INDEX_TABLE):
         _write_state(Path(collection.table_path(table)), 0)
     for table in (VOCAB_DELTAS_TABLE, DELETION_INDEX_DELTAS_TABLE):
@@ -167,40 +162,13 @@ def compact_fuzzy_artifacts(
     deltas — consistent on both sides of a crash. Also the
     ``refit-fuzzy`` enable/recovery path."""
     high = _next_batch_id(collection) - 1
-    postings = collection.read("postings")
-    # one materialized vocabulary feeds both staged writes concurrently
-    # (same fan-out as write_fuzzy_artifacts)
-    from concurrent.futures import ThreadPoolExecutor
-
-    vocab = (
-        build_term_dictionary(postings)
-        .withColumn("term_bucket", term_bucket(F.col("term")))
-        .localCheckpoint()
-    )
-    staged: list[tuple[str, Path]] = []
-    vocab_tmp = Path(collection.table_path(f"{VOCAB_TABLE}__tmp"))
-    didx_tmp = Path(collection.table_path(f"{DELETION_INDEX_TABLE}__tmp"))
-
-    def _stage_vocab() -> None:
-        vocab.repartition(N_VARIANT_BUCKETS, F.col("term_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("term_bucket").parquet(str(vocab_tmp))
-        _write_state(vocab_tmp, high)
-
-    def _stage_didx() -> None:
-        didx = deletion_index_df(vocab.drop("term_bucket"), max_edits)
-        didx.repartition(N_VARIANT_BUCKETS, F.col("variant_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("variant_bucket").parquet(str(didx_tmp))
-        _write_state(didx_tmp, high)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fv, fd = pool.submit(_stage_vocab), pool.submit(_stage_didx)
-        fv.result(), fd.result()
-    staged.append((VOCAB_TABLE, vocab_tmp))
-    staged.append((DELETION_INDEX_TABLE, didx_tmp))
-
-    for table, tmp in staged:
+    staged = {
+        table: Path(collection.table_path(f"{table}__tmp"))
+        for table in (VOCAB_TABLE, DELETION_INDEX_TABLE)
+    }
+    _build_base(collection, max_edits, to=staged)
+    for table, tmp in staged.items():
+        _write_state(tmp, high)
         final = Path(collection.table_path(table))
         old = final.with_name(f"{table}__old")
         if final.exists():

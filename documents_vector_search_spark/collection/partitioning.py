@@ -21,10 +21,15 @@ collection/vector_layout.py):
 Spark prunes on ANY directory level, not just a prefix, so query-side
 pruning is unchanged while update-side pruning composes with it. The
 term-keyed tables (postings, field_postings) have no level beside
-``_pb``: each bucket is ONE file with rows sorted by ``term``, so a
-query's ``term IN (...)`` filter skips row groups on the sorted
-column's min/max stats instead of listing per-term-bucket directories
-— 64× fewer files to create, list and rewrite per bucket.
+``_pb``, and their files are sorted by ``term``, so a query's
+``term IN (...)`` filter skips row groups on the sorted column's
+min/max stats instead of listing per-term-bucket directories — 64×
+fewer files to create, list and rewrite per bucket.
+
+Every directory of every table holds ONE file: all writers go through
+``catalog.Collection.write``, whose ``write_layout`` derives the
+directory columns from the manifest record and repartitions by them
+(the Z-order documents layout is the one range-clustered exception).
 
 Sizing: a single-doc update rewrites ~1/``update_buckets`` of each
 table, so size ``update_buckets`` to your rewrite budget — the default
@@ -48,7 +53,7 @@ from documents_vector_search_spark.functions.hashing import md5_hash64
 
 UPDATE_PB_COL = "_pb"
 
-# tables written as one term-sorted file per _pb bucket
+# tables whose bucket files Collection.write sorts by term
 TERM_SORTED_TABLES = ("postings", "field_postings")
 
 

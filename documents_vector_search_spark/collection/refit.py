@@ -81,7 +81,7 @@ def refit_ivf(collection: Collection, sample_rows: int | None = None) -> dict:
     _swap_all(
         collection,
         {"embeddings": new.encode(emb.drop(*stale))},
-        {"embeddings": new.partition_cols},
+        manifest.converter,
     )
     manifest.converter.update(new.record())
     manifest.touch()
@@ -125,7 +125,7 @@ def refit_sq8(collection: Collection) -> dict:
     _swap_all(
         collection,
         {"embeddings": new.encode(emb.drop("codes"))},
-        {"embeddings": new.partition_cols},
+        manifest.converter,
     )
     manifest.converter.update(new.record())
     manifest.touch()
@@ -196,7 +196,7 @@ def refit_topics(collection: Collection, sample_rows: int | None = None) -> dict
             text_col="text",
             vec_col="vector",
         )
-    _swap_all(collection, staged, {})
+    _swap_all(collection, staged)
     cfg["centroids"] = new_cents
     manifest.converter["topics"] = cfg
     manifest.touch()

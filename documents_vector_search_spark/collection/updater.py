@@ -62,6 +62,7 @@ from documents_vector_search_spark.collection.catalog import (
     TABLES,
     Collection,
     rollback_partial_swap,
+    write_layout,
 )
 from documents_vector_search_spark.collection.creator import (
     Embedder,
@@ -72,7 +73,6 @@ from documents_vector_search_spark.collection.creator import (
 )
 from documents_vector_search_spark.collection.manifest import Manifest
 from documents_vector_search_spark.collection.partitioning import (
-    TERM_SORTED_TABLES,
     UPDATE_PB_COL,
     pb_col,
     pb_dirs,
@@ -121,14 +121,12 @@ def _record_zorder_degraded(manifest: Manifest, pbs: list[int]) -> None:
     a crash costs one redundant re-cluster; under-recording would leave
     a degraded bucket invisible to OPTIMIZE forever.
 
-    The staged merge write pre-clusters by partition values like every
-    other table — ONE file per rewritten directory, the optimal
-    between-compaction layout (guide §6: the earlier design sprayed
-    one file per write-task×directory purely so the compactor's
-    file-count heuristic would notice the bucket; that signal was
-    unbounded on an update-heavy collection). compact_collection reads
-    this list, re-clusters the buckets from the manifest's zorder
-    record, and clears them."""
+    The merge stages the Z-order table through the same write rule as
+    every other table (``Collection.write``: ONE file per rewritten
+    directory), so a rewritten bucket keeps its rows but loses its
+    Z-order file boxes, and no file count shows it. compact_collection
+    re-clusters exactly the buckets this list names, at the record's
+    files per bucket, and clears them."""
     zcfg = manifest.converter.get("zorder") or {}
     if not zcfg.get("table"):
         return
@@ -149,25 +147,21 @@ def _refresh_cached(collection: Collection, table: str) -> None:
 def _swap_all(
     collection: Collection,
     merged: dict[str, DataFrame],
-    partition_cols: dict[str, list[str]] | None = None,
+    converter: dict | None = None,
 ) -> None:
     """Two-phase WHOLE-table rewrite for the refits (refit.py): FIRST
     materialize every table to a __tmp dir (all plans still read the
     intact originals — swapping any table earlier would make later
-    lazy plans read post-swap data), THEN swap all directories."""
+    lazy plans read post-swap data), THEN swap all directories. A
+    collection table stages through ``Collection.write`` under the
+    ``converter`` record; the topic tables are not collection tables
+    and keep a plain write."""
     for table, df in merged.items():
-        cols = (partition_cols or {}).get(table, [])
-        if cols:
-            # cluster rows by partition values before the partitioned
-            # write — same file-spray rationale as _swap_partitions
-            df = df.repartition(*[F.col(c) for c in cols])
-        writer = df.write.mode("overwrite")
-        if cols:
-            # one call with every level: DataFrameWriter.partitionBy
-            # REPLACES the column list on each call, so a per-column
-            # loop would silently keep only the last partition level
-            writer = writer.partitionBy(*cols)
-        writer.parquet(str(Path(collection.table_path(f"{table}__tmp"))))
+        tmp = collection.table_path(f"{table}__tmp")
+        if table in TABLES:
+            collection.write(table, df, converter, to=tmp)
+        else:
+            df.write.mode("overwrite").parquet(tmp)
     for table in merged:
         tmp = Path(collection.table_path(f"{table}__tmp"))
         final = Path(collection.table_path(table))
@@ -204,18 +198,20 @@ def _stage_schema_file(
 def _swap_partitions(
     collection: Collection,
     merged: dict[str, DataFrame],
-    partition_cols: dict[str, list[str]],
     affected_pbs: dict[str, list[int]],
+    converter: dict,
     no_cluster: frozenset[str] = frozenset(),
 ) -> None:
     """Two-phase PARTITION-scoped swap. Phase A stages every merged
-    table (affected partitions only) under ``<table>__tmp`` while all
-    plans still read the intact originals. Phase B, per table in dict
-    order: park the live ``_pb=X`` directories in ``<table>__old``
-    (with a marker listing the X values, for rollback), then move the
-    staged directories in. Phase C removes the parking dirs —
-    the commit point — in the same order, and invalidates each table's
-    cached data.
+    table (affected partitions only) under ``<table>__tmp`` through
+    ``Collection.write`` — the create's layout from the manifest's
+    ``converter`` record, one file per directory (``no_cluster`` keeps
+    a Z-order re-cluster's own files) — while all plans still read the
+    intact originals. Phase B, per table in dict order: park the live
+    ``_pb=X`` directories in ``<table>__old`` (with a marker listing
+    the X values, for rollback), then move the staged directories in.
+    Phase C removes the parking dirs — the commit point — in the same
+    order, and invalidates each table's cached data.
 
     An affected bucket whose rows were ALL deleted has no staged dir;
     parking alone removes it, which is exactly the merge semantics.
@@ -226,27 +222,12 @@ def _swap_partitions(
     # creator) so job-scheduling overhead overlaps instead of summing.
     def _stage(item) -> None:
         table, df = item
-        cols = partition_cols[table]
-        if cols and table not in no_cluster:
-            # cluster the staged rows by their partition values first:
-            # without it every write task sprays one file into every
-            # partition directory it holds rows for — the creator
-            # measured the same partitioned write at 2,047 files / 6.3s
-            # unclustered vs 64 files / 0.7s clustered
-            # (write_fuzzy_artifacts docstring); with the repartition
-            # each partition directory gets exactly the tasks that own
-            # its hash, so file count ≈ directory count and the commit
-            # protocol stays cheap
-            df = df.repartition(*[F.col(c) for c in cols])
-        if table in TERM_SORTED_TABLES:
-            # the creator's layout: each bucket file sorted by term
-            df = df.sortWithinPartitions(*cols, "term")
-        writer = df.write.mode("overwrite")
-        if cols:
-            writer = writer.partitionBy(*cols)
         tmp = Path(collection.table_path(f"{table}__tmp"))
-        writer.parquet(str(tmp))
+        collection.write(
+            table, df, converter, to=tmp, no_cluster=table in no_cluster
+        )
         if not any(tmp.rglob("*.parquet")):
+            cols, _ = write_layout(table, converter)
             _stage_schema_file(
                 df.drop(*cols), Path(collection.table_path(table)), tmp,
                 set(affected_pbs[table]),
@@ -513,6 +494,9 @@ def _open_for_write(collection: Collection) -> Manifest:
     back half-swapped partitions and drop orphaned staging dirs, and
     recount the manifest when it carries an ``inFlight`` record."""
     manifest = collection.checked_manifest()
+    # a hand-edited ann+ivf manifest has no write path: refuse it
+    # before any directory changes
+    VectorLayout.from_converter(manifest.converter)
     _recover_orphans(collection, [*TABLES, *_FUZZY_TABLES])
     if manifest.inFlight is not None:
         manifest = _exact_recount(collection, manifest)
@@ -537,9 +521,6 @@ def _merge(
     their chunk ids), unions the fresh rows, and only the affected
     ``_pb`` directories swap."""
     ub = int(manifest.converter["updateBuckets"])
-    # the embeddings' directory levels (refuses an ann+ivf manifest
-    # before anything is written)
-    emb_cols = VectorLayout.from_converter(manifest.converter).partition_cols
     # localCheckpoint: the id list feeds the bucket collect, the drop
     # set, the document-keyed anti-joins and the statistics job —
     # materialized once instead of re-running the caller's lineage
@@ -692,13 +673,8 @@ def _merge(
             _stage_fuzzy_delta, collection, manifest, fuzzy_delta_path
         )
         _swap_partitions(
-            collection,
-            merged,
-            partition_cols={
-                t: emb_cols if t == "embeddings" else [UPDATE_PB_COL]
-                for t in merged
-            },
-            affected_pbs={t: doc_pbs for t in merged},
+            collection, merged, {t: doc_pbs for t in merged},
+            manifest.converter,
         )
         fuzzy_staged = f_fuzzy_staged.result()
 

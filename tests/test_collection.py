@@ -620,6 +620,13 @@ class TestAnnLayout:
             )
         assert coll.counts() == before
 
+    def test_every_write_lands_one_file_per_directory(
+        self, spark, canonical_docs, ann_coll, tmp_path
+    ):
+        """The write rule on the ``bucket=*/_pb=*`` embeddings layout:
+        one file per leaf directory after create, update and delete."""
+        _assert_write_rule(spark, canonical_docs, ann_coll, tmp_path)
+
     def test_update_preserves_layout(self, spark, canonical_docs, ann_coll):
         updates = canonical_docs.filter(F.col("id") == "doc-2").select(
             "id", "url", "metadata",
@@ -1044,15 +1051,12 @@ class TestDeleteDocuments:
 
         real_swap = upd._swap_partitions
 
-        def dying_swap(
-            collection, merged, partition_cols, affected_pbs, **kwargs
-        ):
+        def dying_swap(collection, merged, affected_pbs, *args, **kwargs):
             partial = {t: df for t, df in merged.items() if t != "documents"}
             real_swap(
                 collection, partial,
-                {t: partition_cols[t] for t in partial},
                 {t: affected_pbs[t] for t in partial},
-                **kwargs,
+                *args, **kwargs,
             )
             raise RuntimeError("simulated crash before the documents swap")
 
@@ -1632,6 +1636,15 @@ class TestPartitionScopedUpdate:
                 "--path", str(tmp_path), "--update-buckets", "0",
             ])
 
+    def test_every_write_lands_one_file_per_directory(
+        self, spark, canonical_docs, small_fuzzy_coll, tmp_path
+    ):
+        """The catalog's write rule on the five tables and the fuzzy
+        artifacts: create, update and delete leave one file in every
+        partition directory (chunks and embeddings too), so compaction
+        right after a create has nothing to do."""
+        _assert_write_rule(spark, canonical_docs, small_fuzzy_coll, tmp_path)
+
     def test_term_keyed_buckets_stay_sorted_by_term(
         self, spark, canonical_docs, small_fuzzy_coll, pristine_ids, tmp_path
     ):
@@ -1885,6 +1898,43 @@ def _assert_term_sorted_buckets(coll) -> None:
             assert terms == sorted(terms), f
 
 
+def _data_files(coll) -> dict[str, tuple[int, float]]:
+    return {
+        str(p.relative_to(coll.root)): (p.stat().st_size, p.stat().st_mtime)
+        for p in coll.root.rglob("*.parquet")
+    }
+
+
+def _assert_one_file_per_dir(coll) -> None:
+    """Every directory holding data files, in every table, holds
+    exactly one, and the term-keyed tables stay sorted by term."""
+    per_dir: dict = {}
+    for f in coll.root.rglob("*.parquet"):
+        per_dir[f.parent] = per_dir.get(f.parent, 0) + 1
+    crowded = {
+        str(d.relative_to(coll.root)): n for d, n in per_dir.items() if n != 1
+    }
+    assert per_dir and not crowded, crowded
+    _assert_term_sorted_buckets(coll)
+
+
+def _assert_write_rule(spark, canonical_docs, src, tmp_path) -> None:
+    """On a copy of ``src``: one file per directory after the create,
+    an update and a delete, and a compaction right after the create
+    that finds nothing to do and rewrites no file."""
+    from documents_vector_search_spark.collection import compact_collection
+
+    coll = _copy_collection(spark, src, tmp_path, "rule")
+    _assert_one_file_per_dir(coll)
+    created = _data_files(coll)
+    assert compact_collection(coll) == {}
+    assert _data_files(coll) == created
+    ids = sorted(r["id"] for r in coll.read("documents").select("id").collect())
+    for op in ("update", "delete"):
+        _run(op, canonical_docs, coll, ids)
+        _assert_one_file_per_dir(coll)
+
+
 def _update_batch(canonical_docs, first: str):
     """One changed document that grows (more chunks, so fresh chunk ids
     the stored ones do not cover) and one new document."""
@@ -2016,13 +2066,12 @@ def _inject_crash(monkeypatch, coll, boundary):
         # every table but documents committed
         real_swap = upd._swap_partitions
 
-        def swap(collection, merged, partition_cols, affected_pbs, **kw):
+        def swap(collection, merged, affected_pbs, *args, **kw):
             part = {t: df for t, df in merged.items() if t != "documents"}
             real_swap(
                 collection, part,
-                {t: partition_cols[t] for t in part},
                 {t: affected_pbs[t] for t in part},
-                **kw,
+                *args, **kw,
             )
             die()
 

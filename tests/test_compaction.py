@@ -1,6 +1,7 @@
 """Bucket-scoped compaction (collection/compactor.py): fragmented
-update buckets collapse to one file per partition directory; untouched
-buckets stay bit-identical; results are unchanged."""
+update buckets (split by hand into the several files per directory an
+older version left) collapse to one file per partition directory;
+untouched buckets stay bit-identical; results are unchanged."""
 
 from __future__ import annotations
 
@@ -19,6 +20,8 @@ from documents_vector_search_spark.collection import (
 from documents_vector_search_spark.collection.compactor import (
     bucket_file_counts,
 )
+from documents_vector_search_spark.collection.partitioning import pb_dirs
+from documents_vector_search_spark.functions.hashing import md5_hash64_py
 
 
 @pytest.fixture(scope="module")
@@ -41,10 +44,38 @@ def docs(spark):
     ).withColumn("last_modified_at", F.col("last_modified_at").cast("timestamp"))
 
 
+def _split_bucket(root: Path, pb: int) -> int:
+    """Rewrite every data file of update bucket ``pb`` under a table
+    root as two files: the layout an older version's unclustered
+    writes left (this version writes one file per directory). Returns
+    the number of directories split."""
+    import pyarrow.parquet as pq
+
+    split = 0
+    for d in pb_dirs(root, {pb}):
+        for f in list(d.glob("*.parquet")):
+            rows = pq.read_table(f)
+            if rows.num_rows < 2:
+                continue
+            half = rows.num_rows // 2
+            for i, part in enumerate((rows.slice(0, half), rows.slice(half))):
+                pq.write_table(
+                    part, d / f"frag-{i}-{f.name}",
+                    use_deprecated_int96_timestamps=True,
+                )
+            f.unlink()
+            split += 1
+    return split
+
+
+def _doc_pb(doc_id: str, n_buckets: int = 8) -> int:
+    return md5_hash64_py(doc_id) % n_buckets
+
+
 @pytest.fixture(scope="module")
 def fragmented(spark, docs, tmp_path_factory):
-    """Create, then update the SAME doc three times: its bucket's dirs
-    accumulate one extra file per update."""
+    """Create, update the SAME doc three times, then split its bucket's
+    chunks and documents files in two, as an older version left them."""
     base = str(tmp_path_factory.mktemp("compact"))
     coll = Collection(spark, base, "frag")
     create_collection(coll, docs, chunk_size=120, chunk_overlap=20)
@@ -53,6 +84,8 @@ def fragmented(spark, docs, tmp_path_factory):
         update_collection(
             coll, one.withColumn("text", F.concat(F.lit(f"v{i} "), "text"))
         )
+    for t in ("chunks", "documents"):
+        assert _split_bucket(Path(coll.table_path(t)), _doc_pb("doc-3"))
     return coll
 
 
@@ -88,7 +121,7 @@ class TestCompaction:
         }
 
         report = compact_collection(fragmented)
-        assert "chunks" in report
+        assert set(report) == {"chunks", "documents"}
         assert report["chunks"]["files_after"] < report["chunks"]["files_before"]
 
         after = bucket_file_counts(Path(fragmented.table_path("chunks")))
@@ -116,26 +149,6 @@ class TestCompaction:
     def test_second_compact_is_noop(self, fragmented):
         assert compact_collection(fragmented) == {}
 
-    def test_multi_writer_output(self, spark, docs, tmp_path):
-        """output_files_per_dir spreads a rewritten directory across
-        several writers — the production knob for ~100 GB buckets."""
-        coll = Collection(spark, str(tmp_path), "multi")
-        create_collection(coll, docs, chunk_size=120, chunk_overlap=20,
-                          update_buckets=2)
-        one = docs.filter(F.col("id") == "doc-1")
-        for i in range(4):
-            update_collection(
-                coll, one.withColumn("text", F.concat(F.lit(f"m{i} "), "text"))
-            )
-        n_before = coll.read("chunks").count()
-        report = compact_collection(
-            coll, max_files_per_dir=2, output_files_per_dir=2
-        )
-        assert "chunks" in report
-        counts = bucket_file_counts(Path(coll.table_path("chunks")))
-        assert all(c["max_per_dir"] <= 2 for c in counts.values())
-        assert coll.read("chunks").count() == n_before
-
     def test_compacts_layout_tables_preserving_pruning(
         self, spark, docs, tmp_path
     ):
@@ -146,17 +159,10 @@ class TestCompaction:
         create_collection(
             coll, docs, chunk_size=120, chunk_overlap=20, ann_planes=2
         )
-        one = docs.filter(F.col("id") == "doc-5")
-        for i in range(2):
-            update_collection(
-                coll, one.withColumn("text", F.concat(F.lit(f"a{i} "), "text"))
-            )
         emb_root = Path(coll.table_path("embeddings"))
-        assert any(
-            c["max_per_dir"] > 1 for c in bucket_file_counts(emb_root).values()
-        )
+        assert _split_bucket(emb_root, _doc_pb("doc-5"))
         report = compact_collection(coll)
-        assert "embeddings" in report
+        assert set(report) == {"embeddings"}
         assert all(
             c["max_per_dir"] == 1
             for c in bucket_file_counts(emb_root).values()

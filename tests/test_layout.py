@@ -527,9 +527,12 @@ class TestZorderCollection:
     def test_compact_restores_clustering_after_update(
         self, spark, tmp_path, zgrid
     ):
-        """An update fragments the rewritten buckets (plain merge
-        writes); compact_collection must re-cluster them from the
-        manifest record so the skipping boxes come back."""
+        """Compaction of a fresh Z-ordered collection has nothing to do
+        and rewrites no file: its several range-clustered files per
+        bucket ARE the layout. An update degrades the rewritten buckets
+        (plain merge writes); compact_collection must re-cluster them
+        from the manifest record so the skipping boxes come back, after
+        which a second compaction is a no-op."""
         from documents_vector_search_spark.collection import (
             update_collection,
         )
@@ -538,13 +541,23 @@ class TestZorderCollection:
         )
 
         coll = self._copy(spark, zgrid, tmp_path, "zu")
+
+        def files() -> dict:
+            return {
+                str(p.relative_to(coll.root)): (p.stat().st_size, p.stat().st_mtime)
+                for p in coll.root.rglob("*.parquet")
+            }
+
+        created = files()
+        assert compact_collection(coll) == {}
+        assert files() == created
+
         batch = self._grid_docs(spark).filter(F.col("x") < 2).withColumn(
             "last_modified_at", F.to_timestamp(F.lit("2024-03-02 00:00:00"))
         )
         update_collection(coll, batch)
         report = compact_collection(
             coll, tables=["documents"], max_files_per_dir=1,
-            output_files_per_dir=8,
         )
         assert "documents" in report
         box = dict(col_a="x", lo_a=32, hi_a=47, col_b="y", lo_b=32, hi_b=47)
@@ -553,6 +566,7 @@ class TestZorderCollection:
         )
         assert frac < 1.0, frac
         assert coll.read("documents").count() == 4096
+        assert compact_collection(coll, tables=["documents"]) == {}
 
     def test_zorder_update_staging_is_bounded_and_compactable(
         self, spark, tmp_path, zgrid

@@ -448,3 +448,69 @@ class TestWriteJobBudget:
         assert jobs <= UPDATE_JOB_BUDGET, f"update ran {jobs} jobs"
         jobs = _jobs_during(spark, lambda: delete_documents(coll, ids[1:3]))
         assert jobs <= DELETE_JOB_BUDGET, f"delete ran {jobs} jobs"
+
+
+class TestWriteRulePlan:
+    def test_create_postings_writes_are_one_exchange(
+        self, spark, small_fuzzy_coll, monkeypatch, tmp_path
+    ):
+        """The create builds postings and field_postings with
+        ``carry_partitions=updateBuckets``, and ``Collection.write``
+        repartitions by ``_pb`` into the same count, so Spark elides the
+        write's repartition: each term-keyed write plans ONE Exchange
+        (a second, postings-sized one would come back if the two counts
+        disagreed)."""
+        from documents_vector_search_spark.collection.partitioning import (
+            UPDATE_PB_COL,
+        )
+        from documents_vector_search_spark.operators.bm25 import (
+            build_field_postings,
+            build_postings,
+        )
+
+        coll = small_fuzzy_coll
+        converter = coll.manifest().converter
+        ub = int(converter["updateBuckets"])
+        plans: dict[str, str] = {}
+
+        class PlanOnly:
+            """Stands in for DataFrameWriter: records the plan Collection.
+            write would run, writes nothing."""
+
+            def __init__(self, df):
+                self.df = df
+
+            def mode(self, _):
+                return self
+
+            def partitionBy(self, *_):
+                return self
+
+            def parquet(self, path):
+                plans[path] = _plan(self.df)
+
+        chunks = coll.read("chunks")
+        monkeypatch.setattr(type(chunks), "write", property(PlanOnly))
+        coll.write(
+            "postings",
+            build_postings(
+                chunks, id_col="chunk_id",
+                text_col="indexed_data", with_dl=True,
+                carry_cols=[UPDATE_PB_COL], carry_partitions=ub,
+            ),
+            converter,
+            to=str(tmp_path / "postings"),
+        )
+        coll.write(
+            "field_postings",
+            build_field_postings(
+                coll.read("documents"), carry_cols=[UPDATE_PB_COL],
+                carry_partitions=ub,
+            ),
+            converter,
+            to=str(tmp_path / "field_postings"),
+        )
+        assert len(plans) == 2
+        for path, plan in plans.items():
+            assert plan.count("Exchange") == 1, (path, plan)
+            assert "Sort [" in plan, (path, plan)  # the term sort
