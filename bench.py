@@ -264,6 +264,15 @@ def main() -> None:
         # core/positional builds exist only to attribute regressions to
         # a flag; collection_build in `queries` remains the full build)
         "build_breakdown": build_breakdown,
+        # the parallelism and memory the timings ran with: numbers from
+        # runs on differently sized hosts only compare alongside these
+        "run": {
+            "defaultParallelism": spark.sparkContext.defaultParallelism,
+            "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+            "spark.driver.memory": spark.sparkContext.getConf().get(
+                "spark.driver.memory", None
+            ),
+        },
     }
     if errors:
         out["errors"] = errors

@@ -1466,20 +1466,28 @@ def cmd_search_many(args) -> int:
 
 
 def cmd_explain(args) -> int:
-    """Print the physical plan of a search — the operator-level debug
-    view (PartitionFilters/PushedFilters/broadcasts are where this
-    engine's scale behavior is visible)."""
+    """Print the two physical plans of a search — the operator-level
+    debug view (PartitionFilters/PushedFilters/broadcasts are where
+    this engine's scale behavior is visible): the chunk ranking, whose
+    index scans carry the pruning, and the documents lookup that
+    ``search()`` returns after its driver-side grouping."""
     from documents_vector_search_spark.collection import CollectionSearcher
 
     coll = _collection(args)
     searcher = CollectionSearcher(coll)
-    df = searcher.search(
+    indexes = tuple(args.indexes.split(","))
+    ranking = searcher.search_chunks(
+        args.query, indexes=indexes, metadata_filter=args.filter
+    )
+    lookup = searcher.search(
         args.query,
         max_documents=args.max_documents,
-        indexes=tuple(args.indexes.split(",")),
+        indexes=indexes,
         metadata_filter=args.filter,
     )
-    print(df._jdf.queryExecution().executedPlan().toString())
+    for title, df in (("chunk ranking", ranking), ("documents lookup", lookup)):
+        print(f"== {title} ==")
+        print(df._jdf.queryExecution().executedPlan().toString())
     return 0
 
 

@@ -46,10 +46,10 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from documents_vector_search_spark.functions.hashing import md5_hash64
+from documents_vector_search_spark.functions.hashing import md5_hash64, md5_hash64_py
 
 UPDATE_PB_COL = "_pb"
 
@@ -62,6 +62,23 @@ def pb_col(key: Column, n_buckets: int) -> Column:
     engines and sessions, unlike hash/xxhash64 whose seeds are
     Spark-internal)."""
     return (md5_hash64(key.cast("string")) % F.lit(n_buckets)).cast("int")
+
+
+def point_lookup(
+    df: DataFrame,
+    document_ids,
+    n_buckets: int,
+    id_col: str | None = "id",
+) -> DataFrame:
+    """``df`` cut to the rows of ``document_ids``: ``_pb IN`` the
+    buckets that own them (the driver-side twin of :func:`pb_col`, so
+    a file scan prunes to those directories) and, unless ``id_col`` is
+    None, the pushed ``id_col IN`` filter. ``id_col=None`` serves a
+    table keyed by chunk, whose rows carry only the owner's bucket."""
+    ids = sorted(set(document_ids))
+    pbs = sorted({md5_hash64_py(i) % n_buckets for i in ids})
+    out = df.filter(F.col(UPDATE_PB_COL).isin(pbs))
+    return out.filter(F.col(id_col).isin(ids)) if id_col else out
 
 
 def pb_dirs(root: Path, pbs: set[int], col: str = UPDATE_PB_COL) -> list[Path]:

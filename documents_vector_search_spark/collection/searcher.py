@@ -15,7 +15,9 @@ index gets filtered search with the same semantics (SURVEY §2.2 P10:
 the capability guard becomes unnecessary).
 
 Scale: both index scans are single-pass with TakeOrderedAndProject
-top-k; the RRF/grouping stages run on ≤ k rows.
+top-k and RRF runs on ≤ k rows; the document grouping is a driver
+merge of the ≤ k collected fused hits (CollectionSearcher.
+_document_page), so the tail after the ranking pays no shuffle.
 """
 
 from __future__ import annotations
@@ -24,11 +26,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from documents_vector_search_spark.collection.catalog import Collection
-from documents_vector_search_spark.collection.partitioning import UPDATE_PB_COL
+from documents_vector_search_spark.collection.partitioning import point_lookup
 from documents_vector_search_spark.collection.vector_layout import VectorLayout
 from documents_vector_search_spark.operators.bm25 import bm25_topk
 from documents_vector_search_spark.operators.embedding import hash_embedding_py
-from documents_vector_search_spark.operators.group_hits import group_hits_by_document
 from documents_vector_search_spark.operators.knn import knn_l2_auto
 from documents_vector_search_spark.plans.filter_compiler import compile_filter
 
@@ -170,18 +171,24 @@ class CollectionSearcher:
         self._vector_layout = None
 
     # -- internals ---------------------------------------------------------
-    def _allowed_chunks(self, metadata_filter: str | None) -> DataFrame | None:
-        """Filter → allowed chunk ids (None = no restriction)."""
-        if not metadata_filter:
-            return None
+    def _filtered_documents(self, metadata_filter: str | None) -> DataFrame:
+        """The documents table under ``metadata_filter``'s one compiled
+        predicate (plans/filter_compiler.py); all of it without one."""
         docs = self._read("documents")
-        pred = compile_filter(
+        if not metadata_filter:
+            return docs
+        return docs.filter(compile_filter(
             metadata_filter,
             field_types=self.field_types,
             metadata_map_col="metadata",
             direct_fields={"id", "url", "text", "last_modified_at", "source_type"},
-        )
-        allowed_docs = docs.filter(pred).select("id")
+        ))
+
+    def _allowed_chunks(self, metadata_filter: str | None) -> DataFrame | None:
+        """Filter → allowed chunk ids (None = no restriction)."""
+        if not metadata_filter:
+            return None
+        allowed_docs = self._filtered_documents(metadata_filter).select("id")
         chunks = self._read("chunks")
         return chunks.join(
             F.broadcast(allowed_docs),
@@ -471,16 +478,7 @@ class CollectionSearcher:
         doc_term = tf.select("document_id", "term")
 
         if metadata_filter:
-            docs = self._read("documents")
-            pred = compile_filter(
-                metadata_filter,
-                field_types=self.field_types,
-                metadata_map_col="metadata",
-                direct_fields={
-                    "id", "url", "text", "last_modified_at", "source_type",
-                },
-            )
-            allowed_docs = docs.filter(pred).select(
+            allowed_docs = self._filtered_documents(metadata_filter).select(
                 F.col("id").alias("document_id")
             )
             tf = tf.join(F.broadcast(allowed_docs), "document_id", "left_semi")
@@ -686,24 +684,13 @@ class CollectionSearcher:
             raise ValueError(f"unknown more_like_this method: {method!r}")
         import re
 
-        from documents_vector_search_spark.functions.hashing import (
-            md5_hash64_py,
-        )
-
-        pb = md5_hash64_py(document_id) % int(
-            self._manifest.converter["updateBuckets"]
-        )
-
-        def _pruned_to_doc(df: DataFrame) -> DataFrame:
-            # partition-prune the point lookup to the owning bucket
-            return df.filter(F.col(UPDATE_PB_COL) == pb)
-
+        ub = int(self._manifest.converter["updateBuckets"])
         if method == "vector":
-            own_chunks = _pruned_to_doc(self._read("chunks")).filter(
-                F.col("document_id") == document_id
+            own_chunks = point_lookup(
+                self._read("chunks"), [document_id], ub, "document_id"
             ).select("chunk_id")
             own_vecs = (
-                _pruned_to_doc(self._read("embeddings"))
+                point_lookup(self._read("embeddings"), [document_id], ub, None)
                 .join(F.broadcast(own_chunks), "chunk_id", "left_semi")
                 .select("vector")
             )
@@ -740,9 +727,11 @@ class CollectionSearcher:
             )
 
         # --- bm25: term selection, then disjunctive BM25F ----------------
-        row = _pruned_to_doc(self._read("documents")).filter(
-            F.col("id") == document_id
-        ).select("text").first()
+        row = (
+            point_lookup(self._read("documents"), [document_id], ub)
+            .select("text")
+            .first()
+        )
         if row is None:
             raise KeyError(f"document not found: {document_id!r}")
         tokens = re.findall(r"[a-z0-9]+", (row["text"] or "").lower())
@@ -1353,10 +1342,9 @@ class CollectionSearcher:
         fuzzy: bool = False,
     ) -> DataFrame:
         """Document-grouped batch search: :meth:`search` for MANY
-        queries in one job, keyed by ``qid`` — grouping, doc ranking
-        (a document ranks at its best chunk's rank) and the per-query
-        document limit all run per qid inside the same plan.
-        ``diversify_lambda`` (None = off, same convention as
+        queries, keyed by ``qid`` — one ranking plan for all of them,
+        then :meth:`search`'s driver-merged tail, grouped and limited
+        per qid. ``diversify_lambda`` (None = off, same convention as
         :meth:`search`) swaps the fused chunk ranking for the batched
         MMR rerank (:meth:`search_chunks_many_diverse`) so Q diverse
         searches still pay one retrieval pass per index, not Q."""
@@ -1377,46 +1365,7 @@ class CollectionSearcher:
             fused = self.search_chunks_many(
                 texts, max_chunks, indexes, metadata_filter, ranker=ranker
             )
-        chunks = self._read("chunks")
-        hits = fused.join(chunks, "chunk_id").select(
-            "qid", "chunk_id", "document_id", "chunk_number", "rank", "score"
-        )
-        grouped = hits.groupBy("qid", "document_id").agg(
-            F.min("rank").alias("doc_rank"),
-            # chunk NUMBERS in rank order — the reference's matchedChunks
-            # shape (same as the single-query search path)
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("rank", "chunk_number"))),
-                lambda s: s["chunk_number"],
-            ).alias("matched_chunks"),
-            F.max("score").alias("best_score"),
-            F.count("*").alias("n_chunks"),
-        )
-        if max_documents is not None:
-            w = Window.partitionBy("qid").orderBy(
-                F.col("doc_rank").asc(), F.col("document_id").asc()
-            )
-            grouped = (
-                grouped.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= max_documents)
-                .drop("_rn")
-            )
-        docs = self._read("documents")
-        return (
-            grouped.join(docs, grouped["document_id"] == docs["id"])
-            .select(
-                "qid",
-                "document_id",
-                "doc_rank",
-                "url",
-                "metadata",
-                "last_modified_at",
-                "matched_chunks",
-                "best_score",
-                "n_chunks",
-            )
-            .orderBy("qid", "doc_rank")
-        )
+        return self._document_page(fused, max_documents)
 
     def search(
         self,
@@ -1459,6 +1408,12 @@ class CollectionSearcher:
         the grouped ordering (page p passes p × max_documents; deep
         pages want a proportionally larger max_chunks pool, since the
         chunk top-k bounds how many documents can be grouped at all).
+
+        The call runs the chunk ranking and its chunk lookup now (a
+        default hybrid search: 4 Spark jobs) and groups the ≤
+        max_chunks hits on the driver; the returned frame is only the
+        page's documents lookup, one job at ``collect``
+        (:meth:`_document_page`).
         """
         if fuzzy and text:
             text = self.correct_query(text)
@@ -1474,10 +1429,7 @@ class CollectionSearcher:
                     "bm25 ranker; ranker='ql' cannot combine with it"
                 )
             fused = self.search_chunks_diverse(
-                text,
-                max_chunks,
-                lam=diversify_lambda,
-                indexes=indexes,
+                text, max_chunks, lam=diversify_lambda, indexes=indexes,
                 metadata_filter=metadata_filter,
             )
         else:
@@ -1485,73 +1437,124 @@ class CollectionSearcher:
                 text, max_chunks, indexes, metadata_filter,
                 expand_query=expand_query, ranker=ranker,
             )
-        chunks = self._read("chunks")
-        hit_chunks = fused.join(chunks, "chunk_id").select(
-            "chunk_id", "document_id", "chunk_number", "rank", "score",
-            "indexed_data",
-        )
-        grouped = group_hits_by_document(
-            hit_chunks,
-            max_documents=max_documents,
-            doc_col="document_id",
-            chunk_col="chunk_number",
-            # pagination: page p passes p*max_documents; deep pages need
-            # a proportionally larger max_chunks pool (the chunk top-k
-            # bounds how many documents can be grouped at all)
-            offset=document_offset,
-        )
-        if include_chunk_text:
-            texts = hit_chunks.groupBy("document_id").agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("rank", "indexed_data"))
-                    ),
-                    lambda s: s["indexed_data"],
-                ).alias("matched_chunk_texts")
-            )
-            grouped = grouped.join(texts, "document_id")
-        docs = self._read("documents")
-        out_cols = [
-            "document_id",
-            "doc_rank",
-            "url",
-            "metadata",
-            "last_modified_at",
-            "matched_chunks",
-            "best_score",
-            "n_chunks",
-        ]
-        if include_chunk_text:
-            out_cols.append("matched_chunk_texts")
-        if include_document_text:
-            out_cols.append(F.col("text").alias("document_text"))
-        joined = grouped.join(docs, grouped["document_id"] == docs["id"])
+        terms = None
         if include_snippets:
-            from documents_vector_search_spark.operators.bm25 import (
-                _query_terms,
-            )
+            from documents_vector_search_spark.operators.bm25 import _query_terms
+
+            terms = _query_terms(text)
+            if not terms:
+                raise ValueError("include_snippets requires a non-empty query")
+        return self._document_page(
+            fused, max_documents, document_offset, include_chunk_text,
+            include_document_text, terms,
+        )
+
+    def _document_page(
+        self,
+        fused: DataFrame,
+        max_documents: int | None,
+        offset: int = 0,
+        chunk_texts: bool = False,
+        document_text: bool = False,
+        snippet_terms: list[str] | None = None,
+    ) -> DataFrame:
+        """The one document-grouped tail of :meth:`search` and
+        :meth:`search_many`, merged on the driver: the fused ranking
+        (≤ max_chunks rows per query) and, by one pushed ``chunk_id IN``
+        lookup, its chunks' documents collect now; grouping by ``(qid,
+        document)``, the ``(doc_rank, document_id)`` order and the
+        ``offset`` / ``max_documents`` page run in Python. The returned
+        frame is the lazy ``_pb``-pruned ``id IN`` lookup of the page's
+        documents, their grouped values read from ONE JSON map literal
+        (document id → an entry per query that hit it), ending in
+        ``orderBy(...).limit(n)``: a TakeOrderedAndProject, with no
+        exchange or sampling job."""
+        import json
+        from itertools import groupby
+
+        keyed = "qid" in fused.columns
+        chunks = self._read("chunks")
+        hits = fused.select(
+            F.col("qid") if keyed else F.lit("").alias("qid"),
+            "chunk_id", "rank", "score",
+        ).collect()
+        ids = sorted({h.chunk_id for h in hits})
+        meta = {
+            r.chunk_id: r
+            for r in chunks.filter(F.col("chunk_id").isin(ids)).select(
+                "chunk_id", "document_id", "chunk_number",
+                *(["indexed_data"] if chunk_texts else []),
+            ).collect()
+        } if ids else {}
+        groups: dict[tuple, dict] = {}
+        # ranks are distinct within a query: this walks hits in rank
+        # order, so a document ranks at its best chunk and lists its
+        # chunk numbers in rank order (reference __build_results)
+        for h in sorted(hits, key=lambda h: (h.qid, h.rank)):
+            c = meta.get(h.chunk_id)
+            if c is None:
+                continue
+            g = groups.setdefault((h.qid, c.document_id), {
+                "qid": h.qid, "doc_rank": h.rank, "matched_chunks": [],
+                "best_score": h.score, "n_chunks": 0,
+            })
+            g["matched_chunks"].append(c.chunk_number)
+            g["best_score"] = max(g["best_score"], h.score)
+            g["n_chunks"] += 1
+            if chunk_texts:
+                g.setdefault("matched_chunk_texts", []).append(c.indexed_data)
+        ordered = sorted(
+            groups.items(), key=lambda kv: (kv[0][0], kv[1]["doc_rank"], kv[0][1])
+        )
+        end = None if max_documents is None else offset + max_documents
+        page: dict[str, list] = {}
+        for _, per_query in groupby(ordered, key=lambda kv: kv[0][0]):
+            for (_, doc), g in list(per_query)[offset:end]:
+                page.setdefault(doc, []).append(g)
+
+        def type_of(df: DataFrame, col: str) -> str:
+            return df.schema[col].dataType.simpleString()
+
+        entry = (
+            f"qid:string,doc_rank:{type_of(fused, 'rank')},"
+            f"matched_chunks:array<{type_of(chunks, 'chunk_number')}>,"
+            f"best_score:{type_of(fused, 'score')},n_chunks:bigint"
+            + (",matched_chunk_texts:array<string>" if chunk_texts else "")
+        )
+        ub = int(self._manifest.converter["updateBuckets"])
+        docs = point_lookup(self._read("documents"), list(page), ub)
+        grouped = docs.select(
+            "id", "url", "metadata", "last_modified_at", "text",
+            F.inline(F.from_json(
+                F.lit(json.dumps(page)), f"map<string,array<struct<{entry}>>>"
+            )[F.col("id")]),
+        )
+        out_cols = [
+            *(["qid"] if keyed else []),
+            F.col("id").alias("document_id"),
+            "doc_rank", "url", "metadata", "last_modified_at",
+            "matched_chunks", "best_score", "n_chunks",
+            *(["matched_chunk_texts"] if chunk_texts else []),
+            *([F.col("text").alias("document_text")] if document_text else []),
+        ]
+        if snippet_terms:
             from documents_vector_search_spark.operators.snippets import (
                 best_line_snippet,
             )
 
-            terms = _query_terms(text)
-            if not terms:
-                raise ValueError(
-                    "include_snippets requires a non-empty query"
-                )
-            # the explode runs on the ≤ max_documents hit docs only
-            snip = best_line_snippet(
-                joined.select(F.col("document_id"), F.col("text")),
-                terms,
-                id_col="document_id",
-            )
-            joined = joined.join(F.broadcast(snip), "document_id")
+            # the explode runs on the ≤ max_documents page documents only
+            snip = best_line_snippet(docs, snippet_terms, id_col="id")
+            grouped = grouped.join(F.broadcast(snip), "id")
             out_cols += [
                 F.col("line_no").alias("snippet_line"),
                 "snippet",
                 F.col("n_hits").alias("snippet_hits"),
             ]
-        return joined.select(*out_cols).orderBy("doc_rank")
+        return (
+            grouped.select(*out_cols)
+            .orderBy(*(["qid"] if keyed else []), "doc_rank")
+            .limit(sum(len(v) for v in page.values()))
+        )
 
     def facet_counts(
         self,
@@ -1575,17 +1578,7 @@ class CollectionSearcher:
             facet_counts as facet_counts_op,
         )
 
-        docs = self._read("documents")
-        if metadata_filter:
-            pred = compile_filter(
-                metadata_filter,
-                field_types=self.field_types,
-                metadata_map_col="metadata",
-                direct_fields={
-                    "id", "url", "text", "last_modified_at", "source_type",
-                },
-            )
-            docs = docs.filter(pred)
+        docs = self._filtered_documents(metadata_filter)
         terms = _query_terms(query) if query else []
         if terms:
             docs = docs.filter(matches_all_terms("text", terms))

@@ -156,12 +156,20 @@ class TestCLI:
         assert len(rows) >= 2
 
     def test_explain_prints_physical_plan(self, base_path, capsys):
+        """Both plans of a search: the chunk ranking, whose BM25 scan
+        pushes its term filter, and the documents lookup search()
+        returns, pruned to the hit documents' ``_pb`` directories."""
         rc = cli.main(
             ["explain", "cli_test", "--base-path", base_path, "hash join"]
         )
         assert rc == 0
         out = capsys.readouterr().out
-        assert "TakeOrderedAndProject" in out or "Exchange" in out
+        ranking, lookup = out.split("== documents lookup ==\n")
+        assert ranking.startswith("== chunk ranking ==\n")
+        assert "PushedFilters: [In(term" in ranking
+        assert "TakeOrderedAndProject" in lookup
+        pf = lookup.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "_pb" in pf
 
     def test_search_returns_ranked_json(self, base_path, capsys):
         rc = cli.main(

@@ -450,6 +450,61 @@ class TestWriteJobBudget:
         assert jobs <= DELETE_JOB_BUDGET, f"delete ran {jobs} jobs"
 
 
+# measured Spark jobs of one default hybrid search().collect() on a
+# cached searcher: the fused chunk ranking (3), the hit chunks' lookup
+# (1) and the page's documents lookup (1)
+SEARCH_JOB_BUDGET = 5
+
+
+class TestSearchJobBudget:
+    def test_hybrid_search_is_ranking_plus_point_lookups(
+        self, spark, small_fuzzy_coll, tmp_path
+    ):
+        """A default hybrid search on a cached searcher runs at most
+        SEARCH_JOB_BUDGET jobs, and the frame it returns is only the
+        documents lookup: no range-partitioned sort, no broadcast, and
+        ``_pb IN`` plus ``id IN`` filters on the documents scan."""
+        import re
+        import shutil
+
+        from documents_vector_search_spark.collection import (
+            Collection,
+            CollectionSearcher,
+        )
+
+        shutil.copytree(small_fuzzy_coll.root, tmp_path / "search")
+        coll = Collection(spark, str(tmp_path), "search")
+        # uncached first (a cached table stands in for the file scan):
+        # the filters prune directories and push into Parquet
+        plan = _plan(CollectionSearcher(coll).search("hash join"))
+        pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "_pb" in pf, plan
+        pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert "In(id" in pushed, plan
+
+        s = CollectionSearcher(coll, cache_tables=True)
+        out = {}
+
+        def search():
+            out["df"] = s.search("hash join vector")
+            out["rows"] = out["df"].collect()
+
+        try:
+            s.search("sort merge join").collect()  # first-search warm-up
+            jobs = _jobs_during(spark, search)
+            plan = _plan(out["df"])
+        finally:
+            s.refresh()  # unpersists the cached tables
+        assert out["rows"]
+        assert jobs <= SEARCH_JOB_BUDGET, f"search ran {jobs} jobs"
+        assert "rangepartitioning" not in plan, plan
+        assert "BroadcastExchange" not in plan, plan
+        assert "TakeOrderedAndProject" in plan, plan
+        scan = next(ln for ln in plan.splitlines() if "InMemoryTableScan" in ln)
+        assert re.search(r"_pb#\d+ IN \(", scan), scan
+        assert re.search(r"\bid#\d+ IN \(", scan), scan
+
+
 class TestWriteRulePlan:
     def test_create_postings_writes_are_one_exchange(
         self, spark, small_fuzzy_coll, monkeypatch, tmp_path
